@@ -3203,12 +3203,7 @@ WITH quotes AS (
 ),
 docs AS (SELECT doc_id, text FROM documents UNION ALL SELECT * FROM quotes),
 tok AS (SELECT doc_id, {TOKQ} AS toks FROM docs),
-sh AS (SELECT doc_id,
-       CASE WHEN len(toks) >= {n}
-            THEN list_transform(generate_series(1, len(toks) - {n - 1}),
-                                i -> array_to_string(list_slice(toks, i, i + {n - 1}), ' '))
-            ELSE [array_to_string(toks, ' ')] END AS shingles
-       FROM tok),
+sh AS (SELECT doc_id, {_word_shingles_sql(n)} AS shingles FROM tok),
 dn AS (SELECT DISTINCT doc_id, unnest(shingles) AS ngram FROM sh),
 sizes AS (SELECT doc_id, count(*) AS sz FROM dn GROUP BY doc_id),
 hot AS (SELECT ngram FROM dn GROUP BY ngram HAVING count(*) > {max_df}),
@@ -4118,6 +4113,49 @@ FROM (SELECT *, array_to_string(list_filter(
 """
 
 
+def _minhash_band_ctes(
+    out: str,
+    src: str,
+    ids: str,
+    shingles: str,
+    bands: int,
+    rows: int,
+    sep: str = "#",
+    tag: str | None = None,
+    key: str = "bucket",
+) -> str:
+    """The oracles' one MinHash-LSH derivation (SQL twin of the Spark
+    kernel): CTEs `{out}_sh` (one row per id x shingle, from the `shingles`
+    list expression over `src`), `{out}_sig` (minhash_i = min(md5(i || '|'
+    || shingle)) per id) and `{out}({ids}, {key})` — one row per (id,
+    band), the bucket string being [tag sep] band sep mins joined by sep:
+    'MH:<band>:<h…>' for ER blocking keys, '<band>#<h…>' for dedup
+    buckets."""
+    mh = ",\n              ".join(
+        f"min(md5('{i}|' || sh)) AS mh{i}" for i in range(bands * rows)
+    )
+    lead = f"{tag}{sep}" if tag is not None else ""
+    buckets = ",\n             ".join(
+        f"'{lead}{b}{sep}' || "
+        + f" || '{sep}' || ".join(f"mh{b * rows + r}" for r in range(rows))
+        for b in range(bands)
+    )
+    return f"""{out}_sh AS (SELECT {ids}, unnest({shingles}) AS sh FROM {src}),
+{out}_sig AS (SELECT {ids},
+              {mh}
+        FROM {out}_sh GROUP BY {ids}),
+{out} AS (SELECT {ids}, unnest([{buckets}]) AS {key} FROM {out}_sig)"""
+
+
+def _word_shingles_sql(n: int = 3) -> str:
+    """dedup.shingles_col in SQL over a `toks` list column: word n-grams,
+    or the whole token string when there are fewer than n tokens."""
+    return f"""CASE WHEN len(toks) >= {n}
+            THEN list_transform(generate_series(1, len(toks) - {n - 1}),
+                                i -> array_to_string(list_slice(toks, i, i + {n - 1}), ' '))
+            ELSE [array_to_string(toks, ' ')] END"""
+
+
 def _er_blocking_ctes() -> str:
     """The shared blocking CTE chain (SQL re-derivation of
     blocking.candidate_pairs): consumes a `surf(norm_name, n_mentions,
@@ -4129,12 +4167,14 @@ def _er_blocking_ctes() -> str:
 
     cfg = PipelineConfig()
     k, rows, bands = cfg.shingle_k, cfg.minhash_rows, cfg.minhash_bands
-    mh = ",\n              ".join(
-        f"min(md5('{i}|' || sh)) AS mh{i}" for i in range(rows * bands)
-    )
-    band_keys = ",\n             ".join(
-        f"'MH:{b}:' || " + " || ':' || ".join(f"mh{b * rows + r}" for r in range(rows))
-        for b in range(bands)
+    # blocking.char_shingles_col over the space-padded surface `p`
+    char_sh = f"""CASE WHEN length(p) <= {k} THEN [p]
+        ELSE list_distinct(list_transform(
+                 generate_series(1, length(p) - {k - 1}),
+                 i -> substr(p, i, {k}))) END"""
+    mhk = _minhash_band_ctes(
+        "mhk", "pad", "norm_name", char_sh, bands, rows,
+        sep=":", tag="MH", key="block_key",
     )
     acr_of = "array_to_string(list_transform({t}, t -> substr(t, 1, 1)), '')"
     return f"""
@@ -4147,18 +4187,7 @@ snk AS (SELECT norm_name, 'L:' || tk[len(tk)] AS block_key FROM st
         UNION
         SELECT norm_name, 'A:' || tk[1] FROM st WHERE len(tk) = 1),
 pad AS (SELECT norm_name, ' ' || norm_name || ' ' AS p FROM surf),
-msh AS (SELECT norm_name,
-               unnest(CASE WHEN length(p) <= {k} THEN [p]
-                      ELSE list_distinct(list_transform(
-                               generate_series(1, length(p) - {k - 1}),
-                               i -> substr(p, i, {k}))) END) AS sh
-        FROM pad),
-sig AS (SELECT norm_name,
-              {mh}
-        FROM msh GROUP BY norm_name),
-mhk AS (SELECT norm_name,
-               unnest([{band_keys}]) AS block_key
-        FROM sig),
+{mhk},
 keys AS (SELECT * FROM snk WHERE length(block_key) > 2
          UNION ALL SELECT * FROM mhk),
 ranked AS (SELECT norm_name, block_key,
@@ -5311,29 +5340,9 @@ FROM lab l JOIN rep r ON r.root = l.root AND r.rn = 1
 
 
 def _minhash_oracle(bands: int = 4, rows: int = 2) -> str:
-    n = bands * rows
-    mh = ", ".join(
-        f"list_min(list_transform(shingles, s -> md5('{i}|' || s))) AS mh{i}"
-        for i in range(n)
-    )
-    buckets = ", ".join(
-        "'" + str(b) + "#' || " + " || '#' || ".join(f"mh{b * rows + r}" for r in range(rows))
-        for b in range(bands)
-    )
-    return f"""
-WITH docs AS ({_DOCS_DUP_SQL}),
-tok AS (SELECT doc_id, {TOKQ} AS toks FROM docs),
-sh AS (SELECT doc_id,
-       CASE WHEN len(toks) >= 3
-            THEN list_transform(generate_series(1, len(toks) - 2),
-                                i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-            ELSE [array_to_string(toks, ' ')] END AS shingles
-       FROM tok),
-sig AS (SELECT doc_id, {mh} FROM sh),
-b AS (SELECT doc_id, unnest([{buckets}]) AS bucket FROM sig)
-SELECT a.doc_id AS id_a, c.doc_id AS id_b
-FROM b a JOIN b c ON a.bucket = c.bucket AND a.doc_id < c.doc_id
-GROUP BY 1, 2
+    """SQL replay of q_minhash_lsh: the shared pair CTEs, projected."""
+    return f"""{_minhash_pairs_ctes(bands, rows)}
+SELECT id_a, id_b FROM pairs
 """
 
 
@@ -5341,32 +5350,14 @@ def _fuzzy_decon_oracle(bands: int = 4, rows: int = 2) -> str:
     """SQL replay of q_fuzzy_decontaminate: the q_minhash_lsh oracle's md5
     string-min bucket derivation over BOTH the dup-injected training corpus
     and the benchmark slice, then the bucket-collision rollup."""
-    n = bands * rows
-    mh = ", ".join(
-        f"list_min(list_transform(shingles, s -> md5('{i}|' || s))) AS mh{i}"
-        for i in range(n)
-    )
-    buckets = ", ".join(
-        "'" + str(b) + "#' || " + " || '#' || ".join(f"mh{b * rows + r}" for r in range(rows))
-        for b in range(bands)
-    )
-    shingle_cte = """(SELECT doc_id,
-       CASE WHEN len(toks) >= 3
-            THEN list_transform(generate_series(1, len(toks) - 2),
-                                i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-            ELSE [array_to_string(toks, ' ')] END AS shingles
-       FROM {src})"""
+    sh = _word_shingles_sql()
     return f"""
 WITH train AS ({_DOCS_DUP_SQL}),
 ttok AS (SELECT doc_id, {TOKQ} AS toks FROM train),
-tsh AS {shingle_cte.format(src='ttok')},
-tsig AS (SELECT doc_id, {mh} FROM tsh),
-tb AS (SELECT doc_id, unnest([{buckets}]) AS bucket FROM tsig),
+{_minhash_band_ctes("tb", "ttok", "doc_id", sh, bands, rows)},
 btok AS (SELECT doc_id, {TOKQ} AS toks FROM documents WHERE doc_id % 97 = 0),
-bsh AS {shingle_cte.format(src='btok')},
-bsig AS (SELECT doc_id, {mh} FROM bsh),
-bb AS (SELECT DISTINCT bench_id, bucket FROM
-       (SELECT doc_id AS bench_id, unnest([{buckets}]) AS bucket FROM bsig))
+{_minhash_band_ctes("bbk", "btok", "doc_id", sh, bands, rows)},
+bb AS (SELECT DISTINCT doc_id AS bench_id, bucket FROM bbk)
 SELECT t.doc_id,
        count(DISTINCT t.bucket)::BIGINT AS n_hit_buckets,
        count(DISTINCT b.bench_id)::BIGINT AS n_bench_docs
@@ -5473,27 +5464,11 @@ def _minhash_pairs_ctes(bands: int = 4, rows: int = 2) -> str:
     over the dup-injected corpus.  Opens the WITH RECURSIVE block so
     callers can append `_closure_sql` tails; ends at
     `pairs(id_a, id_b)`."""
-    n = bands * rows
-    mh = ", ".join(
-        f"list_min(list_transform(shingles, s -> md5('{i}|' || s))) AS mh{i}"
-        for i in range(n)
-    )
-    buckets = ", ".join(
-        "'" + str(b) + "#' || " + " || '#' || ".join(f"mh{b * rows + r}" for r in range(rows))
-        for b in range(bands)
-    )
     return f"""
 WITH RECURSIVE
 docs AS ({_DOCS_DUP_SQL}),
 tok AS (SELECT doc_id, {TOKQ} AS toks FROM docs),
-sh AS (SELECT doc_id,
-       CASE WHEN len(toks) >= 3
-            THEN list_transform(generate_series(1, len(toks) - 2),
-                                i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-            ELSE [array_to_string(toks, ' ')] END AS shingles
-       FROM tok),
-sig AS (SELECT doc_id, {mh} FROM sh),
-b AS (SELECT doc_id, unnest([{buckets}]) AS bucket FROM sig),
+{_minhash_band_ctes("b", "tok", "doc_id", _word_shingles_sql(), bands, rows)},
 pairs AS (SELECT a.doc_id AS id_a, c.doc_id AS id_b
           FROM b a JOIN b c ON a.bucket = c.bucket AND a.doc_id < c.doc_id
           GROUP BY 1, 2)"""
@@ -5957,12 +5932,7 @@ def _ngram_jaccard_oracle(n: int = 3, threshold: float = 0.9, max_df: int = 500)
     return f"""
 WITH docs AS ({_DOCS_DUP_SQL}),
 tok AS (SELECT doc_id, {TOKQ} AS toks FROM docs),
-sh AS (SELECT doc_id,
-       CASE WHEN len(toks) >= {n}
-            THEN list_transform(generate_series(1, len(toks) - {n - 1}),
-                                i -> array_to_string(list_slice(toks, i, i + {n - 1}), ' '))
-            ELSE [array_to_string(toks, ' ')] END AS shingles
-       FROM tok),
+sh AS (SELECT doc_id, {_word_shingles_sql(n)} AS shingles FROM tok),
 dn AS (SELECT DISTINCT doc_id, unnest(shingles) AS ngram FROM sh),
 sizes AS (SELECT doc_id, count(*) AS sz FROM dn GROUP BY doc_id),
 hot AS (SELECT ngram FROM dn GROUP BY ngram HAVING count(*) > {max_df}),

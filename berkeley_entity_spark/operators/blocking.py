@@ -18,6 +18,9 @@ run over the **distinct normalized surfaces** rather than mention instances:
   3. MinHash-LSH pass over character shingles of the surface: deterministic
      seeded minhash signatures, banded; pairs sharing a (band, bucket) are
      candidates (the reference's coarse-model cascade, CorefPruner.scala:36-47).
+     The kernel, minhash_band_keys, is the repo's one MinHash-LSH
+     implementation: dedup.py, fuzzy decontamination and the incremental
+     dedup stream (streaming/ingest.py) call it over word shingles.
 
 Hot blocks (head-domain skew / common surnames) are defused either by a
 row_number cap (default) or, with cfg.salt_hot_blocks, by deterministic
@@ -27,6 +30,10 @@ recall trade, see tests/test_blocking_salt.py);
 AQE skew-join handles residual join-side imbalance.
 Everything below is expressed as DataFrame ops (joins, windows, explode); the
 minhash pass included — the whole stage runs JVM-side in codegen.
+
+capped_key_pairs is the shared row_number-capped key self-join emitting
+(key, id_a < id_b) pairs; dedup.minhash_lsh_pairs, phonetic_pairs and
+metablocking.block_graph_edges build on it.
 """
 
 from __future__ import annotations
@@ -110,52 +117,82 @@ def char_shingles_col(norm_col: str = "norm_name", k: int = 3):
     )
 
 
-def minhash_signatures(surfaces: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(node_id, norm_name, block_key='MH:band:bucket') via seeded minhash
-    over char shingles — the coarse-cascade analog (CorefPruner.scala:36-47).
+def minhash_band_keys(
+    df: DataFrame,
+    cols: list[str],
+    shingles,
+    bands: int,
+    rows: int,
+    sep: str = "#",
+    tag: str | None = None,
+    key_col: str = "bucket",
+) -> DataFrame:
+    """(*cols, key_col) — one row per (id, LSH band): the MinHash-LSH kernel
+    shared by ER blocking (char shingles of a surface), document dedup,
+    fuzzy decontamination and the incremental dedup stream (word shingles,
+    dedup.shingles_col).  `cols` are the id/passthrough columns the
+    signature is grouped by; `shingles` is an array column.
 
-    Engine-portable string-min trick (same family as dedup.minhash_lsh_pairs):
-    minhash_i = min(md5(i || '|' || shingle)) — md5 is a uniform permutation
-    of the shingle space per seed, and the lexicographic min over hex digests
-    is a valid min-hash.  Bucket per band = concat of its `rows` mins.
+    Engine-portable string-min trick: minhash_i = min(md5(i || '|' ||
+    shingle)) — md5 is a uniform permutation of the shingle space per seed,
+    and the lexicographic min over hex digests is a valid min-hash.  The
+    bucket of band b is concat_ws(sep, [tag,] b, its `rows` mins):
+    'MH:<band>:<h…>' for blocking keys, '<band>#<h…>' for dedup buckets —
+    the same strings the DuckDB oracles build, and the strings persisted
+    stream state joins on.
 
-    Two wins over the former blake2b Arrow kernel: (1) the whole signature
-    runs inside whole-stage codegen (explode + hash-agg min; the dedup
-    sibling measured ~4x faster than interpreted/Python paths), so the ER
-    blocking stage now contains NO Python; (2) the signature is reproducible
-    in ANY SQL engine, which lets the driver's DuckDB oracle re-derive the
-    full blocking stage end-to-end (q_er_clusters)."""
-    k, rows, bands = cfg.shingle_k, cfg.minhash_rows, cfg.minhash_bands
-    n_hashes = rows * bands
-    ex = surfaces.select(
-        "node_id", "norm_name",
-        F.explode(char_shingles_col("norm_name", k)).alias("sh"),
-    )
-    # Hash inline per occurrence.  A/B-measured against the "hash each
-    # DISTINCT shingle once + broadcast-join the digests back" variant at
-    # sf0.1 (21k surfaces, interleaved min-of-3): inline 0.26s vs vocab-join
-    # 1.07s — codegen md5 is cheap enough that the extra distinct + join
-    # stages cost 4x more than the redundant hashing saves, and the digest
-    # table (|vocab| x n_hashes x 32-char hex) is a tens-of-MB broadcast at
-    # web charsets.  Inline also keeps the stage a single codegen span.
-    sig = ex.groupBy("node_id", "norm_name").agg(
+    The signature runs inside whole-stage codegen (explode + hash-agg min;
+    the array-transform form is interpreted per element and measured ~4x
+    slower at sf0.1).  Hashing is inline per occurrence: A/B-measured
+    against hashing each DISTINCT shingle once + broadcast-joining the
+    digests back (sf0.1, 21k surfaces, interleaved min-of-3), inline took
+    0.26s vs 1.07s — the extra distinct + join stages cost more than the
+    redundant hashing saves, and the digest table is a tens-of-MB
+    broadcast at web charsets."""
+    ex = df.select(*cols, F.explode(shingles).alias("sh"))
+    sig = ex.groupBy(*cols).agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("sh")))).alias(f"mh{i}")
-            for i in range(n_hashes)
+            for i in range(bands * rows)
         ]
     )
+    lead = [F.lit(tag)] if tag is not None else []
     band_cols = [
         F.concat_ws(
-            ":", F.lit("MH"), F.lit(str(b)),
+            sep, *lead, F.lit(str(b)),
             *[F.col(f"mh{b * rows + r}") for r in range(rows)],
-        ).alias("bk")
+        )
         for b in range(bands)
     ]
-    return sig.select(
-        "node_id", "norm_name",
-        F.explode(F.array(*band_cols)).alias("block_key"),
-    )
+    return sig.select(*cols, F.explode(F.array(*band_cols)).alias(key_col))
 
+
+# ------------------------------------------------------------- pair emission
+
+
+def capped_key_pairs(
+    keys: DataFrame, id_col: str, key_col: str, cap: int
+) -> DataFrame:
+    """(key_col, id_a, id_b) with id_a < id_b for every two ids sharing a
+    key — the capped self-join behind LSH, phonetic and block-graph pairs.
+    Each key keeps its first `cap` ids in id order (row_number window) so
+    a hot key emits at most C(cap, 2) pairs whatever the corpus size — a
+    deterministic, disclosed recall bound.  Pairs sharing several keys
+    come out once per key; callers dedup or count."""
+    w = Window.partitionBy(key_col).orderBy(id_col)
+    capped = (
+        keys.select(id_col, key_col)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= cap)
+        .drop("rn")
+    )
+    a = capped.toDF("id_a", key_col)
+    b = capped.toDF("id_b", key_col)
+    return (
+        a.join(b, key_col)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select(key_col, "id_a", "id_b")
+    )
 
 
 # ------------------------------------------------------------------ assembly
@@ -195,7 +232,16 @@ def candidate_pairs(
     if surfaces is None:
         surfaces = distinct_surfaces(mentions).persist()
     sn_keys = surface_block_keys(surfaces)
-    mh_keys = minhash_signatures(surfaces, cfg)
+    mh_keys = minhash_band_keys(
+        surfaces,
+        ["node_id", "norm_name"],
+        char_shingles_col("norm_name", cfg.shingle_k),
+        cfg.minhash_bands,
+        cfg.minhash_rows,
+        sep=":",
+        tag="MH",
+        key_col="block_key",
+    )
     keys = sn_keys.unionByName(mh_keys)
     if prune is not None:
         # the bound's acronym term needs the exact is_acr flags to stay
@@ -412,24 +458,14 @@ def phonetic_pairs(
 ) -> DataFrame:
     """Candidate pairs from the phonetic key: one groupBy-free keying
     projection, the standard row_number hot-block cap (soundex buckets
-    are famously skewed — S530 holds every smith/smyth/schmidt), and a
-    band self-join.  Output (id_a, id_b, block_key) distinct pairs."""
-    from pyspark.sql import Window
-
+    are famously skewed — S530 holds every smith/smyth/schmidt) and the
+    key self-join, both via capped_key_pairs.  Output (id_a, id_b,
+    block_key) distinct pairs."""
     keyed = surfaces.select(
         F.col(id_col), soundex_key_col(name_col).alias("block_key")
     ).where(F.col("block_key").isNotNull())
-    w = Window.partitionBy("block_key").orderBy(id_col)
-    capped = (
-        keyed.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max_block)
-        .drop("rn")
-    )
-    a = capped.toDF("id_a", "block_key")
-    b = capped.toDF("id_b", "block_key")
     return (
-        a.join(b, "block_key")
-        .where(F.col("id_a") < F.col("id_b"))
+        capped_key_pairs(keyed, id_col, "block_key", max_block)
         .select("id_a", "id_b", "block_key")
         .distinct()
     )

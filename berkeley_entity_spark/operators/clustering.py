@@ -141,7 +141,8 @@ def connected_components(
 ) -> DataFrame:
     """(u, v) edges -> (node_id, component) with component = min node id of
     the component.  Converges when the edge-set checksum is stable (every
-    edge then points directly at its component root).
+    edge then points directly at its component root); raises RuntimeError
+    if the distributed loop is still changing after max_iterations rounds.
 
     Each round is materialized with localCheckpoint — without it the logical
     plan doubles per round and the job dies re-deriving lineage (measured:
@@ -238,6 +239,12 @@ def connected_components(
             if sig == prev_sig:
                 break
             prev_sig = sig
+        else:
+            # a partially merged mapping is a plausible wrong answer
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iterations} "
+                "rounds (edge-set signature still changing)"
+            )
         # after convergence every edge is (member -> root); materialize the
         # final mapping HERE (still non-adaptive, one job) — callers consume
         # it from multiple branches and would otherwise re-derive it each time

@@ -3,10 +3,14 @@
 Exact + near-dup over a `documents(doc_id, text, ...)` table:
 
   * exact_dedup           — hash-groupBy, keep min doc_id
-  * minhash_lsh_pairs     — MinHash over word shingles with the *string-min*
-    trick: minhash_i = min(md5(seed_i || shingle)).  Using md5 keeps the
-    signature reproducible in ANY engine (the DuckDB oracle runs the exact
-    same expression), unlike engine-specific hash functions.
+  * minhash_lsh_pairs     — MinHash over word shingles (shingles_col) with
+    the *string-min* trick: minhash_i = min(md5(seed_i || shingle)).  Using
+    md5 keeps the signature reproducible in ANY engine (the DuckDB oracle
+    runs the exact same expression), unlike engine-specific hash functions.
+    The signature/bucket kernel (blocking.minhash_band_keys) and the capped
+    bucket self-join (blocking.capped_key_pairs) are shared with ER
+    blocking; fuzzy_contaminated_docs and the incremental dedup stream
+    (streaming/ingest.py) bucket through the same kernel.
   * simhash               — 64-bit simhash in an Arrow kernel + banded
     hamming candidate pairs
   * ngram_jaccard_pairs   — token n-gram Jaccard via explode/groupBy counting
@@ -26,6 +30,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from berkeley_entity_spark.operators.blocking import capped_key_pairs, minhash_band_keys
 
 
 def tokens_col(text_col: str = "text"):
@@ -58,56 +64,6 @@ def shingles_col(n: int = 3, text_col: str = "text"):
     ).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def minhash_signature_cols(n_hashes: int, shingle_expr):
-    """minhash_i = min(md5(i || '|' || shingle)) — engine-portable MinHash.
-
-    A lexicographic min over md5 hex digests is a valid min-hash family
-    (md5 is a uniform permutation of the shingle space for each seed)."""
-    def mk(i: int):
-        prefix = f"{i}|"
-        # NB: the lambda must take exactly one arg — PySpark passes
-        # (element, index) to two-arg lambdas, clobbering defaults
-        return F.array_min(
-            F.transform(shingle_expr, lambda s: F.md5(F.concat(F.lit(prefix), s)))
-        ).alias(f"mh{i}")
-
-    return [mk(i) for i in range(n_hashes)]
-
-
-def minhash_band_buckets(
-    documents: DataFrame,
-    bands: int = 4,
-    rows: int = 2,
-    shingle_n: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, bucket) — one row per (doc, LSH band): the md5 string-min
-    signature grouped into band buckets.  The building block shared by the
-    batch pair join (minhash_lsh_pairs) and the incremental streaming
-    dedup (streaming/ingest.py), so both derive candidates from the exact
-    same bucketing."""
-    n_hashes = bands * rows
-    # explode + hash-agg min: the md5 mins run inside whole-stage codegen;
-    # the equivalent array-transform form is interpreted per element and
-    # benchmarked ~4x slower at sf0.1
-    ex = documents.select(
-        "doc_id", F.explode(shingles_col(shingle_n, text_col)).alias("sh")
-    )
-    sig = ex.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("sh")))).alias(f"mh{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    band_cols = [
-        F.concat_ws("#", F.lit(str(b)), *[F.col(f"mh{b * rows + r}") for r in range(rows)]).alias(
-            "bucket"
-        )
-        for b in range(bands)
-    ]
-    return sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bucket"))
-
-
 def minhash_lsh_pairs(
     documents: DataFrame,
     bands: int = 4,
@@ -116,24 +72,18 @@ def minhash_lsh_pairs(
     max_bucket: int = 200,
     text_col: str = "text",
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) sharing an LSH band bucket."""
-    buckets = minhash_band_buckets(documents, bands, rows, shingle_n, text_col)
-    w = Window.partitionBy("bucket").orderBy("doc_id")
+    """Candidate near-dup pairs (id_a < id_b) sharing an LSH band bucket,
+    hot buckets capped at max_bucket docs (doc_id order)."""
     # NOT persisted: the self-join recomputes the md5 signature exprs on
     # both sides, but A/B measurement (sf0.1, min-of-2 warm) put recompute
     # at 4.9s vs 6.0s persisted — codegen md5 is cheaper than row-cache
     # materialization
-    ranked = buckets.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= max_bucket
+    buckets = minhash_band_keys(
+        documents, ["doc_id"], shingles_col(shingle_n, text_col), bands, rows
     )
-    a, b = ranked.alias("a"), ranked.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        capped_key_pairs(buckets, "doc_id", "bucket", max_bucket)
+        .select("id_a", "id_b")
         .distinct()
     )
 
@@ -283,9 +233,13 @@ def fuzzy_contaminated_docs(
     Output: (doc_id, n_hit_buckets, n_bench_docs) per contaminated
     training doc; a benchmark doc present in training flags itself (the
     decontamination pass is expected to drop it)."""
-    tb = minhash_band_buckets(documents, bands, rows, shingle_n, text_col)
+    tb = minhash_band_keys(
+        documents, ["doc_id"], shingles_col(shingle_n, text_col), bands, rows
+    )
     bb = (
-        minhash_band_buckets(benchmark, bands, rows, shingle_n, text_col)
+        minhash_band_keys(
+            benchmark, ["doc_id"], shingles_col(shingle_n, text_col), bands, rows
+        )
         .select("bucket", F.col("doc_id").alias("bench_id"))
         .distinct()
     )
@@ -368,7 +322,7 @@ def simhash_near_pairs(
     all-pairs form was quadratic on exactly the templated-boilerplate
     classes a dedup pass exists for.  The band join then runs over DISTINCT
     signatures only, with the same `row_number() <= max_bucket` hot-bucket
-    cap minhash_lsh_pairs uses (recall loss from the cap is deliberate and
+    cap as blocking.capped_key_pairs (recall loss from the cap is deliberate and
     mirrored bitwise in the DuckDB oracle).  Under transitive closure the
     star + rep-rep edge set yields the same components as all-pairs.
     """

@@ -172,24 +172,6 @@ def extract_mentions(
     )
 
 
-def extracted_text(pages: DataFrame) -> DataFrame:
-    """(url, text) re-derived from html — byte-identity check input."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "text": pdf["html"].map(
-                        lambda b: extract_text(bytes(b).decode("utf-8"))
-                    ),
-                }
-            )
-
-    return pages.select("url", "html").mapInPandas(gen, schema="url string, text string")
-
-
-
 # ---------------------------------------------------------- nominal mentions
 
 # Determiner closed class (DT) and the run-terminating function words.

@@ -32,8 +32,10 @@ last deliberately hot to exercise the cap).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from berkeley_entity_spark.operators.blocking import capped_key_pairs
 
 __all__ = [
     "doc_block_keys",
@@ -71,21 +73,10 @@ def block_graph_edges(
     capped at max_block members (deterministic id order) before the
     within-block self-join, so a degenerate hot key contributes at most
     C(max_block, 2) pairs regardless of corpus size (disclosed
-    comparison-window bound, same policy as minhash_lsh_pairs)."""
-    w = Window.partitionBy("k").orderBy("id")
-    capped = (
-        keys.select(F.col(id_col).alias("id"), F.col(key_col).alias("k"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max_block)
-        .drop("rn")
-    )
-    a = capped.alias("a")
-    b = capped.alias("b")
+    comparison-window bound, via blocking.capped_key_pairs)."""
     return (
-        a.join(b, (F.col("a.k") == F.col("b.k")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
+        capped_key_pairs(keys, id_col, key_col, max_block)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("cbs"))
     )
 

@@ -61,10 +61,6 @@ def is_pronoun_lc(word_lc: str) -> bool:
     return word_lc in ALL_PRONOUNS
 
 
-def is_demonstrative(word_lc: str) -> bool:
-    return word_lc in DEMONSTRATIVES
-
-
 def canonicalize(word: str) -> str:
     """Stanford-style canonical form; non-pronouns pass through lowercased
     (the reference returns the input when unmapped)."""

@@ -68,22 +68,6 @@ def featurize_query_denotation(
     return feats
 
 
-def score_query_denotation(
-    qtype: str,
-    variant: str,
-    den: str,
-    rank: int | None,
-    nonempty: bool,
-    is_first_nonempty: bool,
-    weights: dict[str, float],
-) -> float:
-    """score(q, d) = queryFeats + queryDenotationFeats weight sums
-    (JointQueryDenotationChooser.scala:92-101)."""
-    feats = featurize_query(qtype, nonempty, is_first_nonempty)
-    feats += featurize_query_denotation(qtype, variant, den, rank)
-    return sum(weights.get(f, 0.0) for f in feats)
-
-
 def load_query_chooser() -> dict[str, float]:
     from importlib import resources
 

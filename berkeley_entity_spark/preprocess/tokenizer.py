@@ -74,8 +74,3 @@ def ptb_tokenize(sentence: str) -> list[str]:
     s = _CLITIC.sub(r"\1 '\2 ", s)
     s = s.strip()
     return _SPLIT_WS.split(s) if s else []
-
-
-def span_to_string(tokens: list[str], start: int, end: int) -> str:
-    """Reference Mention.spanToString (Mention.scala:67): join with spaces."""
-    return " ".join(tokens[start:end])

@@ -7,11 +7,14 @@ mentions table (the reference semantics are corpus-level; incremental
 clustering would change results, so the honest incremental unit is extract).
 
 Also provides a watermarked per-window mention-rate aggregation — the
-standard late-data-tolerant monitoring stream.
+standard late-data-tolerant monitoring stream, and the incremental
+near-dup / ER / golden-record streams (MinHash-LSH buckets from
+blocking.minhash_band_keys).
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,7 +89,9 @@ def start_incremental_dedup_stream(
     replayed batch overwrites its own partition instead of duplicating
     rows (the standard idempotent-foreachBatch pattern).
 
-    Hot buckets are capped like the batch operator (dedup.py): the state
+    Buckets come from the batch operators' kernel (blocking.minhash_band_keys
+    over dedup.shingles_col), so stream state holds the same '<band>#<h…>'
+    strings.  Hot buckets are capped like the batch operator: the state
     table never holds more than max_bucket rows per bucket (first-arrival
     order — the streaming analog of minhash_lsh_pairs' doc_id-rank cap;
     identical below the cap, arrival-ordered above it, disclosed), and the
@@ -118,6 +123,21 @@ def start_incremental_dedup_stream(
     return writer.start()
 
 
+def _read_parquet_or_none(sess: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at `path`, or None when it holds no rows yet: a
+    MISSING dir (first batch) or an EXISTING dir with no parquet footers
+    (UNABLE_TO_INFER_SCHEMA — a prior zero-row write under dynamic
+    partition overwrite).  Any other read failure raises: silently reading
+    it as "no state" would permanently drop a batch's cross pairs, pairs or
+    snapshot."""
+    try:
+        return sess.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return None
+
+
 def _dedup_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -135,13 +155,12 @@ def _dedup_batch(
     state append, both sinks idempotently partitioned by batch_id."""
     from pyspark.sql import Window
 
-    from berkeley_entity_spark.operators.dedup import minhash_band_buckets
+    from berkeley_entity_spark.operators.blocking import minhash_band_keys
+    from berkeley_entity_spark.operators.dedup import shingles_col
 
     sess = batch_df.sparkSession
     docs = batch_df.select(F.col("url").alias("doc_id"), "text")
-    raw = minhash_band_buckets(
-        docs, bands=bands, rows=rows, shingle_n=shingle_n
-    )
+    raw = minhash_band_keys(docs, ["doc_id"], shingles_col(shingle_n), bands, rows)
     # within-batch hot-bucket cap (arrival side)
     wb = Window.partitionBy("bucket").orderBy("doc_id")
     b = (
@@ -150,25 +169,7 @@ def _dedup_batch(
         .drop("_rn")
         .localCheckpoint(eager=True)
     )
-    try:
-        state = sess.read.parquet(state_dir).select("doc_id", "bucket")
-        has_state = True
-    except Exception as e:
-        # a MISSING state dir means "first batch"; an EXISTING dir with no
-        # parquet footers (UNABLE_TO_INFER_SCHEMA — a prior zero-row write
-        # under dynamic overwrite) means "no state rows yet".  Any other
-        # read failure must fail the batch (silently treating it as empty
-        # would permanently drop that batch's cross pairs).
-        if not any(
-            s in str(e)
-            for s in (
-                "PATH_NOT_FOUND",
-                "Path does not exist",
-                "UNABLE_TO_INFER_SCHEMA",
-            )
-        ):
-            raise
-        has_state = False
+    state = _read_parquet_or_none(sess, state_dir)
     a = b.toDF("id_new", "bucket")
     within = (
         a.join(b.toDF("id_old", "bucket"), "bucket")
@@ -179,7 +180,8 @@ def _dedup_batch(
     )
     pairs = within
     new_state = b
-    if has_state:
+    if state is not None:
+        state = state.select("doc_id", "bucket")
         cnt = state.groupBy("bucket").agg(F.count(F.lit(1)).alias("_n"))
         cross = (
             a.join(state.toDF("id_old", "bucket"), "bucket")
@@ -232,29 +234,13 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
         connected_components,
     )
 
-    try:
-        new_pairs = (
-            sess.read.parquet(pairs_dir)
-            .where(F.col("batch_id") == batch_id)
-            .select(
-                F.xxhash64("id_a").alias("u"), F.xxhash64("id_b").alias("v")
-            )
-        )
-    except Exception as e:
-        # a zero-pair first batch either writes no directory at all
-        # (PATH_NOT_FOUND) or — under dynamic partition overwrite — a
-        # bare directory with no parquet footers (UNABLE_TO_INFER_SCHEMA);
-        # both mean "no pairs yet".  Anything else must fail the batch.
-        if not any(
-            s in str(e)
-            for s in (
-                "PATH_NOT_FOUND",
-                "Path does not exist",
-                "UNABLE_TO_INFER_SCHEMA",
-            )
-        ):
-            raise
+    all_pairs = _read_parquet_or_none(sess, pairs_dir)
+    if all_pairs is None:
         new_pairs = sess.createDataFrame([], "u long, v long")
+    else:
+        new_pairs = all_pairs.where(F.col("batch_id") == batch_id).select(
+            F.xxhash64("id_a").alias("u"), F.xxhash64("id_b").alias("v")
+        )
     prev = _latest_snapshot(sess, assign_dir, batch_id)
     touched = None
     touched_clusters = None
@@ -310,20 +296,8 @@ def _latest_snapshot(
     before_batch, or None on the first batch.  Replay-safe: a re-run of
     batch K deterministically re-reads snapshot K-1 even if later
     partitions exist."""
-    try:
-        snaps = sess.read.parquet(assign_dir)
-    except Exception as e:
-        # missing dir OR footer-less dir from a prior zero-row dynamic
-        # overwrite both mean "no snapshot yet" (see _dedup_batch)
-        if not any(
-            s in str(e)
-            for s in (
-                "PATH_NOT_FOUND",
-                "Path does not exist",
-                "UNABLE_TO_INFER_SCHEMA",
-            )
-        ):
-            raise
+    snaps = _read_parquet_or_none(sess, assign_dir)
+    if snaps is None:
         return None
     snaps = snaps.where(F.col("batch_id") < before_batch)
     row = snaps.agg(F.max("batch_id").alias("b")).collect()[0]

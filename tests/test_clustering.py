@@ -2,6 +2,7 @@
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from berkeley_entity_spark.operators.clustering import connected_components
@@ -67,6 +68,16 @@ def test_cc_converges_on_long_chain(spark):
     vals = comp.select(F.countDistinct("component")).collect()[0][0]
     assert vals == 1
     assert comp.count() == n + 1
+
+
+def test_cc_raises_when_not_converged(spark):
+    """The distributed loop must fail loudly, not return the partially
+    merged components it holds after max_iterations rounds."""
+    n = 200
+    edges = [(i + 1, i) for i in range(n)]
+    df = spark.createDataFrame(edges, "u long, v long").repartition(5)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iterations=1, small_graph_threshold=0)
 
 
 def test_cc_distributed_loop_matches_driver_finish(spark):

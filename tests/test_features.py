@@ -304,7 +304,15 @@ def test_candidate_pairs_prune_same_edges(spark, tiny_corpus):
     assert len(full) > 0
     # schema contract identical on both paths
     cols = candidate_pairs(mentions, cfg, surfaces=surfaces, n_surfaces=n).columns
-    cols_p = candidate_pairs(
+    pruned_df = candidate_pairs(
         mentions, cfg, surfaces=surfaces, n_surfaces=n, prune=(w, thr)
-    ).columns
-    assert cols == cols_p
+    )
+    assert cols == pruned_df.columns
+    # pushdown barrier: the prune bound must stay a post-join Filter — in a
+    # Join condition every same-block candidate would pay the levenshtein
+    plan = pruned_df._jdf.queryExecution().executedPlan().toString()
+    in_join = [
+        line for line in plan.splitlines()
+        if "Join" in line and "levenshtein" in line.lower()
+    ]
+    assert not in_join, in_join

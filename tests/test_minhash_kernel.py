@@ -1,0 +1,73 @@
+"""The Spark MinHash-LSH kernel (blocking.minhash_band_keys) and the DuckDB
+oracles' SQL (_minhash_band_ctes) emit byte-identical bucket strings — for
+ER blocking keys over char shingles (PipelineConfig defaults) and for
+dedup buckets over word shingles (bands=4, rows=2).  Fixed strings, no
+testdata."""
+
+import duckdb
+import pandas as pd
+
+import __spark_entry__ as entry
+from berkeley_entity_spark.config import PipelineConfig
+from berkeley_entity_spark.operators.blocking import (
+    char_shingles_col,
+    minhash_band_keys,
+)
+from berkeley_entity_spark.operators.dedup import minhash_lsh_pairs, shingles_col
+
+SURFACES = [
+    "global data corporation", "gdc", "g", "jo", "john smith", "jon smyth",
+    "smith", "münchen rück", "acme corp", "acme corporation",
+]
+DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy cat"),
+    (3, "two words"),
+    (4, "solo"),
+    (5, "  spaced   out  text  here "),
+    (6, "the quick brown fox jumps over the lazy dog"),
+]
+
+
+def test_er_block_keys_match_oracle(spark):
+    cfg = PipelineConfig()
+    surf = spark.createDataFrame([(s,) for s in SURFACES], "norm_name string")
+    got = {
+        (r["norm_name"], r["block_key"])
+        for r in minhash_band_keys(
+            surf, ["norm_name"], char_shingles_col("norm_name", cfg.shingle_k),
+            cfg.minhash_bands, cfg.minhash_rows,
+            sep=":", tag="MH", key_col="block_key",
+        ).collect()
+    }
+    values = ", ".join(f"('{s}', 1, false)" for s in SURFACES)
+    sql = f"""
+WITH surf AS (SELECT * FROM (VALUES {values}) t(norm_name, n_mentions, is_acr)),
+{entry._er_blocking_ctes()}
+SELECT norm_name, block_key FROM mhk"""
+    want = set(duckdb.connect().execute(sql).fetchall())
+    assert len(want) == len(SURFACES) * cfg.minhash_bands
+    assert got == want
+
+
+def test_dedup_buckets_and_pairs_match_oracle(spark):
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(DOCS, columns=["doc_id", "text"]))
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    docs = docs.unionByName(docs.selectExpr("doc_id + 100000 AS doc_id", "text"))
+    got = {
+        (r["doc_id"], r["bucket"])
+        for r in minhash_band_keys(docs, ["doc_id"], shingles_col(3), 4, 2).collect()
+    }
+    want = set(
+        con.execute(entry._minhash_pairs_ctes(4, 2) + "\nSELECT doc_id, bucket FROM b")
+        .fetchall()
+    )
+    assert len(want) == 2 * len(DOCS) * 4
+    assert got == want
+    got_pairs = {
+        (r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, bands=4, rows=2).collect()
+    }
+    want_pairs = set(con.execute(entry._minhash_oracle(4, 2)).fetchall())
+    assert (1, 6) in want_pairs and (1, 100001) in want_pairs
+    assert got_pairs == want_pairs

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from berkeley_entity_spark.config import SynthConfig
+from berkeley_entity_spark.operators.blocking import minhash_band_keys
+from berkeley_entity_spark.operators.dedup import shingles_col
 from berkeley_entity_spark.operators.extract import extract_mentions
 from berkeley_entity_spark.streaming.ingest import (
     mention_rate_stream,
@@ -16,6 +18,11 @@ from berkeley_entity_spark.streaming.ingest import (
     start_extract_stream,
 )
 from berkeley_entity_spark.synth import generate_webpages
+
+
+def _batch_buckets(docs):
+    """(doc_id, bucket) with the stream's default bands=4, rows=2, n=3."""
+    return minhash_band_keys(docs, ["doc_id"], shingles_col(3), 4, 2)
 
 
 @pytest.fixture(scope="module")
@@ -110,7 +117,6 @@ def test_incremental_dedup_equals_batch_bucket_join(spark, pages_dir, tmp_path):
     the page drops yields EXACTLY the batch band-bucket join pair set on
     the same corpus — with no full-corpus signature recompute (per batch:
     new-doc signatures + one equi-join against the accumulated state)."""
-    from berkeley_entity_spark.operators.dedup import minhash_band_buckets
     from berkeley_entity_spark.streaming.ingest import (
         start_incremental_dedup_stream,
     )
@@ -141,9 +147,7 @@ def test_incremental_dedup_equals_batch_bucket_join(spark, pages_dir, tmp_path):
         (r["id_a"], r["id_b"])
         for r in spark.read.parquet(pairs).distinct().collect()
     }
-    b = minhash_band_buckets(
-        pages.select(F.col("url").alias("doc_id"), "text")
-    )
+    b = _batch_buckets(pages.select(F.col("url").alias("doc_id"), "text"))
     a = b.toDF("id_a", "bucket")
     want = {
         (r["id_a"], r["id_b"])
@@ -227,6 +231,33 @@ def test_incremental_dedup_hot_bucket_cap_and_idempotent_sink(spark, tmp_path):
     } == state_set
 
 
+def test_unreadable_state_dir_raises(spark, tmp_path):
+    """Only a missing or footer-less parquet dir reads as "no state yet";
+    any other read failure (here: a state dir holding a non-parquet file)
+    must fail the batch, not silently drop its cross-state pairs."""
+    from berkeley_entity_spark.streaming.ingest import (
+        _dedup_batch,
+        _read_parquet_or_none,
+    )
+
+    assert _read_parquet_or_none(spark, str(tmp_path / "missing")) is None
+    (tmp_path / "empty").mkdir()
+    assert _read_parquet_or_none(spark, str(tmp_path / "empty")) is None
+    state = tmp_path / "state"
+    state.mkdir()
+    (state / "part-00000.parquet").write_bytes(b"this is not a parquet file")
+    with pytest.raises(Exception):
+        _read_parquet_or_none(spark, str(state))
+    batch = _as_pages(spark, [("u1", "one two three four"), ("u2", "one two three four")])
+    pairs = tmp_path / "pairs"
+    with pytest.raises(Exception):
+        _dedup_batch(
+            batch, 0, state_dir=str(state), pairs_dir=str(pairs),
+            bands=4, rows=2, shingle_n=3, max_bucket=200,
+        )
+    assert not pairs.exists()
+
+
 def _as_pages(spark, rows):
     return spark.createDataFrame(rows, "url string, text string").selectExpr(
         "url", "CAST(NULL AS timestamp) AS warc_ts",
@@ -248,7 +279,6 @@ def test_incremental_er_equals_batch_cc(spark, tmp_path):
     extends an existing cluster (affected-edges path) and adds fresh
     within-batch clusters (no-prev path ran in batch 1)."""
     from berkeley_entity_spark.operators.clustering import connected_components
-    from berkeley_entity_spark.operators.dedup import minhash_band_buckets
     from berkeley_entity_spark.streaming.ingest import (
         start_incremental_er_stream,
     )
@@ -281,7 +311,7 @@ def test_incremental_er_equals_batch_cc(spark, tmp_path):
     }
 
     docs = _as_pages(spark, all_rows).select(F.col("url").alias("doc_id"), "text")
-    b = minhash_band_buckets(docs)
+    b = _batch_buckets(docs)
     a = b.toDF("id_a", "bucket")
     batch_pairs = (
         a.join(b.toDF("id_b", "bucket"), "bucket")
@@ -334,7 +364,6 @@ def test_golden_scd2_stream(spark, tmp_path):
     re-crawl with no new pairs still versions its cluster's golden
     record."""
     from berkeley_entity_spark.operators.clustering import connected_components
-    from berkeley_entity_spark.operators.dedup import minhash_band_buckets
     from berkeley_entity_spark.operators.survivorship import golden_records
     from berkeley_entity_spark.streaming.ingest import (
         start_golden_scd2_stream,
@@ -379,7 +408,7 @@ def test_golden_scd2_stream(spark, tmp_path):
         .localCheckpoint(eager=True)
     )
     docs = latest.select(F.col("url").alias("doc_id"), "text")
-    b = minhash_band_buckets(docs)
+    b = _batch_buckets(docs)
     pairs = (
         b.toDF("id_a", "bucket")
         .join(b.toDF("id_b", "bucket"), "bucket")
@@ -453,7 +482,6 @@ def test_golden_scd2_stream_out_of_order_batches(spark, tmp_path):
           a-cluster and bumps its version — membership convergence does
           not depend on timestamp monotonicity."""
     from berkeley_entity_spark.operators.clustering import connected_components
-    from berkeley_entity_spark.operators.dedup import minhash_band_buckets
     from berkeley_entity_spark.operators.survivorship import golden_records
     from berkeley_entity_spark.streaming.ingest import (
         start_golden_scd2_stream,
@@ -499,7 +527,7 @@ def test_golden_scd2_stream_out_of_order_batches(spark, tmp_path):
         .localCheckpoint(eager=True)
     )
     docs = latest.select(F.col("url").alias("doc_id"), "text")
-    b = minhash_band_buckets(docs)
+    b = _batch_buckets(docs)
     pairs = (
         b.toDF("id_a", "bucket")
         .join(b.toDF("id_b", "bucket"), "bucket")
