@@ -575,6 +575,12 @@ def _decode_scan(
     single-component scans, baseline full-band and progressive
     spectral-selection / successive-approximation passes."""
     ns = body[0]
+    ss, se, a = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
+    ah, al = a >> 4, a & 0xF
+    # tables this scan reads: DC codes only in a first DC pass (a DC
+    # refinement reads raw bits), AC codes in any pass that covers k >= 1
+    need_dc = ss == 0 and ah == 0
+    need_ac = ss > 0 or (ah == 0 and se > 0)
     scan_comps = []
     for c in range(ns):
         cid, tt = body[1 + 2 * c], body[2 + 2 * c]
@@ -583,9 +589,9 @@ def _decode_scan(
                 sc = dict(comp)
                 sc["dc"] = htabs.get((0, tt >> 4))
                 sc["ac"] = htabs.get((1, tt & 0xF))
+                if (need_dc and sc["dc"] is None) or (need_ac and sc["ac"] is None):
+                    raise ValueError("missing DHT table")
                 scan_comps.append((ci, sc))
-    ss, se, a = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-    ah, al = a >> 4, a & 0xF
     br = _BitReader(payload, pos)
     st = _ScanState(len(comps))
 
@@ -653,6 +659,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         if payload[pos] != 0xFF:
             raise ValueError(f"expected marker at {pos}")
         marker = payload[pos + 1]
+        if marker == 0xFF:  # fill byte before a marker (T.81 B.1.1.2)
+            pos += 1
+            continue
         if marker == 0xD9:  # EOI
             break
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / stray RST

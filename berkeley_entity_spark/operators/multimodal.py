@@ -2,8 +2,9 @@
 
 Images / audio / video are opaque `binary` columns with typed metadata
 structs.  The Spark-side plumbing — schema, Arrow batch shape, partition
-sizing — is real and tested.  The codec slot is REAL for the two container
-formats decodable with the standard library alone:
+sizing — is real and tested.  The codec slot is REAL for PNG, baseline and
+progressive JPEG, GIF, BMP and WAV, each decoded with numpy and the
+standard library alone:
 
   * BMP  (uncompressed 24-bit BI_RGB) — hand-parsed header + numpy pixel
     grid; decode, feature-extract (4x4x3 grid means) and nearest-neighbor
@@ -15,20 +16,22 @@ formats decodable with the standard library alone:
     filters (None/Sub/Up/Average/Paeth) reconstructed per the spec; the
     encoder emits filter-0 RGB.  This is a full compressed-image codec with
     zero third-party dependencies.
-  * JPEG (baseline sequential DCT, 4:4:4 / 4:2:2 / 4:2:0, grayscale,
-    restart markers) — full spec implementation in `operators/jpeg.py`:
-    Huffman entropy decode from the file's own DHT tables, dequant, IDCT,
-    chroma upsample; plus an encoder with the Annex-K tables.
+  * JPEG (baseline and extended sequential, and progressive with spectral
+    selection and successive approximation; 4:4:4 / 4:2:2 / 4:2:0,
+    grayscale, restart markers) — full spec implementation in
+    `operators/jpeg.py`: Huffman entropy decode from the file's own DHT
+    tables, dequant, IDCT, chroma upsample; plus an encoder with the
+    Annex-K tables.
   * GIF  (87a/89a first frame) — full LZW decompression (variable code
     width, Clear/End, 4096-entry dictionary, the KwKwK case), global and
     local color tables, interlace; encoder emits a spec-valid
     root-code-literal LZW stream.
 
-Formats still out of scope (MP3/MP4 audio-video entropy coders, progressive
-JPEG, interlaced/16-bit PNG) raise NotImplementedError; the magic-byte
-dispatch and the error message say so explicitly.  `fake=True` remains as
-the deterministic stand-in for exercising the distributed path with
-arbitrary payload bytes.
+Formats still out of scope (MP3/MP4 audio-video entropy coders,
+arithmetic-coded/lossless/hierarchical/12-bit JPEG, interlaced/16-bit PNG)
+raise NotImplementedError; the magic-byte dispatch and the error message
+say so explicitly.  `fake=True` remains as the deterministic stand-in for
+exercising the distributed path with arbitrary payload bytes.
 
 At 100 TB the pattern matters more than the codec: binary columns are
 excluded from every scan that does not need them (column pruning), batches
@@ -452,8 +455,9 @@ def _audio_features(x: np.ndarray, dim: int) -> np.ndarray:
 
 
 def _real_features(payload: bytes, dim: int) -> np.ndarray:
-    """Magic-byte dispatch to a real decoder.  Compressed containers raise
-    NotImplementedError (no codec libraries in this environment)."""
+    """Magic-byte dispatch to a real decoder (PNG, baseline and progressive
+    JPEG, GIF, BMP, WAV).  Any other format raises NotImplementedError (no
+    codec libraries in this environment)."""
     if payload[:2] == b"BM":
         return _image_features(decode_bmp(payload), dim)
     if payload[:8] == _PNG_SIG:
@@ -468,8 +472,9 @@ def _real_features(payload: bytes, dim: int) -> np.ndarray:
         x, _ = decode_wav(payload)
         return _audio_features(x, dim)
     raise NotImplementedError(
-        "real decoding is implemented for BMP, PNG, baseline JPEG and WAV "
-        "(spec implementations, no codec libraries); MP3/MP4/... would "
+        "real decoding is implemented for PNG, baseline and progressive "
+        "JPEG, GIF, BMP and WAV (spec implementations, no codec "
+        "libraries); MP3/MP4/... would "
         "require codec libraries not present in this environment"
     )
 
@@ -489,12 +494,13 @@ def decode_media(
 ) -> DataFrame:
     """media table -> (media_id, kind, dim, features array<float>).
 
-    fake=False runs the REAL codecs: BMP (hand-parsed 24-bit BI_RGB), PNG
-    (stdlib-zlib inflate + full filter reconstruction) -> 4x4 grid-mean
-    features, and WAV (stdlib PCM decode -> per-window RMS features);
-    entropy-coded formats (JPEG/MP3/...) raise NotImplementedError (no
-    codec libraries in this container).  fake=True is the deterministic
-    stand-in for arbitrary payload bytes."""
+    fake=False runs the REAL codecs: PNG (stdlib-zlib inflate + full
+    filter reconstruction), baseline and progressive JPEG, GIF (LZW) and
+    BMP (hand-parsed 24-bit BI_RGB) -> 4x4 grid-mean features, and WAV
+    (stdlib PCM decode -> per-window RMS features); any other payload
+    (MP3/MP4/...) raises NotImplementedError (no codec libraries in this
+    container).  fake=True is the deterministic stand-in for arbitrary
+    payload bytes."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fn = _fake_features if fake else _real_features

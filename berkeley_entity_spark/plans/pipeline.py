@@ -70,8 +70,9 @@ def run_pipeline(
     if lang is not None:
         pages = pages.where(F.col("lang") == lang)
 
-    mentions = extract_mentions(pages)
-    if cfg.compute_properties:
+    if resume and store.exists("mentions"):
+        mentions = store.load(spark, "mentions")
+    elif cfg.compute_properties:
         from berkeley_entity_spark.operators.properties import with_number_gender
         from berkeley_entity_spark.synth import generate_numgender
 
@@ -83,10 +84,22 @@ def run_pipeline(
         # word through the same path and still come out NEUTRAL
         toks = F.split(F.col("span"), " ")
         person = (F.size(toks) >= 2) & ~F.col("is_acr")
-        mentions = with_number_gender(
-            mentions, numgender, person_expr=person, n_numgender=numgender.count()
-        )
-    mentions = stage(mentions, "mentions")
+        # with_number_gender reads its input three times (key count,
+        # broadcast build side, join-back probe); the lazy cache, filled by
+        # the first of them, runs the Python extract kernel once for all
+        extracted = extract_mentions(pages).persist()
+        try:
+            mentions = stage(
+                with_number_gender(
+                    extracted, numgender, person_expr=person,
+                    n_numgender=numgender.count(),
+                ),
+                "mentions",
+            )
+        finally:
+            extracted.unpersist()
+    else:
+        mentions = stage(extract_mentions(pages), "mentions")
     surfaces = distinct_surfaces(mentions).persist()
     n_surfaces = surfaces.count()  # materializes the cache; reused below
     pairs = stage(

@@ -177,6 +177,24 @@ def test_unsupported_profiles_and_bad_payloads_raise():
     hdr = b"\xff\xd8" + struct.pack(">HH", 0xFFDB, 2 + 129) + bytes([0x10] + [0] * 128)
     with pytest.raises(NotImplementedError, match="quant"):
         decode_jpeg(hdr + b"\xff\xd9")
+    # SOS naming an undefined Huffman slot (DC+AC, then AC alone): a clear
+    # decode error at SOS, not an AttributeError deep in the bit reader
+    good = encode_jpeg(img, quality=80)
+    sel = good.find(b"\xff\xda") + 6  # first component's Td/Ta byte
+    for tt in (0x33, 0x03):
+        bad = bytearray(good)
+        bad[sel] = tt
+        with pytest.raises(ValueError, match="missing DHT table"):
+            decode_jpeg(bytes(bad))
+
+
+@pytest.mark.parametrize("n_fill", [1, 2])
+def test_fill_bytes_before_marker_are_padding(n_fill):
+    """T.81 B.1.1.2: any marker may be preceded by 0xFF fill bytes."""
+    b = encode_jpeg(_gradient(16, 24), quality=85, subsample=True)
+    i = b.find(b"\xff\xda")
+    padded = b[:i] + b"\xff" * n_fill + b[i:]
+    assert np.array_equal(decode_jpeg(padded), decode_jpeg(b))
 
 
 # ------------------------------------------------ progressive test encoder
