@@ -735,9 +735,9 @@ def q_er_pipeline(spark, sf_dir):
     tools/freeze_er_pipeline_oracle.py asserts min |score - threshold| >=
     1e-6 over all candidate pairs (measured 0.89) and re-verifies gold
     pairwise F1 >= 0.99 (measured 1.0).  Output: per-cluster (rep_name,
-    n_surfaces, n_mentions) — the surface-level rollup (same scale
-    argument as q_er_clusters; assign_clusters' mention-level contract is
-    exercised by run_pipeline and the e2e tests)."""
+    n_surfaces, n_mentions) — the surface-level rollup shared with
+    q_er_clusters (_surface_cluster_rollup; assign_clusters' mention-level
+    contract is exercised by run_pipeline and the e2e tests)."""
     from berkeley_entity_spark.config import PipelineConfig, SynthConfig
     from berkeley_entity_spark.operators.blocking import candidate_pairs, distinct_surfaces
     from berkeley_entity_spark.operators.clustering import connected_components
@@ -759,20 +759,7 @@ def q_er_pipeline(spark, sf_dir):
     idf = collect_idf(idf_table(surfaces, n=n_surfaces))
     scored = score_pairs(pairs, idf)
     comp = connected_components(match_edges(scored))
-    surf = (
-        surfaces.select("norm_name", "node_id", "n_mentions")
-        .join(comp.toDF("node_id", "component"), "node_id", "left")
-        .withColumn("component", F.coalesce("component", "node_id"))
-    )
-    return (
-        surf.groupBy("component")
-        .agg(
-            F.sum("n_mentions").alias("n_mentions"),
-            F.count(F.lit(1)).alias("n_surfaces"),
-            F.min("norm_name").alias("rep_name"),
-        )
-        .select("rep_name", "n_surfaces", "n_mentions")
-    )
+    return _surface_cluster_rollup(surfaces, comp)
 
 
 def q_ner_tags(spark, sf_dir):
@@ -1061,37 +1048,36 @@ def q_er_clusters(spark, sf_dir):
     mentions = extract_mentions(_cap_docs(spark, sf_dir)).localCheckpoint(eager=True)
     surfaces = distinct_surfaces(mentions).persist()
     n_surfaces = surfaces.count()
-    # prune at BOTH cuts (same admissible codegen bound, same edge set):
-    # inside blocking it runs on the raw self-join stream BEFORE the pair-
-    # dedup shuffle (96% of pairs never reach an exchange); inside scoring
-    # it guards the Arrow kernel independently of the caller.
-    # features_out=False: only the score reaches match_edges (zero-weight
-    # Python features skipped — scores bit-identical).  The coarse bound is
-    # the CorefPruner.scala:36-47 cascade moved JVM-side — edge set provably
-    # unchanged, so the DuckDB oracle needs no prune clause
-    er_prune = (weights_vector(ORACLE_ER_WEIGHTS), ORACLE_ER_THRESHOLD)
+    # prune inside blocking: the admissible codegen bound (the
+    # CorefPruner.scala:36-47 cascade moved JVM-side) runs on the raw
+    # self-join stream BEFORE the pair-dedup shuffle (96% of pairs never
+    # reach an exchange).  match_edges keeps only score > threshold, so the
+    # edge set is provably unchanged and the DuckDB oracle needs no prune
+    # clause.  features_out=False: only the score reaches match_edges
+    # (zero-weight Python features skipped — scores bit-identical).
+    w = weights_vector(ORACLE_ER_WEIGHTS)
     pairs = candidate_pairs(
-        mentions, cfg, surfaces=surfaces, n_surfaces=n_surfaces, prune=er_prune
+        mentions, cfg, surfaces=surfaces, n_surfaces=n_surfaces,
+        prune=(w, ORACLE_ER_THRESHOLD),
     )
-    scored = score_pairs(
-        pairs,
-        {},
-        weights=weights_vector(ORACLE_ER_WEIGHTS),
-        features_out=False,
-        prune_threshold=ORACLE_ER_THRESHOLD,
-    )
+    scored = score_pairs(pairs, {}, weights=w, features_out=False)
     comp = connected_components(match_edges(scored, threshold=ORACLE_ER_THRESHOLD))
-    # Cluster rollup entirely at the SURFACE level: distinct_surfaces
-    # already carries per-surface n_mentions, every mention belongs to
-    # exactly one surface, and the output keys on rep_name (not
-    # cluster_id) — so expanding back to mention level (assign_clusters +
-    # a 600k-row mention join + mention-wide groupBy) is pure waste here.
-    # Identical output (n_mentions = sum of member-surface counts,
-    # n_surfaces = member count, rep_name = min member surface); the agg
-    # runs over the 7.5k-row surface table — the shape that still holds
-    # when mentions are 10^12 and surfaces are the small side (round-5
-    # job-count shave: 36 -> ~25 jobs at sf0.1, same rows).  The real
-    # pipeline keeps assign_clusters for its mention-level contract.
+    return _surface_cluster_rollup(surfaces, comp)
+
+
+def _surface_cluster_rollup(surfaces: DataFrame, comp: DataFrame) -> DataFrame:
+    """Per-cluster (rep_name, n_surfaces, n_mentions) of q_er_pipeline and
+    q_er_clusters, rolled up entirely at the SURFACE level: distinct_surfaces
+    already carries per-surface n_mentions, every mention belongs to exactly
+    one surface, and the output keys on rep_name (not cluster_id) — so
+    expanding back to mention level (assign_clusters + a 600k-row mention
+    join + mention-wide groupBy) is pure waste here.  Identical output
+    (n_mentions = sum of member-surface counts, n_surfaces = member count,
+    rep_name = min member surface); the agg runs over the 7.5k-row surface
+    table — the shape that still holds when mentions are 10^12 and surfaces
+    are the small side (round-5 job-count shave: 36 -> ~25 jobs at sf0.1,
+    same rows).  The real pipeline keeps assign_clusters for its
+    mention-level contract."""
     surf = (
         surfaces.select("norm_name", "node_id", "n_mentions")
         .join(comp.toDF("node_id", "component"), "node_id", "left")
@@ -4149,11 +4135,13 @@ def _minhash_band_ctes(
 
 def _word_shingles_sql(n: int = 3) -> str:
     """dedup.shingles_col in SQL over a `toks` list column: word n-grams,
-    or the whole token string when there are fewer than n tokens."""
+    the whole token string when there are fewer than n tokens, and no
+    shingle for a token-less doc."""
     return f"""CASE WHEN len(toks) >= {n}
             THEN list_transform(generate_series(1, len(toks) - {n - 1}),
                                 i -> array_to_string(list_slice(toks, i, i + {n - 1}), ' '))
-            ELSE [array_to_string(toks, ' ')] END"""
+            WHEN len(toks) > 0 THEN [array_to_string(toks, ' ')]
+            ELSE [] END"""
 
 
 def _er_blocking_ctes() -> str:

@@ -38,14 +38,10 @@ class PipelineConfig:
     # the same hot key are not generated (the salt destroys sorted-
     # neighborhood locality across sub-blocks).
     salt_hot_blocks: bool = False
-    # mention properties: fill number/gender from the Bergsma-Lin-style count
-    # table (reference always loads gender.data — NumberGenderComputer.scala)
-    compute_properties: bool = True
     # scoring
     score_threshold: float = 0.0  # logistic margin for a match edge
     # clustering
     max_cc_iterations: int = 50
-    checkpoint_every: int = 1
     # stage checkpoint root (parquet locally; iceberg table prefix on cluster)
     checkpoint_dir: str = "/tmp/bes_checkpoints"
     checkpoint_format: str = "parquet"

@@ -217,7 +217,7 @@ def candidate_pairs(
 
     prune=(weights, threshold): valid ONLY when the consumer keeps
     above-threshold edges (the q_er_clusters decode path).  Applies the
-    admissible codegen score bound (scoring.prune_never_match) to the RAW
+    admissible codegen score bound (scoring.prune_bound_prepped) to the RAW
     self-join output, BEFORE the unordered-pair dedup groupBy — the pair
     stream shrinks by the prune rate (96% at sf0.1) before it ever hits the
     dedup exchange or the attribute joins, which are the largest

@@ -53,15 +53,22 @@ def exact_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
 
 def shingles_col(n: int = 3, text_col: str = "text"):
     """Word n-gram shingles as an array column (pure SQL expressions:
-    transform over a sequence of slices — stays in codegen)."""
+    transform over a sequence of slices — stays in codegen); the whole token
+    string when there are fewer than n tokens, and no shingle at all for a
+    token-less (empty or whitespace-only) doc, so such docs land in no
+    bucket and never pair with each other."""
     toks = tokens_col(text_col)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array(F.array_join(toks, " ")))
+    return (
+        F.when(
+            F.size(toks) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+                lambda i: F.array_join(F.slice(toks, i, n), " "),
+            ),
+        )
+        .when(F.size(toks) > 0, F.array(F.array_join(toks, " ")))
+        .otherwise(F.array().cast("array<string>"))
+    )
 
 
 def minhash_lsh_pairs(

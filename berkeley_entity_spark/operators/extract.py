@@ -1,9 +1,11 @@
 """Extract stage: webpages -> mention records (P1-P13 of SURVEY.md §2.2).
 
 Reference semantics re-expressed:
-  * html -> text: deterministic boilerplate strip + paragraph
-    canonicalization (preprocess/SentenceSplitter.scala:32-55) — the
-    byte-identical-text-per-url invariant.
+  * html -> text happens upstream: the stored text column equals
+    preprocess.normalize.extract_text(html) (deterministic boilerplate
+    strip + paragraph canonicalization, preprocess/SentenceSplitter.scala:
+    32-55 — the byte-identical-text-per-url invariant), so extraction reads
+    text only.
   * sentence split: SentenceSplitter.scala:57-96 candidate machinery.
   * mention spans: proper-name runs of capitalized tokens — the web-text
     analog of CorefDocAssembler.scala:66-90 (NP spans ∪ NE chunks, with the
@@ -28,7 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.preprocess.normalize import extract_text
 from berkeley_entity_spark.preprocess.sentence import split_sentences
 from berkeley_entity_spark.synth import STARTERS_SET
 
@@ -111,22 +112,19 @@ def _mentions_from_text(
 
 def extract_mentions(
     pages: DataFrame,
-    from_html: bool = False,
     passthrough: tuple[str, ...] = (),
     appositive_subspans: bool = False,
 ) -> DataFrame:
     """webpages(url, warc_ts, html, text, lang) -> mentions DataFrame.
 
-    When from_html=True the text column is re-derived from html via the
-    deterministic extractor (used by the byte-identity test); otherwise the
-    stored text column is trusted (and html is never read — column pruning
-    keeps the 100 TB binary column out of the scan).
+    The stored text column is trusted and html is never read — column
+    pruning keeps the 100 TB binary column out of the scan.
 
     passthrough: extra page columns copied onto every emitted mention (e.g.
     warc_ts for the streaming rate aggregation — avoids a stream-stream join
     back to the source).
     """
-    cols = ["url", "html"] if from_html else ["url", "text"]
+    cols = ["url", "text"]
     pt = [c for c in passthrough if c not in cols]
     pt_schema = "".join(
         f", {name} {dtype}"
@@ -141,13 +139,8 @@ def extract_mentions(
         ]
         for pdf in batches:
             rows = []
-            texts = (
-                pdf["html"].map(lambda b: extract_text(bytes(b).decode("utf-8")))
-                if from_html
-                else pdf["text"]
-            )
             pt_vals = [pdf[c] for c in pt]
-            for i, (url, text) in enumerate(zip(pdf["url"], texts)):
+            for i, (url, text) in enumerate(zip(pdf["url"], pdf["text"])):
                 extra = tuple(v.iloc[i] for v in pt_vals)
                 for s_idx, start, end, span, appos in _mentions_from_text(
                     text, appositive_subspans

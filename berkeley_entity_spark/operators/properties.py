@@ -69,11 +69,10 @@ def _ng_joined(spans: DataFrame, ng: DataFrame, key: str, prefix: str) -> DataFr
 
 
 def _props_for(spans: DataFrame, numgender: DataFrame, span_col: str) -> DataFrame:
-    """Add `number`, `gender`, `_mtype` to a frame that carries `span_col` +
-    `_person` (either the full mention table — inline mode — or the distinct
-    (span, person) key table).  Drops its own temp columns; replaces any
-    pre-existing number/gender.  The property cascade is a pure function of
-    (span, _person), which is what makes the dedupe-first mode exact."""
+    """Add `number`, `gender`, `_mtype` to the distinct (`span_col`,
+    `_person`) key table.  Drops its own temp columns.  The property cascade
+    is a pure function of (span, _person), which is what makes evaluating it
+    per key and joining back exact."""
     toks = F.split(F.col(span_col), " ")
     spans = (
         spans.withColumn("_head_tok", F.element_at(toks, -1))
@@ -129,12 +128,10 @@ def _props_for(spans: DataFrame, numgender: DataFrame, span_col: str) -> DataFra
     number = F.when(pronominal, pron_number_col(low_span)).otherwise(number_counts)
     gender = F.when(pronominal, pron_gender_col(low_span)).otherwise(gender_counts)
 
-    drop = [c for c in ("number", "gender") if c in spans.columns]
     temp = ["_head_tok", "_prev_tok", "_phrase_key", "_head_key",
             "_first_key"] + [f"{p}{c}" for p in "phf" for c in "mfnp"]
     return (
-        spans.drop(*drop)
-        .withColumn("number", number)
+        spans.withColumn("number", number)
         .withColumn("gender", gender)
         # Mention.scala:304-314 type cascade (DEMONSTRATIVE/PRONOMINAL/PROPER)
         .withColumn("_mtype", mention_type_col(F.col(span_col)))
@@ -148,7 +145,6 @@ def with_number_gender(
     person_expr: Column | None = None,
     n_numgender: int | None = None,
     span_col: str = "span",
-    distinct_keys: bool = True,
 ) -> DataFrame:
     """Replace the number/gender columns of `mentions` with values computed
     from the Bergsma-Lin-style count table `numgender(phrase, masc, fem,
@@ -159,16 +155,14 @@ def with_number_gender(
     Mention.scala:336); default uses the `ner` column when present, else no
     mention takes the person path.
 
-    distinct_keys=True (default) evaluates the cascade once per DISTINCT
-    (span, person) key and joins the small property table back (broadcast
-    under the byte gate, shuffle join past it — AQE skew handling covers
-    hot surfaces).  The cascade is a ~30-regexp expression tree whose
-    shared subexpressions sit inside CASE branches, where codegen cannot
-    eliminate them — evaluating it per mention INSTANCE was measured at
-    ~95us/row and capped pipeline scaling (18.8M mentions / 7.5k surfaces
-    at 2.4M pages).  Web corpora repeat surfaces heavily, so dedupe-first
-    is the same decision as blocking.  distinct_keys=False keeps the
-    zero-shuffle inline form for near-unique-span callers."""
+    The cascade runs once per DISTINCT (span, person) key and the small
+    property table is joined back (broadcast under the byte gate, shuffle
+    join past it — AQE skew handling covers hot surfaces).  The cascade is
+    a ~30-regexp expression tree whose shared subexpressions sit inside
+    CASE branches, where codegen cannot eliminate them — evaluating it per
+    mention INSTANCE was measured at ~95us/row and capped pipeline scaling
+    (18.8M mentions / 7.5k surfaces at 2.4M pages).  Web corpora repeat
+    surfaces heavily, so dedupe-first is the same decision as blocking."""
     if person_expr is None:
         person_expr = (
             F.col("ner") == "PERSON" if "ner" in mentions.columns else F.lit(False)
@@ -184,12 +178,6 @@ def with_number_gender(
         "number",
         "gender",
     ]
-    if not distinct_keys:
-        out = _props_for(base, numgender, span_col)
-        if "mtype" in mentions.columns:
-            out = out.drop("mtype").withColumnRenamed("_mtype", "mtype")
-        return out.drop("_mtype", "_person").select(*ordered)
-
     keys = base.select(span_col, "_person").distinct()
     props = _props_for(keys, numgender, span_col)
     # the key table is bounded by the distinct-surface count, not the

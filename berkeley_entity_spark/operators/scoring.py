@@ -97,79 +97,31 @@ def collect_idf(idf_df: DataFrame, max_terms: int = 500_000) -> dict[str, float]
     return {r["token"]: float(r["idf"]) for r in rows}
 
 
-def _prune_upper_bound(pairs: DataFrame, w: np.ndarray):
-    """Whole-stage-codegen admissible upper bound on the pair score — the
-    coarse model of the reference's cascade (CorefPruner.scala:36-47),
-    re-expressed as a JVM-side column so the expensive Arrow kernel only ever
-    sees pairs that could possibly cross the decode threshold.
-
-    Exactly-computable features (levenshtein ratio — already codegen as
-    _lev_cg — token jaccard, exact/last/first/init-last/acronym/subset
-    indicators) contribute w*value; Python-only features (jaro_winkler,
-    tfidf_cosine, token_align, all in [0, 1]) contribute max(w, 0).  The
-    bound therefore >= the kernel's true score for EVERY pair, so filtering
-    on bound > threshold drops no true edge — the surviving-edge set is
-    bit-identical to the unpruned one."""
-    idx = {name: i for i, name in enumerate(FEATURE_NAMES)}
-    ta = F.split(F.col("norm_a"), " ")
-    tb = F.split(F.col("norm_b"), " ")
-    da, db = F.array_distinct(ta), F.array_distinct(tb)
-    inter = F.size(F.array_intersect(da, db))
-    union = F.size(da) + F.size(db) - inter
-    jacc = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    exact = (F.col("norm_a") == F.col("norm_b")).cast("double")
-    last_eq = (F.element_at(ta, -1) == F.element_at(tb, -1)).cast("double")
-    first_eq = (F.element_at(ta, 1) == F.element_at(tb, 1)).cast("double")
-    init_last = (
-        (F.element_at(ta, -1) == F.element_at(tb, -1))
-        & (F.substring(F.element_at(ta, 1), 1, 1) == F.substring(F.element_at(tb, 1), 1, 1))
-    ).cast("double")
-    acr_sa = F.array_join(F.transform(ta, lambda t: F.substring(t, 1, 1)), "")
-    acr_sb = F.array_join(F.transform(tb, lambda t: F.substring(t, 1, 1)), "")
-    is_acr_a = F.coalesce(F.col("acr_a"), F.lit(True)) if "acr_a" in pairs.columns else F.lit(True)
-    is_acr_b = F.coalesce(F.col("acr_b"), F.lit(True)) if "acr_b" in pairs.columns else F.lit(True)
-    acronym = (
-        ((F.size(ta) == 1) & is_acr_a & (F.size(tb) > 1) & (F.col("norm_a") == acr_sb))
-        | ((F.size(tb) == 1) & is_acr_b & (F.size(ta) > 1) & (F.col("norm_b") == acr_sa))
-    ).cast("double")
-    subset = (
-        (F.size(F.array_except(da, db)) == 0) | (F.size(F.array_except(db, da)) == 0)
-    ).cast("double")
-    known = (
-        float(w[idx["levenshtein"]]) * F.col("_lev_cg")
-        + float(w[idx["token_jaccard"]]) * jacc
-        + float(w[idx["exact_eq"]]) * exact
-        + float(w[idx["last_eq"]]) * last_eq
-        + float(w[idx["first_eq"]]) * first_eq
-        + float(w[idx["init_last_eq"]]) * init_last
-        + float(w[idx["acronym_match"]]) * acronym
-        + float(w[idx["token_subset"]]) * subset
-        + float(w[idx["bias"]])
-    )
-    slack = (
-        max(float(w[idx["jaro_winkler"]]), 0.0)
-        + max(float(w[idx["tfidf_cosine"]]), 0.0)
-        + max(float(w[idx["token_align"]]), 0.0)
-    )
-    return known + F.lit(slack)
-
-
 def prune_bound_prepped(w: np.ndarray, threshold: float):
-    """Admissible prune PREDICATE (same bound family as _prune_upper_bound)
-    over PRE-COMPUTED per-surface columns on the two sides of a self-join
-    (aliases `a` and `b`): _dt (distinct tokens), _ndt (its size), _first /
-    _last (first/last token), _ntok (token count), _acr_s (initials
-    string), _ln (surface length), is_acr, norm_name.
+    """Admissible prune PREDICATE: True unless the pair's score provably
+    cannot exceed `threshold` — the coarse model of the reference's cascade
+    (CorefPruner.scala:36-47), re-expressed as a whole-stage-codegen column
+    so the expensive Arrow kernel only ever sees pairs that could cross the
+    decode threshold.  Exactly-computable features (levenshtein ratio,
+    token jaccard, exact/last/first/init-last/acronym/subset indicators)
+    contribute w*value; Python-only features (jaro_winkler, tfidf_cosine,
+    token_align, all in [0, 1]) contribute max(w, 0).  The bound is
+    therefore >= the kernel's true score for EVERY pair, so a consumer that
+    keeps only score > threshold edges sees an identical edge set.
 
-    Why a second form: evaluated directly on the raw band self-join output,
-    the norm-pair form re-splits each surface ~8x per candidate pair (regex
-    split + array builds, duplicated again by the orientation CASEs) — the
-    per-pair cost dwarfed the shuffle it was saving.  Precomputing the
-    derived values once per KEY ROW (O(surfaces x keys), on the small side
-    of the join) leaves per-pair work at one levenshtein + one
-    array_intersect + scalar compares.  Every term is symmetric in (a, b),
-    so no orientation CASEs are needed.  subset is equivalently
-    intersect-size == own-distinct-size (cheaper than two array_excepts).
+    Evaluated over PRE-COMPUTED per-surface columns on the two sides of a
+    self-join (aliases `a` and `b`): _dt (distinct tokens), _ndt (its
+    size), _first / _last (first/last token), _ntok (token count), _acr_s
+    (initials string), _ln (surface length), is_acr, norm_name.  Evaluated
+    on surface-pair strings instead, the bound re-splits each surface ~8x
+    per candidate pair (regex split + array builds, duplicated again by
+    orientation CASEs) — the per-pair cost dwarfed the shuffle it was
+    saving.  Precomputing the derived values once per KEY ROW
+    (O(surfaces x keys), on the small side of the join) leaves per-pair
+    work at one levenshtein + one array_intersect + scalar compares.  Every
+    term is symmetric in (a, b), so no orientation CASEs are needed.
+    subset is equivalently intersect-size == own-distinct-size (cheaper
+    than two array_excepts).
 
     Two-stage cascade: stage 1 replaces levenshtein_ratio by its O(1)
     length-gap upper bound (lev_dist >= |len_a - len_b|, so ratio <= 1 -
@@ -178,8 +130,8 @@ def prune_bound_prepped(w: np.ndarray, threshold: float):
     stage 2 (the full bound) runs only on stage-1 survivors via And
     short-circuit.  For a negative weight the supremum of w*value over
     [0, 1] is 0, so every stage-1 term is max'd against 0 and the stage-1
-    bound dominates stage 2 for ANY weight signs.  The final predicate
-    admits exactly the pairs _prune_upper_bound would."""
+    bound dominates stage 2 for ANY weight signs, and the predicate admits
+    exactly the pairs the full bound admits."""
     idx = {name: i for i, name in enumerate(FEATURE_NAMES)}
     w_lev = float(w[idx["levenshtein"]])
     w_jacc = float(w[idx["token_jaccard"]])
@@ -240,56 +192,12 @@ def prune_bound_prepped(w: np.ndarray, threshold: float):
     return stage1 & stage2
 
 
-def prune_never_match(
-    pairs: DataFrame, weights: np.ndarray, threshold: float,
-    barrier: bool = False,
-) -> DataFrame:
-    """Filter out pairs whose admissible score upper bound cannot cross
-    `threshold` — safe wherever the consumer keeps only above-threshold
-    edges.  Computes the codegen levenshtein column if the caller has not
-    already; returns the input schema unchanged.  Used by score_pairs
-    (prune_threshold) and by blocking.candidate_pairs(prune=...), where
-    running it BEFORE the pair-dedup groupBy shrinks the dominant shuffle
-    by the prune rate (96% at sf0.1) — at web scale the dedup exchange is
-    the largest intermediate of the whole ER spine.
-
-    barrier=True pins the filter at this exact plan position: the predicate
-    is OR-ed with an always-false NON-DETERMINISTIC term, which makes the
-    condition unsplittable and non-pushable (PushPredicateThroughJoin /
-    ThroughNonJoin both require deterministic conditions).  Needed when
-    `pairs` is the raw output of the band self-join — otherwise Catalyst
-    folds the bound (including the O(len^2) levenshtein) into the join
-    condition AHEAD of the cheap rn-range conjuncts, and every same-block
-    candidate pays it (measured 5x slower than no prune at sf0.1).  The
-    term must be monotonically_increasing_id() — NOT rand(), whose [0,1)
-    bounds Spark 4 constant-folds away, un-barriering the predicate.  The
-    Or short-circuits, so the term is never actually evaluated."""
-    had_lev = "_lev_cg" in pairs.columns
-    if not had_lev:
-        pairs = pairs.withColumn(
-            "_lev_cg",
-            F.when(
-                F.greatest(F.length("norm_a"), F.length("norm_b")) == 0, F.lit(1.0)
-            ).otherwise(
-                1.0
-                - F.levenshtein("norm_a", "norm_b")
-                / F.greatest(F.length("norm_a"), F.length("norm_b"))
-            ),
-        )
-    pred = _prune_upper_bound(pairs, weights) > F.lit(threshold)
-    if barrier:
-        pred = pred | (F.monotonically_increasing_id() < F.lit(-1))
-    pruned = pairs.where(pred)
-    return pruned if had_lev else pruned.drop("_lev_cg")
-
-
 def score_pairs(
     pairs: DataFrame,
     idf: dict[str, float],
     weights: np.ndarray | None = None,
     repartition: bool = False,
     features_out: bool = True,
-    prune_threshold: float | None = None,
 ) -> DataFrame:
     """candidate_pairs -> scored_pairs with the FIXTURES §3 schema columns
     (jaro_winkler, levenshtein, token_jaccard, tfidf_cosine, score) plus all
@@ -309,13 +217,9 @@ def score_pairs(
     SQL-unportable ones).  Scores are bit-identical either way: a
     zero-weight feature contributes exactly 0 to the dot product.
 
-    prune_threshold: when the caller consumes ONLY edges with
-    score > prune_threshold (match_edges threshold decode), pass that
-    threshold here and the whole-stage-codegen coarse bound
-    (_prune_upper_bound) drops never-matchable pairs BEFORE the Python
-    kernel — the reference's coarse-cascade pruning (CorefPruner.scala:
-    36-47) moved JVM-side.  The surviving edge set is provably identical;
-    only sub-threshold rows disappear from the output."""
+    Never-matchable pairs are dropped upstream, inside blocking
+    (candidate_pairs(prune=...) with prune_bound_prepped), before the
+    pair-dedup shuffle — not here."""
     w = weights if weights is not None else load_default_weights()
     spark = pairs.sparkSession
     if repartition:
@@ -350,8 +254,6 @@ def score_pairs(
             / F.greatest(F.length("norm_a"), F.length("norm_b"))
         ),
     )
-    if prune_threshold is not None:
-        pairs = pairs.where(_prune_upper_bound(pairs, w) > F.lit(prune_threshold))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idf_map = b_idf.value
@@ -385,27 +287,14 @@ def score_pairs(
     return pairs.mapInPandas(gen, schema=out_schema)
 
 
-def match_edges(
-    scored: DataFrame, threshold: float = 0.0, decode: str = "threshold"
-) -> DataFrame:
-    """scored pairs -> (u, v) match edges for transitive closure.
-
-    decode="threshold" (default): every pair above the margin is an edge —
-    correct for cross-document resolution, where a surface's duplicates must
-    all connect regardless of which single partner scores best.
-
-    decode="argmax": the reference's within-document backpointer semantics
-    (DocumentInferencerBasic.scala:116-132) — per node keep only the
-    best-scoring antecedent, lowest node id on ties (the reference keeps the
-    first max).  Kept for parity experiments; it under-connects surface
-    graphs (a node that is nobody's argmax ends up a singleton even with
-    positive-scoring pairs)."""
+def match_edges(scored: DataFrame, threshold: float = 0.0) -> DataFrame:
+    """scored pairs -> (u, v) match edges for transitive closure: every pair
+    above the margin is an edge — correct for cross-document resolution,
+    where a surface's duplicates must all connect regardless of which single
+    partner scores best (the reference's within-document argmax backpointer,
+    DocumentInferencerBasic.scala:116-132, would leave a node that is
+    nobody's argmax a singleton even with positive-scoring pairs)."""
     above = scored.where(F.col("score") > threshold)
-    if decode == "argmax":
-        best = above.groupBy("node_b").agg(
-            F.max_by("node_a", F.struct(F.col("score"), -F.col("node_a"))).alias("node_a")
-        )
-        return best.select(F.col("node_b").alias("u"), F.col("node_a").alias("v"))
     return above.select(F.col("node_b").alias("u"), F.col("node_a").alias("v"))
 
 

@@ -75,8 +75,3 @@ class CheckpointStore:
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         return spark.read.json(os.path.join(self.root, "metrics.jsonl"))
-
-    def clear(self) -> None:
-        import shutil
-
-        shutil.rmtree(self.root, ignore_errors=True)

@@ -58,8 +58,8 @@ def run_pipeline(
     clusters — kill the job between any two and a rerun resumes.
 
     numgender: Bergsma-Lin-style count table for the properties stage; when
-    None and cfg.compute_properties, the synthetic stand-in is generated
-    (the reference unconditionally loads gender.data the same way).
+    None, the synthetic stand-in is generated (the reference
+    unconditionally loads gender.data the same way).
     """
     if store is None:
         store = CheckpointStore(cfg.checkpoint_dir, cfg.checkpoint_format)
@@ -72,7 +72,10 @@ def run_pipeline(
 
     if resume and store.exists("mentions"):
         mentions = store.load(spark, "mentions")
-    elif cfg.compute_properties:
+    else:
+        # imported here, not at module top: erbench's ledger wraps
+        # with_number_gender on the properties module, which a top-level
+        # import would bypass
         from berkeley_entity_spark.operators.properties import with_number_gender
         from berkeley_entity_spark.synth import generate_numgender
 
@@ -98,8 +101,6 @@ def run_pipeline(
             )
         finally:
             extracted.unpersist()
-    else:
-        mentions = stage(extract_mentions(pages), "mentions")
     surfaces = distinct_surfaces(mentions).persist()
     n_surfaces = surfaces.count()  # materializes the cache; reused below
     pairs = stage(
@@ -112,9 +113,7 @@ def run_pipeline(
     scored = stage(score_pairs(pairs, idf, w, repartition=True), "scored_pairs")
 
     edges = match_edges(scored, cfg.score_threshold)
-    components = connected_components(
-        edges, cfg.max_cc_iterations, cfg.checkpoint_every
-    )
+    components = connected_components(edges, cfg.max_cc_iterations)
     clusters = stage(
         assign_clusters(mentions, surfaces, components, n_surfaces=n_surfaces),
         "clusters",

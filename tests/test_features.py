@@ -179,44 +179,55 @@ def test_hearst_features_reference_math(spark):
 
 
 def test_prune_threshold_edge_set_identical(spark):
-    """The codegen coarse bound (CorefPruner.scala:36-47 cascade analog) must
-    drop ONLY sub-threshold pairs: above-threshold (node_a, node_b, score)
-    rows are bit-identical with and without pruning, across a pair mix that
-    exercises every bound term (exact-ish, acronym, subset, typo, junk)."""
+    """The codegen coarse bound (CorefPruner.scala:36-47 cascade analog)
+    applied inside blocking (candidate_pairs(prune=...)) must drop ONLY
+    sub-threshold pairs: above-threshold (node_a, node_b, score) rows are
+    bit-identical with and without pruning, over hand-built surfaces that
+    share block keys and between them exercise every bound term (exact-ish,
+    acronym, subset, typo, junk)."""
+    from berkeley_entity_spark.config import PipelineConfig
+    from berkeley_entity_spark.operators.blocking import candidate_pairs, distinct_surfaces
     from berkeley_entity_spark.operators.scoring import score_pairs, weights_vector
 
     import __spark_entry__ as entry
 
-    rows = [
-        ("alice smith", "alice smith jones", False, False),
-        ("alice smith", "alicia smith", False, False),
-        ("gdc", "global data corporation", True, False),
-        ("gdc", "gdc", True, True),
-        ("alpha beta", "zeta omega", False, False),
-        ("the quick brown", "over lazy dogs", False, False),
-        ("acme corp", "acme corporation", False, False),
-        ("j r smith", "john ronald smith", False, False),
+    surfaces = [
+        ("alice smith", False), ("alice smith jones", False),   # exact-ish, subset
+        ("alicia smith", False),                                # typo
+        ("gdc", True), ("global data corporation", False),      # acronym
+        ("ibm", True), ("international business machines", False),
+        ("john smith", False), ("jon smith", False),            # typo
+        ("john smyth", False),
+        ("acme corp", False), ("acme corporation", False),      # typo
+        ("j r smith", False), ("john ronald smith", False),     # initials, subset
+        ("alpha beta", False), ("alpha gamma delta", False),    # junk
+        ("the quick brown", False), ("the lazy dogs", False),   # junk
     ]
-    pairs = spark.createDataFrame(
-        [(i, 1000 + i, a, b, fa, fb) for i, (a, b, fa, fb) in enumerate(rows)],
-        "node_a long, node_b long, norm_a string, norm_b string, "
-        "acr_a boolean, acr_b boolean",
+    mentions = spark.createDataFrame(
+        [(f"u{i}", i, norm, acr) for i, (norm, acr) in enumerate(surfaces)],
+        "url string, mention_id long, norm_name string, is_acr boolean",
     )
+    cfg = PipelineConfig()
+    surf = distinct_surfaces(mentions).persist()
+    n = surf.count()
     w = weights_vector(entry.ORACLE_ER_WEIGHTS)
     thr = entry.ORACLE_ER_THRESHOLD
-    full = score_pairs(pairs, {}, weights=w)
-    pruned = score_pairs(pairs, {}, weights=w, features_out=False, prune_threshold=thr)
 
-    def above(df):
-        return {
+    def pairs_and_edges(prune):
+        pairs = candidate_pairs(mentions, cfg, surfaces=surf, n_surfaces=n, prune=prune)
+        scored = score_pairs(pairs, {}, weights=w, features_out=False)
+        edges = {
             (r["node_a"], r["node_b"], r["score"])
-            for r in df.where(f"score > {thr}").collect()
+            for r in scored.where(f"score > {thr}").collect()
         }
+        return pairs.count(), edges
 
-    assert above(pruned) == above(full)
-    assert len(above(full)) >= 2  # the mix actually produces matches
+    n_full, full = pairs_and_edges(None)
+    n_pruned, pruned = pairs_and_edges((w, thr))
+    assert pruned == full
+    assert len(full) >= 2  # the mix actually produces matches
     # and the prune really filters: junk pairs never reach the kernel
-    assert pruned.count() < len(rows)
+    assert n_pruned < n_full
 
 
 def test_features_out_false_scores_identical(spark):

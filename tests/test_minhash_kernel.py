@@ -2,7 +2,8 @@
 oracles' SQL (_minhash_band_ctes) emit byte-identical bucket strings — for
 ER blocking keys over char shingles (PipelineConfig defaults) and for
 dedup buckets over word shingles (bands=4, rows=2).  Fixed strings, no
-testdata."""
+testdata.  Token-less docs (empty, whitespace-only) get no shingle, hence
+no bucket and no pair, on both engines."""
 
 import duckdb
 import pandas as pd
@@ -26,7 +27,10 @@ DOCS = [
     (4, "solo"),
     (5, "  spaced   out  text  here "),
     (6, "the quick brown fox jumps over the lazy dog"),
+    (7, ""),
+    (8, "   "),
 ]
+TOKENLESS = {7, 8, 100007, 100008}
 
 
 def test_er_block_keys_match_oracle(spark):
@@ -63,11 +67,13 @@ def test_dedup_buckets_and_pairs_match_oracle(spark):
         con.execute(entry._minhash_pairs_ctes(4, 2) + "\nSELECT doc_id, bucket FROM b")
         .fetchall()
     )
-    assert len(want) == 2 * len(DOCS) * 4
+    assert len(want) == 2 * (len(DOCS) - 2) * 4
+    assert not {d for d, _ in got} & TOKENLESS
     assert got == want
     got_pairs = {
         (r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, bands=4, rows=2).collect()
     }
     want_pairs = set(con.execute(entry._minhash_oracle(4, 2)).fetchall())
     assert (1, 6) in want_pairs and (1, 100001) in want_pairs
+    assert not {i for p in got_pairs for i in p} & TOKENLESS
     assert got_pairs == want_pairs
