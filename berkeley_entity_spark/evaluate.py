@@ -47,11 +47,19 @@ def pairwise_f1_on_labeled(
     return _f1(float(agg["tp"] or 0), float(agg["pred"] or 0), float(agg["gold"] or 0))
 
 
+def _aligned(pred: DataFrame, gold: DataFrame) -> DataFrame:
+    """(mention_id, cluster_id, entity_id) for the mentions on both sides."""
+    return pred.select("mention_id", "cluster_id").join(
+        gold.select("mention_id", "entity_id"), "mention_id"
+    )
+
+
 def pairwise_f1_combinatorial(
-    pred: DataFrame, gold: DataFrame, key: str = "mention_id"
+    pred: DataFrame, gold: DataFrame
 ) -> dict[str, float]:
-    """pred(key, cluster_id) x gold(key, entity_id) — exact pairwise F1 via
-    per-cluster combinatorics; no pair table is ever materialized."""
+    """pred(mention_id, cluster_id) x gold(mention_id, entity_id) — exact
+    pairwise F1 via per-cluster combinatorics; no pair table is ever
+    materialized."""
     npairs = lambda c: F.sum(c * (c - 1) / 2)  # noqa: E731
     pred_n = (
         pred.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("c")).agg(npairs(F.col("c"))).collect()[0][0]
@@ -59,7 +67,7 @@ def pairwise_f1_combinatorial(
     gold_n = (
         gold.groupBy("entity_id").agg(F.count(F.lit(1)).alias("c")).agg(npairs(F.col("c"))).collect()[0][0]
     )
-    both = pred.join(gold, key)
+    both = pred.join(gold, "mention_id")
     tp = (
         both.groupBy("cluster_id", "entity_id")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -112,9 +120,6 @@ def blocking_recall(
 def coref_cluster_metrics(
     pred: DataFrame,
     gold: DataFrame,
-    key: str = "mention_id",
-    conll: bool = False,
-    doc_col: str | None = None,
 ) -> DataFrame:
     """B-cubed and MUC as pure DataFrame aggregations — one row:
     (b3_precision, b3_recall, b3_f1, muc_precision, muc_recall, muc_f1).
@@ -132,12 +137,8 @@ def coref_cluster_metrics(
 
     Mentions present in only one side are ignored (the caller aligns first —
     J4); everything stays in three small aggregations over the cells table.
-    With conll=True, delegates to conll_metrics and ALSO returns
-    ceafe_precision/recall/f1 + conll_f1 (the CoNLL scorer average) —
-    pass doc_col for per-document alignment."""
-    if conll:
-        return conll_metrics(pred, gold, key, doc_col=doc_col)
-    j = pred.select(key, "cluster_id").join(gold.select(key, "entity_id"), key)
+    conll_metrics adds CEAFe and the CoNLL scorer average."""
+    j = _aligned(pred, gold)
     cells = j.groupBy("cluster_id", "entity_id").agg(
         F.count(F.lit(1)).alias("n_ce")
     )
@@ -192,18 +193,13 @@ def _b3_muc_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-def bcubed_muc(pred: DataFrame, gold: DataFrame, key: str = "mention_id") -> dict[str, float]:
+def bcubed_muc(pred: DataFrame, gold: DataFrame) -> dict[str, float]:
     """Dict form of coref_cluster_metrics for tests/reports."""
-    row = coref_cluster_metrics(pred, gold, key).collect()[0]
+    row = coref_cluster_metrics(pred, gold).collect()[0]
     return {k: float(row[k]) for k in row.asDict()}
 
 
-def ceafe_metrics(
-    pred: DataFrame,
-    gold: DataFrame,
-    key: str = "mention_id",
-    doc_col: str | None = None,
-) -> DataFrame:
+def ceafe_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """CEAFe (Luo 2005, phi4) — the third leg of the reference's headline
     CoNLL score (coref/CorefConllScorer.scala:72-88 parses MUC + B3 + CEAFe
     from the scorer v7, whose CEAFe runs Algorithm::Munkres per document).
@@ -218,18 +214,17 @@ def ceafe_metrics(
     DataFrame aggs; the Hungarian runs per doc in an Arrow kernel over
     those CELLS (tens of rows per doc — never the mentions), so the only
     data that reaches Python is one row per non-empty cluster x entity
-    cell.  doc_col=None treats the whole input as one document (fine for
-    corpus-level clusterings; per-doc coref should pass the doc column).
-    Mentions present in only one side are ignored (caller aligns first —
+    cell.  The whole input is one document (corpus-level clusterings;
+    conll_metrics takes a doc column for per-doc coref).  Mentions present
+    in only one side are ignored (caller aligns first —
     same convention as coref_cluster_metrics)."""
-    cells = _doc_cells(pred, gold, key, doc_col)
+    cells = _doc_cells(pred, gold, None)
     return _ceafe_from_cells(cells)
 
 
 def ceafm_metrics(
     pred: DataFrame,
     gold: DataFrame,
-    key: str = "mention_id",
     doc_col: str | None = None,
 ) -> DataFrame:
     """CEAF-m (Luo 2005 phi3 — mention-based CEAF): the optimal 1:1
@@ -237,7 +232,7 @@ def ceafm_metrics(
     mentions; precision divides by the pred-side mention count, recall by
     the gold side (the scorer-v7 'ceafm' matcher that ships beside the
     'ceafe' one CorefConllScorer.scala parses).  Under this repo's
-    aligned-mention convention (inner join on key — ceafe_metrics'
+    aligned-mention convention (inner join on mention_id — ceafe_metrics'
     convention) both denominators equal the aligned mention count, so
     P = R = F1 whenever both sides cluster the same mention set.  Same
     intersection-cells + per-doc Arrow Hungarian shape as CEAFe: only one
@@ -246,7 +241,7 @@ def ceafm_metrics(
 
     from berkeley_entity_spark.ml.assignment import hungarian_max
 
-    cells = _doc_cells(pred, gold, key, doc_col)
+    cells = _doc_cells(pred, gold, doc_col)
 
     def align(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -277,7 +272,7 @@ def ceafm_metrics(
 
 
 def clustering_agreement(
-    pred: DataFrame, gold: DataFrame, key: str = "mention_id"
+    pred: DataFrame, gold: DataFrame
 ) -> DataFrame:
     """Partition-agreement metrics beside the coref-specific scorers: ARI
     (Hubert & Arabie 1985, pair-counting adjusted Rand) and V-measure with
@@ -295,7 +290,7 @@ def clustering_agreement(
     reference entropy is 0, V = 0 when h + c = 0.
 
     One row: (ari, homogeneity, completeness, v_measure)."""
-    j = pred.select(key, "cluster_id").join(gold.select(key, "entity_id"), key)
+    j = _aligned(pred, gold)
     cells = j.groupBy("cluster_id", "entity_id").agg(
         F.count(F.lit(1)).alias("n_ce")
     )
@@ -373,15 +368,12 @@ def clustering_agreement(
     )
 
 
-def _doc_cells(
-    pred: DataFrame, gold: DataFrame, key: str, doc_col: str | None
-) -> DataFrame:
+def _doc_cells(pred: DataFrame, gold: DataFrame, doc_col: str | None) -> DataFrame:
     """(_doc, cluster_id, entity_id, n_ce) intersection cells — computed
     ONCE per evaluation and shared by B3/MUC and CEAFe."""
     dc = doc_col
-    pcols = [key, "cluster_id"] + ([dc] if dc else [])
-    gcols = [key, "entity_id"] + ([dc] if dc else [])
-    j = pred.select(*pcols).join(gold.select(*[c for c in gcols if c != dc]), key)
+    pcols = ["mention_id", "cluster_id"] + ([dc] if dc else [])
+    j = pred.select(*pcols).join(gold.select("mention_id", "entity_id"), "mention_id")
     doc = F.col(dc) if dc else F.lit("_all")
     return j.groupBy(doc.alias("_doc"), "cluster_id", "entity_id").agg(
         F.count(F.lit(1)).alias("n_ce")
@@ -436,7 +428,6 @@ def _ceafe_from_cells(cells: DataFrame) -> DataFrame:
 def conll_metrics(
     pred: DataFrame,
     gold: DataFrame,
-    key: str = "mention_id",
     doc_col: str | None = None,
 ) -> DataFrame:
     """The CoNLL scorer's headline number: one row with muc_f1, b3_f1,
@@ -456,7 +447,7 @@ def conll_metrics(
         gold = gold.withColumn(
             "entity_id", F.concat_ws("␟", doc_col, "entity_id")
         )
-    cells = _doc_cells(pred, gold, key, doc_col).localCheckpoint(eager=True)
+    cells = _doc_cells(pred, gold, doc_col).localCheckpoint(eager=True)
     # doc-scoped ids make (cluster_id, entity_id) globally unique, so the
     # global cells are the per-doc cells re-keyed (n_ce passes through)
     base = _b3_muc_from_cells(
@@ -476,32 +467,30 @@ def conll_metrics(
     )
 
 
-def per_doc_pairwise_stats(
-    assign: DataFrame, doc_col: str = "url"
-) -> DataFrame:
+def per_doc_pairwise_stats(assign: DataFrame) -> DataFrame:
     """(doc, tp, pred, gold) pairwise sufficient statistics restricted to
     in-document pairs — the per-document stat lines the reference's
     bootstrap consumes (sig/BootstrapDriver.scala:12-17 reads them from
     logs; sig/MetricComputer.isSigDifference re-aggregates them).
 
-    assign: (doc_col, mention_id, cluster_id, entity_id)."""
+    assign: (url, mention_id, cluster_id, entity_id); the doc is the url."""
     np2 = lambda c: F.sum(c * (c - 1) / 2).cast("double")  # noqa: E731
     cnt = F.count(F.lit(1)).alias("c")
     pred = (
-        assign.groupBy(doc_col, "cluster_id").agg(cnt)
-        .groupBy(doc_col).agg(np2(F.col("c")).alias("pred"))
+        assign.groupBy("url", "cluster_id").agg(cnt)
+        .groupBy("url").agg(np2(F.col("c")).alias("pred"))
     )
     gold = (
-        assign.groupBy(doc_col, "entity_id").agg(cnt)
-        .groupBy(doc_col).agg(np2(F.col("c")).alias("gold"))
+        assign.groupBy("url", "entity_id").agg(cnt)
+        .groupBy("url").agg(np2(F.col("c")).alias("gold"))
     )
     tp = (
-        assign.groupBy(doc_col, "cluster_id", "entity_id").agg(cnt)
-        .groupBy(doc_col).agg(np2(F.col("c")).alias("tp"))
+        assign.groupBy("url", "cluster_id", "entity_id").agg(cnt)
+        .groupBy("url").agg(np2(F.col("c")).alias("tp"))
     )
     # the three aggregations share `assign`'s doc key set exactly, so plain
     # inner joins state the invariant (and keep broadcast planning open)
-    return pred.join(gold, doc_col).join(tp, doc_col)
+    return pred.join(gold, "url").join(tp, "url")
 
 
 # Poisson(1) CDF thresholds for the poissonized bootstrap draw (k = 0..8
@@ -521,8 +510,6 @@ def bootstrap_significance(
     stats_a: DataFrame,
     stats_b: DataFrame,
     n_trials: int = 1000,
-    seed: int = 0,
-    doc_col: str = "url",
 ) -> DataFrame:
     """M12: paired bootstrap test over documents
     (sig/BootstrapDriver.scala:104-141: 1000 trials, resample docs with
@@ -531,20 +518,20 @@ def bootstrap_significance(
 
     Distributed poissonized form: the multinomial resample count of each
     doc in a trial is approximated by Poisson(1) drawn from a deterministic
-    hash of (doc, trial, seed) — no driver-side loop, no RNG state; the
+    hash of (url, trial, seed 0) — no driver-side loop, no RNG state; the
     whole test is one explode + two aggregations, identical at any
     parallelism.  Returns one row: (f1_a, f1_b, delta, frac_sig, n_trials).
     """
-    a = stats_a.select(doc_col, F.col("tp").alias("tp_a"),
+    a = stats_a.select("url", F.col("tp").alias("tp_a"),
                        F.col("pred").alias("pred_a"), F.col("gold").alias("gold_a"))
-    b = stats_b.select(doc_col, F.col("tp").alias("tp_b"),
+    b = stats_b.select("url", F.col("tp").alias("tp_b"),
                        F.col("pred").alias("pred_b"), F.col("gold").alias("gold_b"))
-    j = a.join(b, doc_col, "full").na.fill(0.0)
+    j = a.join(b, "url", "full").na.fill(0.0)
     rep = j.select(
         "*", F.explode(F.sequence(F.lit(0), F.lit(n_trials - 1))).alias("_trial")
     )
     u = (
-        F.pmod(F.xxhash64(doc_col, "_trial", F.lit(seed)), F.lit(1 << 40))
+        F.pmod(F.xxhash64("url", "_trial", F.lit(0)), F.lit(1 << 40))
         / float(1 << 40)
     )
     w = _poisson1(u).cast("double")
@@ -585,17 +572,16 @@ def grouped_accuracy(
     gold: DataFrame,
     attrs: DataFrame,
     group_col: str,
-    key: str = "mention_id",
 ) -> DataFrame:
     """A8: grouped accuracy counters — per attribute group (e.g. mtype,
     number, gender), the fraction of mentions sitting in a cluster whose
     MAJORITY gold entity matches their own (the reference's per-category
     right/wrong counters in its evaluator output).
 
-    attrs(key, group_col).  Majority entity per cluster = argmax of
+    attrs(mention_id, group_col).  Majority entity per cluster = argmax of
     (cluster, entity) cell counts, ties to the smaller entity id.  Returns
     (group, n, correct, accuracy)."""
-    j = pred.select(key, "cluster_id").join(gold.select(key, "entity_id"), key)
+    j = _aligned(pred, gold)
     cells = j.groupBy("cluster_id", "entity_id").agg(F.count(F.lit(1)).alias("n_ce"))
     # min_by over (-count, entity_id) keeps the "ties to the smaller
     # entity id" rule for ANY orderable id type (a unary minus on a string
@@ -608,7 +594,7 @@ def grouped_accuracy(
     scored = (
         j.join(majority, "cluster_id")
         .withColumn("_ok", (F.col("entity_id") == F.col("_maj")).cast("long"))
-        .join(attrs.select(key, group_col), key)
+        .join(attrs.select("mention_id", group_col), "mention_id")
     )
     return (
         scored.groupBy(group_col)
@@ -699,7 +685,7 @@ def wikification_prf1(pred: DataFrame, gold: DataFrame) -> DataFrame:
 
 
 def cluster_diff(
-    pred: DataFrame, gold: DataFrame, key: str = "mention_id"
+    pred: DataFrame, gold: DataFrame
 ) -> DataFrame:
     """Per-cluster error decomposition — WHERE the clustering disagrees
     with gold, not just how much (the drill-down behind the B3/MUC/CEAF
@@ -717,7 +703,7 @@ def cluster_diff(
 
     Same intersection-cells reduction as B3/CEAF (never per-mention
     rows); three small aggregations + two joins."""
-    j = pred.select(key, "cluster_id").join(gold.select(key, "entity_id"), key)
+    j = _aligned(pred, gold)
     cells = j.groupBy("cluster_id", "entity_id").agg(
         F.count(F.lit(1)).alias("n_ce")
     )

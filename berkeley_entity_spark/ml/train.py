@@ -25,31 +25,33 @@ from pyspark.sql import DataFrame
 
 from berkeley_entity_spark.operators.features import FEATURE_NAMES
 
+# driver-side training sample cap (content-hash order, so the sample is
+# partition-independent)
+MAX_TRAIN_ROWS = 200_000
+
 
 def adagrad_l1_train(
     X: np.ndarray,
     y: np.ndarray,
-    eta: float = 1.0,
     lambda_reg: float = 0.001,
     epochs: int = 20,
     false_neg_weight: float = 3.0,
-    false_pos_weight: float = 1.0,
-    seed: int = 0,
 ) -> np.ndarray:
-    """Binary logistic regression, AdaGrad + L1, per-example updates."""
+    """Binary logistic regression, AdaGrad (eta 1.0) + L1, per-example
+    updates in a seed-0 permutation order; a false positive costs 1."""
     n, d = X.shape
     w = np.zeros(d)
     g2 = np.full(d, 1e-8)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(0)
     order = rng.permutation(n)
     for _ in range(epochs):
         for i in order:
             xi, yi = X[i], y[i]
             p = 1.0 / (1.0 + np.exp(-np.clip(xi @ w, -30, 30)))
-            cost = false_neg_weight if yi == 1 else false_pos_weight
+            cost = false_neg_weight if yi == 1 else 1.0
             g = cost * (p - yi) * xi
             g2 += g * g
-            rate = eta / np.sqrt(g2)
+            rate = 1.0 / np.sqrt(g2)
             z = w - rate * g
             # lazy L1 soft threshold (reference adagrad L1 semantics)
             w = np.sign(z) * np.maximum(0.0, np.abs(z) - rate * lambda_reg)
@@ -105,7 +107,7 @@ def calibrate_bias(
     return w
 
 
-def train_from_scored_pairs(scored_labeled: DataFrame, max_rows: int = 200_000) -> np.ndarray:
+def train_from_scored_pairs(scored_labeled: DataFrame) -> np.ndarray:
     """scored_labeled must carry the feature columns + boolean `label`.
 
     Deterministic cap: order by a content hash before limiting so the sample
@@ -117,7 +119,7 @@ def train_from_scored_pairs(scored_labeled: DataFrame, max_rows: int = 200_000) 
         scored_labeled.select(*feat_cols, F.col("label").cast("int").alias("y"))
         .withColumn("_h", F.xxhash64(*feat_cols, "y"))
         .orderBy("_h")
-        .limit(max_rows)
+        .limit(MAX_TRAIN_ROWS)
     )
     pdf = df.toPandas()
     X = np.hstack([pdf[feat_cols].to_numpy(dtype=np.float64), np.ones((len(pdf), 1))])
@@ -126,62 +128,13 @@ def train_from_scored_pairs(scored_labeled: DataFrame, max_rows: int = 200_000) 
     return calibrate_bias(w, X, y)
 
 
-def train_pipeline_weights(
-    spark,
-    mentions,
-    gold_pairs,
-    max_rows: int = 200_000,
-):
-    """End-to-end trainer: label candidate-style surface pairs from
-    gold_pairs, featurize them with the production scoring kernel, fit
-    AdaGrad-L1, return the weight vector for run_pipeline(weights=...).
-
-    Mirrors the reference train loop shape (CorefSystem.runTrain,
-    CorefSystem.scala:122-156): lexical counts (IDF) -> featurize -> AdaGrad.
-    """
+def _scored_gold_pairs(mentions: DataFrame, gold_pairs: DataFrame) -> DataFrame:
+    """Distinct labeled surface pairs (norm_a, norm_b, acr_a, acr_b, label)
+    from gold_pairs' mention pairs, featurized by the production scoring
+    kernel against the mentions' own IDF table."""
     from pyspark.sql import functions as F
 
     from berkeley_entity_spark.operators.blocking import distinct_surfaces
-    from berkeley_entity_spark.operators.scoring import collect_idf, idf_table, score_pairs
-
-    surfaces = distinct_surfaces(mentions).persist()
-    m = mentions.select("mention_id", "norm_name")
-    sn = surfaces.select(
-        F.col("norm_name"), F.col("node_id"), F.col("is_acr")
-    )
-    labeled = (
-        gold_pairs.join(m.toDF("mention_a", "norm_a"), "mention_a")
-        .join(m.toDF("mention_b", "norm_b"), "mention_b")
-        .join(sn.toDF("norm_a", "node_a", "acr_a"), "norm_a")
-        .join(sn.toDF("norm_b", "node_b", "acr_b"), "norm_b")
-        .where(F.col("norm_a") != F.col("norm_b"))
-        .select("norm_a", "norm_b", "acr_a", "acr_b", "label")
-        .distinct()
-    )
-    idf = collect_idf(idf_table(surfaces))
-    scored = score_pairs(labeled, idf)
-    return train_from_scored_pairs(scored, max_rows=max_rows)
-
-
-def kfold_prune_models(
-    spark,
-    mentions: DataFrame,
-    gold_pairs: DataFrame,
-    k: int = 5,
-    max_rows: int = 200_000,
-) -> list[np.ndarray]:
-    """M10: the reference's k-fold coarse-model build
-    (CorefPruner.scala:100-153) — k pruning models, model f trained on the
-    pairs OUTSIDE fold f, so every pair can later be scored by a model that
-    never saw it.  Folds are deterministic content hashes of the anchor
-    surface (the reference folds on document uid with a seeded shuffle —
-    same generalization contract, partition-independent here).
-
-    Returns the k weight vectors (FEATURE_NAMES order, calibrated bias)."""
-    from pyspark.sql import functions as F
-
-    from berkeley_entity_spark.operators.blocking import distinct_surfaces
-    from berkeley_entity_spark.operators.features import FEATURE_NAMES
     from berkeley_entity_spark.operators.scoring import collect_idf, idf_table, score_pairs
 
     surfaces = distinct_surfaces(mentions).persist()
@@ -196,16 +149,45 @@ def kfold_prune_models(
         .select("norm_a", "norm_b", "acr_a", "acr_b", "label")
         .distinct()
     )
-    idf = collect_idf(idf_table(surfaces))
+    return score_pairs(labeled, collect_idf(idf_table(surfaces)))
+
+
+def train_pipeline_weights(spark, mentions, gold_pairs):
+    """End-to-end trainer: label candidate-style surface pairs from
+    gold_pairs, featurize them with the production scoring kernel, fit
+    AdaGrad-L1, return the weight vector for run_pipeline(weights=...).
+
+    Mirrors the reference train loop shape (CorefSystem.runTrain,
+    CorefSystem.scala:122-156): lexical counts (IDF) -> featurize -> AdaGrad.
+    """
+    return train_from_scored_pairs(_scored_gold_pairs(mentions, gold_pairs))
+
+
+def kfold_prune_models(
+    spark,
+    mentions: DataFrame,
+    gold_pairs: DataFrame,
+    k: int = 5,
+) -> list[np.ndarray]:
+    """M10: the reference's k-fold coarse-model build
+    (CorefPruner.scala:100-153) — k pruning models, model f trained on the
+    pairs OUTSIDE fold f, so every pair can later be scored by a model that
+    never saw it.  Folds are deterministic content hashes of the anchor
+    surface (the reference folds on document uid with a seeded shuffle —
+    same generalization contract, partition-independent here).
+
+    Returns the k weight vectors (FEATURE_NAMES order, calibrated bias)."""
+    from pyspark.sql import functions as F
+
     feat_cols = [c for c in FEATURE_NAMES if c != "bias"]
-    scored = score_pairs(labeled, idf).withColumn(
+    scored = _scored_gold_pairs(mentions, gold_pairs).withColumn(
         "fold", F.pmod(F.xxhash64("norm_a"), F.lit(k)).cast("int")
     )
     df = (
         scored.select(*feat_cols, "fold", F.col("label").cast("int").alias("y"))
         .withColumn("_h", F.xxhash64(*feat_cols, "fold", "y"))
         .orderBy("_h")
-        .limit(max_rows)
+        .limit(MAX_TRAIN_ROWS)
     )
     pdf = df.toPandas()
     X = np.hstack([pdf[feat_cols].to_numpy(dtype=np.float64), np.ones((len(pdf), 1))])
@@ -223,10 +205,10 @@ def score_with_fold_models(
     pairs: DataFrame,
     idf: dict[str, float],
     fold_weights: list[np.ndarray],
-    fold_col: str = "fold",
 ) -> DataFrame:
     """Distributed fold-aware scoring: each pair is scored by the model of
-    its own fold (which was trained WITHOUT that fold) — the pruner's
+    its own `fold` (which was trained WITHOUT that fold; derived from
+    norm_a as in kfold_prune_models when the column is absent) — the pruner's
     apply-side (CorefPruner.scala:36-47).  One Arrow pass; the k weight
     vectors ride one broadcast."""
     from collections.abc import Iterator
@@ -237,9 +219,9 @@ def score_with_fold_models(
     from berkeley_entity_spark.operators.features import FEATURE_NAMES, featurize_pair
 
     k = len(fold_weights)
-    if fold_col not in pairs.columns:
+    if "fold" not in pairs.columns:
         pairs = pairs.withColumn(
-            fold_col, F.pmod(F.xxhash64("norm_a"), F.lit(k)).cast("int")
+            "fold", F.pmod(F.xxhash64("norm_a"), F.lit(k)).cast("int")
         )
     spark = pairs.sparkSession
     b = spark.sparkContext.broadcast((idf, np.stack(fold_weights)))
@@ -260,7 +242,7 @@ def score_with_fold_models(
                 ],
                 dtype=np.float64,
             )
-            wsel = W[pdf[fold_col].to_numpy()]
+            wsel = W[pdf["fold"].to_numpy()]
             out = pdf[in_cols].copy()
             out["score"] = np.einsum("ij,ij->i", feats, wsel)
             yield out

@@ -47,7 +47,7 @@ __all__ = ["bpe_word_counts", "bpe_train", "bpe_merges_df"]
 
 
 def bpe_word_counts(
-    documents: DataFrame, text_col: str = "text", top_words: int = 2000
+    documents: DataFrame, top_words: int = 2000
 ) -> DataFrame:
     """(word, cnt) for the top_words most frequent [a-z]+ tokens.
 
@@ -55,7 +55,7 @@ def bpe_word_counts(
     partitioning/engine.  orderBy+limit compiles to TakeOrderedAndProject:
     per-partition top-V then a single bounded merge — no global sort.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     return (
         documents.select(F.explode(toks).alias("word"))
         .where(F.col("word").rlike("^[a-z]+$"))
@@ -88,14 +88,13 @@ def _pair_counts(words_seq: DataFrame) -> DataFrame:
 def bpe_train(
     documents: DataFrame,
     n_merges: int,
-    text_col: str = "text",
     top_words: int = 2000,
 ) -> list[dict]:
     """Learn n_merges BPE merges; returns [{step, left_sym, right_sym,
     pair_cnt}] in merge order.  One corpus scan total; each merge iteration
     runs on the checkpointed V-row word table and collects one row."""
     words = (
-        bpe_word_counts(documents, text_col, top_words)
+        bpe_word_counts(documents, top_words)
         .select("cnt", _seq_col("word").alias("seq"))
         .localCheckpoint()  # bounded (<= top_words rows); cuts corpus lineage
     )
@@ -130,7 +129,6 @@ def bpe_train(
 def bpe_encode_stats(
     documents: DataFrame,
     merges: list[dict],
-    text_col: str = "text",
 ) -> DataFrame:
     """Apply learned merges to every document (tokenizer application):
     (doc_id, n_words, n_chars, n_symbols) where n_symbols is the document's
@@ -143,7 +141,7 @@ def bpe_encode_stats(
 
     Only [a-z]+ words are encoded (matching bpe_train's charset);
     out-of-charset tokens count as 1 symbol each, like an <unk>."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     az = F.filter(toks, lambda t: t.rlike("^[a-z]+$"))
     other = F.size(toks) - F.size(az)
 
@@ -174,11 +172,10 @@ def bpe_merges_df(
     spark: SparkSession,
     documents: DataFrame,
     n_merges: int,
-    text_col: str = "text",
     top_words: int = 2000,
 ) -> DataFrame:
     """bpe_train as a (step, left_sym, right_sym, pair_cnt) DataFrame."""
-    merges = bpe_train(documents, n_merges, text_col, top_words)
+    merges = bpe_train(documents, n_merges, top_words)
     schema = "step int, left_sym string, right_sym string, pair_cnt bigint"
     return spark.createDataFrame(
         [(m["step"], m["left_sym"], m["right_sym"], m["pair_cnt"]) for m in merges],

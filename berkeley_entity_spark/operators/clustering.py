@@ -7,7 +7,7 @@ large-star / small-star connected components (Kiveris et al., "Connected
 Components in MapReduce and Beyond", SoCC'14) on the edge DataFrame —
 O(log n) rounds, each round two shuffles, lineage cut with localCheckpoint
 every round so plans do not grow unboundedly.  One union-find
-(_union_find) serves both the per-partition contraction and the
+(union_find) serves both the per-partition contraction and the
 driver-side finish for small graphs.
 
 Node ids are content hashes (xxhash64), so results are independent of
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _union_find(pairs: Iterable[tuple[int, int]]) -> dict[int, int]:
+def union_find(pairs: Iterable[tuple[int, int]]) -> dict[int, int]:
     """{node: root} over the graph of (u, v) pairs; root = the minimum node
     of its component (union by smaller root, path compression).  Self-loops
     add no node.  Module-level so executors unpickle it by reference."""
@@ -73,7 +73,7 @@ def _contract_local(edges: DataFrame) -> DataFrame:
     """
 
     def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        roots = _union_find(
+        roots = union_find(
             uv for pdf in batches for uv in zip(pdf["u"], pdf["v"])
         )
         out_u = [x for x, r in roots.items() if r != x]
@@ -178,7 +178,7 @@ def connected_components(
         # two long columns, <= threshold rows — Arrow-collect and union-find
         pdf = curr.toPandas()
         mapping = pd.DataFrame(
-            list(_union_find(zip(pdf["u"], pdf["v"])).items()),
+            list(union_find(zip(pdf["u"], pdf["v"])).items()),
             columns=["node_id", "component"],
         ).astype("int64")
         return spark.createDataFrame(
@@ -281,8 +281,6 @@ def assign_clusters(
 def cluster_cohesion(
     assign: DataFrame,
     edges: DataFrame,
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
 ) -> DataFrame:
     """Per-cluster cohesion audit over the match graph: how DENSE is each
     resolved cluster in accepted edges?
@@ -306,24 +304,24 @@ def cluster_cohesion(
     groupBy(cluster).  Nothing is quadratic: |edges| is the blocked,
     capped candidate-pair volume, and counting is map-side combinable."""
     a = assign.select(
-        F.col(id_col).alias("id_a"), F.col(cluster_col).alias("_ca")
+        F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("_ca")
     )
     b = assign.select(
-        F.col(id_col).alias("id_b"), F.col(cluster_col).alias("_cb")
+        F.col("doc_id").alias("id_b"), F.col("cluster_id").alias("_cb")
     )
     e = (
         edges.join(a, "id_a")
         .join(b, "id_b")
         .where(F.col("_ca") == F.col("_cb"))
-        .groupBy(F.col("_ca").alias(cluster_col))
+        .groupBy(F.col("_ca").alias("cluster_id"))
         .agg(F.count(F.lit(1)).alias("n_edges"))
     )
-    n = assign.groupBy(cluster_col).agg(F.count(F.lit(1)).alias("n_members"))
+    n = assign.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_members"))
     return (
         n.where(F.col("n_members") >= 2)
-        .join(e, cluster_col, "left")
+        .join(e, "cluster_id", "left")
         .select(
-            cluster_col,
+            "cluster_id",
             "n_members",
             F.coalesce("n_edges", F.lit(0)).alias("n_edges"),
             F.round(
@@ -346,9 +344,6 @@ def cluster_cohesion(
 def repair_chained_clusters(
     assign: DataFrame,
     edges: DataFrame,
-    strong_col: str = "strong",
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
 ) -> DataFrame:
     """Over-merge remediation: transitive closure is single-link, so one
     spurious bridge edge welds two real entities into one chained cluster
@@ -365,32 +360,33 @@ def repair_chained_clusters(
     keep the min-member convention and cannot collide with kept ids (the
     node sets are disjoint).
 
-    Output: (id_col, cluster_col, repaired) for EVERY input id."""
-    coh = cluster_cohesion(assign, edges.select("id_a", "id_b"), id_col, cluster_col)
-    flagged = coh.where(F.col("is_chained")).select(cluster_col)
-    fm = assign.join(flagged, cluster_col).select(id_col, cluster_col)
-    ca = assign.select(F.col(id_col).alias("id_a"), F.col(cluster_col).alias("_ca"))
-    cb = assign.select(F.col(id_col).alias("id_b"), F.col(cluster_col).alias("_cb"))
+    Output: (doc_id, cluster_id, repaired) for EVERY input id; edges carry
+    (id_a, id_b, strong)."""
+    coh = cluster_cohesion(assign, edges.select("id_a", "id_b"))
+    flagged = coh.where(F.col("is_chained")).select("cluster_id")
+    fm = assign.join(flagged, "cluster_id").select("doc_id", "cluster_id")
+    ca = assign.select(F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("_ca"))
+    cb = assign.select(F.col("doc_id").alias("id_b"), F.col("cluster_id").alias("_cb"))
     strong_edges = (
-        edges.where(F.col(strong_col))
+        edges.where(F.col("strong"))
         .join(ca, "id_a")
         .join(cb, "id_b")
         .where(F.col("_ca") == F.col("_cb"))
-        .join(flagged.select(F.col(cluster_col).alias("_ca")), "_ca")
+        .join(flagged.select(F.col("cluster_id").alias("_ca")), "_ca")
         .select("id_a", "id_b")
     )
     comp = connected_components(strong_edges.toDF("u", "v"))
     repaired = (
-        fm.select(id_col)
-        .join(comp.toDF(id_col, "_new"), id_col, "left")
+        fm.select("doc_id")
+        .join(comp.toDF("doc_id", "_new"), "doc_id", "left")
         .select(
-            id_col,
-            F.coalesce("_new", F.col(id_col)).alias(cluster_col),
+            "doc_id",
+            F.coalesce("_new", F.col("doc_id")).alias("cluster_id"),
             F.lit(True).alias("repaired"),
         )
     )
     kept = (
-        assign.join(flagged, cluster_col, "left_anti")
-        .select(id_col, cluster_col, F.lit(False).alias("repaired"))
+        assign.join(flagged, "cluster_id", "left_anti")
+        .select("doc_id", "cluster_id", F.lit(False).alias("repaired"))
     )
     return kept.unionByName(repaired)

@@ -34,16 +34,16 @@ from pyspark.sql import functions as F
 from berkeley_entity_spark.operators.blocking import capped_key_pairs, minhash_band_keys
 
 
-def tokens_col(text_col: str = "text"):
+def tokens_col():
     """Whitespace tokens; empty tokens removed (matches the DuckDB oracle
     `string_split` + filter)."""
-    return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    return F.filter(F.split(F.col("text"), " "), lambda t: t != "")
 
 
-def exact_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(documents: DataFrame) -> DataFrame:
     """(text, keep_id, dup_cnt) — the survivor is the min doc_id."""
     return (
-        documents.groupBy(text_col)
+        documents.groupBy("text")
         .agg(
             F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("dup_cnt"),
@@ -51,13 +51,13 @@ def exact_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def shingles_col(n: int = 3, text_col: str = "text"):
+def shingles_col(n: int = 3):
     """Word n-gram shingles as an array column (pure SQL expressions:
     transform over a sequence of slices — stays in codegen); the whole token
     string when there are fewer than n tokens, and no shingle at all for a
     token-less (empty or whitespace-only) doc, so such docs land in no
     bucket and never pair with each other."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     return (
         F.when(
             F.size(toks) >= n,
@@ -75,21 +75,18 @@ def minhash_lsh_pairs(
     documents: DataFrame,
     bands: int = 4,
     rows: int = 2,
-    shingle_n: int = 3,
-    max_bucket: int = 200,
-    text_col: str = "text",
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) sharing an LSH band bucket,
-    hot buckets capped at max_bucket docs (doc_id order)."""
+    """Candidate near-dup pairs (id_a < id_b) sharing an LSH band bucket of
+    word 3-shingles, hot buckets capped at 200 docs (doc_id order)."""
     # NOT persisted: the self-join recomputes the md5 signature exprs on
     # both sides, but A/B measurement (sf0.1, min-of-2 warm) put recompute
     # at 4.9s vs 6.0s persisted — codegen md5 is cheaper than row-cache
     # materialization
     buckets = minhash_band_keys(
-        documents, ["doc_id"], shingles_col(shingle_n, text_col), bands, rows
+        documents, ["doc_id"], shingles_col(3), bands, rows
     )
     return (
-        capped_key_pairs(buckets, "doc_id", "bucket", max_bucket)
+        capped_key_pairs(buckets, "doc_id", "bucket", 200)
         .select("id_a", "id_b")
         .distinct()
     )
@@ -99,14 +96,12 @@ def ngram_jaccard_pairs(
     documents: DataFrame,
     n: int = 3,
     threshold: float = 0.5,
-    max_ngram_df: int = 500,
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for every pair sharing >=1 n-gram in
     their PREFIXES — the PPJoin/All-Pairs prefix filter (Bayardo et al.
     WWW'07, Chaudhuri et al. ICDE'06), exact at any threshold.
 
-    Stop-ngrams (df > max_ngram_df) are dropped before all pair work (the
+    Stop-ngrams (df > 500) are dropped before all pair work (the
     guard against quadratic hot keys; intersections count cold ngrams only,
     sizes count all — unchanged semantics, mirrored by the DuckDB oracle).
 
@@ -142,12 +137,12 @@ def ngram_jaccard_pairs(
     # a lazy persist lets the six branches race before the cache fills.
     dn = documents.select(
         "doc_id",
-        F.explode(F.array_distinct(shingles_col(n, text_col))).alias("ngram"),
+        F.explode(F.array_distinct(shingles_col(n))).alias("ngram"),
     ).persist()
     dn.count()
     sizes = dn.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     df_tab = dn.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-    cold = dn.join(df_tab.where(F.col("df") <= max_ngram_df), "ngram")
+    cold = dn.join(df_tab.where(F.col("df") <= 500), "ngram")
     wdoc = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("ngram"))
     ranked = cold.select(
         "doc_id",
@@ -221,12 +216,10 @@ def fuzzy_contaminated_docs(
     benchmark: DataFrame,
     bands: int = 4,
     rows: int = 2,
-    shingle_n: int = 3,
-    text_col: str = "text",
 ) -> DataFrame:
     """Near-duplicate benchmark decontamination: flag training docs whose
-    MinHash-LSH band bucket collides with any benchmark doc's — the fuzzy
-    sibling of contaminated_docs (exact 13-gram) and
+    MinHash-LSH band bucket (word 3-shingles) collides with any benchmark
+    doc's — the fuzzy sibling of contaminated_docs (exact 13-gram) and
     bloom_contaminated_docs, catching lightly-paraphrased or truncated
     benchmark copies the exact probes miss (the Lee et al. 2022 dedup
     argument applied to eval leakage).
@@ -241,11 +234,11 @@ def fuzzy_contaminated_docs(
     training doc; a benchmark doc present in training flags itself (the
     decontamination pass is expected to drop it)."""
     tb = minhash_band_keys(
-        documents, ["doc_id"], shingles_col(shingle_n, text_col), bands, rows
+        documents, ["doc_id"], shingles_col(3), bands, rows
     )
     bb = (
         minhash_band_keys(
-            benchmark, ["doc_id"], shingles_col(shingle_n, text_col), bands, rows
+            benchmark, ["doc_id"], shingles_col(3), bands, rows
         )
         .select("bucket", F.col("doc_id").alias("bench_id"))
         .distinct()
@@ -263,7 +256,7 @@ def fuzzy_contaminated_docs(
 # ---------------------------------------------------------------- simhash
 
 
-def simhash64(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash64(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash bigint) — 64-bit SimHash over tokens, Arrow kernel.
 
     Token hash = the low 64 bits of md5 under DuckDB's md5_number_lower
@@ -301,13 +294,13 @@ def simhash64(documents: DataFrame, text_col: str = "text") -> DataFrame:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "simhash": pdf[text_col].map(
+                    "simhash": pdf["text"].map(
                         lambda t: (lambda s: None if s is None else np.int64(np.uint64(s)))(sh(t))
                     ),
                 }
             )
 
-    return documents.select("doc_id", text_col).mapInPandas(
+    return documents.select("doc_id", "text").mapInPandas(
         gen, schema="doc_id bigint, simhash bigint"
     )
 
@@ -315,7 +308,6 @@ def simhash64(documents: DataFrame, text_col: str = "text") -> DataFrame:
 def simhash_near_pairs(
     documents: DataFrame,
     max_hamming: int = 8,
-    text_col: str = "text",
     max_bucket: int = 200,
 ) -> DataFrame:
     """Candidate pairs with hamming(simhash) <= max_hamming via 4x16-bit
@@ -333,7 +325,7 @@ def simhash_near_pairs(
     mirrored bitwise in the DuckDB oracle).  Under transitive closure the
     star + rep-rep edge set yields the same components as all-pairs.
     """
-    sig = simhash64(documents, text_col).where(F.col("simhash").isNotNull())
+    sig = simhash64(documents).where(F.col("simhash").isNotNull())
     groups = sig.groupBy("simhash").agg(F.min("doc_id").alias("rep"))
     # hamming-0 star edges: every non-representative member -> its rep
     intra = (
@@ -387,14 +379,7 @@ def simhash_near_pairs(
     return intra.unionByName(cross)
 
 
-def near_dup_keep_one(
-    documents: DataFrame,
-    bands: int = 4,
-    rows: int = 2,
-    shingle_n: int = 3,
-    max_bucket: int = 200,
-    text_col: str = "text",
-) -> DataFrame:
+def near_dup_keep_one(documents: DataFrame) -> DataFrame:
     """Near-dup cluster RESOLUTION — the keep-one policy of Lee et al. 2022
     ("Deduplicating Training Data Makes Language Models Better" §4.1 NEARDUP:
     keep one document per duplicate cluster, drop the rest):
@@ -410,9 +395,7 @@ def near_dup_keep_one(
     size, nothing driver-side."""
     from berkeley_entity_spark.operators.clustering import connected_components
 
-    pairs = minhash_lsh_pairs(
-        documents, bands, rows, shingle_n, max_bucket, text_col
-    )
+    pairs = minhash_lsh_pairs(documents)
     comp = connected_components(pairs.toDF("u", "v")).toDF(
         "doc_id", "canonical_id"
     )
@@ -433,7 +416,6 @@ def contaminated_docs(
     documents: DataFrame,
     benchmark: DataFrame,
     k: int = 13,
-    text_col: str = "text",
 ) -> DataFrame:
     """Training-corpus decontamination (the GPT-3 appendix-C / C4-audit
     shape: Brown et al. 2020, Dodge et al. 2021): flag every training doc
@@ -450,9 +432,9 @@ def contaminated_docs(
     Output: one row per CONTAMINATED training doc —
     (doc_id, n_hit_grams = distinct contaminated gram positions,
     n_bench_docs = distinct benchmark docs hit)."""
-    tg = kgram_positions(documents, k, text_col)
+    tg = kgram_positions(documents, k)
     bg = (
-        kgram_positions(benchmark, k, text_col)
+        kgram_positions(benchmark, k)
         .select(F.col("gram_h").alias("g"), F.col("doc_id").alias("bench_id"))
         .distinct()
     )
@@ -467,12 +449,12 @@ def contaminated_docs(
 
 
 def kgram_positions(
-    documents: DataFrame, k: int = 8, text_col: str = "text"
+    documents: DataFrame, k: int = 8
 ) -> DataFrame:
     """(doc_id, pos, gram_h) — md5 of every k-token gram, with its 0-based
     token position.  Whole-stage codegen (split/slice/concat_ws/md5), no
     Python; md5 keeps the gram key engine-portable for the DuckDB oracle."""
-    d = documents.select("doc_id", tokens_col(text_col).alias("toks")).where(
+    d = documents.select("doc_id", tokens_col().alias("toks")).where(
         F.size("toks") >= k
     )
     grams = F.transform(
@@ -487,7 +469,6 @@ def duplicated_spans(
     k: int = 8,
     min_len: int = 15,
     max_gram_rows: int = 200,
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact duplicated-substring spans across document pairs — the
     EXACTSUBSTR pass of Lee et al. 2022 ("Deduplicating Training Data Makes
@@ -507,7 +488,7 @@ def duplicated_spans(
     Output: (doc_a, doc_b, a_start, b_start, span_len), one row per maximal
     shared run.  At 100 TB every stage is a key-equality shuffle with a
     bounded hot key; nothing is quadratic in corpus size."""
-    g = kgram_positions(documents, k, text_col)
+    g = kgram_positions(documents, k)
     wcap = Window.partitionBy("gram_h").orderBy("doc_id", "pos")
     capped = g.withColumn("rn", F.row_number().over(wcap)).where(
         F.col("rn") <= max_gram_rows
@@ -542,7 +523,6 @@ def doc_segments(
     documents: DataFrame,
     seg_tokens: int = 10,
     delim: str | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, seg_idx, seg) — one row per document segment.
 
@@ -553,9 +533,9 @@ def doc_segments(
     if delim is not None:
         return documents.select(
             "doc_id",
-            F.posexplode(F.split(F.col(text_col), delim)).alias("seg_idx", "seg"),
+            F.posexplode(F.split(F.col("text"), delim)).alias("seg_idx", "seg"),
         )
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     n_segs = F.ceil(F.size(toks) / F.lit(seg_tokens)).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), n_segs - 1),
@@ -573,7 +553,6 @@ def segment_dedup(
     min_dup_docs: int = 2,
     seg_tokens: int = 10,
     delim: str | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """CCNet-style duplicated-segment removal (Wenzek et al. 2020 §3.1:
     drop every line whose hash is shared across documents — the step that
@@ -591,7 +570,7 @@ def segment_dedup(
     caps needed anywhere because nothing joins occurrence-lists against
     occurrence-lists.  Deterministic under any partitioning (hash-set
     membership + in-doc order), so a DuckDB oracle replays it exactly."""
-    segs = doc_segments(documents, seg_tokens, delim, text_col).withColumn(
+    segs = doc_segments(documents, seg_tokens, delim).withColumn(
         "h", F.md5("seg")
     )
     dup = (
@@ -622,7 +601,6 @@ def bloom_benchmark_bits(
     k: int = 13,
     m_bits: int = 1 << 18,
     k_hashes: int = 3,
-    text_col: str = "text",
 ) -> DataFrame:
     """The set bits of a Bloom filter over the benchmark's k-token grams:
     bit_j(gram) = conv(md5(md5_hex(gram) || '#' || j)[:15], 16) % m_bits.
@@ -630,7 +608,7 @@ def bloom_benchmark_bits(
     (hashlib), and the DuckDB oracle on one identical expression.  Output
     is DISTINCT bit positions — bounded at m_bits rows no matter how big
     the benchmark is."""
-    g = kgram_positions(benchmark, k, text_col).select("gram_h").distinct()
+    g = kgram_positions(benchmark, k).select("gram_h").distinct()
     bit_cols = [
         (
             F.conv(
@@ -653,7 +631,6 @@ def bloom_contaminated_docs(
     k: int = 13,
     m_bits: int = 1 << 18,
     k_hashes: int = 3,
-    text_col: str = "text",
 ) -> DataFrame:
     """Bloom-filter benchmark decontamination — the BFF / Dolma-deduper
     shape (Soldaini et al. 2024; Groeneveld's bff): the benchmark's k-gram
@@ -678,9 +655,7 @@ def bloom_contaminated_docs(
     >= 1 Bloom-positive gram."""
     import hashlib
 
-    bits_rows = bloom_benchmark_bits(
-        benchmark, k, m_bits, k_hashes, text_col
-    ).collect()
+    bits_rows = bloom_benchmark_bits(benchmark, k, m_bits, k_hashes).collect()
     bitset = np.zeros(m_bits // 8, dtype=np.uint8)
     for r in bits_rows:
         b = int(r.bit)
@@ -696,7 +671,7 @@ def bloom_contaminated_docs(
 
         for pdf in batches:
             out = {"doc_id": [], "n_grams": [], "n_maybe_grams": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = [t for t in (text or "").split(" ") if t]
                 n_grams = max(0, len(toks) - k + 1)
                 if n_grams == 0:
@@ -725,7 +700,7 @@ def bloom_contaminated_docs(
                     out["n_maybe_grams"].append(n_maybe)
             yield pd.DataFrame(out)
 
-    return documents.select("doc_id", text_col).mapInPandas(
+    return documents.select("doc_id", "text").mapInPandas(
         gen, "doc_id long, n_grams long, n_maybe_grams long"
     )
 
@@ -735,7 +710,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_ngram_df: int = 500,
-    text_col: str = "text",
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT join: every pair where either doc's
     cold-shingle set is >= `threshold` contained in the intersection —
@@ -782,7 +756,7 @@ def containment_pairs(
     """
     dn = documents.select(
         "doc_id",
-        F.explode(F.array_distinct(shingles_col(n, text_col))).alias("ngram"),
+        F.explode(F.array_distinct(shingles_col(n))).alias("ngram"),
     ).persist()
     dn.count()
     sizes = dn.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))

@@ -44,16 +44,14 @@ ALPHA = 0.5
 def snapshot_histograms(
     documents: DataFrame,
     snapshot_col: str = "source",
-    n_len_bins: int = 8,
-    len_bin_width: int = 200,
 ) -> DataFrame:
     """(snapshot, feature, bin, cnt) — per-snapshot histogram counts for
     the two monitored features: 'len' (character-length bins of width
-    len_bin_width, top bin open) and 'lang' (the language-id column).
+    200 chars, 8 bins, top bin open) and 'lang' (the language-id column).
     One corpus scan, map-side combine; output is |snapshots| x |bins|
     rows."""
     len_bin = F.least(
-        F.floor(F.col("n_chars") / len_bin_width), F.lit(n_len_bins - 1)
+        F.floor(F.col("n_chars") / 200), F.lit(7)
     ).cast("string")
     # NULL bins (NULL lang / NULL n_chars) are coalesced to a sentinel:
     # plain equality in the dense-grid and predecessor joins never matches
@@ -79,11 +77,8 @@ def snapshot_histograms(
 def drift_psi(
     documents: DataFrame,
     snapshot_col: str = "source",
-    n_len_bins: int = 8,
-    len_bin_width: int = 200,
-    alert: float = 0.25,
 ) -> DataFrame:
-    """(snapshot, feature, n_docs, psi, drifted) — PSI of every snapshot
+    """(snapshot, feature, n_docs, psi, drifted = psi > 0.25) — PSI of every snapshot
     vs its predecessor (snapshots ordered lexicographically; the first
     snapshot has no predecessor and is omitted), one row per (snapshot,
     feature).
@@ -97,7 +92,7 @@ def drift_psi(
     over the distinct-snapshot table (|snapshots| rows, not row-level
     data)."""
     hist = snapshot_histograms(
-        documents, snapshot_col, n_len_bins=n_len_bins, len_bin_width=len_bin_width
+        documents, snapshot_col
     ).localCheckpoint(eager=True)  # grid domains + fill share one corpus scan
     snaps = hist.select("snapshot").distinct()
     snaps = snaps.select(
@@ -141,5 +136,5 @@ def drift_psi(
             F.max(F.col("c.total")).alias("n_docs"),
             F.round(F.sum(term), 6).alias("psi"),
         )
-        .withColumn("drifted", F.col("psi") > F.lit(alert))
+        .withColumn("drifted", F.col("psi") > F.lit(0.25))
     )

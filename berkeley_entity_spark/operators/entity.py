@@ -48,6 +48,8 @@ from berkeley_entity_spark.operators.scoring import match_edges
 # ±0.5 dragged e2e pairwise precision from 1.0 to 0.922 (admitting
 # negative-margin pairs down to -2.0), while this table keeps F1 at 1.0
 # and still splits attribute-contradicting links (tests/test_entity.py).
+# the mention attributes the consensus table and refinement compare
+ATTR_COLS = ("number", "gender")
 BUCKET_WEIGHTS = {
     "0/1": -0.5,
     "1/1": 0.25,
@@ -80,7 +82,6 @@ def bucket_count_col(count, denom):
 def cluster_attribute_consensus(
     assign: DataFrame,
     attrs: DataFrame,
-    attr_cols: tuple[str, ...] = ("number", "gender"),
     key: str = "mention_id",
 ) -> DataFrame:
     """Per-cluster attribute consensus table:
@@ -91,7 +92,7 @@ def cluster_attribute_consensus(
     reference's bucketCount of (agree, n_members).  Pure aggregations."""
     j = assign.select(key, "cluster_id").join(attrs, key)
     out = j.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_members"))
-    for c in attr_cols:
+    for c in ATTR_COLS:
         cell = j.groupBy("cluster_id", c).agg(F.count(F.lit(1)).alias("_n"))
         maj = cell.groupBy("cluster_id").agg(
             F.min_by(
@@ -118,8 +119,6 @@ def entity_refine(
     components: DataFrame,
     node_attrs: DataFrame,
     threshold: float = 0.0,
-    attr_cols: tuple[str, ...] = ("number", "gender"),
-    bucket_weights: dict[str, float] | None = None,
 ) -> DataFrame:
     """One entity-level refinement round over surface nodes.
 
@@ -128,7 +127,7 @@ def entity_refine(
     components:  (node_id, component) — the PROVISIONAL clustering (first
                  decode's connected components).  Nodes absent are singleton
                  provisional clusters (their own component).
-    node_attrs:  (node_id, *attr_cols) — e.g. per-surface majority
+    node_attrs:  (node_id, *ATTR_COLS) — e.g. per-surface majority
                  number/gender from the P11 properties stage.
 
     Returns refined (u, v) match edges: score adjusted by the bucketed
@@ -136,7 +135,6 @@ def entity_refine(
     provisional cluster (both directions, all attributes), re-thresholded.
     Run connected_components + assign_clusters on the result for the final
     entities."""
-    bw = bucket_weights if bucket_weights is not None else BUCKET_WEIGHTS
     prov = (
         node_attrs.join(components, "node_id", "left")
         .withColumn("component", F.coalesce("component", "node_id"))
@@ -148,7 +146,7 @@ def entity_refine(
         # cluster id, joined onto the pair
         own = prov.select(
             F.col("node_id").alias(f"node_{side}"),
-            *[F.col(c).alias(f"{c}_{side}") for c in attr_cols],
+            *[F.col(c).alias(f"{c}_{side}") for c in ATTR_COLS],
         )
         comp = prov.select(
             F.col("node_id").alias(f"node_{other}"),
@@ -157,7 +155,7 @@ def entity_refine(
         adjusted = adjusted.join(own, f"node_{side}", "left").join(
             comp, f"node_{other}", "left"
         )
-    for c in attr_cols:
+    for c in ATTR_COLS:
         cells = prov.groupBy("component", c).agg(F.count(F.lit(1)).alias("_n"))
         for side, other in (("a", "b"), ("b", "a")):
             # my value's support inside the partner's cluster
@@ -186,14 +184,14 @@ def entity_refine(
                             bucket_count_col(
                                 F.col(f"_agree_{c}_{side}"), F.col(f"_sz_{other}")
                             ),
-                            bw,
+                            BUCKET_WEIGHTS,
                         )
                     ),
                 )
                 .drop(f"_sz_{other}")
             )
     adj_sum = sum(
-        (F.col(f"_adj_{c}_{side}") for c in attr_cols for side in ("a", "b")),
+        (F.col(f"_adj_{c}_{side}") for c in ATTR_COLS for side in ("a", "b")),
         F.lit(0.0),
     )
     refined = adjusted.withColumn("score", F.col("score") + adj_sum)
@@ -205,9 +203,8 @@ def refine_components(
     components: DataFrame,
     node_attrs: DataFrame,
     threshold: float = 0.0,
-    attr_cols: tuple[str, ...] = ("number", "gender"),
 ) -> DataFrame:
     """entity_refine + closure: the full second pass, returning the refined
     (node_id, component) mapping ready for assign_clusters."""
-    edges = entity_refine(scored, components, node_attrs, threshold, attr_cols)
+    edges = entity_refine(scored, components, node_attrs, threshold)
     return connected_components(edges)

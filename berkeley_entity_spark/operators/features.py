@@ -16,8 +16,6 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-import numpy as np
-
 FEATURE_NAMES = [
     "jaro_winkler",
     "levenshtein",  # 1 - dist/maxlen
@@ -32,7 +30,6 @@ FEATURE_NAMES = [
     "token_align",  # full one-sided token alignment (eq/prefix/initial/edit)
     "bias",
 ]
-N_FEATURES = len(FEATURE_NAMES)
 
 
 def jaro(s1: str, s2: str) -> float:
@@ -68,7 +65,7 @@ def jaro(s1: str, s2: str) -> float:
     return (matches / len1 + matches / len2 + (matches - t) / matches) / 3.0
 
 
-def jaro_winkler(s1: str, s2: str, p: float = 0.1, max_prefix: int = 4) -> float:
+def jaro_winkler(s1: str, s2: str) -> float:
     """Canonical Winkler variant: the prefix boost applies only when the base
     Jaro similarity exceeds the 0.7 boost threshold (Winkler 1990) — also
     exactly what DuckDB's jaro_winkler_similarity computes, which makes this
@@ -78,12 +75,12 @@ def jaro_winkler(s1: str, s2: str, p: float = 0.1, max_prefix: int = 4) -> float
     if j <= 0.7:
         return j
     prefix = 0
-    for a, b in zip(s1[:max_prefix], s2[:max_prefix]):
+    for a, b in zip(s1[:4], s2[:4]):
         if a == b:
             prefix += 1
         else:
             break
-    return j + prefix * p * (1.0 - j)
+    return j + prefix * 0.1 * (1.0 - j)
 
 
 def levenshtein_ratio(s1: str, s2: str) -> float:

@@ -27,8 +27,6 @@ def with_hearst_features(
     pairs: DataFrame,
     word_counts: DataFrame,
     pair_counts: DataFrame,
-    head_a: str = "head_a",
-    head_b: str = "head_b",
 ) -> DataFrame:
     """pairs(+head_a, head_b) -> + hearst_present, hearst_unnorm_bin,
     hearst_unnorm_fine_bin, hearst_norm_bin, hearst_norm_fine_bin.
@@ -42,19 +40,19 @@ def with_hearst_features(
         F.col("cnt").alias("_pair_cnt"),
     ).groupBy("_hx", "_hy").agg(F.sum("_pair_cnt").alias("_pair_cnt"))
     out = (
-        pairs.withColumn("_hx", F.least(head_a, head_b))
-        .withColumn("_hy", F.greatest(head_a, head_b))
+        pairs.withColumn("_hx", F.least("head_a", "head_b"))
+        .withColumn("_hy", F.greatest("head_a", "head_b"))
         .join(F.broadcast(pc), ["_hx", "_hy"], "left")
         .join(
-            F.broadcast(word_counts.select(F.col("head").alias(head_a), F.col("cnt").alias("_ca"))),
-            head_a, "left",
+            F.broadcast(word_counts.select(F.col("head").alias("head_a"), F.col("cnt").alias("_ca"))),
+            "head_a", "left",
         )
         .join(
-            F.broadcast(word_counts.select(F.col("head").alias(head_b), F.col("cnt").alias("_cb"))),
-            head_b, "left",
+            F.broadcast(word_counts.select(F.col("head").alias("head_b"), F.col("cnt").alias("_cb"))),
+            "head_b", "left",
         )
     )
-    fires = (F.col(head_a) != F.col(head_b)) & (F.coalesce("_pair_cnt", F.lit(0.0)) > 0.5)
+    fires = (F.col("head_a") != F.col("head_b")) & (F.coalesce("_pair_cnt", F.lit(0.0)) > 0.5)
     p = F.col("_pair_cnt")
     # zero-guard: max(count, pairCount) (reference :325-329)
     ca = F.greatest(F.coalesce("_ca", F.lit(0.0)), p)

@@ -12,7 +12,7 @@ Spark plan is a single applyInPandas over doc groups with no shuffle
 beyond the groupBy:
 
   * C_i — antecedent choice for mention i: domain = NEW + the previous
-    `window` mentions (the reference's pruned domain,
+    ANT_WINDOW mentions (the reference's pruned domain,
     DocumentGraph.scala:91-115).  Unary = the trained pairwise scorer
     (operators/scoring.py weights over features.featurize_pair — the same
     kernel the ER spine uses), NEW = 0 (threshold-decode convention).
@@ -51,8 +51,6 @@ rows-only check plus these tests are the evidence, disclosed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -62,6 +60,10 @@ from berkeley_entity_spark.ml.bp import FactorGraph
 
 TYPE_DOMAIN = ("LOC", "MISC", "ORG", "PER")  # sorted; index = domain value
 NIL = ""  # link domain position 0
+ANT_WINDOW = 8  # antecedent candidates per mention: the previous 8
+BP_ITERS = 5  # loopy-BP iterations per document graph
+# an antecedent whose unary score is below this can't beat NEW (score 0)
+PRUNE_MARGIN = -4.0
 
 
 def default_type_lexicons() -> tuple[frozenset, frozenset, frozenset]:
@@ -130,9 +132,7 @@ def query_variants_col(surface_col: str = "surface"):
     )
 
 
-def surface_query_candidates(
-    link_votes: DataFrame, title_type_expr=None, top_k: int = 3
-) -> DataFrame:
+def surface_query_candidates(link_votes: DataFrame, top_k: int = 3) -> DataFrame:
     """(surface, qcands array<struct<q_idx,variant,cands>>) — the latent
     query layer's per-surface domain (JointDocFactorGraphOnto.scala:135-175
     wires one Query node per mention whose choice selects which candidate
@@ -140,7 +140,7 @@ def surface_query_candidates(
     vote DB's top-k for THAT variant string — a first-token query hits the
     DB only where the token is itself a known surface, exactly the
     ambiguity the latent variable exists to arbitrate."""
-    per_surface = surface_link_candidates(link_votes, title_type_expr, top_k)
+    per_surface = surface_link_candidates(link_votes, top_k=top_k)
     surfaces = link_votes.select("surface").distinct()
     variants = surfaces.select(
         "surface",
@@ -163,13 +163,8 @@ def joint_entity_decode(
     gamma_type: float = 1.5,
     gamma_link: float = 1.5,
     delta_title_type: float = 1.0,
-    window: int = 8,
-    n_iters: int = 5,
     max_mentions: int = 40,
-    nil_votes: float = 1.0,
-    prune_margin: float = -4.0,
     new_coref_bias: float = 0.0,
-    n_partitions: int | None = None,
     query_candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Joint BP decode: mentions -> (url, m_idx, sent_idx, start,
@@ -282,7 +277,7 @@ def joint_entity_decode(
                             titles.append((c["title"], c["ttype"]))
                     votes_tot.append(tot)
                 tab = np.full((len(variants), len(titles)), NEG)
-                tab[:, 0] = np.log(nil_votes)
+                tab[:, 0] = 0.0  # NIL: log of one vote
                 for qi, q in enumerate(qc):
                     for c in _vc(q):
                         tab[qi, pos[c["title"]]] = np.log(float(c["votes"]))
@@ -293,7 +288,7 @@ def joint_entity_decode(
                 ql_tabs.append(tab)
                 continue
             cands = pdf["_cands"].iloc[ridx]
-            titles, scores = [(NIL, "MISC")], [np.log(nil_votes)]
+            titles, scores = [(NIL, "MISC")], [0.0]  # NIL: log of one vote
             if cands is not None and len(cands):
                 for c in cands:
                     titles.append((c["title"], c["ttype"]))
@@ -309,11 +304,11 @@ def joint_entity_decode(
         for i in range(n):
             # prune the antecedent domain by the unary score, like the
             # reference (DocumentGraph.scala:91-115 getPrunedDomain):
-            # below prune_margin an antecedent can't win and only bloats
+            # below PRUNE_MARGIN an antecedent can't win and only bloats
             # the agreement-factor count — NEW (score 0) always stays, so
             # the decode is unchanged for every pruned candidate
             scored_ants = []
-            for j in range(max(0, i - window), i):
+            for j in range(max(0, i - ANT_WINDOW), i):
                 feats = featurize_pair(
                     pdf["norm_name"].iloc[i], pdf["norm_name"].iloc[j], {},
                     bool(pdf["is_acr"].iloc[i]), bool(pdf["is_acr"].iloc[j]),
@@ -322,7 +317,7 @@ def joint_entity_decode(
                     ),
                 )
                 s = float(np.dot(w_arr, feats))
-                if s >= prune_margin:
+                if s >= PRUNE_MARGIN:
                     scored_ants.append((j, s))
             ants = [j for j, _ in scored_ants]
             c_domain.append(ants)
@@ -372,7 +367,7 @@ def joint_entity_decode(
                             if domains[i][li][0] == domains[j][lj][0]:
                                 tab[pos, li, lj] = gamma_link
                     g.add_factor([c_nodes[i], l_nodes[i], l_nodes[j]], tab)
-        decoded = g.decode(n_iters)
+        decoded = g.decode(BP_ITERS)
         rows = []
         for i in range(n_all):
             qv = None
@@ -424,7 +419,7 @@ def joint_entity_decode(
     # distribution, so no further (coalescible) exchange is inserted —
     # partitioning follows CORES, not bytes, which is the right rule for
     # any Python-kernel stage.
-    n_parts = n_partitions or m.sparkSession.sparkContext.defaultParallelism
+    n_parts = m.sparkSession.sparkContext.defaultParallelism
     return m.repartition(n_parts, "url").groupBy("url").applyInPandas(
         lambda pdf: decode_doc(pdf), schema=schema
     )

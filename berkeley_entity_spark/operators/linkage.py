@@ -78,15 +78,17 @@ INIT = {
     "u_t": [0.8, 0.2],
 }
 N_ITER = 5
+# hot-block cap of the soundex-class phonetic blocking pass
+MAX_BLOCK_PHONETIC = 64
 
 
-def fs_gate_records(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def fs_gate_records(documents: DataFrame) -> DataFrame:
     """(rec_id, name) linkage records for the gate query: each document
     with >= 5 tokens yields its 5-token name prefix, an EXACT duplicate
     (+100000), and a NEAR duplicate (+200000, last name token dropped) —
     so candidate pairs exercise all g_name levels against same-block
     non-matches."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     base = documents.where(F.size(toks) >= 5).select(
         F.col("doc_id").alias("rec_id"),
         F.array_join(F.slice(toks, 1, 5), " ").alias("name"),
@@ -149,7 +151,7 @@ def _clamp(x: float) -> float:
     return min(max(x, CLAMP_LO), CLAMP_HI)
 
 
-def fs_em_params(patterns: list[tuple[int, int, int]], n_iter: int = N_ITER) -> dict:
+def fs_em_params(patterns: list[tuple[int, int, int]]) -> dict:
     """EM over the bounded pattern-count table [(g_name, g_tok, count)].
 
     Pure driver arithmetic on sufficient statistics (<= 6 rows).  Sums run
@@ -161,7 +163,7 @@ def fs_em_params(patterns: list[tuple[int, int, int]], n_iter: int = N_ITER) -> 
     lam = INIT["lam"]
     m_n, u_n = list(INIT["m_n"]), list(INIT["u_n"])
     m_t, u_t = list(INIT["m_t"]), list(INIT["u_t"])
-    for _ in range(n_iter):
+    for _ in range(N_ITER):
         rows = []
         for gn, gt, c in pats:
             pm = lam * m_n[gn] * m_t[gt]
@@ -215,10 +217,10 @@ def fs_posterior_col(params: dict) -> Column:
     return pm / (pm + pu)
 
 
-def fs_classify(pairs: DataFrame, params: dict, threshold: float = 0.5) -> DataFrame:
+def fs_classify(pairs: DataFrame, params: dict) -> DataFrame:
     """(id_a, id_b, g_name, g_tok, p_match, is_match) — posterior match
     probability per candidate pair, rounded to the repo-standard 6
-    digits."""
+    digits; is_match = posterior >= 0.5."""
     p = fs_posterior_col(params)
     return pairs.select(
         "id_a",
@@ -226,16 +228,11 @@ def fs_classify(pairs: DataFrame, params: dict, threshold: float = 0.5) -> DataF
         "g_name",
         "g_tok",
         F.round(p, 6).alias("p_match"),
-        (p >= F.lit(threshold)).alias("is_match"),
+        (p >= F.lit(0.5)).alias("is_match"),
     )
 
 
-def fs_tf_adjusted(
-    records: DataFrame,
-    pairs: DataFrame,
-    params: dict,
-    threshold: float = 0.5,
-) -> DataFrame:
+def fs_tf_adjusted(records: DataFrame, pairs: DataFrame, params: dict) -> DataFrame:
     """Term-frequency-adjusted match weights (Winkler's value-specific
     weights; Splink's tf_adjustment): for exact-name agreements the
     chance two NON-matches share the value is the value's own relative
@@ -249,7 +246,7 @@ def fs_tf_adjusted(
     crossJoin; the frequency table joins the exact-match pairs on name
     equality (AQE skew-split handles hot names — a hot name is exactly
     the case the adjustment exists for).  Output adds p_match_tf beside
-    the unadjusted p_match."""
+    the unadjusted p_match; is_match = p_match_tf >= 0.5."""
     total = records.agg(F.count(F.lit(1)).alias("n_total"))
     freq = records.groupBy("name").agg(F.count(F.lit(1)).alias("n_name")).crossJoin(
         total
@@ -284,11 +281,11 @@ def fs_tf_adjusted(
         "g_tok",
         F.round(p_base, 6).alias("p_match"),
         F.round(p_tf, 6).alias("p_match_tf"),
-        (p_tf >= F.lit(threshold)).alias("is_match"),
+        (p_tf >= F.lit(0.5)).alias("is_match"),
     )
 
 
-def fs_link(documents: DataFrame, max_block: int = 48, n_iter: int = N_ITER) -> DataFrame:
+def fs_link(documents: DataFrame, max_block: int = 48) -> DataFrame:
     """End-to-end gate pipeline: records -> blocked comparison vectors ->
     pattern counts (bounded collect, <= 6 rows) -> EM -> codegen
     classification."""
@@ -300,13 +297,11 @@ def fs_link(documents: DataFrame, max_block: int = 48, n_iter: int = N_ITER) -> 
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()  # bounded: <= 3*2 pattern rows regardless of corpus size
     ]
-    params = fs_em_params(pats, n_iter=n_iter)
+    params = fs_em_params(pats)
     return fs_classify(pairs, params)
 
 
-def fs_link_tf(
-    documents: DataFrame, max_block: int = 48, n_iter: int = N_ITER
-) -> DataFrame:
+def fs_link_tf(documents: DataFrame, max_block: int = 48) -> DataFrame:
     """fs_link with the term-frequency adjustment applied to exact-name
     agreements (fs_tf_adjusted) — same EM fit, value-specific u."""
     recs = fs_gate_records(documents)
@@ -319,7 +314,7 @@ def fs_link_tf(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()  # bounded: <= 3*2 pattern rows
     ]
-    params = fs_em_params(pats, n_iter=n_iter)
+    params = fs_em_params(pats)
     return fs_tf_adjusted(recs, pairs, params)
 
 
@@ -347,9 +342,7 @@ def _drop_edge_tokens(toks: Column, words: tuple[str, ...], leading: bool) -> Co
     return toks
 
 
-def standardize_person_names(
-    df: DataFrame, name_col: str = "name"
-) -> DataFrame:
+def standardize_person_names(df: DataFrame) -> DataFrame:
     """Deterministic person-name standardization — the record-linkage
     preprocessing pass (Christen 2012 ch. 3) that turns 'Smith, Dr. John
     A. Jr.' and 'john a smith' into the same comparison key:
@@ -370,8 +363,9 @@ def standardize_person_names(
     DuckDB replay (list_slice/list_extract mirror slice/element_at), so
     the standardizer itself is oracle-checkable — the property that lets
     a pipeline PROVE two engines block on the same key.  Adds columns:
-    (name_std, name_first, name_middle, name_last)."""
-    raw = F.regexp_replace(F.lower(F.trim(F.col(name_col))), r"\.", "")
+    (name_std, name_first, name_middle, name_last), standardized from the
+    `name` column."""
+    raw = F.regexp_replace(F.lower(F.trim(F.col("name"))), r"\.", "")
     # 'last, first...' -> 'first... last' on the FIRST comma (instr/substr
     # only — DuckDB has no substring_index); any further commas become
     # spaces before tokenization
@@ -410,8 +404,6 @@ def review_queue(
     per_band: int = 10,
     lower: float = 0.2,
     upper: float = 0.8,
-    seed: str = "11",
-    n_salt: int = 32,
 ) -> DataFrame:
     """Posterior-band stratified labeling queue over scored candidate
     pairs — the clerical-review stage of the Fellegi-Sunter three-way
@@ -421,13 +413,13 @@ def review_queue(
     across the posterior range (calibration bins) rather than
     concentrated where the model is already confident, so the queue
     takes a DETERMINISTIC per_band-pair sample from each posterior
-    decile, ordered by a seeded md5 hash of the pair key — reproducible
+    decile, ordered by an md5 hash of "11|" + the pair key — reproducible
     under any partitioning and any engine, unlike rand()-based sampling.
 
     Scale shape: band counts are a map-side-combining groupBy; the
     per-band sample is the repo-standard two-phase top-k (salted local
     top-per_band per (band, salt), then a final window over
-    <= per_band * n_salt survivors per band), so no task ever sorts a
+    <= per_band * 32 salts survivors per band), so no task ever sorts a
     full band even when one posterior value covers half the corpus.
 
     Output: (band, rn, id_a, id_b, p_match, decision) where decision is
@@ -437,7 +429,7 @@ def review_queue(
     """
     h = F.md5(
         F.concat(
-            F.lit(seed + "|"),
+            F.lit("11|"),
             F.col("id_a").cast("string"),
             F.lit("|"),
             F.col("id_b").cast("string"),
@@ -450,7 +442,7 @@ def review_queue(
         F.least(F.floor(F.col("p_match") * 10), F.lit(9)).cast("int").alias("band"),
         h.alias("_h"),
     )
-    salt = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(n_salt))
+    salt = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(32))
     w1 = Window.partitionBy("band", salt).orderBy("_h", "id_a", "id_b")
     survivors = d.withColumn("_rn1", F.row_number().over(w1)).where(
         F.col("_rn1") <= per_band
@@ -533,7 +525,7 @@ def fs_expected_f1(scored: DataFrame) -> DataFrame:
 
 # --------------------------------------------------- scorer calibration
 
-def calibration_report(scored: DataFrame, gold: DataFrame, n_bins: int = 10) -> DataFrame:
+def calibration_report(scored: DataFrame, gold: DataFrame) -> DataFrame:
     """Reliability diagram + ECE + Brier score of the pairwise scorer
     against labeled pairs — the check that the posterior a clerical
     queue, an expected-F1 threshold, or a downstream fusion step trusts
@@ -555,7 +547,7 @@ def calibration_report(scored: DataFrame, gold: DataFrame, n_bins: int = 10) -> 
         "left",
     ).select("p_match", F.coalesce("y", F.lit(0)).alias("y"))
     g = labeled.groupBy("p_match", "y").agg(F.count(F.lit(1)).alias("c"))
-    band = F.least(F.floor(F.col("p_match") * n_bins), F.lit(n_bins - 1)).cast("int")
+    band = F.least(F.floor(F.col("p_match") * 10), F.lit(9)).cast("int")
     per = g.groupBy(band.alias("band")).agg(
         F.sum("c").alias("n_pairs"),
         F.sum(F.col("c") * F.col("p_match")).alias("_sp"),
@@ -581,11 +573,7 @@ def calibration_report(scored: DataFrame, gold: DataFrame, n_bins: int = 10) -> 
 
 # ------------------------------------- capture-recapture dup-count estimate
 
-def dup_estimate_capture_recapture(
-    documents: DataFrame,
-    max_block: int = 48,
-    max_block_phonetic: int = 64,
-) -> DataFrame:
+def dup_estimate_capture_recapture(documents: DataFrame) -> DataFrame:
     """Chapman capture-recapture estimate of the TOTAL duplicate-pair
     count from two blocking passes — the standard audit for "how many
     duplicates does the corpus hold that NO single blocking pass sees"
@@ -609,13 +597,13 @@ def dup_estimate_capture_recapture(
 
     recs = fs_gate_records(documents)
     p1 = (
-        fs_comparison_vectors(recs, max_block=max_block)
+        fs_comparison_vectors(recs)
         .where(F.col("g_name") >= 1)
         .select("id_a", "id_b")
     )
 
     cand2 = phonetic_pairs(
-        recs, id_col="rec_id", name_col="name", max_block=max_block_phonetic
+        recs, id_col="rec_id", name_col="name", max_block=MAX_BLOCK_PHONETIC
     )
     ra = recs.select(F.col("rec_id").alias("id_a"), F.col("name").alias("_na"))
     rb = recs.select(F.col("rec_id").alias("id_b"), F.col("name").alias("_nb"))
@@ -657,9 +645,7 @@ def dup_estimate_capture_recapture(
 
 # ---------------------------------------------------- match-weight report
 
-def match_weights_report(
-    documents: DataFrame, max_block: int = 48, n_iter: int = N_ITER
-) -> DataFrame:
+def match_weights_report(documents: DataFrame, max_block: int = 48) -> DataFrame:
     """Per-comparison-level parameter table of the trained FS model —
     m, u, Bayes factor m/u, and log2 match weight per gamma level, plus
     the lambda prior row (Splink's `m_u_parameters_chart` /
@@ -678,7 +664,7 @@ def match_weights_report(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()  # bounded: <= 3*2 pattern rows regardless of corpus size
     ]
-    params = fs_em_params(pats, n_iter=n_iter)
+    params = fs_em_params(pats)
     rows = [("prior", -1, params["lam"], 1.0 - params["lam"])]
     rows += [("name", l, params["m_n"][l], params["u_n"][l]) for l in range(3)]
     rows += [("tok", l, params["m_t"][l], params["u_t"][l]) for l in range(2)]
@@ -698,14 +684,7 @@ def match_weights_report(
 
 # ------------------------------------------------- blocking-cascade audit
 
-def blocking_cascade_report(
-    documents: DataFrame,
-    gold: DataFrame,
-    window: int = 3,
-    max_block: int = 48,
-    max_block_phonetic: int = 64,
-    prefix_len: int = 1,
-) -> DataFrame:
+def blocking_cascade_report(documents: DataFrame, gold: DataFrame) -> DataFrame:
     """Multi-pass blocking audit (Splink's cumulative-comparisons-
     per-blocking-rule analysis): for each pass of the cascade —
     (1) capped first-token equality, (2) prefix-sharded sorted
@@ -716,18 +695,18 @@ def blocking_cascade_report(
     pure cost; recall_cum flat across a pass means its key adds nothing.
 
     Scale shape: every pass is hot-key-bounded (row_number caps on the
-    equality passes; the SNM rank band emits <= `window` pairs per
-    record).  The SNM shard key is the first `prefix_len` chars of the
-    name — each shard sorts independently (production sizes prefix_len
-    up so no shard outgrows a task; 1 here so the DuckDB oracle replays
-    it verbatim).  Pass stats are scalar aggregates unioned into a
+    equality passes; the SNM rank band emits <= 3 pairs per record).  The
+    SNM shard key is the first char of the name — each shard sorts
+    independently (production lengthens the prefix so no shard outgrows a
+    task; 1 char here so the DuckDB oracle replays it verbatim).  Pass
+    stats are scalar aggregates unioned into a
     3-row frame; nothing is collected."""
     from berkeley_entity_spark.operators.blocking import phonetic_pairs
 
     recs = fs_gate_records(documents)
-    p1 = fs_comparison_vectors(recs, max_block=max_block).select("id_a", "id_b")
+    p1 = fs_comparison_vectors(recs).select("id_a", "id_b")
 
-    shard = F.substring(F.col("name"), 1, prefix_len).alias("letter")
+    shard = F.substring(F.col("name"), 1, 1).alias("letter")
     rn = F.row_number().over(
         Window.partitionBy("letter").orderBy("name", "rec_id")
     )
@@ -737,7 +716,7 @@ def blocking_cascade_report(
         a.join(
             b,
             (F.col("a.letter") == F.col("b.letter"))
-            & (F.col("b.rn") - F.col("a.rn")).between(1, window),
+            & (F.col("b.rn") - F.col("a.rn")).between(1, 3),
         )
         .select(
             F.least("a.rec_id", "b.rec_id").alias("id_a"),
@@ -746,7 +725,7 @@ def blocking_cascade_report(
         .distinct()
     )
     p3 = phonetic_pairs(
-        recs, id_col="rec_id", name_col="name", max_block=max_block_phonetic
+        recs, id_col="rec_id", name_col="name", max_block=MAX_BLOCK_PHONETIC
     ).select("id_a", "id_b")
 
     gold = gold.select("id_a", "id_b")
@@ -786,21 +765,16 @@ def blocking_cascade_report(
 
 # ------------------------------------------------ one-to-one assignment
 
-def one_to_one_matches(
-    scored: DataFrame,
-    rounds: int | None = None,
-    min_score: float = 0.5,
-    max_rounds: int = 16,
-) -> DataFrame:
+def one_to_one_matches(scored: DataFrame, rounds: int | None = None) -> DataFrame:
     """One-to-one match assignment over scored candidate pairs — the
     constraint a cross-source linkage needs (each record links to AT
     MOST one partner; transitive closure is wrong there because two
     sources' records must pair off, not pool).  Algorithm: iterative
     locally-dominant-edge (mutual-best) matching — each round, every
-    node nominates its best eligible edge (score DESC, id_a, id_b — a
-    total order, so ties are deterministic) and an edge is accepted iff
-    BOTH endpoints nominated it; matched nodes drop out and the next
-    round runs on the residual graph.  With distinct weights this
+    node nominates its best eligible edge (p_match >= 0.5; score DESC,
+    id_a, id_b — a total order, so ties are deterministic) and an edge is
+    accepted iff BOTH endpoints nominated it; matched nodes drop out and
+    the next round runs on the residual graph.  With distinct weights this
     reproduces the sequential greedy matching exactly (Preis's
     locally-dominant edge argument); `rounds` is fixed and small
     because each round matches every locally-dominant edge in parallel
@@ -808,7 +782,7 @@ def one_to_one_matches(
     rounds, and degree-bounded blocked candidates converge in 2-3.
 
     rounds=None (default) loops until the residual edge set is EMPTY
-    (capped at max_rounds) — a long score-decreasing chain needs one
+    (capped at 16 rounds) — a long score-decreasing chain needs one
     round per link, so a fixed small round count can silently leave
     matchable edges unmatched.  Passing an explicit `rounds` keeps the
     fixed-round semantics (the SQL-replayable mode q_one_to_one's
@@ -827,8 +801,8 @@ def one_to_one_matches(
     """
     import warnings
 
-    cap = max_rounds if rounds is None else rounds
-    edges = scored.where(F.col("p_match") >= F.lit(min_score)).select(
+    cap = 16 if rounds is None else rounds
+    edges = scored.where(F.col("p_match") >= F.lit(0.5)).select(
         "id_a", "id_b", "p_match"
     )
     accepted = None
@@ -872,11 +846,10 @@ def one_to_one_matches(
     if residual:
         warnings.warn(
             f"one_to_one_matches: {residual} residual edges left unmatched "
-            f"after {cap} rounds (incomplete matching — raise "
-            f"{'max_rounds' if rounds is None else 'rounds'})",
+            f"after {cap} rounds (incomplete matching — raise rounds)",
             stacklevel=2,
         )
-    if accepted is None:  # no candidate edge survived min_score
+    if accepted is None:  # no candidate edge survived the 0.5 floor
         accepted = edges.select(
             "id_a", "id_b", "p_match", F.lit(0).cast("int").alias("match_round")
         ).limit(0)
@@ -885,11 +858,7 @@ def one_to_one_matches(
 
 # ------------------------------------------------- block-size skew audit
 
-def block_size_profile(
-    documents: DataFrame,
-    max_block: int = 48,
-    max_block_phonetic: int = 64,
-) -> DataFrame:
+def block_size_profile(documents: DataFrame, max_block: int = 48) -> DataFrame:
     """Block-size distribution audit per blocking key type — the FIRST
     report a 100 TB blocking run is sized from: how many keys, the
     hottest block, the share of records it holds (head-domain skew), and
@@ -937,5 +906,5 @@ def block_size_profile(
         )
 
     return prof(ft, "first_token", max_block).unionByName(
-        prof(sx, "soundex", max_block_phonetic)
+        prof(sx, "soundex", MAX_BLOCK_PHONETIC)
     )

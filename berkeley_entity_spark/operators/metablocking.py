@@ -45,11 +45,11 @@ __all__ = [
 ]
 
 
-def doc_block_keys(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_block_keys(documents: DataFrame) -> DataFrame:
     """(doc_id, block_key) under three passes: 'F:'+first token,
     'L:'+last token, 'B:'+floor(n_tokens/10) (a coarse length bucket —
     intentionally hot so the block cap is exercised)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     keys = F.array(
         F.concat(F.lit("F:"), F.element_at(toks, 1)),
         F.concat(F.lit("L:"), F.element_at(toks, -1)),
@@ -66,16 +66,15 @@ def doc_block_keys(documents: DataFrame, text_col: str = "text") -> DataFrame:
 def block_graph_edges(
     keys: DataFrame,
     max_block: int = 64,
-    id_col: str = "doc_id",
-    key_col: str = "block_key",
 ) -> DataFrame:
-    """(id_a, id_b, cbs) — the block graph with CBS weights.  Blocks are
+    """(id_a, id_b, cbs) — the block graph with CBS weights over
+    (doc_id, block_key) rows.  Blocks are
     capped at max_block members (deterministic id order) before the
     within-block self-join, so a degenerate hot key contributes at most
     C(max_block, 2) pairs regardless of corpus size (disclosed
     comparison-window bound, via blocking.capped_key_pairs)."""
     return (
-        capped_key_pairs(keys, id_col, key_col, max_block)
+        capped_key_pairs(keys, "doc_id", "block_key", max_block)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("cbs"))
     )
@@ -110,9 +109,9 @@ def wnp_prune(edges: DataFrame) -> DataFrame:
 
 
 def meta_blocking_pairs(
-    documents: DataFrame, max_block: int = 64, text_col: str = "text"
+    documents: DataFrame, max_block: int = 64
 ) -> DataFrame:
     """End-to-end: multi-pass keys -> capped block graph -> WNP prune."""
     return wnp_prune(
-        block_graph_edges(doc_block_keys(documents, text_col), max_block)
+        block_graph_edges(doc_block_keys(documents), max_block)
     )

@@ -53,20 +53,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, payload binary, "
-    "meta struct<width:int, height:int, sample_rate:int, duration_ms:int>"
-)
-
 FEATURES_SCHEMA = "media_id bigint, kind string, dim int, features array<float>"
 
 
-def make_media_table(spark, documents: DataFrame, kind: str = "image") -> DataFrame:
+def make_media_table(spark, documents: DataFrame) -> DataFrame:
     """Wrap a text table into a synthetic media table (payload = utf-8 bytes)
     so the binary plumbing can be tested without real media."""
     return documents.select(
         F.col("doc_id").alias("media_id"),
-        F.lit(kind).alias("kind"),
+        F.lit("image").alias("kind"),
         F.encode("text", "utf-8").alias("payload"),
         F.struct(
             F.lit(64).alias("width"),

@@ -134,11 +134,11 @@ def emission_scores(
     person_names: frozenset[str],
     org_words: frozenset[str],
     loc_words: frozenset[str] = LOC_GAZETTEER,
-    sentence_start: bool = True,
 ) -> np.ndarray:
     """(n_tokens, n_labels) log-potentials from the ported features +
     dictionary lookups — the hand-set fallback model (the trained CRF
-    emissions in ml/crf.py replace this in the default path)."""
+    emissions in ml/crf.py replace this in the default path).  tokens
+    start a sentence: capitalization of the first token is no evidence."""
     n = len(tokens)
     E = np.zeros((n, len(LABELS)))
     bper, iper = LABELS.index("B-PER"), LABELS.index("I-PER")
@@ -147,7 +147,7 @@ def emission_scores(
     for i, tok in enumerate(tokens):
         low = tok.lower().rstrip(".")
         shape = shape_for(tok)
-        capped = shape.startswith("X") and not (i == 0 and sentence_start)
+        capped = shape.startswith("X") and i != 0
         E[i, 0] = 1.0  # O prior
         if capped:
             E[i, [bper, iper, borg, iorg, bloc, iloc]] += 1.5
@@ -207,30 +207,21 @@ def load_default_ner_weights():
 
 def ner_tag_pages(
     pages: DataFrame,
-    person_names: frozenset[str] | None = None,
-    org_words: frozenset[str] | None = None,
-    loc_words: frozenset[str] | None = None,
     crf_weights: tuple[dict[str, int], "np.ndarray"] | None = None,
-    use_trained: bool = True,
 ) -> DataFrame:
     """webpages -> (url, sent_idx, tok_idx, token, label) BIO tags.
 
     One Arrow pass; dictionaries + weights are broadcast (tiny), decode is
     per-sentence numpy Viterbi — the M11 embarrassing parallelism across
-    pages.  Emissions: the trained CRF artifact when available (pass
-    use_trained=False or crf_weights=... to override), else the hand-set
-    linear model."""
+    pages.  Dictionaries: the synthetic corpus's name/org vocabularies and
+    LOC_GAZETTEER (joint.default_type_lexicons).  Emissions: crf_weights,
+    else the trained CRF artifact, else (no artifact) the hand-set linear
+    model."""
+    from berkeley_entity_spark.operators.joint import default_type_lexicons
     from berkeley_entity_spark.preprocess.sentence import split_sentences
-    from berkeley_entity_spark.synth import FIRST, LAST, ORG_SUF, ORG_W1, ORG_W2
 
-    persons = person_names or frozenset(
-        w.lower() for w in FIRST + LAST
-    )
-    orgs = org_words or frozenset(
-        w.lower() for w in ORG_W1 + ORG_W2 + ORG_SUF
-    )
-    locs = loc_words or LOC_GAZETTEER
-    if crf_weights is None and use_trained:
+    persons, orgs, locs = default_type_lexicons()
+    if crf_weights is None:
         crf_weights = load_default_ner_weights()
     spark = pages.sparkSession
     b = spark.sparkContext.broadcast(

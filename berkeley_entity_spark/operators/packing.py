@@ -35,7 +35,6 @@ def pack_sequences(
     documents: DataFrame,
     seq_len: int = 128,
     bucket_size: int = 1000,
-    text_col: str = "text",
 ) -> DataFrame:
     """(chunk_id, doc_id, tok_start, tok_end, chunk_off) — one row per
     (document, chunk) slice of the packed token stream.  tok_start/tok_end
@@ -44,7 +43,7 @@ def pack_sequences(
     holds exactly `seq_len` tokens; empty docs are skipped."""
     L = seq_len
     d = documents.select(
-        "doc_id", F.size(tokens_col(text_col)).cast("long").alias("n")
+        "doc_id", F.size(tokens_col()).cast("long").alias("n")
     ).where(F.col("n") > 0)
     d = d.withColumn("_b", F.expr(f"doc_id div {bucket_size}"))
 

@@ -11,7 +11,7 @@ scale:
     the per-column stats: the scan count is independent of the column
     count.
   * Top-k per column uses the repo-standard two-phase pattern (salted
-    local top-k, then a final window over <= k * n_salts survivors per
+    local top-k, then a final window over <= k * 32 salts survivors per
     column) — one hot column (e.g. a constant-heavy lang field) never
     funnels the corpus through a single window task.
   * Exact n_distinct comes from the counts table we already built (no
@@ -35,7 +35,6 @@ def profile_columns(
     df: DataFrame,
     cols: list[str] | None = None,
     top_k: int = 3,
-    n_salts: int = 32,
     approx: bool = False,
 ) -> DataFrame:
     """One row per (column, rank <= top_k):
@@ -82,7 +81,7 @@ def profile_columns(
         stats = stats.join(nd, "column", "left").withColumn(
             "n_distinct", F.coalesce("n_distinct", F.lit(0))
         )
-    salt = F.pmod(F.xxhash64("value"), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64("value"), F.lit(32))
     w1 = Window.partitionBy("column", salt).orderBy(
         F.desc("n_value"), F.asc("value")
     )

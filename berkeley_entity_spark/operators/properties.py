@@ -68,16 +68,16 @@ def _ng_joined(spans: DataFrame, ng: DataFrame, key: str, prefix: str) -> DataFr
     return out
 
 
-def _props_for(spans: DataFrame, numgender: DataFrame, span_col: str) -> DataFrame:
-    """Add `number`, `gender`, `_mtype` to the distinct (`span_col`,
+def _props_for(spans: DataFrame, numgender: DataFrame) -> DataFrame:
+    """Add `number`, `gender`, `_mtype` to the distinct (`span`,
     `_person`) key table.  Drops its own temp columns.  The property cascade
     is a pure function of (span, _person), which is what makes evaluating it
     per key and joining back exact."""
-    toks = F.split(F.col(span_col), " ")
+    toks = F.split(F.col("span"), " ")
     spans = (
         spans.withColumn("_head_tok", F.element_at(toks, -1))
         .withColumn("_prev_tok", F.when(F.size(toks) >= 2, F.element_at(toks, -2)))
-        .withColumn("_phrase_key", sanitize(F.col(span_col)))
+        .withColumn("_phrase_key", sanitize(F.col("span")))
         .withColumn("_head_key", sanitize(F.col("_head_tok")))
         .withColumn("_first_key", sanitize(F.col("_prev_tok")))
     )
@@ -123,7 +123,7 @@ def _props_for(spans: DataFrame, numgender: DataFrame, span_col: str) -> DataFra
     # the two sites must stay in lockstep)
     from berkeley_entity_spark.operators.pronouns import span_pronoun_gate
 
-    low_span, eligible = span_pronoun_gate(F.col(span_col))
+    low_span, eligible = span_pronoun_gate(F.col("span"))
     pronominal = eligible & low_span.isin(*sorted(ALL_PRONOUNS))
     number = F.when(pronominal, pron_number_col(low_span)).otherwise(number_counts)
     gender = F.when(pronominal, pron_gender_col(low_span)).otherwise(gender_counts)
@@ -134,7 +134,7 @@ def _props_for(spans: DataFrame, numgender: DataFrame, span_col: str) -> DataFra
         spans.withColumn("number", number)
         .withColumn("gender", gender)
         # Mention.scala:304-314 type cascade (DEMONSTRATIVE/PRONOMINAL/PROPER)
-        .withColumn("_mtype", mention_type_col(F.col(span_col)))
+        .withColumn("_mtype", mention_type_col(F.col("span")))
         .drop(*temp)
     )
 
@@ -144,7 +144,6 @@ def with_number_gender(
     numgender: DataFrame,
     person_expr: Column | None = None,
     n_numgender: int | None = None,
-    span_col: str = "span",
 ) -> DataFrame:
     """Replace the number/gender columns of `mentions` with values computed
     from the Bergsma-Lin-style count table `numgender(phrase, masc, fem,
@@ -178,14 +177,14 @@ def with_number_gender(
         "number",
         "gender",
     ]
-    keys = base.select(span_col, "_person").distinct()
-    props = _props_for(keys, numgender, span_col)
+    keys = base.select("span", "_person").distinct()
+    props = _props_for(keys, numgender)
     # the key table is bounded by the distinct-surface count, not the
     # corpus; byte-gate its broadcast like any other dimension
     props = maybe_broadcast(props, props.count())
-    names = (span_col, "_person", "number", "gender", "_mtype")
+    names = ("span", "_person", "number", "gender", "_mtype")
     props = props.select([F.col(c).alias(f"_pr_{c}") for c in names])
-    cond = base[span_col].eqNullSafe(props[f"_pr_{span_col}"]) & base[
+    cond = base["span"].eqNullSafe(props["_pr_span"]) & base[
         "_person"
     ].eqNullSafe(props["_pr__person"])
     out = (
@@ -197,5 +196,5 @@ def with_number_gender(
     if "mtype" in mentions.columns:
         out = out.drop("mtype").withColumnRenamed("_pr__mtype", "mtype")
     return out.drop(
-        f"_pr_{span_col}", "_pr__person", "_pr__mtype", "_person"
+        "_pr_span", "_pr__person", "_pr__mtype", "_person"
     ).select(*ordered)

@@ -68,14 +68,13 @@ def load_default_weights() -> np.ndarray:
 
 def idf_table(
     mentions_or_surfaces: DataFrame,
-    norm_col: str = "norm_name",
     n: int | None = None,
 ) -> DataFrame:
     """Document-frequency-based IDF over name tokens (A2 analog):
     idf = ln((N+1)/(df+1)) + 1. Pure DataFrame agg.  Pass `n` (the row count)
     when the caller already knows it — saves a count job."""
     toks = mentions_or_surfaces.select(
-        F.explode(F.split(F.col(norm_col), " ")).alias("token")
+        F.explode(F.split(F.col("norm_name"), " ")).alias("token")
     ).where(F.col("token") != "")
     if n is None:
         n = mentions_or_surfaces.count()
@@ -89,11 +88,11 @@ def idf_table(
     )
 
 
-def collect_idf(idf_df: DataFrame, max_terms: int = 500_000) -> dict[str, float]:
+def collect_idf(idf_df: DataFrame) -> dict[str, float]:
     """Collect the IDF table for broadcast into the scoring kernel.  Capped:
     at web scale only the most frequent terms matter (rare tokens default to
     idf=1 inside the kernel)."""
-    rows = idf_df.orderBy(F.asc("idf")).limit(max_terms).collect()
+    rows = idf_df.orderBy(F.asc("idf")).limit(500_000).collect()
     return {r["token"]: float(r["idf"]) for r in rows}
 
 
@@ -298,13 +297,13 @@ def match_edges(scored: DataFrame, threshold: float = 0.0) -> DataFrame:
     return above.select(F.col("node_b").alias("u"), F.col("node_a").alias("v"))
 
 
-def feature_report(scored: DataFrame, weights: np.ndarray | None = None) -> DataFrame:
+def feature_report(scored: DataFrame) -> DataFrame:
     """A11: per-feature-template statistics over a scored-pairs table —
     (feature, nonzero_count, mean_value, weight).  The reference logs
     feature-template counts after featurization (PairwiseIndexingFeaturizer
     indexer size / template counts); here it is one aggregation + an unpivot,
-    with the active weight attached for inspectability."""
-    w = weights if weights is not None else load_default_weights()
+    with the default scorer weight attached for inspectability."""
+    w = load_default_weights()
     feat_cols = [c for c in FEATURE_NAMES if c != "bias"]
     agg = scored.agg(
         *[F.sum((F.col(c) != 0).cast("long")).alias(f"nz_{c}") for c in feat_cols],

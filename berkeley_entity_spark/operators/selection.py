@@ -38,12 +38,11 @@ from berkeley_entity_spark.operators.dedup import tokens_col
 def hashed_gram_buckets(
     documents: DataFrame,
     n_buckets: int = 1024,
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, bucket) — one row per unigram AND word-bigram occurrence,
     hashed into `n_buckets` via the first 15 hex chars of md5 (60 bits —
     exact in a signed BIGINT in both Spark and DuckDB)."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     bigrams = F.when(
         F.size(toks) >= 2,
         F.transform(
@@ -68,7 +67,6 @@ def dsir_logratio_table(
     target: DataFrame,
     n_buckets: int = 1024,
     alpha: float = 1.0,
-    text_col: str = "text",
 ) -> DataFrame:
     """(bucket, logratio) with logratio = ln p_target[b] - ln p_raw[b],
     both add-alpha smoothed over the full bucket space:
@@ -76,7 +74,7 @@ def dsir_logratio_table(
     seen in EITHER corpus (full outer join + zero-coalesce); buckets seen
     in neither never appear in a scored doc drawn from `raw`."""
     def counts(df):
-        return hashed_gram_buckets(df, n_buckets, text_col).groupBy(
+        return hashed_gram_buckets(df, n_buckets).groupBy(
             "bucket"
         ).agg(F.count(F.lit(1)).alias("c"))
 
@@ -103,13 +101,12 @@ def dsir_weights(
     target: DataFrame,
     n_buckets: int = 1024,
     alpha: float = 1.0,
-    text_col: str = "text",
 ) -> DataFrame:
     """(doc_id, n_grams, logw) for every raw doc with >= 1 gram; logw
     rounded to 6dp (see module docstring for why selection uses the
     rounded value)."""
-    lr = dsir_logratio_table(raw, target, n_buckets, alpha, text_col)
-    g = hashed_gram_buckets(raw, n_buckets, text_col)
+    lr = dsir_logratio_table(raw, target, n_buckets, alpha)
+    g = hashed_gram_buckets(raw, n_buckets)
     return (
         g.join(F.broadcast(lr), "bucket")
         .groupBy("doc_id")
@@ -126,11 +123,10 @@ def dsir_select(
     k: int = 100,
     n_buckets: int = 1024,
     alpha: float = 1.0,
-    text_col: str = "text",
 ) -> DataFrame:
     """Top-k raw docs by importance weight (logw DESC, doc_id ASC) —
     TakeOrderedAndProject, so no global sort or single-task window."""
-    w = dsir_weights(raw, target, n_buckets, alpha, text_col)
+    w = dsir_weights(raw, target, n_buckets, alpha)
     return w.orderBy(F.desc("logw"), F.asc("doc_id")).limit(k)
 
 
@@ -138,7 +134,6 @@ def domain_mixture(
     documents: DataFrame,
     alpha: float = 0.3,
     domain_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Temperature-scaled domain sampling weights — the multilingual /
     multi-corpus mixing rule (Conneau & Lample 2019 eq. 2; the same
@@ -154,7 +149,7 @@ def domain_mixture(
     p_raw, weight, boost)."""
     per = documents.groupBy(F.col(domain_col).alias("domain")).agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(tokens_col(text_col))).alias("n_tokens"),
+        F.sum(F.size(tokens_col())).alias("n_tokens"),
     )
     tot = per.agg(
         F.sum("n_tokens").alias("_tot"),
@@ -184,11 +179,11 @@ def domain_mixture(
 
 
 # --------------------------------------------------------- quality classifier
-def _gram_arr(text_col: str):
+def _gram_arr():
     """In-row unigram+bigram array (same gram set as hashed_gram_buckets,
     but as a single array column so scoring can fold over it without an
     explode/shuffle)."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     bigrams = F.when(
         F.size(toks) >= 2,
         F.transform(
@@ -208,13 +203,13 @@ def _bucket_of(g, n_buckets: int):
 
 
 def classifier_features(
-    documents: DataFrame, n_buckets: int = 256, text_col: str = "text"
+    documents: DataFrame, n_buckets: int = 256
 ) -> DataFrame:
     """(doc_id, bucket, x) — L1-normalized hashed-gram counts
     x = count(bucket in doc) / n_grams(doc).  Sparse: only buckets the doc
     actually hits.  Docs with zero grams produce no rows (disclosed — the
     trainer skips them; the scorer gives them sigmoid(bias))."""
-    g = hashed_gram_buckets(documents, n_buckets, text_col)
+    g = hashed_gram_buckets(documents, n_buckets)
     per = g.groupBy("doc_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
     tot = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     return per.join(tot, "doc_id").select(
@@ -228,7 +223,6 @@ def train_text_classifier(
     n_buckets: int = 256,
     epochs: int = 60,
     lr: float = 4.0,
-    text_col: str = "text",
 ):
     """fastText-style quality classifier (the DCLM / FineWeb-Edu filtering
     shape): full-batch logistic regression over L1-normalized hashed-gram
@@ -250,19 +244,19 @@ def train_text_classifier(
     lab = (
         pos.select(
             (F.col("doc_id") * 2).alias("doc_id"),
-            F.col(text_col).alias("text"),
+            "text",
             F.lit(1.0).alias("y"),
         )
         .unionByName(
             neg.select(
                 (F.col("doc_id") * 2 + 1).alias("doc_id"),
-                F.col(text_col).alias("text"),
+                "text",
                 F.lit(0.0).alias("y"),
             )
         )
     )
     feats = (
-        classifier_features(lab, n_buckets, "text")
+        classifier_features(lab, n_buckets)
         .join(lab.select("doc_id", "y"), "doc_id")
         .persist()
     )
@@ -328,10 +322,8 @@ def classifier_score(
     documents: DataFrame,
     weights,
     bias: float,
-    threshold: float = 0.5,
-    text_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, n_grams, logit, prob, kept) — score every doc with the
+    """(doc_id, n_grams, logit, prob, kept = prob >= 0.5) — score every doc with the
     trained hashed-gram logistic model, entirely in-row: the weight vector
     rides as an array LITERAL into an F.aggregate fold over the gram array
     (element_at lookup per gram), so the scoring pass is one
@@ -344,7 +336,7 @@ def classifier_score(
     """
     n_buckets = len(weights)
     warr = F.lit([float(x) for x in weights])
-    grams = _gram_arr(text_col)
+    grams = _gram_arr()
     sumw = F.aggregate(
         grams,
         F.lit(0.0),
@@ -362,7 +354,7 @@ def classifier_score(
         n.cast("bigint").alias("n_grams"),
         logit.alias("logit"),
         prob.alias("prob"),
-        (prob >= F.lit(threshold)).alias("kept"),
+        (prob >= F.lit(0.5)).alias("kept"),
     )
 
 
@@ -384,8 +376,6 @@ def weighted_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
-    id_col: str = "doc_id",
-    seed: int = 7,
 ) -> DataFrame:
     """Weighted sampling without replacement (Efraimidis & Spirakis 2006,
     algorithm A-ES): each row draws u in (0,1] and ranks by u^(1/w) —
@@ -395,7 +385,7 @@ def weighted_sample(
     loop.
 
     Determinism contract (the repo-standard trick): u is NOT rand() but
-    the first 8 md5-hex digits of (seed | id) + 1 over 2^32 — identical
+    the first 8 md5-hex digits of ('7|' || doc_id) + 1 over 2^32 — identical
     in both engines and under any partitioning; the rank key rounds to
     12 digits before ordering (ulp guard) with the id as final
     tie-break.  Scale shape: one codegen projection + TakeOrderedAndProject
@@ -405,7 +395,7 @@ def weighted_sample(
     u = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string"))),
+                F.md5(F.concat(F.lit("7|"), F.col("doc_id").cast("string"))),
                 1,
                 8,
             ),
@@ -418,6 +408,6 @@ def weighted_sample(
     return (
         df.where(F.col(weight_col) > 0)
         .withColumn("es_key", key)
-        .orderBy(F.desc("es_key"), F.asc(id_col))
+        .orderBy(F.desc("es_key"), F.asc("doc_id"))
         .limit(k)
     )

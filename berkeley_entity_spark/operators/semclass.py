@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ANCHORS = {"person": "Person", "location": "Location", "organization": "Organization"}
 PRIORITY = ["Person", "Location", "Organization"]  # SemClass.scala:63-71 order
 
 
@@ -65,22 +64,21 @@ def semclass_for_words(
     lemmas: DataFrame,
     closure: DataFrame,
     anchor_synsets: DataFrame,
-    word_col: str = "word",
 ) -> DataFrame:
-    """words(word_col, ...) -> + semclass column.
+    """words(word, ...) -> + semclass column.
 
     anchor_synsets(synset, semclass) marks the person/location/organization
     anchor nodes.  A word is class C when ANY of its synsets is C's anchor
     or has it in the bounded closure; ties resolve Person > Location >
     Organization (SemClass.scala:63-71); no hit -> Other."""
-    word_syn = lemmas.select(F.col("word").alias(word_col), "synset")
+    word_syn = lemmas.select("word", "synset")
     reach = word_syn.unionByName(
         word_syn.join(F.broadcast(closure), "synset")
-        .select(word_col, F.col("ancestor").alias("synset"))
+        .select("word", F.col("ancestor").alias("synset"))
     )
     hit = (
         reach.join(F.broadcast(anchor_synsets), "synset")
-        .groupBy(word_col)
+        .groupBy("word")
         .agg(F.collect_set("semclass").alias("_classes"))
     )
     pick = F.coalesce(
@@ -91,7 +89,7 @@ def semclass_for_words(
         F.lit("Other"),
     )
     return (
-        words.join(hit, word_col, "left")
+        words.join(hit, "word", "left")
         .withColumn("semclass", F.when(F.col("_classes").isNotNull(), pick).otherwise(F.lit("Other")))
         .drop("_classes")
     )

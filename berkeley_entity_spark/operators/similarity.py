@@ -1,6 +1,7 @@
 """Similarity search over embedding columns (training-data pipeline ops).
 
-`embeddings(vec_id bigint, embedding array<float>, label int)`:
+`embeddings(vec_id bigint, embedding array<float>, label int)`; every
+operator reads the `vec_id` and `embedding` columns:
 
   * cosine_topk        — exact brute-force top-k neighbors; the baseline.
     Distributed blocked matmul (cogrouped applyInPandas over corpus-block x
@@ -21,6 +22,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from berkeley_entity_spark.operators.clustering import union_find
+
+# blocked brute force: corpus blocks x query chunks (task memory bounded by
+# |corpus|/_N_BLOCKS + |queries|/_N_QCHUNKS rows); the IVF re-rank splits
+# each inverted list into _N_QCHUNKS query chunks the same way
+_N_BLOCKS = 4
+_N_QCHUNKS = 4
+# dimension and seed of the data-free hyperplane and IVF anchor matrices
+_DIM = 64
+_PLANE_SEED = 7
+_IVF_SEED = 11
+
 
 def _norm_col(vec: str):
     return F.sqrt(
@@ -36,10 +49,10 @@ def _dot(a: str, b: str):
     )
 
 
-def with_unit_norm(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def with_unit_norm(embeddings: DataFrame) -> DataFrame:
     """Pre-normalize once; cosine becomes a plain dot product downstream."""
-    return embeddings.withColumn("_n", _norm_col(vec_col)).withColumn(
-        "unit", F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("_n"))
+    return embeddings.withColumn("_n", _norm_col("embedding")).withColumn(
+        "unit", F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("_n"))
     ).drop("_n")
 
 
@@ -49,7 +62,7 @@ def _unit_matrix(pdf: pd.DataFrame, vec_col: str) -> np.ndarray:
     return M
 
 
-def _topk_cell(k: int, qvec_col: str = "_qvec", cvec_col: str = "_cvec"):
+def _topk_cell(k: int):
     """The shared per-cell exact-cosine top-k kernel (cosine_topk's block
     cells and ivf_topk's inverted-list cells): numpy matmul over the cell,
     self-pairs masked, per-query top-k under the global
@@ -66,7 +79,7 @@ def _topk_cell(k: int, qvec_col: str = "_qvec", cvec_col: str = "_cvec"):
             )
         qids = np.asarray(left["_qid"], dtype=np.int64)
         cids = np.asarray(right["_cid"], dtype=np.int64)
-        S = _unit_matrix(left, qvec_col) @ _unit_matrix(right, cvec_col).T
+        S = _unit_matrix(left, "_qvec") @ _unit_matrix(right, "_cvec").T
         S[qids[:, None] == cids[None, :]] = -np.inf
         rows = []
         kk = min(k, len(cids))
@@ -82,39 +95,30 @@ def _topk_cell(k: int, qvec_col: str = "_qvec", cvec_col: str = "_cvec"):
     return cell
 
 
-def _blocked_cross(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    kernel,
-    schema: str,
-    n_blocks: int,
-    n_qchunks: int,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Fully-distributed blocked cross product: corpus split into `n_blocks`
-    by pmod(id), queries into `n_qchunks`; each (block, qchunk) cell is one
-    cogrouped-applyInPandas task running a numpy matmul over bounded slices.
-    Nothing is collected to the driver; shuffle volume is
-    n_qchunks x |corpus| + n_blocks x |queries| — the standard blocked-GEMM
-    tradeoff.  At scale, size n_blocks ≈ |corpus| x dim x 8B / 256MB so one
-    corpus slice fits an executor task."""
+def _blocked_cross(embeddings: DataFrame, kernel, schema: str) -> DataFrame:
+    """Fully-distributed blocked self cross product: corpus split into
+    _N_BLOCKS by pmod(id), queries (the same corpus) into _N_QCHUNKS; each
+    (block, qchunk) cell is one cogrouped-applyInPandas task running a numpy
+    matmul over bounded slices.  Nothing is collected to the driver; shuffle
+    volume is _N_QCHUNKS x |corpus| + _N_BLOCKS x |queries| — the standard
+    blocked-GEMM tradeoff.  At scale, size the block count ≈ |corpus| x dim
+    x 8B / 256MB so one corpus slice fits an executor task."""
     spark = embeddings.sparkSession
-    blk_ids = spark.range(n_blocks).select(F.col("id").alias("_blk"))
-    qch_ids = spark.range(n_qchunks).select(F.col("id").alias("_qch"))
+    blk_ids = spark.range(_N_BLOCKS).select(F.col("id").alias("_blk"))
+    qch_ids = spark.range(_N_QCHUNKS).select(F.col("id").alias("_qch"))
     corpus = (
         embeddings.select(
-            F.col(id_col).alias("_cid"),
-            F.col(vec_col).alias("_cvec"),
-            F.pmod(F.col(id_col), F.lit(n_blocks)).cast("long").alias("_blk"),
+            F.col("vec_id").alias("_cid"),
+            F.col("embedding").alias("_cvec"),
+            F.pmod(F.col("vec_id"), F.lit(_N_BLOCKS)).cast("long").alias("_blk"),
         )
         .join(F.broadcast(qch_ids), how="cross")
     )
     qrep = (
-        queries.select(
-            F.col(id_col).alias("_qid"),
-            F.col(vec_col).alias("_qvec"),
-            F.pmod(F.col(id_col), F.lit(n_qchunks)).cast("long").alias("_qch"),
+        embeddings.select(
+            F.col("vec_id").alias("_qid"),
+            F.col("embedding").alias("_qvec"),
+            F.pmod(F.col("vec_id"), F.lit(_N_QCHUNKS)).cast("long").alias("_qch"),
         )
         .join(F.broadcast(blk_ids), how="cross")
     )
@@ -125,17 +129,10 @@ def _blocked_cross(
     )
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame | None = None,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_blocks: int = 4,
-    n_qchunks: int = 4,
-) -> DataFrame:
-    """(query_id, neighbor_id, rank) — exact top-k by cosine; ties break on
-    neighbor id for cross-engine determinism.
+def cosine_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
+    """(query_id, neighbor_id, rank) — exact top-k by cosine of every vector
+    against the rest of the corpus; ties break on neighbor id for
+    cross-engine determinism.
 
     Implementation: distributed blocked brute force.  Each (corpus-block,
     query-chunk) cell computes a numpy matmul and emits its per-block top-k
@@ -143,12 +140,9 @@ def cosine_topk(
     per-block top-k is taken under the SAME ordering, so the union provably
     contains the global top-k.  No driver-side corpus materialization
     (the round-1 `toPandas()` broadcast is gone); task memory is bounded by
-    |corpus|/n_blocks + |queries|/n_qchunks rows."""
-    src = queries if queries is not None else embeddings
+    |corpus|/_N_BLOCKS + |queries|/_N_QCHUNKS rows."""
     partial = _blocked_cross(
-        embeddings, src, _topk_cell(k),
-        "query_id bigint, neighbor_id bigint, cosine double",
-        n_blocks, n_qchunks, vec_col, id_col,
+        embeddings, _topk_cell(k), "query_id bigint, neighbor_id bigint, cosine double"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -158,14 +152,7 @@ def cosine_topk(
     )
 
 
-def cosine_threshold_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.35,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_blocks: int = 4,
-    n_qchunks: int = 4,
-) -> DataFrame:
+def cosine_threshold_pairs(embeddings: DataFrame, threshold: float = 0.35) -> DataFrame:
     """(id_a, id_b, cosine) with cosine >= threshold and id_a < id_b — the
     EXACT embedding near-dup operator (oracle-checkable; the LSH variant
     `embedding_near_dup` approximates it at scale).  Same distributed blocked
@@ -173,8 +160,8 @@ def cosine_threshold_pairs(
     (block, qchunk) cell (corpus blocks partition the id space), so no
     distinct() is needed and no driver materialization happens.
 
-    Cosine values are reproducible only to ~1 ULP across different n_blocks
-    choices (BLAS reduction order varies with matrix shape); consumers must
+    Cosine values are reproducible only to ~1 ULP across different block
+    counts (BLAS reduction order varies with matrix shape); consumers must
     round before comparing across runs with different blocking."""
 
     def cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -191,50 +178,34 @@ def cosine_threshold_pairs(
         r, c = np.nonzero(keep)
         return pd.DataFrame({"id_a": qids[r], "id_b": cids[c], "cosine": S[r, c]})
 
-    return _blocked_cross(
-        embeddings, embeddings, cell,
-        "id_a bigint, id_b bigint, cosine double",
-        n_blocks, n_qchunks, vec_col, id_col,
-    )
+    return _blocked_cross(embeddings, cell, "id_a bigint, id_b bigint, cosine double")
 
 
 def hyperplane_signatures(
-    embeddings: DataFrame,
-    n_planes: int = 16,
-    dim: int = 64,
-    seed: int = 7,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    embeddings: DataFrame, n_planes: int = 16, seed: int = _PLANE_SEED
 ) -> DataFrame:
-    """(id, sig) — sign pattern against a fixed seeded hyperplane matrix;
-    Arrow-batched numpy matmul."""
+    """(vec_id, sig) — sign pattern against a fixed seeded hyperplane
+    matrix; Arrow-batched numpy matmul."""
     rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((dim, n_planes))
+    planes = rng.standard_normal((_DIM, n_planes))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            M = np.stack(pdf[vec_col].map(np.asarray).to_list()).astype(np.float64)
+            M = np.stack(pdf["embedding"].map(np.asarray).to_list()).astype(np.float64)
             bits = (M @ planes) > 0
             weights = 1 << np.arange(n_planes, dtype=np.int64)
-            yield pd.DataFrame({"vec_id": pdf[id_col], "sig": bits @ weights})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "sig": bits @ weights})
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
+    return embeddings.select("vec_id", "embedding").mapInPandas(
         gen, schema="vec_id bigint, sig bigint"
     )
 
 
 def hyperplane_signatures_multi(
-    embeddings: DataFrame,
-    n_planes: int = 4,
-    n_tables: int = 16,
-    dim: int = 64,
-    base_seed: int = 7,
-    seed_step: int = 13,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    embeddings: DataFrame, n_planes: int = 4, n_tables: int = 16
 ) -> DataFrame:
     """(vec_id, bucket) for ALL tables in ONE kernel pass: the per-table
-    plane matrices (seed = base_seed + seed_step*t, identical to calling
+    plane matrices (seed = 7 + 13*t, identical to calling
     hyperplane_signatures per table) are concatenated into one
     (dim, n_tables*n_planes) matrix, so the corpus is scanned once and one
     matmul serves every table — vs n_tables separate mapInPandas scans +
@@ -242,8 +213,8 @@ def hyperplane_signatures_multi(
     reads).  Bucket = 't#sig' exactly as the per-table path produced."""
     planes_all = np.concatenate(
         [
-            np.random.RandomState(base_seed + seed_step * t).standard_normal(
-                (dim, n_planes)
+            np.random.RandomState(_PLANE_SEED + 13 * t).standard_normal(
+                (_DIM, n_planes)
             )
             for t in range(n_tables)
         ],
@@ -255,9 +226,9 @@ def hyperplane_signatures_multi(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf[vec_col].map(np.asarray).to_list()).astype(np.float64)
+            M = np.stack(pdf["embedding"].map(np.asarray).to_list()).astype(np.float64)
             bits = (M @ planes_all) > 0
-            ids = np.asarray(pdf[id_col], dtype=np.int64)
+            ids = np.asarray(pdf["vec_id"], dtype=np.int64)
             frames = []
             for t in range(n_tables):
                 sig = bits[:, t * n_planes : (t + 1) * n_planes] @ weights
@@ -271,20 +242,20 @@ def hyperplane_signatures_multi(
                 )
             yield pd.concat(frames, ignore_index=True)
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
+    return embeddings.select("vec_id", "embedding").mapInPandas(
         gen, schema="vec_id bigint, bucket string"
     )
 
 
-def auto_n_planes(n_rows: int, target_bucket: int = 32) -> int:
-    """Plane count so that expected bucket size n / 2^planes ≈ target:
-    ceil(log2(n / target_bucket)), clamped to [1, 24] (2^24 buckets per
+def auto_n_planes(n_rows: int) -> int:
+    """Plane count so that expected bucket size n / 2^planes ≈ 32:
+    ceil(log2(n / 32)), clamped to [1, 24] (2^24 buckets per
     table is plenty at any corpus size; beyond it recall loss dominates)."""
     import math
 
-    if n_rows <= target_bucket:
+    if n_rows <= 32:
         return 1
-    return max(1, min(24, math.ceil(math.log2(n_rows / target_bucket))))
+    return max(1, min(24, math.ceil(math.log2(n_rows / 32))))
 
 
 def lsh_bucket_topk(
@@ -292,18 +263,14 @@ def lsh_bucket_topk(
     k: int = 5,
     n_planes: int | str = 4,
     n_tables: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     max_bucket: int | None = None,
-    target_bucket: int = 32,
 ) -> DataFrame:
     """Approximate top-k: union of n_tables independent hyperplane tables,
     candidates = bucket-mates, exact cosine re-rank.  Recall grows with
     n_tables; cost stays near-linear (no cross join).
 
     Sizing: expected bucket size = n / 2^n_planes, so pick
-    n_planes ≈ log2(n / target_bucket) — or pass n_planes="auto" to have
+    n_planes ≈ log2(n / 32) — or pass n_planes="auto" to have
     the operator size itself from a corpus count (one extra cheap job;
     parquet count is metadata-only).  The int defaults target the test
     corpus (n≈500, weak neighbors at cosine≈0.37 → shallow planes, many
@@ -317,13 +284,12 @@ def lsh_bucket_topk(
     (deterministic by vec_id; capped-out vectors still get candidates
     from tables where their bucket is cold)."""
     if n_planes == "auto":
-        n_planes = auto_n_planes(embeddings.count(), target_bucket)
-    base = with_unit_norm(embeddings.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("vec_id"), F.col("unit")
+        n_planes = auto_n_planes(embeddings.count())
+    base = with_unit_norm(embeddings.select("vec_id", "embedding")).select(
+        "vec_id", "unit"
     )
     buckets = hyperplane_signatures_multi(
-        embeddings, n_planes=n_planes, n_tables=n_tables, dim=dim,
-        vec_col=vec_col, id_col=id_col,
+        embeddings, n_planes=n_planes, n_tables=n_tables
     )
     if max_bucket is not None:
         wb = Window.partitionBy("bucket").orderBy("vec_id")
@@ -355,14 +321,9 @@ def lsh_bucket_topk(
     )
 
 
-def embedding_near_dup(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
     """(id_a, id_b, cosine) pairs with cosine >= threshold via LSH buckets."""
-    top = lsh_bucket_topk(embeddings, k=20, vec_col=vec_col, id_col=id_col)
+    top = lsh_bucket_topk(embeddings, k=20)
     return (
         top.where((F.col("cosine") >= threshold) & (F.col("query_id") < F.col("neighbor_id")))
         .select(
@@ -377,7 +338,7 @@ def embedding_near_dup(
 # ------------------------------------------------------------------ IVF ANN
 
 
-def ivf_anchor_matrix(n_centroids: int, dim: int, seed: int = 11) -> np.ndarray:
+def ivf_anchor_matrix(n_centroids: int, dim: int, seed: int = _IVF_SEED) -> np.ndarray:
     """Seeded random coarse-quantizer anchors (n_centroids, dim).
 
     Deliberately NOT normalized and NOT data-trained: argmax of dot(v, c)
@@ -385,17 +346,13 @@ def ivf_anchor_matrix(n_centroids: int, dim: int, seed: int = 11) -> np.ndarray:
     (per-query scale-invariant, so no normalization is needed), and a
     data-free seeded quantizer lets the oracle embed the exact matrix as
     double literals — same trick as the LSH plane matrices.  For a trained
-    quantizer use ivf_train_centroids and pass the result via
+    quantizer use ivf_train_centroids and pass the result to ivf_topk via
     `centroids=`."""
     return np.random.RandomState(seed).standard_normal((n_centroids, dim))
 
 
 def ivf_probe_assignments(
-    embeddings: DataFrame,
-    centroids: np.ndarray,
-    n_probe: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    embeddings: DataFrame, centroids: np.ndarray, n_probe: int
 ) -> DataFrame:
     """(vec_id, cid, probe_rank) for each vector's n_probe nearest coarse
     centroids, probe_rank 1-based in (dot desc, cid asc) order — one Arrow
@@ -411,13 +368,13 @@ def ivf_probe_assignments(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf[vec_col].map(np.asarray).to_list()).astype(np.float64)
+            M = np.stack(pdf["embedding"].map(np.asarray).to_list()).astype(np.float64)
             dots = M @ C  # (n, n_centroids)
             order = np.argsort(-dots, axis=1, kind="stable")[:, :n_probe]
             n = len(pdf)
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(pdf[id_col].to_numpy(), n_probe),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_probe),
                     "cid": order.reshape(-1).astype(np.int32),
                     "probe_rank": np.tile(
                         np.arange(1, n_probe + 1, dtype=np.int32), n
@@ -425,7 +382,7 @@ def ivf_probe_assignments(
                 }
             )
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
+    return embeddings.select("vec_id", "embedding").mapInPandas(
         gen, schema="vec_id long, cid int, probe_rank int"
     )
 
@@ -433,12 +390,8 @@ def ivf_probe_assignments(
 def ivf_train_centroids(
     embeddings: DataFrame,
     n_centroids: int = 8,
-    dim: int = 64,
     sample_n: int = 4096,
     iters: int = 10,
-    seed: int = 11,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> np.ndarray:
     """Deterministic driver-side SPHERICAL k-means over a BOUNDED sample —
     the IVF coarse-quantizer trainer (FAISS-style train-on-sample; the
@@ -455,13 +408,13 @@ def ivf_train_centroids(
     init = seeded permutation of the sample; an emptied cluster keeps its
     previous centroid.  Returns (n_centroids, dim) float64, unit rows."""
     pdf = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(id_col)
+        embeddings.select("vec_id", "embedding")
+        .orderBy("vec_id")
         .limit(sample_n)
         .toPandas()
     )
-    X = _unit_matrix(pdf, vec_col)
-    rng = np.random.RandomState(seed)
+    X = _unit_matrix(pdf, "embedding")
+    rng = np.random.RandomState(_IVF_SEED)
     C = X[rng.permutation(len(X))[:n_centroids]].copy()
     for _ in range(iters):
         a = (X @ C.T).argmax(axis=1)
@@ -478,12 +431,7 @@ def ivf_topk(
     k: int = 3,
     n_centroids: int = 8,
     n_probe: int = 2,
-    dim: int = 64,
-    seed: int = 11,
     centroids: np.ndarray | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_qchunks: int = 4,
 ) -> DataFrame:
     """Approximate top-k via an INVERTED FILE index (IVF): coarse-quantize
     the corpus into n_centroids inverted lists (one scan), probe each
@@ -495,7 +443,7 @@ def ivf_topk(
     sibling needs a distinct because a pair can collide in many tables) —
     and the re-rank is a cogrouped numpy MATMUL per (list, query-chunk)
     cell, never a per-candidate-pair join of the vector arrays: shuffle
-    volume is |corpus| x n_probe + |corpus| x n_qchunks vectors instead of
+    volume is |corpus| x n_probe + |corpus| x _N_QCHUNKS vectors instead of
     2 vectors per candidate (candidates ≈ |corpus| x n_probe x list_len).
     A/B at sf0.1 (5k vectors, warm JVM): per-pair join + JVM F.aggregate
     dot 12.8s vs this kernel 3.3s — and the gap widens with list length,
@@ -508,32 +456,28 @@ def ivf_topk(
     and n_probe 8-32 for the recall/cost trade.  With a trained quantizer
     (ivf_train_centroids) lists follow the data distribution and recall
     rises at the same cost."""
-    C = centroids if centroids is not None else ivf_anchor_matrix(n_centroids, dim, seed)
+    C = centroids if centroids is not None else ivf_anchor_matrix(n_centroids, _DIM)
     # probes feeds two plan branches (query side + list side); without a
     # materialization point each branch re-runs the matmul+argsort corpus
     # pass (no exchange below it => no ReusedExchange), so "one corpus
     # scan" would silently become two.  Eager persist, same rationale as
     # the ER blocking cache.
-    probes = ivf_probe_assignments(
-        embeddings, C, n_probe, vec_col=vec_col, id_col=id_col
-    ).persist()
+    probes = ivf_probe_assignments(embeddings, C, n_probe).persist()
     probes.count()
-    base = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_vec")
-    )
+    base = embeddings.select("vec_id", F.col("embedding").alias("_vec"))
     # probe side: query vector rides once per probed list
     qside = (
         probes.join(base, "vec_id")
         .select(
             F.col("vec_id").alias("_qid"), F.col("_vec").alias("_qvec"),
             "cid",
-            F.pmod("vec_id", F.lit(n_qchunks)).cast("long").alias("_qch"),
+            F.pmod("vec_id", F.lit(_N_QCHUNKS)).cast("long").alias("_qch"),
         )
     )
     # list side: members (rank-1 probe row IS the assignment), replicated
-    # per query chunk (n_qchunks copies of the corpus — cheap next to the
+    # per query chunk (_N_QCHUNKS copies of the corpus — cheap next to the
     # candidate count, and it keeps a hot list from being one giant task)
-    qch_ids = embeddings.sparkSession.range(n_qchunks).select(
+    qch_ids = embeddings.sparkSession.range(_N_QCHUNKS).select(
         F.col("id").alias("_qch")
     )
     # rename the list side's key: both sides descend from `probes`, and a
@@ -568,11 +512,7 @@ def semdedup(
     embeddings: DataFrame,
     eps: float = 0.95,
     n_centroids: int = 8,
-    dim: int = 64,
-    seed: int = 11,
-    centroids: np.ndarray | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    dim: int = _DIM,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication"): semantic near-dup removal
@@ -597,16 +537,10 @@ def semdedup(
     Output: (vec_id, cid, cos_c, keep_id, kept) for EVERY vector —
     singletons keep themselves; cos_c is the cosine to the assigned
     centroid, rounded 4dp for display (decisions use the exact value)."""
-    C = (
-        centroids
-        if centroids is not None
-        else ivf_anchor_matrix(n_centroids, dim, seed)
-    ).astype(np.float64)
+    C = ivf_anchor_matrix(n_centroids, dim)
     Cu = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-    asg = ivf_probe_assignments(embeddings, C, 1, vec_col=vec_col, id_col=id_col)
-    base = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_vec")
-    )
+    asg = ivf_probe_assignments(embeddings, C, 1)
+    base = embeddings.select("vec_id", F.col("embedding").alias("_vec"))
     members = asg.join(base, "vec_id").select("vec_id", "cid", "_vec")
 
     def cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -616,21 +550,9 @@ def semdedup(
         X = np.stack(pdf["_vec"].map(np.asarray).to_list()).astype(np.float64)
         U = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
         cos_c = U @ Cu[cid]
-        parent = np.arange(n)
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        S = U @ U.T
-        ii, jj = np.where(np.triu(S >= eps, k=1))
-        for a, b in zip(ii.tolist(), jj.tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        roots = np.array([find(i) for i in range(n)])
+        ii, jj = np.where(np.triu(U @ U.T >= eps, k=1))
+        root = union_find(zip(ii.tolist(), jj.tolist()))
+        roots = np.array([root.get(i, i) for i in range(n)])
         ids = pdf["vec_id"].to_numpy()
         keep = np.empty(n, dtype=np.int64)
         for r in np.unique(roots):

@@ -38,8 +38,6 @@ __all__ = ["golden_records"]
 def golden_records(
     records: DataFrame,
     assign: DataFrame,
-    id_col: str = "url",
-    cluster_col: str = "cluster_id",
 ) -> DataFrame:
     """records(url, warc_ts, text, lang) x assign(url, cluster_id) ->
     one golden record per cluster:
@@ -47,34 +45,34 @@ def golden_records(
     (cluster_id, n_members, n_langs, canonical_url, latest_url,
      latest_ts, best_text, lang_majority)
     """
-    j = assign.select(id_col, cluster_col).join(records, id_col)
-    core = j.groupBy(cluster_col).agg(
+    j = assign.select("url", "cluster_id").join(records, "url")
+    core = j.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
-        F.min(id_col).alias("canonical_url"),
+        F.min("url").alias("canonical_url"),
         F.max_by(
-            id_col, F.struct(F.col("warc_ts"), F.col(id_col))
+            "url", F.struct(F.col("warc_ts"), F.col("url"))
         ).alias("latest_url"),
         F.max("warc_ts").alias("latest_ts"),
         F.min_by(
             "text",
-            F.struct((-F.length("text")).alias("_nl"), F.col(id_col)),
+            F.struct((-F.length("text")).alias("_nl"), F.col("url")),
         ).alias("best_text"),
     )
     votes = (
         j.where(F.col("lang").isNotNull())
-        .groupBy(cluster_col, "lang")
+        .groupBy("cluster_id", "lang")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    lang = votes.groupBy(cluster_col).agg(
+    lang = votes.groupBy("cluster_id").agg(
         F.min_by(
             "lang", F.struct((-F.col("_n")).alias("_neg"), F.col("lang"))
         ).alias("lang_majority"),
         F.count(F.lit(1)).alias("n_langs"),
     )
     return (
-        core.join(lang, cluster_col, "left")
+        core.join(lang, "cluster_id", "left")
         .select(
-            cluster_col,
+            "cluster_id",
             "n_members",
             F.coalesce("n_langs", F.lit(0)).alias("n_langs"),
             "canonical_url",

@@ -51,7 +51,6 @@ def asof_join(
     quotes: DataFrame,
     on: str = "user_id",
     ts_col: str = "ts",
-    quote_prefix: str = "q_",
     bucket_ms: int | None = None,
 ) -> DataFrame:
     """Backward inclusive as-of LEFT join: each probe row picks the quote
@@ -59,8 +58,8 @@ def asof_join(
     quote ts resolved to the greatest payload struct).  Unmatched probes
     keep NULL quote columns.
 
-    Output: every probe column, then ``<quote_prefix><ts_col>`` and
-    ``<quote_prefix><col>`` for each quote payload column.
+    Output: every probe column, then ``q_<ts_col>`` and
+    ``q_<col>`` for each quote payload column.
     """
     qcols = [c for c in quotes.columns if c not in (on, ts_col)]
     pcols = [c for c in probes.columns if c not in (on, ts_col)]
@@ -143,7 +142,7 @@ def asof_join(
         [F.col(on)]
         + [F.col(f"_pp.{c}").alias(c) for c in pcols]
         + [F.col("_ts").alias(ts_col)]
-        + [F.col("_last._qts").alias(f"{quote_prefix}{ts_col}")]
-        + [F.col(f"_last._qp.{c}").alias(f"{quote_prefix}{c}") for c in qcols]
+        + [F.col("_last._qts").alias(f"q_{ts_col}")]
+        + [F.col(f"_last._qp.{c}").alias(f"q_{c}") for c in qcols]
     )
     return filled.where(F.col("_side") == 1).select(*out_cols)

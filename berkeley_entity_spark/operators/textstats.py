@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from berkeley_entity_spark.operators.dedup import tokens_col
+
 EN_STOPWORDS = [
     "the", "of", "and", "to", "a", "in", "that", "is", "was", "he", "for",
     "it", "with", "as", "his", "on", "be", "at", "by", "i", "this", "had",
@@ -29,40 +31,36 @@ EN_STOPWORDS = [
 ]
 
 
-def _tokens(text_col: str):
-    return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-
-
-def token_count(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(documents: DataFrame) -> DataFrame:
     return documents.select(
-        "doc_id", F.size(_tokens(text_col)).alias("n_tokens")
+        "doc_id", F.size(tokens_col()).alias("n_tokens")
     )
 
 
-def text_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def text_stats(documents: DataFrame) -> DataFrame:
     """Per-doc stats: token count, mean token length, stopword ratio,
     punctuation ratio — each a plain SQL expression."""
-    toks = _tokens(text_col)
+    toks = tokens_col()
     stop_arr = F.array(*[F.lit(s) for s in EN_STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, F.lower(t))))
-    n_punct = F.length(F.regexp_replace(F.col(text_col), r"[^.,;:!?]", ""))
+    n_punct = F.length(F.regexp_replace(F.col("text"), r"[^.,;:!?]", ""))
     return documents.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
-        (F.length(F.col(text_col)).cast("double") / F.greatest(F.size(toks), F.lit(1))).alias(
+        (F.length(F.col("text")).cast("double") / F.greatest(F.size(toks), F.lit(1))).alias(
             "mean_tok_len"
         ),
         (n_stop.cast("double") / F.greatest(F.size(toks), F.lit(1))).alias("stopword_ratio"),
-        (n_punct.cast("double") / F.greatest(F.length(F.col(text_col)), F.lit(1))).alias(
+        (n_punct.cast("double") / F.greatest(F.length(F.col("text")), F.lit(1))).alias(
             "punct_ratio"
         ),
     )
 
 
-def quality_score(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(documents: DataFrame) -> DataFrame:
     """Composite quality in [0,1]-ish: favors mid-length docs with a healthy
     stopword ratio — the standard pretraining-corpus filter shape."""
-    s = text_stats(documents, text_col)
+    s = text_stats(documents)
     ln = F.least(F.col("n_tokens").cast("double") / 100.0, F.lit(1.0))
     return s.select(
         "doc_id",
@@ -75,13 +73,13 @@ def quality_score(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id_en(documents: DataFrame, text_col: str = "text", threshold: float = 0.08) -> DataFrame:
+def lang_id_en(documents: DataFrame) -> DataFrame:
     """Predict is_en from the English-stopword token ratio (cheap n-gram
-    LID stand-in; a real fastText-style model would slot into the same
-    column contract)."""
-    s = text_stats(documents, text_col)
+    LID stand-in, English at ratio >= 0.08; a real fastText-style model
+    would slot into the same column contract)."""
+    s = text_stats(documents)
     return s.select(
-        "doc_id", (F.col("stopword_ratio") >= threshold).alias("pred_en")
+        "doc_id", (F.col("stopword_ratio") >= 0.08).alias("pred_en")
     )
 
 
@@ -141,7 +139,7 @@ def _repeated_total(sorted_arr):
     )
 
 
-def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(documents: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1, the
     MassiveText repetition filters), per doc:
 
@@ -155,7 +153,7 @@ def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     codegen scan of the corpus.  The relational form (explode + per-doc
     groupBy) would shuffle every n-gram occurrence of a 100 TB corpus; this
     shuffles nothing."""
-    toks = _tokens(text_col)
+    toks = tokens_col()
     n = F.size(toks)
     bg = F.array_sort(_ngram_arr(toks, 2))
     tg = F.array_sort(_ngram_arr(toks, 3))
@@ -178,13 +176,13 @@ def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def doc_fingerprint(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_fingerprint(documents: DataFrame) -> DataFrame:
     """(doc_id, fingerprint) — md5 of the text, the exact-dup key."""
-    return documents.select("doc_id", F.md5(F.col(text_col)).alias("fingerprint"))
+    return documents.select("doc_id", F.md5(F.col("text")).alias("fingerprint"))
 
 
 def winnowing_fingerprints(
-    documents: DataFrame, k: int = 5, window: int = 4, text_col: str = "text"
+    documents: DataFrame, k: int = 5, window: int = 4
 ) -> DataFrame:
     """(doc_id, fp) exploded winnowing fingerprints: rolling 64-bit hash of
     char k-grams, per-window minima (Schleimer et al. 2003).  Detects partial
@@ -220,12 +218,12 @@ def winnowing_fingerprints(
         for pdf in batches:
             rows = [
                 (int(d), int(fp))
-                for d, t in zip(pdf["doc_id"], pdf[text_col])
+                for d, t in zip(pdf["doc_id"], pdf["text"])
                 for fp in fps(t)
             ]
             yield pd.DataFrame(rows, columns=["doc_id", "fp"])
 
-    return documents.select("doc_id", text_col).mapInPandas(
+    return documents.select("doc_id", "text").mapInPandas(
         gen, schema="doc_id bigint, fp bigint"
     )
 
@@ -235,8 +233,6 @@ def winnow_overlap_pairs(
     k: int = 5,
     window: int = 4,
     min_shared: int = 3,
-    max_fp_df: int = 200,
-    text_col: str = "text",
 ) -> DataFrame:
     """(id_a, id_b, shared) — document pairs sharing >= min_shared
     winnowing fingerprints: the partial-overlap dedup pass (quoted
@@ -246,7 +242,7 @@ def winnow_overlap_pairs(
 
     Scale shape: the fingerprint table is already distinct per doc, the
     pair generation is an EQUI-JOIN on fp, and fingerprints shared by
-    more than max_fp_df docs (site chrome, licence boilerplate) are
+    more than 200 docs (site chrome, licence boilerplate) are
     dropped before the join — the same hot-key guard as the stop-ngram
     rule in ngram_jaccard_pairs, so no fingerprint can induce a
     quadratic blowup.  Dropping hot fps only LOWERS `shared`; pairs held
@@ -255,9 +251,9 @@ def winnow_overlap_pairs(
     low-entropy word-soup tables most pairs share >= min_shared cold
     fingerprints (the gate checks exactness, not selectivity); on real
     web text a shared cold fingerprint implies a shared k-gram run."""
-    fps = winnowing_fingerprints(documents, k=k, window=window, text_col=text_col)
+    fps = winnowing_fingerprints(documents, k=k, window=window)
     df_tab = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_df"))
-    cold = fps.join(df_tab.where(F.col("_df") <= max_fp_df), "fp").select(
+    cold = fps.join(df_tab.where(F.col("_df") <= 200), "fp").select(
         "doc_id", "fp"
     )
     return (
@@ -278,14 +274,14 @@ PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PII_PHONE = r"\b\d{3}-\d{3}-\d{4}\b"
 
 
-def pii_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_stats(documents: DataFrame) -> DataFrame:
     """(doc_id, n_email, n_ip, n_phone, redacted_hash) — per-doc PII counts
     and the md5 of the text after replacing each class with a typed token
     (<EMAIL>/<IP>/<PHONE>), email first so user@host is consumed before the
     host's digits could feed the IP pattern.  Pure codegen regexp columns
     (no Python): at 100 TB this is a single scan with no shuffle, and the
     hash keeps the output row narrow for the gate."""
-    t = F.col(text_col)
+    t = F.col("text")
 
     def cnt(p: str):
         return F.size(F.regexp_extract_all(t, F.lit(p), F.lit(0))).cast("int")
@@ -303,12 +299,9 @@ def pii_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def unigram_lm_logprobs(
-    documents: DataFrame,
-    vocab_size: int = 4096,
-    alpha: float = 1.0,
-    text_col: str = "text",
+    documents: DataFrame, vocab_size: int = 4096
 ) -> tuple[DataFrame, F.Column]:
-    """Corpus-trained add-alpha unigram LM: (lexicon(token, logp), oov_logp
+    """Corpus-trained add-alpha (alpha = 1) unigram LM: (lexicon(token, logp), oov_logp
     literal).  The lexicon is the top-`vocab_size` tokens by (count DESC,
     token ASC); every out-of-vocabulary token scores as a single OOV type.
 
@@ -317,7 +310,7 @@ def unigram_lm_logprobs(
     p(OOV) = alpha / (N + alpha * (V + 1)).  The top-k is
     orderBy().limit() — Spark's TakeOrderedAndProject, i.e. map-side
     partial top-k then one bounded reduce; no global window task."""
-    toks = documents.select(F.explode(_tokens(text_col)).alias("t"))
+    toks = documents.select(F.explode(tokens_col()).alias("t"))
     counts = toks.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     n_total = counts.agg(F.sum("c")).collect()[0][0] or 0
     lex = (
@@ -326,6 +319,7 @@ def unigram_lm_logprobs(
         .persist()
     )
     v = lex.count()
+    alpha = 1.0
     denom = float(n_total) + alpha * (v + 1)
     lexicon = lex.select(
         F.col("t").alias("token"),
@@ -336,29 +330,22 @@ def unigram_lm_logprobs(
     return lexicon, F.lit(math.log(alpha / denom))
 
 
-def lm_perplexity(
-    documents: DataFrame,
-    vocab_size: int = 4096,
-    alpha: float = 1.0,
-    text_col: str = "text",
-) -> DataFrame:
+def lm_perplexity(documents: DataFrame, vocab_size: int = 4096) -> DataFrame:
     """CCNet-style LM quality scoring (Wenzek et al. 2020 §3.2 — there a
     KenLM 5-gram; here the corpus-trained unigram analog, same pipeline
     seat: score every doc, filter/stratify on perplexity downstream).
 
     (doc_id, n_tokens, cross_entropy, perplexity): ce = -mean logp under
-    the add-alpha unigram LM, ppl = exp(ce), both rounded to 6dp.
+    the add-one unigram LM, ppl = exp(ce), both rounded to 6dp.
 
     100 TB shape: the lexicon is BROADCAST (bounded at `vocab_size` rows by
     construction) so the corpus never shuffles on token — hot tokens like
     'the' cost nothing; the only exchange is the groupBy(doc_id)
     re-assembly of exploded tokens, partial-aggregated map-side.  Training
     pass is one partially-aggregated count shuffle + a bounded top-k."""
-    lexicon, oov_logp = unigram_lm_logprobs(
-        documents, vocab_size, alpha, text_col
-    )
+    lexicon, oov_logp = unigram_lm_logprobs(documents, vocab_size)
     tok = documents.select(
-        "doc_id", F.explode(_tokens(text_col)).alias("token")
+        "doc_id", F.explode(tokens_col()).alias("token")
     )
     scored = tok.join(F.broadcast(lexicon), "token", "left").withColumn(
         "_lp", F.coalesce("logp", oov_logp)
@@ -370,12 +357,14 @@ def lm_perplexity(
     )
 
 
+# the synthetic corpora's stand-in for C4's bad-words list
+_C4_BADWORDS = ("badword1", "badword2")
+
+
 def c4_clean(
     pages: DataFrame,
     min_words: int = 5,
     min_lines: int = 3,
-    badwords: tuple[str, ...] = ("badword1", "badword2"),
-    text_col: str = "text",
 ) -> DataFrame:
     """The C4 cleaning ruleset (Raffel et al. 2020 §2.2 — the filters that
     produced C4 from Common Crawl), as pure whole-stage-codegen column
@@ -387,7 +376,7 @@ def c4_clean(
       * does not contain the word "javascript" (case-insensitive).
     page level (page dropped entirely when ANY fires):
       * fewer than `min_lines` retained lines,
-      * any bad word among the page's lowercase tokens,
+      * any bad word (_C4_BADWORDS) among the page's lowercase tokens,
       * the phrase "lorem ipsum",
       * a curly brace '{'.
 
@@ -395,20 +384,20 @@ def c4_clean(
     100 TB this rides the parquet scan.  Output: (doc_id, n_lines,
     n_kept_lines, page_kept, text_clean) with text_clean NULL for dropped
     pages."""
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("text"), "\n")
     line_ok = lambda l: (
         l.rlike('[.!?"]$')
         & (F.size(F.filter(F.split(l, " "), lambda t: t != "")) >= min_words)
         & ~F.lower(l).contains("javascript")
     )
     kept = F.filter(lines, line_ok)
-    low = F.lower(F.col(text_col))
+    low = F.lower(F.col("text"))
     bad_tok = F.arrays_overlap(
         F.filter(F.split(low, "[ \n]"), lambda t: t != ""),
-        F.array(*[F.lit(b) for b in badwords]),
+        F.array(*[F.lit(b) for b in _C4_BADWORDS]),
     )
     page_bad = (
-        bad_tok | low.contains("lorem ipsum") | F.col(text_col).contains("{")
+        bad_tok | low.contains("lorem ipsum") | F.col("text").contains("{")
     )
     page_kept = ~page_bad & (F.size(kept) >= min_lines)
     return pages.select(
@@ -424,8 +413,6 @@ def cluster_terms(
     documents: DataFrame,
     assign: DataFrame,
     top_k: int = 3,
-    n_salts: int = 32,
-    text_col: str = "text",
 ) -> DataFrame:
     """Characteristic terms per cluster — class-based TF-IDF (the BERTopic
     c-TF-IDF formulation, Grootendorst 2022 eq. 1): score(t, c) =
@@ -445,10 +432,8 @@ def cluster_terms(
     Output: (cluster_id, rank, term, n_tc, score)."""
     from pyspark.sql import Window
 
-    from berkeley_entity_spark.operators.dedup import tokens_col
-
     toks = documents.select(
-        "doc_id", F.explode(tokens_col(text_col)).alias("term")
+        "doc_id", F.explode(tokens_col()).alias("term")
     ).join(assign.select("doc_id", "cluster_id"), "doc_id")
     tc = toks.groupBy("cluster_id", "term").agg(
         F.count(F.lit(1)).alias("n_tc")
@@ -474,7 +459,7 @@ def cluster_terms(
             ).alias("score"),
         )
     )
-    salt = F.pmod(F.xxhash64("term"), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64("term"), F.lit(32))
     w1 = Window.partitionBy("cluster_id", salt).orderBy(
         F.desc("score"), F.asc("term")
     )

@@ -37,11 +37,10 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Weighted PageRank over an aggregated edge table -> (node, rank).
+    """Weighted PageRank over an aggregated (src, dst) edge table ->
+    (node, rank).
 
     Scale shape: `edges` is the DOMAIN-level table (bounded — see module
     docstring), so every per-iteration join broadcasts the rank vector
@@ -58,9 +57,7 @@ def pagerank(
     magnitude below the 1e-6 comparison granularity for any bounded graph.
     """
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    )
+    e = edges.select("src", "dst", w.alias("w"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -106,12 +103,10 @@ def pagerank(
 def hits(
     edges: DataFrame,
     iterations: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
     weight_col: str | None = None,
 ) -> DataFrame:
     """HITS hubs/authorities (Kleinberg 1999, the weighted power-iteration
-    form) over an aggregated edge table -> (node, hub, authority).
+    form) over an aggregated (src, dst) edge table -> (node, hub, authority).
 
         a_{t+1}(v) = sum_{(u,v) in E} w(u,v) * h_t(u)      then L2-normalize
         h_{t+1}(u) = sum_{(u,v) in E} w(u,v) * a_{t+1}(v)  then L2-normalize
@@ -126,9 +121,7 @@ def hits(
     each half-step as a CTE, the pagerank/FS-EM precedent).
     """
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    )
+    e = edges.select("src", "dst", w.alias("w"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -173,13 +166,9 @@ def hits(
     return hub.join(auth, "node").select("node", "hub", "authority")
 
 
-def anchor_text_table(
-    links: DataFrame,
-    k: int = 3,
-    target_col: str = "dst",
-    anchor_col: str = "anchor",
-) -> DataFrame:
-    """Per-target top-k anchor phrases -> (dst, rank, anchor, n) — the
+def anchor_text_table(links: DataFrame, k: int = 3) -> DataFrame:
+    """Per-target top-k anchor phrases of (dst, anchor) link rows ->
+    (dst, rank, anchor, n) — the
     web-native surface-form dictionary.  Aggregated anchor text is how a
     web corpus expresses the reference's surface->title counts
     (WikipediaInterface.scala:56-62 builds them from wiki-internal links;
@@ -197,9 +186,7 @@ def anchor_text_table(
     """
     from pyspark.sql import Window
 
-    counts = links.groupBy(
-        F.col(target_col).alias("dst"), F.col(anchor_col).alias("anchor")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    counts = links.groupBy("dst", "anchor").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("dst").orderBy(F.desc("n"), F.asc("anchor"))
     return (
         counts.withColumn("rank", F.row_number().over(w))
@@ -208,17 +195,13 @@ def anchor_text_table(
     )
 
 
-def domain_link_edges(
-    pages: DataFrame,
-    src_col: str = "src_domain",
-    dst_col: str = "dst_domain",
-) -> DataFrame:
+def domain_link_edges(pages: DataFrame) -> DataFrame:
     """Page-level (src_domain, dst_domain) link rows -> weighted domain
     edges.  THE corpus-sized step: one groupBy with map-side partial
     aggregation; self-links dropped (they carry no inter-domain signal and
     would let link farms self-inflate)."""
     return (
-        pages.where(F.col(src_col) != F.col(dst_col))
-        .groupBy(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        pages.where(F.col("src_domain") != F.col("dst_domain"))
+        .groupBy(F.col("src_domain").alias("src"), F.col("dst_domain").alias("dst"))
         .agg(F.count(F.lit(1)).alias("w"))
     )

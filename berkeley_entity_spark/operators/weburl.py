@@ -31,10 +31,10 @@ _HOSTPORT_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)"
 _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
 
 
-def normalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
+def normalize_urls(df: DataFrame) -> DataFrame:
     """Append (scheme, host, registered_domain, path, query_canon,
-    canon_url) columns derived from `url_col`."""
-    url = F.col(url_col)
+    canon_url) columns derived from `url`."""
+    url = F.col("url")
     scheme = F.lower(F.regexp_extract(url, _SCHEME_RE, 1))
     hostport = F.regexp_extract(url, _HOSTPORT_RE, 1)
     host_full = F.lower(F.regexp_replace(hostport, r":[0-9]+$", ""))

@@ -33,13 +33,11 @@ DIM = 8
 SCALE = 10_000  # embedding real value = lattice int / SCALE
 
 
-def component_features(
-    mentions: DataFrame, min_head_count: int = 2
-) -> DataFrame:
+def component_features(mentions: DataFrame) -> DataFrame:
     """mentions(url, m_idx, norm_name) -> (url, m_idx, comps array<string>).
 
     ComponentFeaturizer.featurizeComponents analog: 'CHead=<head>' when
-    the head (last norm_name token) is COMMON (appears >= min_head_count
+    the head (last norm_name token) is COMMON (appears >= 2
     times across the corpus mention table — the commonHeadWordCounts
     gate), else the backoff 'CHead=LEN<len>' (the headPos backoff without
     a tagger); plus 'CLen=<min(tokens,5)>' (a closed-class-free shape
@@ -55,7 +53,7 @@ def component_features(
             "m_idx",
             F.array(
                 F.when(
-                    F.col("_hc") >= min_head_count,
+                    F.col("_hc") >= 2,
                     F.concat(F.lit("CHead="), F.col("_head")),
                 ).otherwise(
                     F.concat(F.lit("CHead=LEN"), F.length("_head").cast("string"))
@@ -125,15 +123,13 @@ def distrib_pair_scores(
 def add_distrib_scores(
     pair_scores: DataFrame,
     mention_vecs: DataFrame,
-    score_col: str = "score",
-    window: int = 8,
 ) -> DataFrame:
     """Sparse pair scores + the component-embedding dot product — the
     computeScores composition: score'(i, j) = score(i, j) +
     dot_scaled / SCALE^2."""
-    dots = distrib_pair_scores(mention_vecs, window)
+    dots = distrib_pair_scores(mention_vecs)
     return pair_scores.join(dots, ["url", "m_idx", "j"], "left").withColumn(
-        score_col,
-        F.col(score_col)
+        "score",
+        F.col("score")
         + F.coalesce(F.col("dot_scaled"), F.lit(0)) / F.lit(float(SCALE) ** 2),
     ).drop("dot_scaled")

@@ -39,34 +39,26 @@ def canonicalize_line(line: str) -> str:
     return _WS_RUN.sub(" ", line)
 
 
-def form_canonicalized_paragraphs(
-    lines: list[str],
-    respect_input_line_breaks: bool = False,
-    respect_input_two_line_breaks: bool = True,
-) -> list[str]:
-    """Reference SentenceSplitter.formCanonicalizedParagraphs:32-55.
+def form_canonicalized_paragraphs(lines: list[str]) -> list[str]:
+    """Reference SentenceSplitter.formCanonicalizedParagraphs:32-55, in its
+    default two-line-breaks mode.
 
-    Default mode (two-line-breaks) treats blank lines as paragraph breaks,
-    exactly reproducing the reference's StringBuffer accumulation: each
-    continuation line is appended with a single leading space, the buffer is
-    trimmed before canonicalization, and a trailing unterminated paragraph is
-    flushed.
+    Blank lines are paragraph breaks, exactly reproducing the reference's
+    StringBuffer accumulation: each continuation line is appended with a
+    single leading space, the buffer is trimmed before canonicalization, and
+    a trailing unterminated paragraph is flushed.
     """
-    if respect_input_line_breaks:
-        return [canonicalize_line(ln) for ln in lines]
-    if respect_input_two_line_breaks:
-        paragraphs: list[str] = []
-        curr: list[str] = []
-        for line in lines:
-            if line.strip() == "":
-                paragraphs.append(canonicalize_line((" " + " ".join(curr)).strip() if curr else ""))
-                curr = []
-            else:
-                curr.append(line)
-        if curr and " ".join(curr).strip() != "":
-            paragraphs.append(canonicalize_line((" " + " ".join(curr)).strip()))
-        return paragraphs
-    return [canonicalize_line(" ".join(lines))]
+    paragraphs: list[str] = []
+    curr: list[str] = []
+    for line in lines:
+        if line.strip() == "":
+            paragraphs.append(canonicalize_line((" " + " ".join(curr)).strip() if curr else ""))
+            curr = []
+        else:
+            curr.append(line)
+    if curr and " ".join(curr).strip() != "":
+        paragraphs.append(canonicalize_line((" " + " ".join(curr)).strip()))
+    return paragraphs
 
 
 def strip_html(html: str) -> str:

@@ -76,39 +76,25 @@ def render_doc(
     url: str,
     text: str,
     chunks: list[tuple[int, int, int, int]],
-    ner_chunks: list[tuple[int, int, int, str]] | None = None,
-    part_no: int = 0,
 ) -> str:
-    """One CoNLL document string.  chunks: (sent_idx, start, end, label);
-    tokens re-derived exactly as the extract kernel does (split_sentences +
-    whitespace), so chunk offsets line up."""
+    """One CoNLL document string (part 000, no NER column bits).  chunks:
+    (sent_idx, start, end, label); tokens re-derived exactly as the extract
+    kernel does (split_sentences + whitespace), so chunk offsets line up."""
     sents = [[t for t in s.split(" ") if t] for s in split_sentences([text])]
     by_sent: dict[int, list[tuple[int, int, int]]] = {}
     for s_idx, start, end, label in chunks:
         by_sent.setdefault(s_idx, []).append((start, end, label))
-    ner_by_sent: dict[int, list[tuple[int, int, str]]] = {}
-    for s_idx, start, end, label in ner_chunks or []:
-        ner_by_sent.setdefault(s_idx, []).append((start, end, label))
-    lines = [f"#begin document ({url}); part {part_no:03d}"]
+    lines = [f"#begin document ({url}); part 000"]
     for s_idx, toks in enumerate(sents):
         cb = coref_bits(len(toks), by_sent.get(s_idx, []))
-        nb = (
-            ner_bits(len(toks), ner_by_sent[s_idx])
-            if s_idx in ner_by_sent
-            else ["*"] * len(toks)
-        )
         for i, w in enumerate(toks):
-            lines.append(
-                f"{url}\t{part_no}\t{i}\t{w}\t-\t-\t-\t-\t-\t-\t{nb[i]}\t{cb[i]}"
-            )
+            lines.append(f"{url}\t0\t{i}\t{w}\t-\t-\t-\t-\t-\t-\t*\t{cb[i]}")
         lines.append("")
     lines.append("#end document")
     return "\n".join(lines)
 
 
-def render_conll(
-    pages: DataFrame, chunks: DataFrame, part_no: int = 0
-) -> DataFrame:
+def render_conll(pages: DataFrame, chunks: DataFrame) -> DataFrame:
     """pages(url, text) x chunks(url, sent_idx, start, end, cluster_id) ->
     (url, conll).  Cogrouped per url: one shuffle, then every document
     renders independently (embarrassingly parallel at any corpus size)."""
@@ -121,7 +107,7 @@ def render_conll(
         ]
         for r in page_pdf.itertuples():
             out_url.append(r.url)
-            out_doc.append(render_doc(r.url, r.text, ch, part_no=part_no))
+            out_doc.append(render_doc(r.url, r.text, ch))
         return pd.DataFrame({"url": out_url, "conll": out_doc})
 
     return (

@@ -28,8 +28,7 @@ from pyspark.sql import DataFrame
 
 from berkeley_entity_spark.preprocess.sentence import split_sentences
 
-# wiki/package.scala:20-21
-NIL_TOKEN = "-NIL-"
+# wiki/package.scala:21
 EXCLUDE_TOKEN = "-EXCLUDE-"
 
 CHUNK_COLS = ("sent_idx", "start", "end", "titles")
@@ -92,9 +91,7 @@ def render_wiki_doc(
     return "\n".join(lines)
 
 
-def render_wiki_annots(
-    pages: DataFrame, chunks: DataFrame, part_no: int = 0
-) -> DataFrame:
+def render_wiki_annots(pages: DataFrame, chunks: DataFrame) -> DataFrame:
     """pages(url, text) x chunks(url, sent_idx, start, end,
     titles ARRAY<STRING>) -> (url, annot): cogrouped per url, every
     document renders independently."""
@@ -107,7 +104,7 @@ def render_wiki_annots(
         out_url, out_doc = [], []
         for r in page_pdf.itertuples():
             out_url.append(r.url)
-            out_doc.append(render_wiki_doc(r.url, r.text, ch, part_no=part_no))
+            out_doc.append(render_wiki_doc(r.url, r.text, ch))
         return pd.DataFrame({"url": out_url, "annot": out_doc})
 
     return (

@@ -30,12 +30,10 @@ def read_brown_clusters(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def with_brown_prefixes(
-    clusters: DataFrame, lengths: tuple[int, ...] = PREFIX_LENGTHS
-) -> DataFrame:
-    """Add bp{n} prefix columns (full bitstring when shorter — the standard
-    behavior of prefix featurization)."""
+def with_brown_prefixes(clusters: DataFrame) -> DataFrame:
+    """Add bp{n} prefix columns for each n in PREFIX_LENGTHS (full bitstring
+    when shorter — the standard behavior of prefix featurization)."""
     out = clusters
-    for n in lengths:
+    for n in PREFIX_LENGTHS:
         out = out.withColumn(f"bp{n}", F.substring("cluster", 1, n))
     return out

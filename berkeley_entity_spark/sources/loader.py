@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 def load_webpages(
     spark: SparkSession,
     path: str,
-    fmt: str = "parquet",
     lang: str | None = None,
     limit: int | None = None,
     columns: list[str] | None = None,
@@ -27,7 +26,7 @@ def load_webpages(
     columns defaults to everything EXCEPT html when the caller does not ask
     for it — the 100 TB binary column must never reach a scan that does not
     need it (ReadSchema shows the pruning)."""
-    df = spark.read.format(fmt).load(path)
+    df = spark.read.format("parquet").load(path)
     # filter BEFORE projecting so columns=[...] without 'lang' composes with
     # the lang filter (Catalyst pushes the predicate to the scan either way)
     if lang is not None:

@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Fixed capture timestamp: record rendering must be deterministic (the
-# roundtrip oracle re-derives every field), so the writer takes a date
-# argument instead of reading a clock.
+# roundtrip oracle re-derives every field), so the writer stamps this date
+# instead of reading a clock.
 DEFAULT_WARC_DATE = "2026-01-01T00:00:00Z"
 
 PARSED_SCHEMA = (
@@ -63,14 +63,14 @@ def record_id_for_url(url: str) -> str:
     return hashlib.md5(url.encode("utf-8")).hexdigest()
 
 
-def render_record(url: str, text: str, warc_date: str = DEFAULT_WARC_DATE) -> bytes:
+def render_record(url: str, text: str) -> bytes:
     """One WARC/1.0 response record (headers + payload + separator)."""
     payload = text.encode("utf-8")
     headers = (
         "WARC/1.0\r\n"
         "WARC-Type: response\r\n"
         f"WARC-Target-URI: {url}\r\n"
-        f"WARC-Date: {warc_date}\r\n"
+        f"WARC-Date: {DEFAULT_WARC_DATE}\r\n"
         f"WARC-Record-ID: <urn:md5:{record_id_for_url(url)}>\r\n"
         "Content-Type: text/plain\r\n"
         f"Content-Length: {len(payload)}\r\n"
@@ -82,9 +82,6 @@ def render_record(url: str, text: str, warc_date: str = DEFAULT_WARC_DATE) -> by
 def render_warc(
     pages: DataFrame,
     n_files: int = 8,
-    url_col: str = "url",
-    text_col: str = "text",
-    warc_date: str = DEFAULT_WARC_DATE,
 ) -> DataFrame:
     """Pages -> (file_id, warc bytes, n_records): a distributed WARC sink.
 
@@ -96,15 +93,15 @@ def render_warc(
     convention is ~1 GiB per WARC).
     """
     keyed = pages.select(
-        F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_files)).alias("file_id"),
-        F.col(url_col).alias("url"),
-        F.col(text_col).alias("text"),
+        F.pmod(F.xxhash64("url"), F.lit(n_files)).alias("file_id"),
+        "url",
+        "text",
     )
 
     def gen(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("url", kind="mergesort")
         blob = b"".join(
-            render_record(u, t, warc_date)
+            render_record(u, t)
             for u, t in zip(pdf["url"], pdf["text"])
         )
         return pd.DataFrame(
@@ -169,14 +166,14 @@ def parse_records(blob: bytes) -> Iterator[dict]:
         pos = body_end + 4
 
 
-def parse_warc(files: DataFrame, warc_col: str = "warc") -> DataFrame:
+def parse_warc(files: DataFrame) -> DataFrame:
     """(file bytes) -> one row per WARC record, Arrow-batched.
 
     Each input row is one whole WARC file (the ``binaryFile`` reader's
     contract); output rows stream out per Arrow batch, so a file larger
     than one batch never materializes all its records in one pandas frame.
     """
-    src = files.select(F.col(warc_col).alias("warc"))
+    src = files.select("warc")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

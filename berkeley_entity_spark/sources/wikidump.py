@@ -60,14 +60,14 @@ def unescape_xml(col):
     return out
 
 
-def parse_pages(chunks: DataFrame, col: str = "value") -> DataFrame:
+def parse_pages(chunks: DataFrame) -> DataFrame:
     """(page chunk) -> (title, redirect_target, wikitext).
 
     Malformed pages — no parseable ``<title>`` — are DROPPED, exactly like
     the reference's scanner, which simply never sets currentPageTitle for
     them (WikipediaRedirectsDB.scala:100-140 skips any page whose marker
     lines are absent).  redirect_target is NULL for ordinary pages."""
-    c = F.col(col)
+    c = F.col("value")
     title = F.regexp_extract(c, _TITLE_RE, 1)
     redirect = F.regexp_extract(c, _REDIRECT_RE, 1)
     text = F.regexp_extract(c, _TEXT_RE, 1)

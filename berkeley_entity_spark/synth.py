@@ -57,13 +57,13 @@ def _lev(a: str, b: str) -> int:
     return prev[-1]
 
 
-def _distinct_pool(cands: list[str], min_dist: int = 3) -> list[str]:
-    """Keep only names pairwise >= min_dist apart so an edit-distance-1 typo
+def _distinct_pool(cands: list[str]) -> list[str]:
+    """Keep only names pairwise >= 3 edits apart so an edit-distance-1 typo
     of one surname can never equal (or nearly equal) another surname —
     otherwise gold clusters are genuinely unresolvable."""
     pool: list[str] = []
     for c in cands:
-        if all(_lev(c.lower(), p.lower()) >= min_dist for p in pool):
+        if all(_lev(c.lower(), p.lower()) >= 3 for p in pool):
             pool.append(c)
     return pool
 
@@ -310,10 +310,11 @@ def gold_with_ids(gold_mentions):
     ).withColumn("norm_name", norm)
 
 
-def gold_pair_table(gold_mentions_with_ids, band: int = 10, cap: int = 200):
+def gold_pair_table(gold_mentions_with_ids):
     """Labeled pairs under a shared blocking key (FIXTURES §2 gold_pairs):
     positives = same entity_id, hard negatives = different entities sharing
-    the key (e.g. same surname).  Sorted-neighborhood banding caps volume."""
+    the key (e.g. same surname).  Sorted-neighborhood banding caps volume:
+    the first 200 mentions per key, each paired with the next 10."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -324,14 +325,14 @@ def gold_pair_table(gold_mentions_with_ids, band: int = 10, cap: int = 200):
         m.select("mention_id", "entity_id", "url"), "mention_id"
     )
     w = Window.partitionBy("block_key").orderBy("norm_name", "mention_id")
-    r = keys.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= cap)
+    r = keys.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 200)
     a, b = r.alias("a"), r.alias("b")
     pairs = (
         a.join(
             b,
             (F.col("a.block_key") == F.col("b.block_key"))
             & (F.col("b.rn") > F.col("a.rn"))
-            & (F.col("b.rn") <= F.col("a.rn") + band),
+            & (F.col("b.rn") <= F.col("a.rn") + 10),
         )
         .where(F.col("a.mention_id") != F.col("b.mention_id"))
         .select(

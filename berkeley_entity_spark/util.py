@@ -20,6 +20,8 @@ from pyspark.sql.types import (
 # gate on our own byte estimate.  Executors must hold the whole table per
 # core; 256 MB keeps a comfortable margin on 4-8 GB executors.
 BROADCAST_CAP_BYTES = 256 * 1024 * 1024
+# past this many rows a table is never broadcast, whatever its width
+BROADCAST_ROW_CEILING = 5_000_000
 _SAMPLE_ROWS = 10_000
 
 
@@ -55,14 +57,12 @@ def estimated_bytes(df: DataFrame, n_rows: int) -> int:
 def maybe_broadcast(
     df: DataFrame,
     n_rows: int,
-    row_ceiling: int = 5_000_000,
-    cap_bytes: int = BROADCAST_CAP_BYTES,
 ) -> DataFrame:
     """Broadcast `df` only if its row count AND estimated serialized size are
     under the caps; otherwise return it unchanged (shuffle join).  Row count
     must already be known (no extra count job); the byte estimate samples
     only when the row gate passes."""
-    if n_rows > row_ceiling:
+    if n_rows > BROADCAST_ROW_CEILING:
         return df
     # short-circuit (skips the sampling job — this repo minimizes fixed job
     # counts) ONLY when the schema is all fixed-width types, where the exact
@@ -80,12 +80,12 @@ def maybe_broadcast(
             else 1
             for f in df.schema.fields
         ) + 16
-        return F.broadcast(df) if n_rows * width <= cap_bytes else df
+        return F.broadcast(df) if n_rows * width <= BROADCAST_CAP_BYTES else df
     # variable-width schema: still skip the sampling job for genuinely tiny
     # dimension tables, under a deliberately harsh 256KB/row pessimism
-    if n_rows * (256 * 1024) <= cap_bytes:
+    if n_rows * (256 * 1024) <= BROADCAST_CAP_BYTES:
         return F.broadcast(df)
-    if estimated_bytes(df, n_rows) > cap_bytes:
+    if estimated_bytes(df, n_rows) > BROADCAST_CAP_BYTES:
         return df
     return F.broadcast(df)
 

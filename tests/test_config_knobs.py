@@ -1,14 +1,17 @@
-"""Every PipelineConfig field must be read somewhere in the package outside
-config.py: a knob that no stage reads is dead configuration."""
+"""No dead configuration: every PipelineConfig field is read somewhere in the
+package outside config.py, and every defaulted parameter of a module-level
+package function is passed by at least one call in the repo."""
 
 import ast
 import dataclasses
+from collections import defaultdict
 from pathlib import Path
 
 import berkeley_entity_spark
 from berkeley_entity_spark.config import PipelineConfig
 
 PKG = Path(berkeley_entity_spark.__file__).parent
+ROOT = PKG.parent
 
 
 def _attributes_read() -> set[str]:
@@ -26,3 +29,65 @@ def test_every_pipeline_config_field_is_read():
     fields = {f.name for f in dataclasses.fields(PipelineConfig)}
     unread = sorted(fields - _attributes_read())
     assert not unread, f"PipelineConfig fields no package code reads: {unread}"
+
+
+def _defaulted_params(tree: ast.Module):
+    """(function, parameter, position or None) for every defaulted parameter
+    of the module's top-level functions; keyword-only ones have no
+    position."""
+    for fn in tree.body:
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        for i, arg in enumerate(positional[first:], first):
+            yield fn.name, arg.arg, i
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+            if default is not None:
+                yield fn.name, arg.arg, None
+
+
+def _calls_by_name():
+    """name -> (keywords passed, most positional args, passes *args/**kwargs)
+    over every call in the repo, matched by bare or attribute name."""
+    keywords = defaultdict(set)
+    n_positional = defaultdict(int)
+    starred = set()
+    for path in ROOT.rglob("*.py"):
+        if any(p.startswith(".") for p in path.relative_to(ROOT).parts):
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                starred.add(name)
+            n_positional[name] = max(n_positional[name], len(node.args))
+            keywords[name].update(k.arg for k in node.keywords if k.arg)
+    return keywords, n_positional, starred
+
+
+def test_every_option_has_a_caller():
+    keywords, n_positional, starred = _calls_by_name()
+    unused = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn, param, pos in _defaulted_params(tree):
+            passed = (
+                fn in starred
+                or param in keywords[fn]
+                or (pos is not None and n_positional[fn] > pos)
+            )
+            if not passed:
+                unused.append(f"{path.relative_to(ROOT)}::{fn}({param}=)")
+    assert not unused, (
+        "defaulted parameters no call in the repo passes (make each a literal "
+        "or a module constant, or drop the branch it selects):\n  "
+        + "\n  ".join(unused)
+    )

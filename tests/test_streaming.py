@@ -40,7 +40,7 @@ def test_streaming_extract_equals_batch(spark, pages_dir, tmp_path):
     root, pages = pages_dir
     out = str(tmp_path / "mentions")
     ckpt = str(tmp_path / "ckpt")
-    q = start_extract_stream(spark, root, out, ckpt, available_now=True)
+    q = start_extract_stream(spark, root, out, ckpt)
     q.awaitTermination(300)
     got = spark.read.parquet(out)
     want = extract_mentions(pages.where("lang = 'en'"))
@@ -56,7 +56,7 @@ def test_streaming_extract_resume_is_incremental(spark, pages_dir, tmp_path):
     root, pages = pages_dir
     out = str(tmp_path / "mentions")
     ckpt = str(tmp_path / "ckpt")
-    q = start_extract_stream(spark, root, out, ckpt, available_now=True)
+    q = start_extract_stream(spark, root, out, ckpt)
     q.awaitTermination(300)
     n_first = spark.read.parquet(out).count()
 
@@ -65,7 +65,7 @@ def test_streaming_extract_resume_is_incremental(spark, pages_dir, tmp_path):
     )
     more = more.withColumn("url", F.concat(F.lit("drop3-"), "url")).cache()
     more.write.mode("append").parquet(root)
-    q2 = start_extract_stream(spark, root, out, ckpt, available_now=True)
+    q2 = start_extract_stream(spark, root, out, ckpt)
     q2.awaitTermination(300)
     got = spark.read.parquet(out)
     want_more = extract_mentions(more.where("lang = 'en'"))
@@ -252,8 +252,7 @@ def test_unreadable_state_dir_raises(spark, tmp_path):
     pairs = tmp_path / "pairs"
     with pytest.raises(Exception):
         _dedup_batch(
-            batch, 0, state_dir=str(state), pairs_dir=str(pairs),
-            bands=4, rows=2, shingle_n=3, max_bucket=200,
+            batch, 0, state_dir=str(state), pairs_dir=str(pairs), max_bucket=200,
         )
     assert not pairs.exists()
 
@@ -341,6 +340,42 @@ def test_incremental_er_equals_batch_cc(spark, tmp_path):
     assert cluster_of[hashes["c1"]] == cluster_of[hashes["c2"]]
     assert cluster_of[hashes["c1"]] != cluster_of[hashes["a1"]]
     assert hashes["d1"] not in cluster_of
+
+
+def test_incremental_er_stream_leaves_session_conf(spark, tmp_path):
+    """The ER stream's batch_id-partitioned sinks overwrite dynamically per
+    write: a second drain keeps the first drain's partitions, and so does a
+    third batch whose bodies run directly on the caller's session (a stream
+    runs each batch on a cloned session, so only a direct call can show a
+    session-wide conf change).  The session's partitionOverwriteMode is the
+    same afterwards."""
+    from berkeley_entity_spark.streaming.ingest import (
+        _dedup_batch,
+        _er_merge_batch,
+        start_incremental_er_stream,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    text = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    root = str(tmp_path / "pages")
+    dirs = [str(tmp_path / k) for k in ("state", "pairs", "assign", "ckpt")]
+    spark.conf.set(key, "STATIC")
+    for rows in ([("a1", text), ("a2", text)], [("b1", text)]):
+        _as_pages(spark, rows).write.mode("append").parquet(root)
+        q = start_incremental_er_stream(spark, root, *dirs)
+        q.awaitTermination(300)
+        assert q.exception() is None
+    assert spark.conf.get(key) == "STATIC"
+    state, pairs, assign = dirs[:3]
+    _dedup_batch(
+        _as_pages(spark, [("c1", text)]), 2,
+        state_dir=state, pairs_dir=pairs, max_bucket=200,
+    )
+    _er_merge_batch(spark, 2, pairs, assign)
+    assert spark.conf.get(key) == "STATIC"
+    for d in (state, pairs, assign):
+        batches = spark.read.parquet(d).select("batch_id").distinct().collect()
+        assert sorted(r[0] for r in batches) == [0, 1, 2], d
 
 
 def _ts_pages(spark, rows):

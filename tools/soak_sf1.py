@@ -150,7 +150,7 @@ def run_soak(spark) -> dict:
     # DuckDB oracle can embed the plane literals — expected bucket 2k/16 is
     # fine at sf0.01 but degenerates to brute-force candidate volume at
     # 20k vectors).  The operator's own sizing rule (n_planes ≈
-    # log2(n / target_bucket), lsh_bucket_topk docstring) says 10 planes
+    # log2(n / 32), lsh_bucket_topk docstring) says 10 planes
     # here; record the correctly-sized run so the soak shows the scale
     # path, not a misconfiguration.
     from berkeley_entity_spark.operators.similarity import lsh_bucket_topk
