@@ -55,7 +55,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from berkeley_entity_spark.operators.dedup import minhash_lsh_pairs
 
     docs = _docs_with_dups(spark, SF_DEFAULT)
-    pairs = minhash_lsh_pairs(docs, bands=4, rows=2)
+    pairs = minhash_lsh_pairs(docs)
     comp = connected_components(pairs.toDF("u", "v"))
     return (
         docs.select("doc_id")
@@ -259,14 +259,14 @@ def q_minhash_lsh(spark, sf_dir):
     """Dedup (MinHash+LSH): banded md5-min signatures -> candidate pairs."""
     from berkeley_entity_spark.operators.dedup import minhash_lsh_pairs
 
-    return minhash_lsh_pairs(_docs_with_dups(spark, sf_dir), bands=4, rows=2)
+    return minhash_lsh_pairs(_docs_with_dups(spark, sf_dir))
 
 
 def q_ngram_jaccard(spark, sf_dir):
     """Dedup (n-gram Jaccard): exact Jaccard >= 0.9 on shared-ngram pairs."""
     from berkeley_entity_spark.operators.dedup import ngram_jaccard_pairs
 
-    p = ngram_jaccard_pairs(_docs_with_dups(spark, sf_dir), n=3, threshold=0.9)
+    p = ngram_jaccard_pairs(_docs_with_dups(spark, sf_dir), threshold=0.9)
     return p.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -332,7 +332,7 @@ def q_ann_ivf(spark, sf_dir):
     from berkeley_entity_spark.operators.similarity import ivf_topk
 
     t = ivf_topk(
-        _t(spark, sf_dir, "embeddings"), k=3, n_centroids=8, n_probe=2
+        _t(spark, sf_dir, "embeddings"), k=3, n_probe=2
     )
     return t.select("query_id", "neighbor_id", "rank")
 
@@ -376,7 +376,7 @@ def q_wiki_title(spark, sf_dir):
             F.concat("title", F.lit("0")).alias("dst"),
         )
     )
-    resolved = resolve_redirects(links, redirects, hops=2)
+    resolved = resolve_redirects(links, redirects)
     return best_title_per_surface(title_given_surface(resolved))
 
 
@@ -396,7 +396,7 @@ def q_wiki_categories(spark, sf_dir):
             F.lower(F.element_at("t", 2)).alias("category"),
         )
     )
-    return top_k_categories(cats, k=2)
+    return top_k_categories(cats)
 
 
 def q_wiki_links(spark, sf_dir):
@@ -573,7 +573,7 @@ def q_asof_join(spark, sf_dir):
     quotes = e.where(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts", "value"
     )
-    r = asof_join(probes, quotes, on="user_id", ts_col="ts")
+    r = asof_join(probes, quotes)
     return r.select(
         "event_id",
         "user_id",
@@ -664,7 +664,7 @@ def q_c4_clean(spark, sf_dir):
     pages = body.select(
         "doc_id", F.concat("body", e1, e2, e3).alias("text")
     )
-    return c4_clean(pages, min_words=5, min_lines=3)
+    return c4_clean(pages)
 
 
 def q_semdedup(spark, sf_dir):
@@ -698,9 +698,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     bench = _t(spark, sf_dir, "documents").where(
         F.col("doc_id") % 97 == 0
     ).select("doc_id", "text")
-    return bloom_contaminated_docs(
-        train, bench, k=13, m_bits=1 << 18, k_hashes=3
-    )
+    return bloom_contaminated_docs(train, bench, m_bits=1 << 18)
 
 
 def q_dsir_select(spark, sf_dir):
@@ -717,7 +715,7 @@ def q_dsir_select(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     target = docs.where(F.col("doc_id") % 13 == 0)
-    return dsir_select(docs, target, k=100, n_buckets=1024, alpha=1.0)
+    return dsir_select(docs, target, k=100)
 
 
 def q_er_pipeline(spark, sf_dir):
@@ -825,7 +823,7 @@ def q_ceafe(spark, sf_dir):
     )
     pred = it.select("mention_id", "g", "cluster_id")
     gold = it.select("mention_id", "g", "entity_id")
-    m = conll_metrics(pred, gold, doc_col="g")
+    m = conll_metrics(pred, gold)
     return m.select(*[F.round(c, 6).alias(c) for c in m.columns])
 
 
@@ -1253,7 +1251,7 @@ def q_joint_entity(spark, sf_dir):
     # q_er_pipeline precedent)
     m = extract_mentions(_cap_docs(spark, sf_dir)).localCheckpoint(eager=True)
     out = joint_entity_decode(
-        m, surface_link_candidates(_joint_vote_db(m), top_k=2)
+        m, surface_link_candidates(_joint_vote_db(m))
     )
     return out.groupBy("etype").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1290,7 +1288,7 @@ def q_joint_degenerate(spark, sf_dir):
     ).localCheckpoint(eager=True)
     out = joint_entity_decode(
         m,
-        surface_link_candidates(_joint_vote_db(m), top_k=2),
+        surface_link_candidates(_joint_vote_db(m)),
         weights=weights_vector(ORACLE_ER_WEIGHTS),
         gamma_type=0.0,
         gamma_link=0.0,
@@ -1344,7 +1342,7 @@ def q_joint_pair(spark, sf_dir):
     )
     out = joint_entity_decode(
         m2,
-        surface_link_candidates(_joint_vote_db(m2), top_k=2),
+        surface_link_candidates(_joint_vote_db(m2)),
         weights=weights_vector(ORACLE_ER_WEIGHTS),
         gamma_type=1.5,
         gamma_link=0.0,
@@ -1442,9 +1440,9 @@ def q_winnowing(spark, sf_dir):
     the corpus is ASCII so unicode(char) == the kernel's utf-8 byte."""
     from berkeley_entity_spark.operators.textstats import winnowing_fingerprints
 
-    return winnowing_fingerprints(
-        _t(spark, sf_dir, "documents"), k=5, window=4
-    ).select("doc_id", "fp")
+    return winnowing_fingerprints(_t(spark, sf_dir, "documents")).select(
+        "doc_id", "fp"
+    )
 
 
 def q_winnow_overlap(spark, sf_dir):
@@ -1456,7 +1454,7 @@ def q_winnow_overlap(spark, sf_dir):
     from berkeley_entity_spark.operators.textstats import winnow_overlap_pairs
 
     return winnow_overlap_pairs(
-        _t(spark, sf_dir, "documents"), k=5, window=4, min_shared=3
+        _t(spark, sf_dir, "documents")
     ).select("id_a", "id_b", F.col("shared").cast("long").alias("shared"))
 
 
@@ -1471,7 +1469,7 @@ def q_substring_dup(spark, sf_dir):
     from berkeley_entity_spark.operators.dedup import duplicated_spans
 
     return duplicated_spans(
-        _t(spark, sf_dir, "documents"), k=8, min_len=15, max_gram_rows=200
+        _t(spark, sf_dir, "documents"), max_gram_rows=200
     )
 
 
@@ -1498,7 +1496,7 @@ def q_xdistrib(spark, sf_dir):
         (F.row_number().over(w) - 1).cast("int").alias("m_idx"),
     )
     vecs = mention_vectors(component_features(ranked))
-    return distrib_pair_scores(vecs, window=8).select(
+    return distrib_pair_scores(vecs).select(
         "url", "m_idx", "j", "dot_scaled"
     )
 
@@ -1559,11 +1557,11 @@ def q_stratified_sample(spark, sf_dir):
     engine-portable determinism trick used throughout), so the sample is
     reproducible under any partitioning and any engine, unlike
     rand()-based sampleBy.  Strata = quality-score quartile buckets of
-    the documents table; scale shape: two-phase top-k (salted local
-    top-25 per (stratum, salt), then a final window over <= 25*32
-    survivors per stratum) — no collect, no rand, no global sort, and no
-    task ever holds a full stratum."""
+    the documents table; scale shape: util.salted_top_k (top-25 per
+    stratum) — no collect, no rand, no global sort, and no task ever
+    holds a full stratum."""
     from berkeley_entity_spark.operators.textstats import quality_score
+    from berkeley_entity_spark.util import salted_top_k
 
     q = quality_score(_t(spark, sf_dir, "documents"))
     d = q.select(
@@ -1571,23 +1569,8 @@ def q_stratified_sample(spark, sf_dir):
         F.least(F.floor(F.col("quality") * 4), F.lit(3)).cast("int").alias("bucket"),
         F.md5(F.concat(F.lit("7|"), F.col("doc_id").cast("string"))).alias("_h"),
     )
-    # two-phase top-k (VERDICT r3): a single window per stratum funnels the
-    # whole stratum through one task — a straggler/OOM at 100x.  Phase 1
-    # takes top-25 per (bucket, salt) with a deterministic 32-way salt, so
-    # no task ever sorts more than its partition; phase 2's global window
-    # then sees <= 25*32 rows per stratum.  Top-k by a total order composes
-    # through per-salt top-k, so the output is bit-identical and the DuckDB
-    # oracle is unchanged.
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(32))
-    w1 = Window.partitionBy("bucket", salt).orderBy("_h", "doc_id")
-    survivors = d.withColumn("_rn1", F.row_number().over(w1)).where(
-        F.col("_rn1") <= 25
-    )
-    w = Window.partitionBy("bucket").orderBy("_h", "doc_id")
-    return (
-        survivors.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 25)
-        .select("bucket", "doc_id", F.col("rn").cast("int").alias("rn"))
+    return salted_top_k(d, ["bucket"], ["_h", "doc_id"], 25).select(
+        "bucket", "doc_id", F.col("rank").alias("rn")
     )
 
 
@@ -1658,7 +1641,7 @@ def q_segment_dedup(spark, sf_dir):
     from berkeley_entity_spark.operators.dedup import segment_dedup
 
     return segment_dedup(
-        _t(spark, sf_dir, "documents"), min_dup_docs=2, seg_tokens=10
+        _t(spark, sf_dir, "documents"), seg_tokens=10
     )
 
 
@@ -1700,7 +1683,7 @@ def q_cluster_cohesion(spark, sf_dir):
     from berkeley_entity_spark.operators.dedup import minhash_lsh_pairs
 
     docs = _docs_with_dups(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, bands=4, rows=2).localCheckpoint(eager=True)
+    pairs = minhash_lsh_pairs(docs).localCheckpoint(eager=True)
     comp = connected_components(pairs.toDF("u", "v"))
     assign = (
         docs.select("doc_id")
@@ -1727,7 +1710,7 @@ def q_cluster_repair(spark, sf_dir):
     from berkeley_entity_spark.operators.dedup import minhash_lsh_pairs
 
     docs = _docs_with_dups(spark, sf_dir)
-    pairs = minhash_lsh_pairs(docs, bands=4, rows=2)
+    pairs = minhash_lsh_pairs(docs)
     base = docs.where(F.col("doc_id") < 100000).select("doc_id")
     bridges = (
         base.select(F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b"))
@@ -2021,7 +2004,7 @@ def q_decontaminate(spark, sf_dir):
     bench = _t(spark, sf_dir, "documents").where(
         F.col("doc_id") % 97 == 0
     ).select("doc_id", "text")
-    return contaminated_docs(train, bench, k=13)
+    return contaminated_docs(train, bench)
 
 
 def q_fuzzy_decontaminate(spark, sf_dir):
@@ -2035,7 +2018,7 @@ def q_fuzzy_decontaminate(spark, sf_dir):
     bench = _t(spark, sf_dir, "documents").where(
         F.col("doc_id") % 97 == 0
     ).select("doc_id", "text")
-    return fuzzy_contaminated_docs(train, bench, bands=4, rows=2)
+    return fuzzy_contaminated_docs(train, bench)
 
 
 def q_bpe_merges(spark, sf_dir):
@@ -2049,7 +2032,7 @@ def q_bpe_merges(spark, sf_dir):
     from berkeley_entity_spark.operators.bpe import bpe_merges_df
 
     return bpe_merges_df(
-        spark, _t(spark, sf_dir, "documents"), n_merges=6, top_words=2000
+        spark, _t(spark, sf_dir, "documents"), n_merges=6
     )
 
 
@@ -2064,7 +2047,7 @@ def q_bpe_encode(spark, sf_dir):
     from berkeley_entity_spark.operators.bpe import bpe_encode_stats, bpe_train
 
     docs = _t(spark, sf_dir, "documents")
-    merges = bpe_train(docs, n_merges=6, top_words=2000)
+    merges = bpe_train(docs, n_merges=6)
     return bpe_encode_stats(docs, merges)
 
 
@@ -2097,7 +2080,7 @@ def q_meta_blocking(spark, sf_dir):
     pruned graph retains the cbs=3 duplicate edges."""
     from berkeley_entity_spark.operators.metablocking import meta_blocking_pairs
 
-    return meta_blocking_pairs(_docs_with_dups(spark, sf_dir), max_block=64)
+    return meta_blocking_pairs(_docs_with_dups(spark, sf_dir))
 
 
 def q_fs_em(spark, sf_dir):
@@ -2110,7 +2093,7 @@ def q_fs_em(spark, sf_dir):
     with the same 12-digit per-iteration re-synchronization rounds."""
     from berkeley_entity_spark.operators.linkage import fs_link
 
-    return fs_link(_t(spark, sf_dir, "documents"), max_block=48)
+    return fs_link(_t(spark, sf_dir, "documents"))
 
 
 def q_blocking_metrics(spark, sf_dir):
@@ -2145,7 +2128,7 @@ def q_blocking_metrics(spark, sf_dir):
         )
     )
     recs = fs_gate_records(docs)
-    cand = fs_comparison_vectors(recs, max_block=48).select("id_a", "id_b")
+    cand = fs_comparison_vectors(recs).select("id_a", "id_b")
     n_rec = recs.agg(F.count(F.lit(1)).alias("n_records"))
     n_cand = cand.agg(F.count(F.lit(1)).alias("n_cand"))
     n_gold = gold.agg(F.count(F.lit(1)).alias("n_gold"))
@@ -2177,7 +2160,7 @@ def q_fs_tf(spark, sf_dir):
     as q_fs_em (asserted by the shared p_match column)."""
     from berkeley_entity_spark.operators.linkage import fs_link_tf
 
-    return fs_link_tf(_t(spark, sf_dir, "documents"), max_block=48)
+    return fs_link_tf(_t(spark, sf_dir, "documents"))
 
 
 def q_pr_curve(spark, sf_dir):
@@ -2211,7 +2194,7 @@ def q_pr_curve(spark, sf_dir):
             )
         )
     )
-    scored = fs_link(docs, max_block=48)
+    scored = fs_link(docs)
     labeled = scored.join(
         gold.withColumn("is_dup", F.lit(1)), ["id_a", "id_b"], "left"
     ).select("p_match", F.coalesce("is_dup", F.lit(0)).alias("is_dup"))
@@ -2251,8 +2234,8 @@ def q_review_queue(spark, sf_dir):
     band (linkage.review_queue)."""
     from berkeley_entity_spark.operators.linkage import fs_link, review_queue
 
-    scored = fs_link(_t(spark, sf_dir, "documents"), max_block=48)
-    return review_queue(scored, per_band=10, lower=0.2, upper=0.8)
+    scored = fs_link(_t(spark, sf_dir, "documents"))
+    return review_queue(scored, per_band=10)
 
 
 def _gold_dup_pairs(docs):
@@ -2290,7 +2273,7 @@ def q_expected_f1(spark, sf_dir):
     (linkage.fs_expected_f1)."""
     from berkeley_entity_spark.operators.linkage import fs_expected_f1, fs_link
 
-    return fs_expected_f1(fs_link(_t(spark, sf_dir, "documents"), max_block=48))
+    return fs_expected_f1(fs_link(_t(spark, sf_dir, "documents")))
 
 
 def q_calibration(spark, sf_dir):
@@ -2301,7 +2284,7 @@ def q_calibration(spark, sf_dir):
     from berkeley_entity_spark.operators.linkage import calibration_report, fs_link
 
     docs = _t(spark, sf_dir, "documents")
-    return calibration_report(fs_link(docs, max_block=48), _gold_dup_pairs(docs))
+    return calibration_report(fs_link(docs), _gold_dup_pairs(docs))
 
 
 def q_dup_estimate(spark, sf_dir):
@@ -2323,7 +2306,7 @@ def q_match_weights(spark, sf_dir):
     (m ~ u) is diagnosed (linkage.match_weights_report)."""
     from berkeley_entity_spark.operators.linkage import match_weights_report
 
-    return match_weights_report(_t(spark, sf_dir, "documents"), max_block=48)
+    return match_weights_report(_t(spark, sf_dir, "documents"))
 
 
 def q_blocking_cascade(spark, sf_dir):
@@ -2347,7 +2330,7 @@ def q_one_to_one(spark, sf_dir):
         one_to_one_matches,
     )
 
-    scored = fs_link(_t(spark, sf_dir, "documents"), max_block=48)
+    scored = fs_link(_t(spark, sf_dir, "documents"))
     return one_to_one_matches(scored, rounds=3)
 
 
@@ -2370,7 +2353,7 @@ def q_crawl_drift(spark, sf_dir):
     |snapshots| x |bins| histogram algebra."""
     from berkeley_entity_spark.operators.drift import drift_psi
 
-    return drift_psi(_t(spark, sf_dir, "documents"), snapshot_col="source")
+    return drift_psi(_t(spark, sf_dir, "documents"))
 
 
 # Deterministic "sentence-ifier": the driver documents corpus has no
@@ -2705,7 +2688,7 @@ def q_query_chooser(spark, sf_dir):
     surfaces = t.select(
         F.concat(F.expr("t[0]"), F.lit(" "), F.expr("t[1]")).alias("surface")
     ).distinct()
-    return choose_denotations(surfaces, votes, load_query_chooser(), top_k=3)
+    return choose_denotations(surfaces, votes, load_query_chooser())
 
 
 def _query_chooser_oracle() -> str:
@@ -2829,7 +2812,7 @@ def q_domain_pagerank(spark, sf_dir):
         F.explode(F.array(*dsts)).alias("dst_domain"),
     )
     return pagerank(
-        domain_link_edges(links), iterations=5, damping=0.85, weight_col="w"
+        domain_link_edges(links), iterations=5, weight_col="w"
     )
 
 
@@ -2886,7 +2869,7 @@ def q_hits(spark, sf_dir):
         F.col("source").alias("src_domain"),
         F.explode(F.array(*dsts)).alias("dst_domain"),
     )
-    h = hits(domain_link_edges(links), iterations=4, weight_col="w")
+    h = hits(domain_link_edges(links), iterations=4)
     return h.select(
         "node",
         F.round("hub", 6).alias("hub"),
@@ -2921,7 +2904,7 @@ def q_anchor_text(spark, sf_dir):
     links = d.select(F.explode(F.array(*triples)).alias("l")).select(
         "l.dst", "l.anchor"
     )
-    return anchor_text_table(links, k=3)
+    return anchor_text_table(links)
 
 
 def q_media_features(spark, sf_dir):

@@ -425,29 +425,21 @@ def _ceafe_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-def conll_metrics(
-    pred: DataFrame,
-    gold: DataFrame,
-    doc_col: str | None = None,
-) -> DataFrame:
+def conll_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """The CoNLL scorer's headline number: one row with muc_f1, b3_f1,
     ceafe_precision/recall/f1, and conll_f1 = (MUC + B3 + CEAFe)/3
-    (CorefConllScorer.scala:72-88 semantics).  When doc_col is given,
-    cluster/entity ids are doc-scoped before the global B3/MUC aggs —
+    (CorefConllScorer.scala:72-88 semantics).  The pred side's `g` column
+    names the document: cluster/entity ids are doc-scoped by it before the
+    global B3/MUC aggs —
     clusters never span documents in the scorer, so the global cell sums
     equal the scorer's per-document accumulation exactly.
 
     The pred-x-gold mention join and the intersection-cells aggregation
     run ONCE (eager-checkpointed) and feed both the B3/MUC aggs and the
     per-doc CEAFe alignment — the mention-scale shuffle is not repeated."""
-    if doc_col:
-        pred = pred.withColumn(
-            "cluster_id", F.concat_ws("␟", doc_col, "cluster_id")
-        )
-        gold = gold.withColumn(
-            "entity_id", F.concat_ws("␟", doc_col, "entity_id")
-        )
-    cells = _doc_cells(pred, gold, doc_col).localCheckpoint(eager=True)
+    pred = pred.withColumn("cluster_id", F.concat_ws("␟", "g", "cluster_id"))
+    gold = gold.withColumn("entity_id", F.concat_ws("␟", "g", "entity_id"))
+    cells = _doc_cells(pred, gold, "g").localCheckpoint(eager=True)
     # doc-scoped ids make (cluster_id, entity_id) globally unique, so the
     # global cells are the per-doc cells re-keyed (n_ce passes through)
     base = _b3_muc_from_cells(
@@ -506,13 +498,13 @@ def _poisson1(u):
     return expr
 
 
-def bootstrap_significance(
-    stats_a: DataFrame,
-    stats_b: DataFrame,
-    n_trials: int = 1000,
-) -> DataFrame:
+# bootstrap trials (the reference runs 1000; every caller here runs 200)
+N_TRIALS = 200
+
+
+def bootstrap_significance(stats_a: DataFrame, stats_b: DataFrame) -> DataFrame:
     """M12: paired bootstrap test over documents
-    (sig/BootstrapDriver.scala:104-141: 1000 trials, resample docs with
+    (sig/BootstrapDriver.scala:104-141: N_TRIALS trials, resample docs with
     replacement, count trials where system B's aggregated F1 beats A's;
     the reported value is that fraction = 1-p).
 
@@ -528,7 +520,7 @@ def bootstrap_significance(
                        F.col("pred").alias("pred_b"), F.col("gold").alias("gold_b"))
     j = a.join(b, "url", "full").na.fill(0.0)
     rep = j.select(
-        "*", F.explode(F.sequence(F.lit(0), F.lit(n_trials - 1))).alias("_trial")
+        "*", F.explode(F.sequence(F.lit(0), F.lit(N_TRIALS - 1))).alias("_trial")
     )
     u = (
         F.pmod(F.xxhash64("url", "_trial", F.lit(0)), F.lit(1 << 40))
@@ -563,7 +555,7 @@ def bootstrap_significance(
     )
     return totals.crossJoin(per_trial.agg(F.avg("sig").alias("frac_sig"))).select(
         "f1_a", "f1_b", (F.col("f1_b") - F.col("f1_a")).alias("delta"),
-        "frac_sig", F.lit(n_trials).alias("n_trials"),
+        "frac_sig", F.lit(N_TRIALS).alias("n_trials"),
     )
 
 
@@ -571,14 +563,13 @@ def grouped_accuracy(
     pred: DataFrame,
     gold: DataFrame,
     attrs: DataFrame,
-    group_col: str,
 ) -> DataFrame:
-    """A8: grouped accuracy counters — per attribute group (e.g. mtype,
-    number, gender), the fraction of mentions sitting in a cluster whose
+    """A8: grouped accuracy counters — per mention type (mtype), the
+    fraction of mentions sitting in a cluster whose
     MAJORITY gold entity matches their own (the reference's per-category
     right/wrong counters in its evaluator output).
 
-    attrs(mention_id, group_col).  Majority entity per cluster = argmax of
+    attrs(mention_id, mtype).  Majority entity per cluster = argmax of
     (cluster, entity) cell counts, ties to the smaller entity id.  Returns
     (group, n, correct, accuracy)."""
     j = _aligned(pred, gold)
@@ -594,10 +585,10 @@ def grouped_accuracy(
     scored = (
         j.join(majority, "cluster_id")
         .withColumn("_ok", (F.col("entity_id") == F.col("_maj")).cast("long"))
-        .join(attrs.select("mention_id", group_col), "mention_id")
+        .join(attrs.select("mention_id", "mtype"), "mention_id")
     )
     return (
-        scored.groupBy(group_col)
+        scored.groupBy("mtype")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("_ok").alias("correct"))
         .withColumn("accuracy", F.round(F.col("correct") / F.col("n"), 6))
     )

@@ -31,9 +31,13 @@ AQE skew-join handles residual join-side imbalance.
 Everything below is expressed as DataFrame ops (joins, windows, explode); the
 minhash pass included — the whole stage runs JVM-side in codegen.
 
-capped_key_pairs is the shared row_number-capped key self-join emitting
-(key, id_a < id_b) pairs; dedup.minhash_lsh_pairs, phonetic_pairs and
-metablocking.block_graph_edges build on it.
+capped_key_pairs is the repo's one row_number-capped key self-join,
+emitting (key, id_a < id_b) pairs with any extra columns carried as
+<col>_a / <col>_b.  Its callers: phonetic_pairs, dedup.minhash_lsh_pairs,
+dedup.simhash_near_pairs, dedup.duplicated_spans,
+linkage.fs_comparison_vectors and metablocking.block_graph_edges.  Two caps
+stay inline, each with its reason in its docstring:
+similarity.lsh_bucket_topk and streaming.ingest._dedup_batch.
 """
 
 from __future__ import annotations
@@ -66,19 +70,19 @@ def distinct_surfaces(mentions: DataFrame) -> DataFrame:
 # ----------------------------------------------------------------- block keys
 
 
-def explode_block_keys(df: DataFrame, id_col: str, norm_col: str = "norm_name") -> DataFrame:
-    """Explode each normalized surface into its blocking keys.
+def explode_block_keys(df: DataFrame, id_col: str) -> DataFrame:
+    """Explode each normalized surface (norm_name) into its blocking keys.
 
     key passes: last token (surname / suffix), first token (org stem /
     first name), acronym (initial letters — links "GDC" to
     "global data corporation", cf. sem/AbbreviationHandler.scala).
     Pure column expressions — stays inside whole-stage codegen.
     """
-    toks = F.split(F.col(norm_col), " ")
+    toks = F.split(F.col("norm_name"), " ")
     acr = F.array_join(F.transform(toks, lambda t: F.substring(t, 1, 1)), "")
     keyed = df.select(
         F.col(id_col),
-        F.col(norm_col),
+        F.col("norm_name"),
         F.array_distinct(
             F.array(
                 F.concat(F.lit("L:"), F.element_at(toks, -1)),
@@ -91,22 +95,23 @@ def explode_block_keys(df: DataFrame, id_col: str, norm_col: str = "norm_name") 
         ).alias("keys"),
     )
     return keyed.select(
-        F.col(id_col), F.col(norm_col), F.explode("keys").alias("block_key")
+        F.col(id_col), F.col("norm_name"), F.explode("keys").alias("block_key")
     ).where(F.col("block_key").isNotNull() & (F.length("block_key") > 2))
 
 
 def surface_block_keys(surfaces: DataFrame) -> DataFrame:
-    return explode_block_keys(surfaces, "node_id", "norm_name")
+    return explode_block_keys(surfaces, "node_id")
 
 
 # ------------------------------------------------------------------- minhash
 
 
-def char_shingles_col(norm_col: str = "norm_name", k: int = 3):
-    """Distinct char k-shingles of the space-padded surface as an array
-    column.  Pure SQL expressions (substr over a sequence) — whole-stage
-    codegen, and byte-identical to DuckDB's substr over the same string."""
-    padded = F.concat(F.lit(" "), F.col(norm_col), F.lit(" "))
+def char_shingles_col(k: int):
+    """Distinct char k-shingles of the space-padded surface (norm_name) as
+    an array column.  Pure SQL expressions (substr over a sequence) —
+    whole-stage codegen, and byte-identical to DuckDB's substr over the
+    same string."""
+    padded = F.concat(F.lit(" "), F.col("norm_name"), F.lit(" "))
     return F.when(F.length(padded) <= k, F.array(padded)).otherwise(
         F.array_distinct(
             F.transform(
@@ -173,25 +178,36 @@ def minhash_band_keys(
 def capped_key_pairs(
     keys: DataFrame, id_col: str, key_col: str, cap: int
 ) -> DataFrame:
-    """(key_col, id_a, id_b) with id_a < id_b for every two ids sharing a
-    key — the capped self-join behind LSH, phonetic and block-graph pairs.
-    Each key keeps its first `cap` ids in id order (row_number window) so
-    a hot key emits at most C(cap, 2) pairs whatever the corpus size — a
-    deterministic, disclosed recall bound.  Pairs sharing several keys
-    come out once per key; callers dedup or count."""
-    w = Window.partitionBy(key_col).orderBy(id_col)
+    """(key_col, id_a, id_b, *<col>_a, *<col>_b) with id_a < id_b for every
+    two rows sharing a key — the repo's one capped key self-join.  Every
+    other column of `keys` is carried through as <col>_a / <col>_b.  Each
+    key keeps its first `cap` rows in (id_col, *carried) order (row_number
+    window), so a hot key emits at most C(cap, 2) pairs whatever the corpus
+    size — a deterministic, disclosed recall bound — and an id repeated
+    under one key (several positions of a doc) still ranks totally.  Pairs
+    sharing several keys come out once per key; callers dedup or count."""
+    carried = [c for c in keys.columns if c not in (id_col, key_col)]
+    w = Window.partitionBy(key_col).orderBy(id_col, *carried)
     capped = (
-        keys.select(id_col, key_col)
-        .withColumn("rn", F.row_number().over(w))
+        keys.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= cap)
         .drop("rn")
     )
-    a = capped.toDF("id_a", key_col)
-    b = capped.toDF("id_b", key_col)
+
+    def side(s: str) -> DataFrame:
+        return capped.select(
+            key_col,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carried],
+        )
+
     return (
-        a.join(b, key_col)
+        side("a").join(side("b"), key_col)
         .where(F.col("id_a") < F.col("id_b"))
-        .select(key_col, "id_a", "id_b")
+        .select(
+            key_col, "id_a", "id_b",
+            *[f"{c}_a" for c in carried], *[f"{c}_b" for c in carried],
+        )
     )
 
 
@@ -235,7 +251,7 @@ def candidate_pairs(
     mh_keys = minhash_band_keys(
         surfaces,
         ["node_id", "norm_name"],
-        char_shingles_col("norm_name", cfg.shingle_k),
+        char_shingles_col(cfg.shingle_k),
         cfg.minhash_bands,
         cfg.minhash_rows,
         sep=":",

@@ -45,10 +45,11 @@ from pyspark.sql import functions as F
 
 __all__ = ["bpe_word_counts", "bpe_train", "bpe_merges_df"]
 
+# vocabulary size the merges are learned over
+TOP_WORDS = 2000
 
-def bpe_word_counts(
-    documents: DataFrame, top_words: int = 2000
-) -> DataFrame:
+
+def bpe_word_counts(documents: DataFrame, top_words: int) -> DataFrame:
     """(word, cnt) for the top_words most frequent [a-z]+ tokens.
 
     Ties broken by word ascending so the cutoff is deterministic under any
@@ -66,9 +67,9 @@ def bpe_word_counts(
     )
 
 
-def _seq_col(word_col: str):
+def _seq_col():
     """Word -> double-space-delimited character-symbol sequence."""
-    return F.concat(F.lit("  "), F.regexp_replace(F.col(word_col), "(.)", "$1  "))
+    return F.concat(F.lit("  "), F.regexp_replace(F.col("word"), "(.)", "$1  "))
 
 
 def _pair_counts(words_seq: DataFrame) -> DataFrame:
@@ -85,18 +86,14 @@ def _pair_counts(words_seq: DataFrame) -> DataFrame:
     )
 
 
-def bpe_train(
-    documents: DataFrame,
-    n_merges: int,
-    top_words: int = 2000,
-) -> list[dict]:
+def bpe_train(documents: DataFrame, n_merges: int) -> list[dict]:
     """Learn n_merges BPE merges; returns [{step, left_sym, right_sym,
     pair_cnt}] in merge order.  One corpus scan total; each merge iteration
     runs on the checkpointed V-row word table and collects one row."""
     words = (
-        bpe_word_counts(documents, top_words)
-        .select("cnt", _seq_col("word").alias("seq"))
-        .localCheckpoint()  # bounded (<= top_words rows); cuts corpus lineage
+        bpe_word_counts(documents, TOP_WORDS)
+        .select("cnt", _seq_col().alias("seq"))
+        .localCheckpoint()  # bounded (<= TOP_WORDS rows); cuts corpus lineage
     )
     merges: list[dict] = []
     seq = F.col("seq")
@@ -172,10 +169,9 @@ def bpe_merges_df(
     spark: SparkSession,
     documents: DataFrame,
     n_merges: int,
-    top_words: int = 2000,
 ) -> DataFrame:
     """bpe_train as a (step, left_sym, right_sym, pair_cnt) DataFrame."""
-    merges = bpe_train(documents, n_merges, top_words)
+    merges = bpe_train(documents, n_merges)
     schema = "step int, left_sym string, right_sym string, pair_cnt bigint"
     return spark.createDataFrame(
         [(m["step"], m["left_sym"], m["right_sym"], m["pair_cnt"]) for m in merges],

@@ -18,8 +18,11 @@ Exact + near-dup over a `documents(doc_id, text, ...)` table:
   * embedding near-dup lives in similarity.py (cosine threshold join)
 
 All shapes are chosen for 100 TB: candidates come only from key-equality
-joins (band bucket / shared ngram), every hot bucket is capped with a
-window, and verification happens on the candidate set only.
+joins (band bucket / shared ngram), every capped hot key (MinHash and
+simhash band buckets, duplicated-span grams) goes through the one cap
+kernel, blocking.capped_key_pairs, and verification happens on the
+candidate set only.  Word n-grams come from one expression,
+word_ngrams_col, shared with textstats.
 """
 
 from __future__ import annotations
@@ -32,6 +35,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from berkeley_entity_spark.operators.blocking import capped_key_pairs, minhash_band_keys
+
+# MinHash-LSH banding of word 3-shingles (batch dedup, fuzzy
+# decontamination and the incremental dedup stream)
+LSH_BANDS, LSH_ROWS = 4, 2
+# token-gram width of the exact decontamination probes
+DECONTAM_K = 13
+# hash functions of the Bloom decontamination filter
+BLOOM_HASHES = 3
+# duplicated_spans: gram width and the shortest span reported, in tokens
+SPAN_K, SPAN_MIN_LEN = 8, 15
 
 
 def tokens_col():
@@ -51,31 +64,31 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
+def word_ngrams_col(toks, n: int):
+    """The space-joined n-grams of the token array `toks`, empty when it
+    has fewer than n tokens — the repo's one word n-gram expression (pure
+    SQL: transform over a sequence of slices, so it stays in codegen)."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def shingles_col(n: int = 3):
-    """Word n-gram shingles as an array column (pure SQL expressions:
-    transform over a sequence of slices — stays in codegen); the whole token
-    string when there are fewer than n tokens, and no shingle at all for a
+    """Word n-gram shingles as an array column (word_ngrams_col); the whole
+    token string when there are 1..n-1 tokens, and no shingle at all for a
     token-less (empty or whitespace-only) doc, so such docs land in no
     bucket and never pair with each other."""
     toks = tokens_col()
-    return (
-        F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            ),
-        )
-        .when(F.size(toks) > 0, F.array(F.array_join(toks, " ")))
-        .otherwise(F.array().cast("array<string>"))
-    )
+    return F.when(
+        F.size(toks).between(1, n - 1), F.array(F.array_join(toks, " "))
+    ).otherwise(word_ngrams_col(toks, n))
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame,
-    bands: int = 4,
-    rows: int = 2,
-) -> DataFrame:
+def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing an LSH band bucket of
     word 3-shingles, hot buckets capped at 200 docs (doc_id order)."""
     # NOT persisted: the self-join recomputes the md5 signature exprs on
@@ -83,7 +96,7 @@ def minhash_lsh_pairs(
     # at 4.9s vs 6.0s persisted — codegen md5 is cheaper than row-cache
     # materialization
     buckets = minhash_band_keys(
-        documents, ["doc_id"], shingles_col(3), bands, rows
+        documents, ["doc_id"], shingles_col(3), LSH_BANDS, LSH_ROWS
     )
     return (
         capped_key_pairs(buckets, "doc_id", "bucket", 200)
@@ -94,7 +107,6 @@ def minhash_lsh_pairs(
 
 def ngram_jaccard_pairs(
     documents: DataFrame,
-    n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for every pair sharing >=1 n-gram in
@@ -137,7 +149,7 @@ def ngram_jaccard_pairs(
     # a lazy persist lets the six branches race before the cache fills.
     dn = documents.select(
         "doc_id",
-        F.explode(F.array_distinct(shingles_col(n))).alias("ngram"),
+        F.explode(F.array_distinct(shingles_col(3))).alias("ngram"),
     ).persist()
     dn.count()
     sizes = dn.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
@@ -214,8 +226,6 @@ def ngram_jaccard_pairs(
 def fuzzy_contaminated_docs(
     documents: DataFrame,
     benchmark: DataFrame,
-    bands: int = 4,
-    rows: int = 2,
 ) -> DataFrame:
     """Near-duplicate benchmark decontamination: flag training docs whose
     MinHash-LSH band bucket (word 3-shingles) collides with any benchmark
@@ -234,11 +244,11 @@ def fuzzy_contaminated_docs(
     training doc; a benchmark doc present in training flags itself (the
     decontamination pass is expected to drop it)."""
     tb = minhash_band_keys(
-        documents, ["doc_id"], shingles_col(3), bands, rows
+        documents, ["doc_id"], shingles_col(3), LSH_BANDS, LSH_ROWS
     )
     bb = (
         minhash_band_keys(
-            benchmark, ["doc_id"], shingles_col(3), bands, rows
+            benchmark, ["doc_id"], shingles_col(3), LSH_BANDS, LSH_ROWS
         )
         .select("bucket", F.col("doc_id").alias("bench_id"))
         .distinct()
@@ -320,10 +330,10 @@ def simhash_near_pairs(
     as a star (rep, member) — LINEAR in the dup-class size, where the old
     all-pairs form was quadratic on exactly the templated-boilerplate
     classes a dedup pass exists for.  The band join then runs over DISTINCT
-    signatures only, with the same `row_number() <= max_bucket` hot-bucket
-    cap as blocking.capped_key_pairs (recall loss from the cap is deliberate and
-    mirrored bitwise in the DuckDB oracle).  Under transitive closure the
-    star + rep-rep edge set yields the same components as all-pairs.
+    signatures only, through blocking.capped_key_pairs with max_bucket as
+    its cap (recall loss from the cap is deliberate and mirrored bitwise in
+    the DuckDB oracle).  Under transitive closure the star + rep-rep edge
+    set yields the same components as all-pairs.
     """
     sig = simhash64(documents).where(F.col("simhash").isNotNull())
     groups = sig.groupBy("simhash").agg(F.min("doc_id").alias("rep"))
@@ -352,29 +362,16 @@ def simhash_near_pairs(
             )
         ).alias("bucket"),
     )
-    w = Window.partitionBy("bucket").orderBy("rep")
-    ranked = bands.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= max_bucket
-    )
-    a, b = ranked.alias("a"), ranked.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .select(
-            F.col("a.rep").alias("id_a"),
-            F.col("b.rep").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
+        capped_key_pairs(bands, "rep", "bucket", max_bucket)
+        .select("id_a", "id_b", "simhash_a", "simhash_b")
         .distinct()
     )
     cross = cand.select(
         "id_a",
         "id_b",
-        F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int").alias("hamming"),
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+        .cast("int").alias("hamming"),
     ).where(F.col("hamming") <= max_hamming)
     return intra.unionByName(cross)
 
@@ -412,14 +409,10 @@ def near_dup_keep_one(documents: DataFrame) -> DataFrame:
     )
 
 
-def contaminated_docs(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    k: int = 13,
-) -> DataFrame:
+def contaminated_docs(documents: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Training-corpus decontamination (the GPT-3 appendix-C / C4-audit
     shape: Brown et al. 2020, Dodge et al. 2021): flag every training doc
-    that shares any k-token gram with an evaluation benchmark.
+    that shares any DECONTAM_K-token gram with an evaluation benchmark.
 
     Grams come from kgram_positions (md5 of the token window — codegen,
     engine-portable); the benchmark side is deduped to distinct
@@ -432,9 +425,9 @@ def contaminated_docs(
     Output: one row per CONTAMINATED training doc —
     (doc_id, n_hit_grams = distinct contaminated gram positions,
     n_bench_docs = distinct benchmark docs hit)."""
-    tg = kgram_positions(documents, k)
+    tg = kgram_positions(documents, DECONTAM_K)
     bg = (
-        kgram_positions(benchmark, k)
+        kgram_positions(benchmark, DECONTAM_K)
         .select(F.col("gram_h").alias("g"), F.col("doc_id").alias("bench_id"))
         .distinct()
     )
@@ -448,9 +441,7 @@ def contaminated_docs(
     )
 
 
-def kgram_positions(
-    documents: DataFrame, k: int = 8
-) -> DataFrame:
+def kgram_positions(documents: DataFrame, k: int) -> DataFrame:
     """(doc_id, pos, gram_h) — md5 of every k-token gram, with its 0-based
     token position.  Whole-stage codegen (split/slice/concat_ws/md5), no
     Python; md5 keeps the gram key engine-portable for the DuckDB oracle."""
@@ -466,8 +457,6 @@ def kgram_positions(
 
 def duplicated_spans(
     documents: DataFrame,
-    k: int = 8,
-    min_len: int = 15,
     max_gram_rows: int = 200,
 ) -> DataFrame:
     """Exact duplicated-substring spans across document pairs — the
@@ -475,34 +464,25 @@ def duplicated_spans(
     Language Models Better"), re-expressed as a distributed gaps-and-islands
     query instead of a suffix array:
 
-      1. every k-token gram with its position (kgram_positions),
-      2. hot-gram cap: row_number over gram_h <= max_gram_rows (the minhash
-         max_bucket pattern — boilerplate grams shared by thousands of docs
-         would otherwise produce quadratic candidate rows),
-      3. equi-join on gram_h (doc_a < doc_b) -> matched position pairs,
-      4. islands: along a (doc_a, doc_b, pos_a - pos_b) diagonal, consecutive
+      1. every SPAN_K-token gram with its position (kgram_positions),
+      2. blocking.capped_key_pairs on gram_h, pos carried: each gram keeps
+         its first max_gram_rows (doc_id, pos) rows — boilerplate grams
+         shared by thousands of docs would otherwise produce quadratic
+         candidate rows — and pairs them (doc_a < doc_b) into matched
+         position pairs,
+      3. islands: along a (doc_a, doc_b, pos_a - pos_b) diagonal, consecutive
          matched grams satisfy pos_a - row_number() = const, so one groupBy
          recovers each MAXIMAL shared token run,
-      5. keep runs of >= min_len tokens (span_len = #grams + k - 1).
+      4. keep runs of >= SPAN_MIN_LEN tokens
+         (span_len = #grams + SPAN_K - 1).
 
     Output: (doc_a, doc_b, a_start, b_start, span_len), one row per maximal
     shared run.  At 100 TB every stage is a key-equality shuffle with a
     bounded hot key; nothing is quadratic in corpus size."""
-    g = kgram_positions(documents, k)
-    wcap = Window.partitionBy("gram_h").orderBy("doc_id", "pos")
-    capped = g.withColumn("rn", F.row_number().over(wcap)).where(
-        F.col("rn") <= max_gram_rows
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    m = a.join(
-        b,
-        (F.col("a.gram_h") == F.col("b.gram_h"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    m = capped_key_pairs(
+        kgram_positions(documents, SPAN_K), "doc_id", "gram_h", max_gram_rows
     ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.pos").alias("pos_a"),
-        F.col("b.pos").alias("pos_b"),
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "pos_a", "pos_b"
     )
     diag = F.col("pos_a") - F.col("pos_b")
     wisl = Window.partitionBy("doc_a", "doc_b", diag).orderBy("pos_a")
@@ -512,9 +492,9 @@ def duplicated_spans(
         .agg(
             F.min("pos_a").cast("int").alias("a_start"),
             F.min("pos_b").cast("int").alias("b_start"),
-            (F.count("*") + F.lit(k - 1)).cast("int").alias("span_len"),
+            (F.count("*") + F.lit(SPAN_K - 1)).cast("int").alias("span_len"),
         )
-        .where(F.col("span_len") >= min_len)
+        .where(F.col("span_len") >= SPAN_MIN_LEN)
         .select("doc_a", "doc_b", "a_start", "b_start", "span_len")
     )
 
@@ -550,7 +530,6 @@ def doc_segments(
 
 def segment_dedup(
     documents: DataFrame,
-    min_dup_docs: int = 2,
     seg_tokens: int = 10,
     delim: str | None = None,
 ) -> DataFrame:
@@ -558,8 +537,8 @@ def segment_dedup(
     drop every line whose hash is shared across documents — the step that
     strips boilerplate headers/menus/cookie banners from Common Crawl).
 
-    A segment is removed from EVERY doc when its md5 appears in >=
-    `min_dup_docs` DISTINCT documents; survivors are reassembled in
+    A segment is removed from EVERY doc when its md5 appears in >= 2
+    DISTINCT documents; survivors are reassembled in
     segment order.  Output: (doc_id, n_segs, n_removed, text_clean) for
     every non-empty doc.
 
@@ -576,7 +555,7 @@ def segment_dedup(
     dup = (
         segs.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
-        .where(F.col("n_docs") >= min_dup_docs)
+        .where(F.col("n_docs") >= 2)
         .select("h", F.lit(True).alias("_dup"))
     )
     flagged = segs.join(dup, "h", "left").withColumn(
@@ -628,13 +607,11 @@ def bloom_benchmark_bits(
 def bloom_contaminated_docs(
     documents: DataFrame,
     benchmark: DataFrame,
-    k: int = 13,
     m_bits: int = 1 << 18,
-    k_hashes: int = 3,
 ) -> DataFrame:
     """Bloom-filter benchmark decontamination — the BFF / Dolma-deduper
-    shape (Soldaini et al. 2024; Groeneveld's bff): the benchmark's k-gram
-    Bloom filter is a fixed m-bit array BROADCAST to every executor, and
+    shape (Soldaini et al. 2024; Groeneveld's bff): the benchmark's
+    DECONTAM_K-gram Bloom filter is a fixed m-bit array BROADCAST to every executor, and
     the training corpus is scanned with ZERO shuffle and ZERO join — each
     doc tests its grams against the bitset in an Arrow kernel.  This is
     the scale path next to the exact join in `contaminated_docs`: at
@@ -643,7 +620,7 @@ def bloom_contaminated_docs(
     independent of benchmark size.
 
     False positives are inherent to the structure (rate ~ fill_ratio **
-    k_hashes) but DETERMINISTIC given (m_bits, k_hashes) — both engines
+    BLOOM_HASHES) but DETERMINISTIC given (m_bits, BLOOM_HASHES) — both engines
     compute the identical bit arithmetic, so the DuckDB oracle replays
     membership bit-for-bit.
 
@@ -655,7 +632,9 @@ def bloom_contaminated_docs(
     >= 1 Bloom-positive gram."""
     import hashlib
 
-    bits_rows = bloom_benchmark_bits(benchmark, k, m_bits, k_hashes).collect()
+    bits_rows = bloom_benchmark_bits(
+        benchmark, DECONTAM_K, m_bits, BLOOM_HASHES
+    ).collect()
     bitset = np.zeros(m_bits // 8, dtype=np.uint8)
     for r in bits_rows:
         b = int(r.bit)
@@ -673,13 +652,13 @@ def bloom_contaminated_docs(
             out = {"doc_id": [], "n_grams": [], "n_maybe_grams": []}
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = [t for t in (text or "").split(" ") if t]
-                n_grams = max(0, len(toks) - k + 1)
+                n_grams = max(0, len(toks) - DECONTAM_K + 1)
                 if n_grams == 0:
                     continue
                 n_maybe = 0
                 for i in range(n_grams):
                     gh = hashlib.md5(
-                        " ".join(toks[i : i + k]).encode()
+                        " ".join(toks[i : i + DECONTAM_K]).encode()
                     ).hexdigest()
                     if all(
                         test(
@@ -691,7 +670,7 @@ def bloom_contaminated_docs(
                             )
                             % m_bits
                         )
-                        for j in range(k_hashes)
+                        for j in range(BLOOM_HASHES)
                     ):
                         n_maybe += 1
                 if n_maybe:

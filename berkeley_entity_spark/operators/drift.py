@@ -41,11 +41,8 @@ from pyspark.sql import functions as F
 ALPHA = 0.5
 
 
-def snapshot_histograms(
-    documents: DataFrame,
-    snapshot_col: str = "source",
-) -> DataFrame:
-    """(snapshot, feature, bin, cnt) — per-snapshot histogram counts for
+def snapshot_histograms(documents: DataFrame) -> DataFrame:
+    """(snapshot, feature, bin, cnt) — per-snapshot (`source`) histogram counts for
     the two monitored features: 'len' (character-length bins of width
     200 chars, 8 bins, top bin open) and 'lang' (the language-id column).
     One corpus scan, map-side combine; output is |snapshots| x |bins|
@@ -58,7 +55,7 @@ def snapshot_histograms(
     # NULL, so without this a shift in the NULL share would silently drop
     # out of the histogram mass and be invisible to the PSI alarm
     base = documents.select(
-        F.col(snapshot_col).alias("snapshot"),
+        F.col("source").alias("snapshot"),
         F.coalesce(len_bin, F.lit("<NULL>")).alias("_len"),
         F.coalesce(F.col("lang"), F.lit("<NULL>")).alias("lang"),
     )
@@ -74,10 +71,7 @@ def snapshot_histograms(
     )
 
 
-def drift_psi(
-    documents: DataFrame,
-    snapshot_col: str = "source",
-) -> DataFrame:
+def drift_psi(documents: DataFrame) -> DataFrame:
     """(snapshot, feature, n_docs, psi, drifted = psi > 0.25) — PSI of every snapshot
     vs its predecessor (snapshots ordered lexicographically; the first
     snapshot has no predecessor and is omitted), one row per (snapshot,
@@ -91,9 +85,8 @@ def drift_psi(
     grid never rescans the corpus.  Snapshot rank comes from a window
     over the distinct-snapshot table (|snapshots| rows, not row-level
     data)."""
-    hist = snapshot_histograms(
-        documents, snapshot_col
-    ).localCheckpoint(eager=True)  # grid domains + fill share one corpus scan
+    # grid domains + fill share one corpus scan
+    hist = snapshot_histograms(documents).localCheckpoint(eager=True)
     snaps = hist.select("snapshot").distinct()
     snaps = snaps.select(
         "snapshot",

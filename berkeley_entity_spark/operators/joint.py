@@ -62,6 +62,7 @@ TYPE_DOMAIN = ("LOC", "MISC", "ORG", "PER")  # sorted; index = domain value
 NIL = ""  # link domain position 0
 ANT_WINDOW = 8  # antecedent candidates per mention: the previous 8
 BP_ITERS = 5  # loopy-BP iterations per document graph
+N_CANDS = 2  # candidate titles per surface (per query variant)
 # an antecedent whose unary score is below this can't beat NEW (score 0)
 PRUNE_MARGIN = -4.0
 
@@ -90,10 +91,10 @@ def type_unary(tokens: list[str], persons, orgs, locs) -> np.ndarray:
 
 
 def surface_link_candidates(
-    link_votes: DataFrame, title_type_expr=None, top_k: int = 3
+    link_votes: DataFrame, title_type_expr=None
 ) -> DataFrame:
     """(surface, cands array<struct<title,votes,ttype>>) — each surface's
-    top-k candidate titles by (votes desc, title asc), the per-mention
+    top-N_CANDS candidate titles by (votes desc, title asc), the per-mention
     link domain (WikipediaTitleGivenSurfaceDB semantics; deterministic).
 
     link_votes: (surface, title, votes).  title_type_expr: a Column
@@ -108,7 +109,7 @@ def surface_link_candidates(
     w = Window.partitionBy("surface").orderBy(F.desc("votes"), F.asc("title"))
     return (
         link_votes.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= top_k)
+        .where(F.col("_rn") <= N_CANDS)
         .withColumn("ttype", title_type_expr)
         .groupBy("surface")
         .agg(
@@ -119,32 +120,32 @@ def surface_link_candidates(
     )
 
 
-def query_variants_col(surface_col: str = "surface"):
+def query_variants_col():
     """Deterministic query variants for a mention surface — the web-scale
     analog of the reference's Query.extractQueriesBest (wiki/Query.scala:
     the final-head span, the full span, de-determined forms): full
     surface, first token, last token; deduplicated keeping first, so the
     variant INDEX is a stable domain position."""
-    s = F.col(surface_col)
+    s = F.col("surface")
     toks = F.split(s, " ")
     return F.array_distinct(
         F.array(s, F.element_at(toks, 1), F.element_at(toks, -1))
     )
 
 
-def surface_query_candidates(link_votes: DataFrame, top_k: int = 3) -> DataFrame:
+def surface_query_candidates(link_votes: DataFrame) -> DataFrame:
     """(surface, qcands array<struct<q_idx,variant,cands>>) — the latent
     query layer's per-surface domain (JointDocFactorGraphOnto.scala:135-175
     wires one Query node per mention whose choice selects which candidate
     list feeds the link variable).  Each variant's candidate list is the
-    vote DB's top-k for THAT variant string — a first-token query hits the
+    vote DB's top-N_CANDS for THAT variant string — a first-token query hits the
     DB only where the token is itself a known surface, exactly the
     ambiguity the latent variable exists to arbitrate."""
-    per_surface = surface_link_candidates(link_votes, top_k=top_k)
+    per_surface = surface_link_candidates(link_votes)
     surfaces = link_votes.select("surface").distinct()
     variants = surfaces.select(
         "surface",
-        F.posexplode(query_variants_col("surface")).alias("q_idx", "variant"),
+        F.posexplode(query_variants_col()).alias("q_idx", "variant"),
     )
     joined = variants.join(
         per_surface.toDF("variant", "vcands"), "variant", "left"

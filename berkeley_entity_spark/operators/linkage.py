@@ -16,6 +16,9 @@ of the pattern — the match weight a linker thresholds on.
 
 Scale shape (the whole point of this formulation at 100 TB):
 
+  * blocking is the repo's one capped key self-join
+    (blocking.capped_key_pairs, first-token key, MAX_BLOCK_FS), and the
+    clerical-review sample its one salted top-k (util.salted_top_k);
   * gamma extraction is one whole-stage-codegen projection over the
     blocked candidate pairs (integer comparisons only — levenshtein and
     set-size arithmetic, no floats, so the discretization is
@@ -46,6 +49,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from berkeley_entity_spark.operators.blocking import (
+    capped_key_pairs,
+    phonetic_pairs,
+    soundex_key_col,
+)
+from berkeley_entity_spark.util import salted_top_k
 
 __all__ = [
     "fs_gate_records",
@@ -80,6 +90,11 @@ INIT = {
 N_ITER = 5
 # hot-block cap of the soundex-class phonetic blocking pass
 MAX_BLOCK_PHONETIC = 64
+# hot-block cap of the first-token blocking pass (fs_comparison_vectors)
+MAX_BLOCK_FS = 48
+# three-way decision rule of the review queue: link at p >= REVIEW_UPPER,
+# non-link below REVIEW_LOWER, clerical review between
+REVIEW_LOWER, REVIEW_UPPER = 0.2, 0.8
 
 
 def fs_gate_records(documents: DataFrame) -> DataFrame:
@@ -101,29 +116,24 @@ def fs_gate_records(documents: DataFrame) -> DataFrame:
     return base.unionByName(exact).unionByName(near)
 
 
-def fs_comparison_vectors(records: DataFrame, max_block: int = 48) -> DataFrame:
-    """(id_a, id_b, g_name, g_tok) — first-token blocked candidate pairs
-    (standard row_number hot-block cap, deterministic rec_id order) with
-    the integer-exact discretized comparison vector."""
+def fs_comparison_vectors(records: DataFrame) -> DataFrame:
+    """(id_a, id_b, g_name, g_tok, name_a, name_b) — first-token blocked
+    candidate pairs (blocking.capped_key_pairs: hot-block cap in rec_id
+    order) with the integer-exact discretized comparison vector."""
     toks = F.filter(F.split(F.col("name"), " "), lambda t: t != "")
     keyed = records.select(
         "rec_id", "name", F.element_at(toks, 1).alias("blk")
     )
-    w = Window.partitionBy("blk").orderBy("rec_id")
-    capped = keyed.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= max_block
-    ).drop("rn")
-    a, b = capped.alias("a"), capped.alias("b")
-    na, nb = F.col("a.name"), F.col("b.name")
+    na, nb = F.col("name_a"), F.col("name_b")
     ta = F.array_distinct(F.filter(F.split(na, " "), lambda t: t != ""))
     tb = F.array_distinct(F.filter(F.split(nb, " "), lambda t: t != ""))
     inter = F.size(F.array_intersect(ta, tb))
     union = F.size(ta) + F.size(tb) - inter
     return (
-        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.rec_id") < F.col("b.rec_id")))
+        capped_key_pairs(keyed, "rec_id", "blk", MAX_BLOCK_FS)
         .select(
-            F.col("a.rec_id").alias("id_a"),
-            F.col("b.rec_id").alias("id_b"),
+            "id_a",
+            "id_b",
             F.when(na == nb, F.lit(2))
             .when(
                 10 * F.levenshtein(na, nb) <= 3 * F.greatest(F.length(na), F.length(nb)),
@@ -132,8 +142,8 @@ def fs_comparison_vectors(records: DataFrame, max_block: int = 48) -> DataFrame:
             .otherwise(F.lit(0))
             .alias("g_name"),
             F.when(2 * inter >= union, F.lit(1)).otherwise(F.lit(0)).alias("g_tok"),
-            na.alias("name_a"),
-            nb.alias("name_b"),
+            "name_a",
+            "name_b",
         )
     )
 
@@ -285,11 +295,11 @@ def fs_tf_adjusted(records: DataFrame, pairs: DataFrame, params: dict) -> DataFr
     )
 
 
-def fs_link(documents: DataFrame, max_block: int = 48) -> DataFrame:
+def fs_link(documents: DataFrame) -> DataFrame:
     """End-to-end gate pipeline: records -> blocked comparison vectors ->
     pattern counts (bounded collect, <= 6 rows) -> EM -> codegen
     classification."""
-    pairs = fs_comparison_vectors(fs_gate_records(documents), max_block=max_block)
+    pairs = fs_comparison_vectors(fs_gate_records(documents))
     pairs = pairs.localCheckpoint(eager=True)  # pattern agg + final projection share it
     pats = [
         (r["g_name"], r["g_tok"], r["n"])
@@ -301,13 +311,11 @@ def fs_link(documents: DataFrame, max_block: int = 48) -> DataFrame:
     return fs_classify(pairs, params)
 
 
-def fs_link_tf(documents: DataFrame, max_block: int = 48) -> DataFrame:
+def fs_link_tf(documents: DataFrame) -> DataFrame:
     """fs_link with the term-frequency adjustment applied to exact-name
     agreements (fs_tf_adjusted) — same EM fit, value-specific u."""
     recs = fs_gate_records(documents)
-    pairs = fs_comparison_vectors(recs, max_block=max_block).localCheckpoint(
-        eager=True
-    )
+    pairs = fs_comparison_vectors(recs).localCheckpoint(eager=True)
     pats = [
         (r["g_name"], r["g_tok"], r["n"])
         for r in pairs.groupBy("g_name", "g_tok")
@@ -324,21 +332,15 @@ _HONORIFICS = ("mr", "mrs", "ms", "dr", "prof", "sir", "rev", "hon", "mx")
 _GEN_SUFFIXES = ("jr", "sr", "ii", "iii", "iv", "esq", "phd", "md")
 
 
-def _drop_edge_tokens(toks: Column, words: tuple[str, ...], leading: bool) -> Column:
-    """Drop up to two leading (or trailing) tokens drawn from `words` —
+def _drop_leading_tokens(toks: Column, words: tuple[str, ...]) -> Column:
+    """Drop up to two leading tokens drawn from `words` —
     positional, so a surname that happens to spell an honorific ('Sir
     Alex' vs the surname 'Sirs') is only dropped at the edge.  Pure
     array expressions; unrolled twice (no recursion in codegen)."""
     wl = F.array(*[F.lit(w) for w in words])
     for _ in range(2):
-        edge = F.element_at(toks, 1 if leading else -1)
-        hit = F.array_contains(wl, edge) & (F.size(toks) >= 2)
-        toks = F.when(
-            hit,
-            F.slice(toks, 2, F.size(toks) - 1)
-            if leading
-            else F.slice(toks, 1, F.size(toks) - 1),
-        ).otherwise(toks)
+        hit = F.array_contains(wl, F.element_at(toks, 1)) & (F.size(toks) >= 2)
+        toks = F.when(hit, F.slice(toks, 2, F.size(toks) - 1)).otherwise(toks)
     return toks
 
 
@@ -380,7 +382,7 @@ def standardize_person_names(df: DataFrame) -> DataFrame:
     ).otherwise(raw)
     comma = F.regexp_replace(comma, ",", " ")
     toks = F.filter(F.split(comma, " +"), lambda t: t != "")
-    toks = _drop_edge_tokens(toks, _HONORIFICS, leading=True)
+    toks = _drop_leading_tokens(toks, _HONORIFICS)
     sufl = F.array(*[F.lit(w) for w in _GEN_SUFFIXES])
     desuf = F.filter(toks, lambda t: ~F.array_contains(sufl, t))
     toks = F.when(F.size(desuf) >= 1, desuf).otherwise(toks)
@@ -402,8 +404,6 @@ def standardize_person_names(df: DataFrame) -> DataFrame:
 def review_queue(
     scored: DataFrame,
     per_band: int = 10,
-    lower: float = 0.2,
-    upper: float = 0.8,
 ) -> DataFrame:
     """Posterior-band stratified labeling queue over scored candidate
     pairs — the clerical-review stage of the Fellegi-Sunter three-way
@@ -417,15 +417,13 @@ def review_queue(
     under any partitioning and any engine, unlike rand()-based sampling.
 
     Scale shape: band counts are a map-side-combining groupBy; the
-    per-band sample is the repo-standard two-phase top-k (salted local
-    top-per_band per (band, salt), then a final window over
-    <= per_band * 32 salts survivors per band), so no task ever sorts a
-    full band even when one posterior value covers half the corpus.
+    per-band sample is util.salted_top_k, so no task ever sorts a full
+    band even when one posterior value covers half the corpus.
 
     Output: (band, rn, id_a, id_b, p_match, decision) where decision is
-    the three-way rule at (lower, upper) — the queue keeps link/non-link
-    rows too (spot-check strata), but the review band is where labels
-    are spent.
+    the three-way rule at (REVIEW_LOWER, REVIEW_UPPER) — the queue keeps
+    link/non-link rows too (spot-check strata), but the review band is
+    where labels are spent.
     """
     h = F.md5(
         F.concat(
@@ -442,23 +440,16 @@ def review_queue(
         F.least(F.floor(F.col("p_match") * 10), F.lit(9)).cast("int").alias("band"),
         h.alias("_h"),
     )
-    salt = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(32))
-    w1 = Window.partitionBy("band", salt).orderBy("_h", "id_a", "id_b")
-    survivors = d.withColumn("_rn1", F.row_number().over(w1)).where(
-        F.col("_rn1") <= per_band
-    )
-    w2 = Window.partitionBy("band").orderBy("_h", "id_a", "id_b")
     dec = (
-        F.when(F.col("p_match") >= upper, F.lit("link"))
-        .when(F.col("p_match") < lower, F.lit("nonlink"))
+        F.when(F.col("p_match") >= REVIEW_UPPER, F.lit("link"))
+        .when(F.col("p_match") < REVIEW_LOWER, F.lit("nonlink"))
         .otherwise(F.lit("review"))
     )
     return (
-        survivors.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= per_band)
+        salted_top_k(d, ["band"], ["_h", "id_a", "id_b"], per_band)
         .select(
             "band",
-            F.col("rn").cast("int").alias("rn"),
+            F.col("rank").alias("rn"),
             "id_a",
             "id_b",
             "p_match",
@@ -593,8 +584,6 @@ def dup_estimate_capture_recapture(documents: DataFrame) -> DataFrame:
     lookup join for the phonetic pass's gammas, one pair-key equi-join
     for the overlap, three scalar aggregates.  Output: one row
     (n_pass1, n_pass2, overlap, chapman_est, n_gold)."""
-    from berkeley_entity_spark.operators.blocking import phonetic_pairs
-
     recs = fs_gate_records(documents)
     p1 = (
         fs_comparison_vectors(recs)
@@ -645,7 +634,7 @@ def dup_estimate_capture_recapture(documents: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------- match-weight report
 
-def match_weights_report(documents: DataFrame, max_block: int = 48) -> DataFrame:
+def match_weights_report(documents: DataFrame) -> DataFrame:
     """Per-comparison-level parameter table of the trained FS model —
     m, u, Bayes factor m/u, and log2 match weight per gamma level, plus
     the lambda prior row (Splink's `m_u_parameters_chart` /
@@ -657,7 +646,7 @@ def match_weights_report(documents: DataFrame, max_block: int = 48) -> DataFrame
     statistics (<= 6 rows collected) exactly as fs_link does; the report
     itself is a 6-row literal frame — no corpus-sized work beyond the
     one blocked-pairs aggregation."""
-    pairs = fs_comparison_vectors(fs_gate_records(documents), max_block=max_block)
+    pairs = fs_comparison_vectors(fs_gate_records(documents))
     pats = [
         (r["g_name"], r["g_tok"], r["n"])
         for r in pairs.groupBy("g_name", "g_tok")
@@ -701,8 +690,6 @@ def blocking_cascade_report(documents: DataFrame, gold: DataFrame) -> DataFrame:
     task; 1 char here so the DuckDB oracle replays it verbatim).  Pass
     stats are scalar aggregates unioned into a
     3-row frame; nothing is collected."""
-    from berkeley_entity_spark.operators.blocking import phonetic_pairs
-
     recs = fs_gate_records(documents)
     p1 = fs_comparison_vectors(recs).select("id_a", "id_b")
 
@@ -858,7 +845,7 @@ def one_to_one_matches(scored: DataFrame, rounds: int | None = None) -> DataFram
 
 # ------------------------------------------------- block-size skew audit
 
-def block_size_profile(documents: DataFrame, max_block: int = 48) -> DataFrame:
+def block_size_profile(documents: DataFrame, max_block: int = MAX_BLOCK_FS) -> DataFrame:
     """Block-size distribution audit per blocking key type — the FIRST
     report a 100 TB blocking run is sized from: how many keys, the
     hottest block, the share of records it holds (head-domain skew), and
@@ -871,8 +858,6 @@ def block_size_profile(documents: DataFrame, max_block: int = 48) -> DataFrame:
     count), then a scalar aggregate over the key-cardinality table;
     integer-exact pair arithmetic (k*(k-1) DIV 2).  Output: one row per
     key type."""
-    from berkeley_entity_spark.operators.blocking import soundex_key_col
-
     recs = fs_gate_records(documents)
     toks = F.filter(F.split(F.col("name"), " "), lambda t: t != "")
     ft = recs.select(F.element_at(toks, 1).alias("key"))

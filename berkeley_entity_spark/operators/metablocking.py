@@ -108,10 +108,6 @@ def wnp_prune(edges: DataFrame) -> DataFrame:
     )
 
 
-def meta_blocking_pairs(
-    documents: DataFrame, max_block: int = 64
-) -> DataFrame:
+def meta_blocking_pairs(documents: DataFrame) -> DataFrame:
     """End-to-end: multi-pass keys -> capped block graph -> WNP prune."""
-    return wnp_prune(
-        block_graph_edges(doc_block_keys(documents), max_block)
-    )
+    return wnp_prune(block_graph_edges(doc_block_keys(documents)))

@@ -572,15 +572,15 @@ def resize_media(
     )
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Pure-SQL frame sampling plan for video rows: explode the timestamp
-    grid from meta.duration_ms — the decode of each frame would be another
+def frame_sample_plan(media: DataFrame) -> DataFrame:
+    """Pure-SQL frame sampling plan for video rows: explode the 500 ms
+    timestamp grid from meta.duration_ms — the decode of each frame would be another
     mapInPandas over (media_id, frame_ts)."""
     return media.select(
         "media_id",
         F.explode(
             F.sequence(
-                F.lit(0), F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)), F.lit(every_ms)
+                F.lit(0), F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)), F.lit(500)
             )
         ).alias("frame_ts"),
     )

@@ -10,10 +10,9 @@ scale:
     no per-column jobs) feeds one groupBy for the value counts, one for
     the per-column stats: the scan count is independent of the column
     count.
-  * Top-k per column uses the repo-standard two-phase pattern (salted
-    local top-k, then a final window over <= k * 32 salts survivors per
-    column) — one hot column (e.g. a constant-heavy lang field) never
-    funnels the corpus through a single window task.
+  * Top-k per column is util.salted_top_k — one hot column (e.g. a
+    constant-heavy lang field) never funnels the corpus through a single
+    window task.
   * Exact n_distinct comes from the counts table we already built (no
     extra scan).  `approx=True` swaps in approx_count_distinct (HLL) for
     the 100 TB path where the counts table itself is the cost — tested
@@ -25,8 +24,10 @@ toward n_null, never toward values/distincts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from berkeley_entity_spark.util import salted_top_k
 
 __all__ = ["profile_columns"]
 
@@ -81,18 +82,8 @@ def profile_columns(
         stats = stats.join(nd, "column", "left").withColumn(
             "n_distinct", F.coalesce("n_distinct", F.lit(0))
         )
-    salt = F.pmod(F.xxhash64("value"), F.lit(32))
-    w1 = Window.partitionBy("column", salt).orderBy(
-        F.desc("n_value"), F.asc("value")
-    )
-    survivors = counts.withColumn("_rn1", F.row_number().over(w1)).where(
-        F.col("_rn1") <= top_k
-    )
-    w2 = Window.partitionBy("column").orderBy(F.desc("n_value"), F.asc("value"))
-    top = (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= top_k)
-        .select("column", F.col("rank").cast("int").alias("rank"), "value", "n_value")
+    top = salted_top_k(
+        counts, ["column"], [F.desc("n_value"), F.asc("value")], top_k
     )
     return stats.join(top, "column", "left").select(
         "column",

@@ -19,9 +19,13 @@ Reference semantics re-expressed as DataFrame joins + CASE expressions:
 The count table is a broadcast dimension (the reference loads gender.data
 into driver memory every run — NumberGenderComputer.scala:108-183; here it
 is a DataFrame so the same lookup scales past memory via a shuffle join when
-the byte gate declines the broadcast).  All lookups run at the DISTINCT SPAN
-level, then join back to mention instances — the same dedupe-first decision
-as blocking.
+the byte gate declines the broadcast).  The gate reads the planner's size
+estimate; it counts the table only when the estimate cannot show it small
+(a parallelized driver list has no size statistic).  All lookups run at the
+DISTINCT SPAN level, then join back to mention instances — the same
+dedupe-first decision as blocking.  That property table keeps its byte gate
+(util.maybe_broadcast on its counted rows): without it the planner shuffles
+the mention side of the join-back.
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.util import maybe_broadcast
+from berkeley_entity_spark.util import BROADCAST_CAP_BYTES, maybe_broadcast
 
 NUMGENDER_SCHEMA = "phrase string, masc int, fem int, neut int, plur int"
 
@@ -143,7 +147,6 @@ def with_number_gender(
     mentions: DataFrame,
     numgender: DataFrame,
     person_expr: Column | None = None,
-    n_numgender: int | None = None,
 ) -> DataFrame:
     """Replace the number/gender columns of `mentions` with values computed
     from the Bergsma-Lin-style count table `numgender(phrase, masc, fem,
@@ -166,12 +169,14 @@ def with_number_gender(
         person_expr = (
             F.col("ner") == "PERSON" if "ner" in mentions.columns else F.lit(False)
         )
-    # no row-count hint -> count once (one cheap job) rather than force a
-    # broadcast: an unconditional F.broadcast would bypass the byte gate the
-    # module advertises and OOM on a large caller-supplied count table
-    if n_numgender is None:
-        n_numgender = numgender.count()
-    numgender = maybe_broadcast(numgender, n_numgender)
+    # the planner sizes a count table read from files or a local relation
+    # and broadcasts it under its own threshold, with no job; only a table
+    # it cannot show to be small (a parallelized driver list reports
+    # Long.MaxValue bytes) is counted for the byte gate
+    if numgender._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > (
+        BROADCAST_CAP_BYTES
+    ):
+        numgender = maybe_broadcast(numgender, numgender.count())
     base = mentions.withColumn("_person", person_expr)
     ordered = [c for c in mentions.columns if c not in ("number", "gender")] + [
         "number",

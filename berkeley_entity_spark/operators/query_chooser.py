@@ -89,7 +89,6 @@ def choose_denotations(
     surfaces: DataFrame,
     link_votes: DataFrame,
     weights: dict[str, float],
-    top_k: int = 3,
 ) -> DataFrame:
     """(surface) x (surface, title, votes) -> one chosen denotation per
     surface: the trained (query, denotation) argmax described above.
@@ -108,7 +107,7 @@ def choose_denotations(
     w_rank = Window.partitionBy("surface").orderBy(F.desc("votes"), F.asc("title"))
     ranked = (
         link_votes.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= top_k)
+        .where(F.col("rank") <= 3)
         .select(F.col("surface").alias("variant"), "title", "rank")
     )
     ne = ranked.select("variant").distinct().withColumn("_ne", F.lit(True))

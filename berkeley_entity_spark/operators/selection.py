@@ -121,24 +121,22 @@ def dsir_select(
     raw: DataFrame,
     target: DataFrame,
     k: int = 100,
-    n_buckets: int = 1024,
-    alpha: float = 1.0,
 ) -> DataFrame:
     """Top-k raw docs by importance weight (logw DESC, doc_id ASC) —
     TakeOrderedAndProject, so no global sort or single-task window."""
-    w = dsir_weights(raw, target, n_buckets, alpha)
+    w = dsir_weights(raw, target)
     return w.orderBy(F.desc("logw"), F.asc("doc_id")).limit(k)
 
 
 def domain_mixture(
     documents: DataFrame,
     alpha: float = 0.3,
-    domain_col: str = "source",
 ) -> DataFrame:
     """Temperature-scaled domain sampling weights — the multilingual /
     multi-corpus mixing rule (Conneau & Lample 2019 eq. 2; the same
     alpha-scaled multinomial used for The Pile / LLaMA data mixes):
-    p_d = tokens_d / total, w_d = p_d^alpha / sum_e p_e^alpha.  alpha < 1
+    p_d = tokens_d / total over the `source` domains,
+    w_d = p_d^alpha / sum_e p_e^alpha.  alpha < 1
     up-weights small domains; `boost` = w_d / p_d is the effective
     epochs-per-domain a sampler would apply.
 
@@ -147,7 +145,7 @@ def domain_mixture(
     size; the normalizing sums ride a single-row cross join, never a
     second corpus pass.  Output rounded 6dp: (domain, n_docs, n_tokens,
     p_raw, weight, boost)."""
-    per = documents.groupBy(F.col(domain_col).alias("domain")).agg(
+    per = documents.groupBy(F.col("source").alias("domain")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(tokens_col())).alias("n_tokens"),
     )

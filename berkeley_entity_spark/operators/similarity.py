@@ -33,25 +33,19 @@ _N_QCHUNKS = 4
 _DIM = 64
 _PLANE_SEED = 7
 _IVF_SEED = 11
-
-
-def _norm_col(vec: str):
-    return F.sqrt(
-        F.aggregate(F.col(vec), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
-    )
-
-
-def _dot(a: str, b: str):
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+# IVF inverted lists, and the trainer's sample size and k-means iterations
+_N_CENTROIDS = 8
+_IVF_SAMPLE_N, _IVF_ITERS = 256, 5
 
 
 def with_unit_norm(embeddings: DataFrame) -> DataFrame:
     """Pre-normalize once; cosine becomes a plain dot product downstream."""
-    return embeddings.withColumn("_n", _norm_col("embedding")).withColumn(
+    norm = F.sqrt(
+        F.aggregate(
+            F.col("embedding"), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x
+        )
+    )
+    return embeddings.withColumn("_n", norm).withColumn(
         "unit", F.transform(F.col("embedding"), lambda x: x.cast("double") / F.col("_n"))
     ).drop("_n")
 
@@ -262,19 +256,18 @@ def lsh_bucket_topk(
     embeddings: DataFrame,
     k: int = 5,
     n_planes: int | str = 4,
-    n_tables: int = 16,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """Approximate top-k: union of n_tables independent hyperplane tables,
+    """Approximate top-k: union of 16 independent hyperplane tables,
     candidates = bucket-mates, exact cosine re-rank.  Recall grows with
-    n_tables; cost stays near-linear (no cross join).
+    the table count; cost stays near-linear (no cross join).
 
     Sizing: expected bucket size = n / 2^n_planes, so pick
     n_planes ≈ log2(n / 32) — or pass n_planes="auto" to have
     the operator size itself from a corpus count (one extra cheap job;
     parquet count is metadata-only).  The int defaults target the test
     corpus (n≈500, weak neighbors at cosine≈0.37 → shallow planes, many
-    tables); at 10^9 rows auto picks ~25→24 planes and the same n_tables.
+    tables); at 10^9 rows auto picks ~25→24 planes and the same 16 tables.
 
     max_bucket guards the DEGENERATE case sizing can't fix: a mass of
     identical/near-identical vectors (zero rows, templated embeddings)
@@ -282,14 +275,16 @@ def lsh_bucket_topk(
     the self-join quadratic — the same failure minhash_lsh_pairs and
     simhash_near_pairs cap with a row_number window, mirrored here
     (deterministic by vec_id; capped-out vectors still get candidates
-    from tables where their bucket is cold)."""
+    from tables where their bucket is cold).  The cap stays inline rather
+    than blocking.capped_key_pairs: the default is uncapped, and that plain
+    bucket self-join is the path q_ann_lsh and its oracle run."""
     if n_planes == "auto":
         n_planes = auto_n_planes(embeddings.count())
     base = with_unit_norm(embeddings.select("vec_id", "embedding")).select(
         "vec_id", "unit"
     )
     buckets = hyperplane_signatures_multi(
-        embeddings, n_planes=n_planes, n_tables=n_tables
+        embeddings, n_planes=n_planes
     )
     if max_bucket is not None:
         wb = Window.partitionBy("bucket").orderBy("vec_id")
@@ -311,7 +306,15 @@ def lsh_bucket_topk(
     scored = (
         cand.join(base.toDF("query_id", "unit_a"), "query_id")
         .join(base.toDF("neighbor_id", "unit_b"), "neighbor_id")
-        .select("query_id", "neighbor_id", _dot("unit_a", "unit_b").alias("cosine"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.aggregate(
+                F.zip_with("unit_a", "unit_b", lambda x, y: x.cast("double") * y),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ).alias("cosine"),
+        )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -321,11 +324,11 @@ def lsh_bucket_topk(
     )
 
 
-def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
-    """(id_a, id_b, cosine) pairs with cosine >= threshold via LSH buckets."""
+def embedding_near_dup(embeddings: DataFrame) -> DataFrame:
+    """(id_a, id_b, cosine) pairs with cosine >= 0.999 via LSH buckets."""
     top = lsh_bucket_topk(embeddings, k=20)
     return (
-        top.where((F.col("cosine") >= threshold) & (F.col("query_id") < F.col("neighbor_id")))
+        top.where((F.col("cosine") >= 0.999) & (F.col("query_id") < F.col("neighbor_id")))
         .select(
             F.col("query_id").alias("id_a"),
             F.col("neighbor_id").alias("id_b"),
@@ -387,12 +390,7 @@ def ivf_probe_assignments(
     )
 
 
-def ivf_train_centroids(
-    embeddings: DataFrame,
-    n_centroids: int = 8,
-    sample_n: int = 4096,
-    iters: int = 10,
-) -> np.ndarray:
+def ivf_train_centroids(embeddings: DataFrame) -> np.ndarray:
     """Deterministic driver-side SPHERICAL k-means over a BOUNDED sample —
     the IVF coarse-quantizer trainer (FAISS-style train-on-sample; the
     sample cap mirrors the reference's driver-side trainer precedent).
@@ -404,21 +402,21 @@ def ivf_train_centroids(
     search-time traffic from the lists the training optimized.  Training
     on unit vectors and re-normalizing centroids each iteration makes
     max-dot and min-angle identical at train and search time.  Sample =
-    first `sample_n` rows by id (deterministic under any partitioning);
+    first _IVF_SAMPLE_N rows by id (deterministic under any partitioning);
     init = seeded permutation of the sample; an emptied cluster keeps its
-    previous centroid.  Returns (n_centroids, dim) float64, unit rows."""
+    previous centroid.  Returns (_N_CENTROIDS, dim) float64, unit rows."""
     pdf = (
         embeddings.select("vec_id", "embedding")
         .orderBy("vec_id")
-        .limit(sample_n)
+        .limit(_IVF_SAMPLE_N)
         .toPandas()
     )
     X = _unit_matrix(pdf, "embedding")
     rng = np.random.RandomState(_IVF_SEED)
-    C = X[rng.permutation(len(X))[:n_centroids]].copy()
-    for _ in range(iters):
+    C = X[rng.permutation(len(X))[:_N_CENTROIDS]].copy()
+    for _ in range(_IVF_ITERS):
         a = (X @ C.T).argmax(axis=1)
-        for c in range(n_centroids):
+        for c in range(_N_CENTROIDS):
             members = X[a == c]
             if len(members):
                 m = members.mean(axis=0)
@@ -429,12 +427,11 @@ def ivf_train_centroids(
 def ivf_topk(
     embeddings: DataFrame,
     k: int = 3,
-    n_centroids: int = 8,
     n_probe: int = 2,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """Approximate top-k via an INVERTED FILE index (IVF): coarse-quantize
-    the corpus into n_centroids inverted lists (one scan), probe each
+    the corpus into _N_CENTROIDS inverted lists (one scan), probe each
     query's n_probe nearest lists, exact cosine re-rank the candidates.
 
     The scale shape (the FAISS IVF-Flat search loop, distributed): each
@@ -452,11 +449,11 @@ def ivf_topk(
     Each cell emits only its per-query top-k under the global
     (-cosine, neighbor_id) ordering, so the final window provably sees the
     true top-k; query chunking bounds hot-list cell width.  Expected list
-    length is n / n_centroids: at 10^9 rows pick n_centroids ≈ n / 10^4
+    length is n / _N_CENTROIDS: at 10^9 rows raise it to ≈ n / 10^4
     and n_probe 8-32 for the recall/cost trade.  With a trained quantizer
     (ivf_train_centroids) lists follow the data distribution and recall
     rises at the same cost."""
-    C = centroids if centroids is not None else ivf_anchor_matrix(n_centroids, _DIM)
+    C = centroids if centroids is not None else ivf_anchor_matrix(_N_CENTROIDS, _DIM)
     # probes feeds two plan branches (query side + list side); without a
     # materialization point each branch re-runs the matmul+argsort corpus
     # pass (no exchange below it => no ReusedExchange), so "one corpus

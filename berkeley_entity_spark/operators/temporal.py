@@ -37,11 +37,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dedup_quotes(quotes: DataFrame, on: str, ts_col: str) -> DataFrame:
+# the probe/quote key and timestamp columns
+_KEY, _TS = "user_id", "ts"
+
+
+def dedup_quotes(quotes: DataFrame) -> DataFrame:
     """Collapse quote-side ties: one row per (key, ts), payload = the
     greatest payload struct (deterministic under any partitioning)."""
-    qcols = [c for c in quotes.columns if c not in (on, ts_col)]
-    return quotes.groupBy(on, ts_col).agg(
+    qcols = [c for c in quotes.columns if c not in (_KEY, _TS)]
+    return quotes.groupBy(_KEY, _TS).agg(
         F.max(F.struct(*qcols)).alias("_qp")
     )
 
@@ -49,8 +53,6 @@ def dedup_quotes(quotes: DataFrame, on: str, ts_col: str) -> DataFrame:
 def asof_join(
     probes: DataFrame,
     quotes: DataFrame,
-    on: str = "user_id",
-    ts_col: str = "ts",
     bucket_ms: int | None = None,
 ) -> DataFrame:
     """Backward inclusive as-of LEFT join: each probe row picks the quote
@@ -58,38 +60,38 @@ def asof_join(
     quote ts resolved to the greatest payload struct).  Unmatched probes
     keep NULL quote columns.
 
-    Output: every probe column, then ``q_<ts_col>`` and
-    ``q_<col>`` for each quote payload column.
+    Output: every probe column, then ``q_ts`` and ``q_<col>`` for each
+    quote payload column.
     """
-    qcols = [c for c in quotes.columns if c not in (on, ts_col)]
-    pcols = [c for c in probes.columns if c not in (on, ts_col)]
-    q = dedup_quotes(quotes, on, ts_col)
+    qcols = [c for c in quotes.columns if c not in (_KEY, _TS)]
+    pcols = [c for c in probes.columns if c not in (_KEY, _TS)]
+    q = dedup_quotes(quotes)
     qp_t = q.schema["_qp"].dataType
-    ts_t = probes.schema[ts_col].dataType
+    ts_t = probes.schema[_TS].dataType
 
     u = probes.select(
-        F.col(on),
-        F.col(ts_col).alias("_ts"),
+        F.col(_KEY),
+        F.col(_TS).alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*pcols).alias("_pp"),
         F.lit(None).cast(ts_t).alias("_qts"),
         F.lit(None).cast(qp_t).alias("_qp"),
     ).unionByName(
         q.select(
-            F.col(on),
-            F.col(ts_col).alias("_ts"),
+            F.col(_KEY),
+            F.col(_TS).alias("_ts"),
             F.lit(0).alias("_side"),
             F.lit(None)
             .cast(probes.select(F.struct(*pcols)).schema[0].dataType)
             .alias("_pp"),
-            F.col(ts_col).alias("_qts"),
+            F.col(_TS).alias("_qts"),
             F.col("_qp"),
         )
     )
 
     if bucket_ms is None:
         w = (
-            Window.partitionBy(on)
+            Window.partitionBy(_KEY)
             .orderBy("_ts", "_side")
             .rowsBetween(Window.unboundedPreceding, 0)
         )
@@ -105,7 +107,7 @@ def asof_join(
             "_b", F.floor(F.unix_millis(F.col("_ts").cast("timestamp")) / bucket_ms)
         )
         wb = (
-            Window.partitionBy(on, "_b")
+            Window.partitionBy(_KEY, "_b")
             .orderBy("_ts", "_side")
             .rowsBetween(Window.unboundedPreceding, 0)
         )
@@ -119,30 +121,30 @@ def asof_join(
         # Per-(key, bucket) summary: the last quote in the bucket (NULL for
         # quote-free buckets).  One row per bucket per key — the carry table
         # is bounded by time-range / bucket_ms, never by event volume.
-        summ = u.groupBy(on, "_b").agg(
+        summ = u.groupBy(_KEY, "_b").agg(
             F.max(F.when(F.col("_side") == 0, F.struct("_qts", "_qp"))).alias(
                 "_bq"
             )
         )
         wk = (
-            Window.partitionBy(on)
+            Window.partitionBy(_KEY)
             .orderBy("_b")
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         carry = summ.select(
-            F.col(on),
+            F.col(_KEY),
             F.col("_b"),
             F.last("_bq", ignorenulls=True).over(wk).alias("_carry"),
         )
-        filled = local.join(carry, [on, "_b"], "left").withColumn(
+        filled = local.join(carry, [_KEY, "_b"], "left").withColumn(
             "_last", F.coalesce("_inb", "_carry")
         )
 
     out_cols = (
-        [F.col(on)]
+        [F.col(_KEY)]
         + [F.col(f"_pp.{c}").alias(c) for c in pcols]
-        + [F.col("_ts").alias(ts_col)]
-        + [F.col("_last._qts").alias(f"q_{ts_col}")]
+        + [F.col("_ts").alias(_TS)]
+        + [F.col("_last._qts").alias(f"q_{_TS}")]
         + [F.col(f"_last._qp.{c}").alias(f"q_{c}") for c in qcols]
     )
     return filled.where(F.col("_side") == 1).select(*out_cols)

@@ -21,7 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.operators.dedup import tokens_col
+from berkeley_entity_spark.operators.dedup import tokens_col, word_ngrams_col
+from berkeley_entity_spark.util import salted_top_k
 
 EN_STOPWORDS = [
     "the", "of", "and", "to", "a", "in", "that", "is", "was", "he", "for",
@@ -81,17 +82,6 @@ def lang_id_en(documents: DataFrame) -> DataFrame:
     return s.select(
         "doc_id", (F.col("stopword_ratio") >= 0.08).alias("pred_en")
     )
-
-
-def _ngram_arr(toks, n: int):
-    """Token n-grams as an array column (empty when the doc is shorter)."""
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def _max_run(sorted_arr):
@@ -155,8 +145,8 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     shuffles nothing."""
     toks = tokens_col()
     n = F.size(toks)
-    bg = F.array_sort(_ngram_arr(toks, 2))
-    tg = F.array_sort(_ngram_arr(toks, 3))
+    bg = F.array_sort(word_ngrams_col(toks, 2))
+    tg = F.array_sort(word_ngrams_col(toks, 3))
     nd = F.greatest(n, F.lit(1)).cast("double")
     frac_dup = F.round(1.0 - F.size(F.array_distinct(toks)) / nd, 6)
     top_bg = F.round(_max_run(bg) * 2.0 / nd, 6)
@@ -181,12 +171,12 @@ def doc_fingerprint(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id", F.md5(F.col("text")).alias("fingerprint"))
 
 
-def winnowing_fingerprints(
-    documents: DataFrame, k: int = 5, window: int = 4
-) -> DataFrame:
+def winnowing_fingerprints(documents: DataFrame) -> DataFrame:
     """(doc_id, fp) exploded winnowing fingerprints: rolling 64-bit hash of
-    char k-grams, per-window minima (Schleimer et al. 2003).  Detects partial
-    overlap (quotes, boilerplate) that whole-doc hashing misses."""
+    char k-grams (k = 5), minima per window of 4 hashes (Schleimer et al.
+    2003).  Detects partial overlap (quotes, boilerplate) that whole-doc
+    hashing misses."""
+    k, window = 5, 4
     # 31-bit Mersenne modulus: every intermediate (acc*B, arr*top) stays
     # under 2^52, safely inside uint64 — a 61-bit modulus would overflow
     B, MOD = np.uint64(1000003), np.uint64((1 << 31) - 1)
@@ -228,14 +218,9 @@ def winnowing_fingerprints(
     )
 
 
-def winnow_overlap_pairs(
-    documents: DataFrame,
-    k: int = 5,
-    window: int = 4,
-    min_shared: int = 3,
-) -> DataFrame:
-    """(id_a, id_b, shared) — document pairs sharing >= min_shared
-    winnowing fingerprints: the partial-overlap dedup pass (quoted
+def winnow_overlap_pairs(documents: DataFrame) -> DataFrame:
+    """(id_a, id_b, shared) — document pairs sharing >= 3 winnowing
+    fingerprints: the partial-overlap dedup pass (quoted
     passages, injected boilerplate) that whole-doc and shingle-set
     methods miss (Schleimer et al. 2003 §4; the exact-substring dedup
     motivation of Lee et al. 2022).
@@ -248,10 +233,10 @@ def winnow_overlap_pairs(
     quadratic blowup.  Dropping hot fps only LOWERS `shared`; pairs held
     together solely by corpus-wide boilerplate are the intended
     exclusion.  Selectivity comes from corpus entropy: on the synthetic
-    low-entropy word-soup tables most pairs share >= min_shared cold
+    low-entropy word-soup tables most pairs share >= 3 cold
     fingerprints (the gate checks exactness, not selectivity); on real
     web text a shared cold fingerprint implies a shared k-gram run."""
-    fps = winnowing_fingerprints(documents, k=k, window=window)
+    fps = winnowing_fingerprints(documents)
     df_tab = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_df"))
     cold = fps.join(df_tab.where(F.col("_df") <= 200), "fp").select(
         "doc_id", "fp"
@@ -262,7 +247,7 @@ def winnow_overlap_pairs(
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
+        .where(F.col("shared") >= 3)
     )
 
 
@@ -361,21 +346,17 @@ def lm_perplexity(documents: DataFrame, vocab_size: int = 4096) -> DataFrame:
 _C4_BADWORDS = ("badword1", "badword2")
 
 
-def c4_clean(
-    pages: DataFrame,
-    min_words: int = 5,
-    min_lines: int = 3,
-) -> DataFrame:
+def c4_clean(pages: DataFrame) -> DataFrame:
     """The C4 cleaning ruleset (Raffel et al. 2020 §2.2 — the filters that
     produced C4 from Common Crawl), as pure whole-stage-codegen column
     expressions over newline-separated page text:
 
     line level (only lines passing ALL are retained):
       * ends in a terminal punctuation mark (. ! ? or closing quote),
-      * has at least `min_words` words,
+      * has at least 5 words,
       * does not contain the word "javascript" (case-insensitive).
     page level (page dropped entirely when ANY fires):
-      * fewer than `min_lines` retained lines,
+      * fewer than 3 retained lines,
       * any bad word (_C4_BADWORDS) among the page's lowercase tokens,
       * the phrase "lorem ipsum",
       * a curly brace '{'.
@@ -387,7 +368,7 @@ def c4_clean(
     lines = F.split(F.col("text"), "\n")
     line_ok = lambda l: (
         l.rlike('[.!?"]$')
-        & (F.size(F.filter(F.split(l, " "), lambda t: t != "")) >= min_words)
+        & (F.size(F.filter(F.split(l, " "), lambda t: t != "")) >= 5)
         & ~F.lower(l).contains("javascript")
     )
     kept = F.filter(lines, line_ok)
@@ -399,7 +380,7 @@ def c4_clean(
     page_bad = (
         bad_tok | low.contains("lorem ipsum") | F.col("text").contains("{")
     )
-    page_kept = ~page_bad & (F.size(kept) >= min_lines)
+    page_kept = ~page_bad & (F.size(kept) >= 3)
     return pages.select(
         "doc_id",
         F.size(lines).alias("n_lines"),
@@ -423,15 +404,13 @@ def cluster_terms(
 
     Scale shape: one explode + groupBy(cluster, term) (partial aggs), a
     term-keyed equi-join for f_t (the standard tf-idf exchange; AQE
-    handles hot terms), broadcastable per-cluster totals, and the
-    repo-standard salted two-phase top-k so no cluster's term list ever
-    funnels through one window task.  Ranking uses the ROUNDED (6dp)
+    handles hot terms), broadcastable per-cluster totals, and
+    util.salted_top_k so no cluster's term list ever funnels through one
+    window task.  Ranking uses the ROUNDED (6dp)
     score with a term tie-break, making the top-k engine-exact up to the
     usual knife-edge class.
 
     Output: (cluster_id, rank, term, n_tc, score)."""
-    from pyspark.sql import Window
-
     toks = documents.select(
         "doc_id", F.explode(tokens_col()).alias("term")
     ).join(assign.select("doc_id", "cluster_id"), "doc_id")
@@ -459,22 +438,6 @@ def cluster_terms(
             ).alias("score"),
         )
     )
-    salt = F.pmod(F.xxhash64("term"), F.lit(32))
-    w1 = Window.partitionBy("cluster_id", salt).orderBy(
-        F.desc("score"), F.asc("term")
-    )
-    survivors = scored.withColumn("_rn", F.row_number().over(w1)).where(
-        F.col("_rn") <= top_k
-    )
-    w2 = Window.partitionBy("cluster_id").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= top_k)
-        .select(
-            "cluster_id",
-            F.col("rank").cast("int").alias("rank"),
-            "term",
-            "n_tc",
-            "score",
-        )
-    )
+    return salted_top_k(
+        scored, ["cluster_id"], [F.desc("score"), F.asc("term")], top_k
+    ).select("cluster_id", "rank", "term", "n_tc", "score")

@@ -25,6 +25,10 @@ teleport and uniform dangling-mass redistribution):
 where W(u) is u's total out-weight, D_t the total rank mass on dangling
 nodes (no out-edges), N the node count.  Fixed iteration count (the
 oracle-replayable mode; production runs add an L1-delta stop).
+
+anchor_text_table ranks each target's anchors with util.salted_top_k, so a
+hot target (a homepage with millions of distinct anchor phrases) never
+sorts in one window task.
 """
 
 from __future__ import annotations
@@ -32,11 +36,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from berkeley_entity_spark.util import salted_top_k
+
+
+# PageRank damping factor (Brin & Page 1998)
+DAMPING = 0.85
+
 
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
-    damping: float = 0.85,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank over an aggregated (src, dst) edge table ->
@@ -67,7 +76,7 @@ def pagerank(
     n_nodes = nodes.count()  # the one driver scalar (bounded table)
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     rank = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    teleport = (1.0 - damping) / n_nodes
+    teleport = (1.0 - DAMPING) / n_nodes
     for _ in range(iterations):
         rank = rank.localCheckpoint(eager=True)
         contrib = (
@@ -89,7 +98,7 @@ def pagerank(
                 "node",
                 (
                     F.lit(teleport)
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * (
                         F.coalesce(F.col("contrib"), F.lit(0.0))
                         + F.col("dm") / F.lit(float(n_nodes))
@@ -100,13 +109,10 @@ def pagerank(
     return rank
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 5,
-    weight_col: str | None = None,
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """HITS hubs/authorities (Kleinberg 1999, the weighted power-iteration
-    form) over an aggregated (src, dst) edge table -> (node, hub, authority).
+    form) over an aggregated (src, dst, w) edge table -> (node, hub,
+    authority).
 
         a_{t+1}(v) = sum_{(u,v) in E} w(u,v) * h_t(u)      then L2-normalize
         h_{t+1}(u) = sum_{(u,v) in E} w(u,v) * a_{t+1}(v)  then L2-normalize
@@ -120,7 +126,7 @@ def hits(
     iteration count keeps it oracle-replayable (the DuckDB oracle unrolls
     each half-step as a CTE, the pagerank/FS-EM precedent).
     """
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+    w = F.col("w").cast("double")
     e = edges.select("src", "dst", w.alias("w"))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -166,8 +172,8 @@ def hits(
     return hub.join(auth, "node").select("node", "hub", "authority")
 
 
-def anchor_text_table(links: DataFrame, k: int = 3) -> DataFrame:
-    """Per-target top-k anchor phrases of (dst, anchor) link rows ->
+def anchor_text_table(links: DataFrame) -> DataFrame:
+    """Per-target top-3 anchor phrases of (dst, anchor) link rows ->
     (dst, rank, anchor, n) — the
     web-native surface-form dictionary.  Aggregated anchor text is how a
     web corpus expresses the reference's surface->title counts
@@ -177,22 +183,15 @@ def anchor_text_table(links: DataFrame, k: int = 3) -> DataFrame:
     and the query-denotation chooser unchanged.
 
     Scale shape: one corpus-sized groupBy (target, anchor) with map-side
-    combine — the only pass over link rows — then top-k per target by
-    (n desc, anchor asc) over the much smaller distinct-phrase table.
-    The rank window partitions by target; a pathological target with
-    millions of DISTINCT anchor phrases would skew that window, which is
-    the same bounded risk the salted two-phase top-k (A9) covers — swap
-    it in via that operator if a crawl exhibits it.
+    combine — the only pass over link rows — then top-3 per target by
+    (n desc, anchor asc) over the much smaller distinct-phrase table via
+    util.salted_top_k, so a hot target with millions of DISTINCT anchor
+    phrases never sorts in one window task.
     """
-    from pyspark.sql import Window
-
     counts = links.groupBy("dst", "anchor").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("dst").orderBy(F.desc("n"), F.asc("anchor"))
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("dst", F.col("rank").cast("int").alias("rank"), "anchor", "n")
-    )
+    return salted_top_k(
+        counts, ["dst"], [F.desc("n"), F.asc("anchor")], 3
+    ).select("dst", "rank", "anchor", "n")
 
 
 def domain_link_edges(pages: DataFrame) -> DataFrame:

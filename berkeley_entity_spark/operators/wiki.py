@@ -10,7 +10,7 @@ is out of scope (no data in this sandbox); these operators implement the
   * title_given_surface   — A10 count table: groupBy(surface, title).count()
   * resolve_redirects     — J7 chained map-side lookups: a bounded number of
     broadcast left joins (the reference follows one redirect hop after the
-    surface lookup; we allow k hops).  At web scale the redirect table is
+    surface lookup; we allow REDIRECT_HOPS = 2).  At web scale the redirect table is
     millions of rows — comfortably broadcastable; the link table is not.
   * best_title_per_surface — A10 vote argmax with deterministic ties
     (max count, then lexicographically smallest title — the reference's
@@ -30,15 +30,18 @@ def title_given_surface(links: DataFrame) -> DataFrame:
     )
 
 
-def resolve_redirects(
-    links: DataFrame, redirects: DataFrame, hops: int = 2
-) -> DataFrame:
-    """Rewrite each link's title through <= `hops` redirect steps.
+# redirect steps resolve_redirects follows
+REDIRECT_HOPS = 2
+
+
+def resolve_redirects(links: DataFrame, redirects: DataFrame) -> DataFrame:
+    """Rewrite each link's title through <= REDIRECT_HOPS redirect steps.
 
     redirects(src, dst) is broadcast; each hop is one map-side left join —
-    no shuffle of the (huge) link table.  Cycles are bounded by `hops`."""
+    no shuffle of the (huge) link table.  Cycles are bounded by the hop
+    count."""
     out = links
-    for i in range(hops):
+    for i in range(REDIRECT_HOPS):
         r = F.broadcast(redirects.select(
             F.col("src").alias(f"_s{i}"), F.col("dst").alias(f"_d{i}")
         ))
@@ -68,8 +71,8 @@ def category_frequencies(categories: DataFrame) -> DataFrame:
     return categories.groupBy("category").agg(F.count(F.lit(1)).alias("freq"))
 
 
-def top_k_categories(categories: DataFrame, k: int = 3) -> DataFrame:
-    """(title, category, freq, rank<=k) — getTopKCategoriesByFrequency
+def top_k_categories(categories: DataFrame) -> DataFrame:
+    """(title, category, freq, rank<=2) — getTopKCategoriesByFrequency
     (WikipediaCategoryDB.scala:34-44): distinct categories per title sorted
     by ASCENDING global frequency (the reference's sortBy(_._2) keeps rarest
     = most specific first); ties broken by category name for cross-engine
@@ -80,7 +83,7 @@ def top_k_categories(categories: DataFrame, k: int = 3) -> DataFrame:
     return (
         cats.join(freqs, "category")
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 2)
         .select("title", "category", "freq", "rank")
     )
 

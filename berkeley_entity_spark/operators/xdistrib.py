@@ -93,11 +93,9 @@ def mention_vectors(comp_feats: DataFrame) -> DataFrame:
     )
 
 
-def distrib_pair_scores(
-    mention_vecs: DataFrame, window: int = 8
-) -> DataFrame:
+def distrib_pair_scores(mention_vecs: DataFrame) -> DataFrame:
     """(url, m_idx, j, dot_scaled) for every antecedent-window pair
-    (j in [m_idx - window, m_idx)): dot_scaled = sum_d k_d(i) * k_d(j),
+    (j in [m_idx - 8, m_idx)): dot_scaled = sum_d k_d(i) * k_d(j),
     an exact BIGINT; the real-valued score contribution is
     dot_scaled / SCALE^2 (CorefComputerDistrib.computeScores adds it to
     the sparse pair score)."""
@@ -115,7 +113,7 @@ def distrib_pair_scores(
         dot = term if dot is None else dot + term
     return (
         a.join(b, "url")
-        .where((F.col("j") >= F.col("m_idx") - window) & (F.col("j") < F.col("m_idx")))
+        .where((F.col("j") >= F.col("m_idx") - 8) & (F.col("j") < F.col("m_idx")))
         .select("url", "m_idx", "j", dot.cast("long").alias("dot_scaled"))
     )
 

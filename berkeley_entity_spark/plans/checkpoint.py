@@ -12,6 +12,9 @@ string is the only difference, so the resume contract is identical.
 
 Each save appends a row to the `metrics` table:
 (stage, rows_out, wall_ms, finished_at) — FIXTURES §3 lineage contract.
+rows_out comes from an Observation on the written DataFrame, computed by
+the write job itself: a save runs the write and the re-read's schema
+lookup, and never re-counts the table.
 """
 
 from __future__ import annotations
@@ -21,7 +24,8 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -45,14 +49,16 @@ class CheckpointStore:
         """Materialize a stage output; returns the re-read DataFrame (cuts
         lineage, later stages scan the table like any other source)."""
         t0 = time.monotonic()
-        df.write.format(self.fmt).mode("overwrite").save(self._path(name))
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
+            self.fmt
+        ).mode("overwrite").save(self._path(name))
         wall_ms = int((time.monotonic() - t0) * 1000)
-        out = self.load(df.sparkSession, name)
-        rows = out.count()
+        rows = obs.get["rows"]
         self._append_metric(name, rows, wall_ms)
         with open(self._done_marker(name), "w") as f:
             f.write(json.dumps({"rows": rows, "wall_ms": wall_ms}))
-        return out
+        return self.load(df.sparkSession, name)
 
     def materialize(self, df: DataFrame, name: str, resume: bool = True) -> DataFrame:
         """skip-if-exists: the resume primitive for every stage boundary."""

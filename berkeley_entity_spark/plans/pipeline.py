@@ -93,10 +93,7 @@ def run_pipeline(
         extracted = extract_mentions(pages).persist()
         try:
             mentions = stage(
-                with_number_gender(
-                    extracted, numgender, person_expr=person,
-                    n_numgender=numgender.count(),
-                ),
+                with_number_gender(extracted, numgender, person_expr=person),
                 "mentions",
             )
         finally:

@@ -22,9 +22,6 @@ from pyspark.sql.streaming import StreamingQuery
 from berkeley_entity_spark.operators.extract import extract_mentions
 from berkeley_entity_spark.synth import PAGES_SCHEMA
 
-# MinHash-LSH banding of the incremental streams: 4 bands of 2 rows over
-# word 3-shingles (the batch near-dup operators' defaults)
-_BANDS, _ROWS, _SHINGLE_N = 4, 2, 3
 # hot-bucket cap of the streams' bucket state (the ER and golden streams
 # always use it; the dedup stream takes it as its max_bucket default)
 _MAX_BUCKET = 200
@@ -163,15 +160,23 @@ def _dedup_batch(
     """One microbatch of the incremental MinHash-LSH dedup (the foreachBatch
     body of start_incremental_dedup_stream, shared with the incremental ER
     stream): batch buckets -> within-batch + cross-state pairs -> capped
-    state append, both sinks idempotently partitioned by batch_id."""
+    state append, both sinks idempotently partitioned by batch_id.  The cap
+    stays inline rather than blocking.capped_key_pairs: the capped batch
+    table is also the state append, and the kernel would rank every
+    micro-batch a second time on the stream's hot path."""
     from pyspark.sql import Window
 
     from berkeley_entity_spark.operators.blocking import minhash_band_keys
-    from berkeley_entity_spark.operators.dedup import shingles_col
+    from berkeley_entity_spark.operators.dedup import (
+        LSH_BANDS,
+        LSH_ROWS,
+        shingles_col,
+    )
 
     sess = batch_df.sparkSession
     docs = batch_df.select(F.col("url").alias("doc_id"), "text")
-    raw = minhash_band_keys(docs, ["doc_id"], shingles_col(_SHINGLE_N), _BANDS, _ROWS)
+    # the batch near-dup operators' banding, so stream and batch agree
+    raw = minhash_band_keys(docs, ["doc_id"], shingles_col(3), LSH_BANDS, LSH_ROWS)
     # within-batch hot-bucket cap (arrival side)
     wb = Window.partitionBy("bucket").orderBy("doc_id")
     b = (
@@ -355,10 +360,8 @@ def start_incremental_er_stream(
     )
 
 
-def mention_rate_stream(
-    pages_stream: DataFrame, watermark: str = "2 minutes"
-) -> DataFrame:
-    """Watermarked per-minute mention counts — late pages beyond the
+def mention_rate_stream(pages_stream: DataFrame) -> DataFrame:
+    """Watermarked per-minute mention counts — pages later than the 10 s
     watermark delay are dropped from the aggregation state.
 
     warc_ts rides through the extraction kernel as a passthrough column (a
@@ -367,7 +370,7 @@ def mention_rate_stream(
     column in the Arrow batch)."""
     m = extract_mentions(pages_stream, passthrough=("warc_ts",))
     return (
-        m.withWatermark("warc_ts", watermark)
+        m.withWatermark("warc_ts", "10 seconds")
         .groupBy(F.window("warc_ts", "1 minute"))
         .agg(F.count(F.lit(1)).alias("n_mentions"))
         .select("window", "n_mentions")
@@ -400,7 +403,6 @@ def start_golden_scd2_stream(
     pages_dir: str,
     golden_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 8,
 ):
     """End-to-end streaming MDM: incremental dedup -> incremental ER merge
     -> golden-record survivorship -> SCD2 version history, per microbatch.
@@ -500,7 +502,7 @@ def start_golden_scd2_stream(
         _write_batch(hist, batch_id, golden_dir)
 
     return _drain(
-        read_page_stream(spark, input_dir, max_files_per_trigger)
+        read_page_stream(spark, input_dir, max_files_per_trigger=1)
         .writeStream.foreachBatch(_process),
         checkpoint_dir,
     )

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -88,6 +88,32 @@ def maybe_broadcast(
     if estimated_bytes(df, n_rows) > BROADCAST_CAP_BYTES:
         return df
     return F.broadcast(df)
+
+
+# phase-1 fan-out of salted_top_k: no window task sorts more than ~1/32 of
+# a group, and phase 2 sees at most k * 32 survivors per group
+_TOPK_SALTS = 32
+
+
+def salted_top_k(
+    df: DataFrame, by: list[str], order: list[Column | str], k: int
+) -> DataFrame:
+    """`df` plus an int `rank` column (1..k) per `by` group, ranked by
+    `order` — the repo's one two-phase top-k.  Phase 1 keeps the top k per
+    (by, salt), salt = xxhash64 of the whole row mod 32, so a hot group
+    never funnels through one window task; phase 2 ranks the <= k * 32
+    survivors per group.  Top-k under a TOTAL order composes through any
+    partition of the group, so the output equals a single window's
+    whatever the salt — every caller's order must break all ties."""
+    salt = F.pmod(F.xxhash64(*df.columns), F.lit(_TOPK_SALTS))
+    w1 = Window.partitionBy(*by, salt).orderBy(*order)
+    w2 = Window.partitionBy(*by).orderBy(*order)
+    return (
+        df.withColumn("rank", F.row_number().over(w1))
+        .where(F.col("rank") <= k)
+        .withColumn("rank", F.row_number().over(w2))
+        .where(F.col("rank") <= k)
+    )
 
 
 def artifact_bytes(name: str) -> bytes | None:

@@ -53,13 +53,11 @@ def test_bloom_flags_exact_contamination(spark):
     )
     bloom = {
         r.doc_id: r.n_maybe_grams
-        for r in bloom_contaminated_docs(
-            train, bench, k=13, m_bits=1 << 20, k_hashes=3
-        ).collect()
+        for r in bloom_contaminated_docs(train, bench, m_bits=1 << 20).collect()
     }
     exact = {
         r.doc_id: r.n_hit_grams
-        for r in contaminated_docs(train, bench, k=13).collect()
+        for r in contaminated_docs(train, bench).collect()
     }
     assert bloom == exact and set(bloom) == {1, 3}
 

@@ -1,6 +1,7 @@
 """No dead configuration: every PipelineConfig field is read somewhere in the
-package outside config.py, and every defaulted parameter of a module-level
-package function is passed by at least one call in the repo."""
+package outside config.py, every defaulted parameter of a module-level
+package function is passed by at least one call in the repo, and no such
+parameter gets the same literal from every call."""
 
 import ast
 import dataclasses
@@ -90,4 +91,70 @@ def test_every_option_has_a_caller():
         "defaulted parameters no call in the repo passes (make each a literal "
         "or a module constant, or drop the branch it selects):\n  "
         + "\n  ".join(unused)
+    )
+
+
+def _calls_by_function_name():
+    """name -> every call node in the repo, matched by bare or attribute
+    name."""
+    calls = defaultdict(list)
+    for path in ROOT.rglob("*.py"):
+        if any(p.startswith(".") for p in path.relative_to(ROOT).parts):
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name is not None:
+                    calls[name].append(node)
+    return calls
+
+
+def _literal(node):
+    """('lit', repr) for a literal expression, else a value unique to the
+    node (so a computed argument never counts as 'the same value')."""
+    try:
+        return ("lit", repr(ast.literal_eval(node)))
+    except ValueError:
+        return ("expr", id(node))
+
+
+def test_no_parameter_gets_one_literal_from_every_call():
+    calls = _calls_by_function_name()
+    same = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in tree.body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            sites = calls.get(fn.name, [])
+            if not sites or any(
+                any(isinstance(a, ast.Starred) for a in c.args)
+                or any(k.arg is None for k in c.keywords)
+                for c in sites
+            ):
+                continue
+            a = fn.args
+            positional = a.posonlyargs + a.args
+            defaults = [None] * (len(positional) - len(a.defaults)) + a.defaults
+            params = [(p.arg, i, d) for i, (p, d) in enumerate(zip(positional, defaults))]
+            params += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+            for name, pos, default in params:
+                values = set()
+                for c in sites:
+                    kw = {k.arg: k.value for k in c.keywords}
+                    if name in kw:
+                        values.add(_literal(kw[name]))
+                    elif pos is not None and pos < len(c.args):
+                        values.add(_literal(c.args[pos]))
+                    elif default is not None:
+                        values.add(_literal(default))
+                    else:
+                        values.add(("expr", id(c)))
+                (kind, value), *rest = values
+                if kind == "lit" and not rest:
+                    same.append(f"{path.relative_to(ROOT)}::{fn.name}({name}={value})")
+    assert not same, (
+        "parameters every call in the repo gives the same literal (make each "
+        "a literal or a module constant):\n  " + "\n  ".join(same)
     )

@@ -32,13 +32,13 @@ def test_exact_dedup(docs_dup):
 
 
 def test_minhash_finds_exact_dups(docs_dup):
-    pairs = minhash_lsh_pairs(docs_dup, bands=4, rows=2).cache()
+    pairs = minhash_lsh_pairs(docs_dup).cache()
     dup_pairs = pairs.where(F.col("id_b") - F.col("id_a") == 100000).count()
     assert dup_pairs == 500  # identical docs share every band
 
 
 def test_ngram_jaccard_exact_dups(docs_dup):
-    p = ngram_jaccard_pairs(docs_dup, n=3, threshold=0.9).cache()
+    p = ngram_jaccard_pairs(docs_dup, threshold=0.9).cache()
     exact = p.where(F.col("id_b") - F.col("id_a") == 100000)
     assert exact.count() == 500
     assert exact.where(F.col("jaccard") < 1.0).count() == 0
@@ -52,7 +52,7 @@ def test_ngram_jaccard_prefix_filter_lossless(docs_dup, threshold):
     sub = docs_dup.where("doc_id % 7 = 0")
     got = {
         (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in ngram_jaccard_pairs(sub, n=3, threshold=threshold).collect()
+        for r in ngram_jaccard_pairs(sub, threshold=threshold).collect()
     }
     rows = sub.collect()
     from collections import Counter
@@ -173,7 +173,7 @@ def test_near_dup_keep_one(docs_dup):
 def test_contaminated_docs_flags_benchmark_shadows(spark, docs_dup):
     base = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     bench = base.where("doc_id % 97 = 0")
-    out = contaminated_docs(docs_dup, bench, k=13).cache()
+    out = contaminated_docs(docs_dup, bench).cache()
     eligible = [
         r.doc_id
         for r in bench.select(
@@ -205,7 +205,7 @@ def test_segment_dedup_token_windows(spark):
     )
     out = {
         r.doc_id: r
-        for r in segment_dedup(docs, min_dup_docs=2, seg_tokens=4).collect()
+        for r in segment_dedup(docs, seg_tokens=4).collect()
     }
     assert out[1].n_segs == 2 and out[1].n_removed == 1
     assert out[1].text_clean == "unique alpha one x"
@@ -223,7 +223,7 @@ def test_segment_dedup_delim_mode_and_all_removed(spark):
     )
     out = {
         r.doc_id: r
-        for r in segment_dedup(docs, min_dup_docs=2, delim="\n").collect()
+        for r in segment_dedup(docs, delim="\n").collect()
     }
     assert out[1].text_clean == "body one"
     assert out[3].n_segs == 1 and out[3].n_removed == 1

@@ -4,12 +4,14 @@ The full oracle comparison runs in tools/check_oracles.py (all 25 queries);
 here we keep a fast representative subset green under pytest.
 """
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as entrymod  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
@@ -58,7 +60,7 @@ def test_oracle_keys_subset_of_queries():
 
 @pytest.mark.parametrize("name", SAMPLE)
 def test_query_matches_oracle(spark, duck, name):
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from check_oracles import table_signature
 
     sdf = entrymod.queries()[name](spark, SF)

@@ -118,7 +118,7 @@ def test_degenerate_equals_independent_argmaxes(spark, doc_mentions, link_votes)
     from berkeley_entity_spark.operators.features import featurize_pair, levenshtein_ratio
     from berkeley_entity_spark.operators.scoring import load_default_weights
 
-    cands = surface_link_candidates(link_votes, top_k=2)
+    cands = surface_link_candidates(link_votes)
     got = _decode_map(
         joint_entity_decode(
             doc_mentions, cands, gamma_type=0.0, gamma_link=0.0,
@@ -212,7 +212,7 @@ def test_link_agreement_propagates_disambiguation(spark):
     )
     # force candidate types: city=LOC, film=MISC
     ttype = F.when(F.col("title") == "atlanta_(city)", "LOC").otherwise("MISC")
-    cands = surface_link_candidates(votes, title_type_expr=ttype, top_k=2)
+    cands = surface_link_candidates(votes, title_type_expr=ttype)
     # delta ties link to type; "atlanta" is LOC by lexicon, so the city
     # should win on BOTH mentions once the joint factors are on
     got = _decode_map(
@@ -227,7 +227,7 @@ def test_link_agreement_propagates_disambiguation(spark):
 
 
 def test_partitioning_invariant(spark, doc_mentions, link_votes):
-    cands = surface_link_candidates(link_votes, top_k=2)
+    cands = surface_link_candidates(link_votes)
     a = sorted(
         joint_entity_decode(doc_mentions.repartition(1), cands).collect()
     )
@@ -265,9 +265,10 @@ def test_joint_pair_margins_are_wide(spark):
     doc), every decode decision either sits on an EXACT-equal-input tie
     (bit-consistent in both engines, same index tie-break) or has a
     relative margin far above float noise."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from berkeley_entity_spark.operators.extract import extract_mentions
     from berkeley_entity_spark.operators.features import (
@@ -353,11 +354,11 @@ def test_latent_query_flips_ambiguous_link(spark):
         "surface string, title string, votes bigint",
     )
     plain = _decode_map(
-        joint_entity_decode(m_df, surface_link_candidates(votes, top_k=2))
+        joint_entity_decode(m_df, surface_link_candidates(votes))
     )
     assert plain[("d", 0)][2] == "acme_corp"
     out = joint_entity_decode(
-        m_df, query_candidates=surface_query_candidates(votes, top_k=2)
+        m_df, query_candidates=surface_query_candidates(votes)
     )
     got = {(r["url"], r["m_idx"]): (r["link"], r["query"]) for r in out.collect()}
     assert got[("d", 0)] == ("acme_products", "acme")
@@ -385,7 +386,7 @@ def test_latent_query_joint_agreement_flips_link(spark):
         ],
         "surface string, title string, votes bigint",
     )
-    qc = surface_query_candidates(votes, top_k=2)
+    qc = surface_query_candidates(votes)
     alone = joint_entity_decode(
         m_df, query_candidates=qc, gamma_link=0.0, gamma_type=0.0,
         delta_title_type=0.0,

@@ -136,7 +136,7 @@ def test_hot_block_stays_capped(spark):
         [(i, f"hotword a{i} b{i} c{i} d{i} e{i}") for i in range(500)],
         ["doc_id", "text"],
     )
-    n = fs_comparison_vectors(fs_gate_records(docs), max_block=48).count()
+    n = fs_comparison_vectors(fs_gate_records(docs)).count()
     assert 0 < n <= 48 * 47 // 2
 
 
@@ -406,12 +406,12 @@ def test_one_to_one_each_node_at_most_once(spark):
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = one_to_one_matches(fs_link(docs, max_block=48)).collect()
+    out = one_to_one_matches(fs_link(docs)).collect()
     assert out
     nodes = [r["id_a"] for r in out] + [r["id_b"] for r in out]
     assert len(nodes) == len(set(nodes))
     # partition invariance: same matching regardless of input layout
-    scored = fs_link(docs, max_block=48)
+    scored = fs_link(docs)
     a = sorted((r["id_a"], r["id_b"]) for r in out)
     b = sorted(
         (r["id_a"], r["id_b"])

@@ -62,7 +62,7 @@ def test_grouped_accuracy(spark):
         [("a", "PROPER"), ("b", "PROPER"), ("c", "PRONOMINAL"), ("d", "PROPER")],
         "mention_id string, mtype string",
     )
-    got = {r["mtype"]: r for r in grouped_accuracy(pred, gold, attrs, "mtype").collect()}
+    got = {r["mtype"]: r for r in grouped_accuracy(pred, gold, attrs).collect()}
     assert got["PROPER"]["n"] == 3 and got["PROPER"]["correct"] == 3
     assert got["PRONOMINAL"]["n"] == 1 and got["PRONOMINAL"]["correct"] == 0
     assert got["PRONOMINAL"]["accuracy"] == 0.0

@@ -96,13 +96,13 @@ def test_bootstrap_significance(spark):
     stats_good = per_doc_pairwise_stats(spark.createDataFrame(rows_good, schema))
     stats_bad = per_doc_pairwise_stats(spark.createDataFrame(rows_bad, schema))
 
-    r = bootstrap_significance(stats_bad, stats_good, n_trials=200).collect()[0]
+    r = bootstrap_significance(stats_bad, stats_good).collect()[0]
     assert r["f1_b"] > r["f1_a"]
     assert r["frac_sig"] >= 0.95, r  # good system significantly better
-    r2 = bootstrap_significance(stats_good, stats_good, n_trials=200).collect()[0]
+    r2 = bootstrap_significance(stats_good, stats_good).collect()[0]
     assert r2["frac_sig"] == 0.0  # strict inequality: ties never count
     # determinism across runs
-    r3 = bootstrap_significance(stats_bad, stats_good, n_trials=200).collect()[0]
+    r3 = bootstrap_significance(stats_bad, stats_good).collect()[0]
     assert r3["frac_sig"] == r["frac_sig"]
 
 
@@ -173,7 +173,7 @@ def test_conll_f1_is_average_and_doc_scoped(spark):
          ("x", "d2", 0), ("y", "d2", 1)],
         "mention_id string, g string, entity_id long",
     )
-    row = conll_metrics(pred, gold, doc_col="g").collect()[0]
+    row = conll_metrics(pred, gold).collect()[0]
     assert row["conll_f1"] == pytest.approx(
         (row["muc_f1"] + row["b3_f1"] + row["ceafe_f1"]) / 3
     )

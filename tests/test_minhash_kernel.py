@@ -39,7 +39,7 @@ def test_er_block_keys_match_oracle(spark):
     got = {
         (r["norm_name"], r["block_key"])
         for r in minhash_band_keys(
-            surf, ["norm_name"], char_shingles_col("norm_name", cfg.shingle_k),
+            surf, ["norm_name"], char_shingles_col(cfg.shingle_k),
             cfg.minhash_bands, cfg.minhash_rows,
             sep=":", tag="MH", key_col="block_key",
         ).collect()
@@ -71,7 +71,7 @@ def test_dedup_buckets_and_pairs_match_oracle(spark):
     assert not {d for d, _ in got} & TOKENLESS
     assert got == want
     got_pairs = {
-        (r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, bands=4, rows=2).collect()
+        (r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs).collect()
     }
     want_pairs = set(con.execute(entry._minhash_oracle(4, 2)).fetchall())
     assert (1, 6) in want_pairs and (1, 100001) in want_pairs

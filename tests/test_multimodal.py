@@ -361,7 +361,7 @@ def test_resize_real_bmp_distributed(spark):
 
 
 def test_frame_sample_plan(media):
-    plan = frame_sample_plan(media, every_ms=500)
+    plan = frame_sample_plan(media)
     counts = (
         plan.groupBy("media_id").count()
         .join(media.select("media_id", F.col("meta.duration_ms").alias("d")), "media_id")

@@ -231,9 +231,10 @@ def test_loc_tagging_handset_and_trained():
 def test_trained_beats_handset_on_gold():
     """Token accuracy of the trained CRF >= hand-set emissions on held-out
     synth gold BIO (the M9 'Done =' criterion)."""
-    sys_path_hack = "/root/repo"
+    import os
     import sys
 
+    sys_path_hack = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if sys_path_hack not in sys.path:
         sys.path.insert(0, sys_path_hack)
     from tools.train_ner_weights import (

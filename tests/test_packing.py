@@ -78,7 +78,7 @@ def test_domain_mixture_hand_computed(spark):
         [(1, _txt(90, "a"), "big"), (2, _txt(10, "b"), "small")],
         "doc_id long, text string, source string",
     )
-    out = {r.domain: r for r in domain_mixture(df, alpha=0.5, domain_col="source").collect()}
+    out = {r.domain: r for r in domain_mixture(df, alpha=0.5).collect()}
     z = 90**0.5 + 10**0.5
     assert out["big"].p_raw == pytest.approx(0.9)
     assert out["big"].weight == pytest.approx(round(90**0.5 / z, 6))

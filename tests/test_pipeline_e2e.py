@@ -1,6 +1,8 @@
 """End-to-end ER pipeline: F1 target, blocking recall, resume idempotence,
 and no repeated work across runs (generated code, the extract kernel)."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,6 +99,30 @@ def test_metrics_lineage_written(pipeline_result, spark):
     stages = {r["stage"] for r in m.collect()}
     assert {"mentions", "candidate_pairs", "scored_pairs", "clusters"} <= stages
     assert m.where(F.col("rows_out") <= 0).count() == 0
+
+
+def test_stage_rows_come_from_the_write(pipeline_result, spark):
+    """_DONE and metrics.jsonl carry each stage table's true row count."""
+    _, store, _ = pipeline_result
+    logged = {r["stage"]: r["rows_out"] for r in store.metrics(spark).collect()}
+    for name in ("mentions", "candidate_pairs", "scored_pairs", "clusters"):
+        fresh = store.load(spark, name).count()
+        with open(store._done_marker(name)) as f:
+            assert json.load(f)["rows"] == fresh, name
+        assert logged[name] == fresh, name
+
+
+def test_save_runs_no_count_job(spark, tmp_path):
+    """A stage save runs the write job and the re-read's parquet schema
+    lookup, nothing else: its row count is observed by the write, not
+    re-counted by further jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-save", "checkpoint-save")
+    try:
+        CheckpointStore(str(tmp_path)).save(spark.range(1000), "r")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("checkpoint-save")) == 2
 
 
 def test_trained_weights_default_and_ge_handset(

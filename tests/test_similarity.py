@@ -120,7 +120,7 @@ def test_embedding_near_dup_finds_exact_duplicates(spark, emb):
     both = emb.unionByName(dup)
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in embedding_near_dup(both, threshold=0.999).collect()
+        for r in embedding_near_dup(both).collect()
     }
     ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
     missing = [(i, i + 100000) for i in ids if (i, i + 100000) not in pairs]
@@ -133,7 +133,7 @@ def test_ivf_topk_recall_and_uniqueness(emb, numpy_topk):
     exact is reasonable for the probe budget."""
     from berkeley_entity_spark.operators.similarity import ivf_topk
 
-    rows = ivf_topk(emb, k=K, n_centroids=8, n_probe=3).collect()
+    rows = ivf_topk(emb, k=K, n_probe=3).collect()
     got = {}
     for r in rows:
         got.setdefault(r["query_id"], {})[r["rank"]] = r["neighbor_id"]
@@ -176,8 +176,8 @@ def test_ivf_trained_centroids_deterministic_and_usable(emb, numpy_topk):
         ivf_train_centroids,
     )
 
-    C1 = ivf_train_centroids(emb, n_centroids=8, sample_n=256, iters=5)
-    C2 = ivf_train_centroids(emb, n_centroids=8, sample_n=256, iters=5)
+    C1 = ivf_train_centroids(emb)
+    C2 = ivf_train_centroids(emb)
     assert np.array_equal(C1, C2)
     rows = ivf_topk(emb, k=K, n_probe=3, centroids=C1).collect()
     assert len(rows) > 0

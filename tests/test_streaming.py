@@ -78,7 +78,7 @@ def test_mention_rate_stream_windows(spark, pages_dir, tmp_path):
     # synth timestamps advance 1s/page (120 pages = 2 min span): a 10s
     # watermark lets the early windows finalize inside the drain
     stream = mention_rate_stream(
-        read_page_stream(spark, root).where("lang = 'en'"), watermark="10 seconds"
+        read_page_stream(spark, root).where("lang = 'en'")
     )
     q = (
         stream.writeStream.format("memory")
@@ -424,7 +424,6 @@ def test_golden_scd2_stream(spark, tmp_path):
     q = start_golden_scd2_stream(
         spark, root, dirs["state"], dirs["pairs"], dirs["assign"],
         dirs["pstore"], dirs["golden"], dirs["ckpt"],
-        max_files_per_trigger=1,
     )
     q.awaitTermination(300)
 
@@ -542,7 +541,6 @@ def test_golden_scd2_stream_out_of_order_batches(spark, tmp_path):
     q = start_golden_scd2_stream(
         spark, root, dirs["state"], dirs["pairs"], dirs["assign"],
         dirs["pstore"], dirs["golden"], dirs["ckpt"],
-        max_files_per_trigger=1,
     )
     q.awaitTermination(300)
 

@@ -87,7 +87,7 @@ def test_winnow_overlap_detects_injected_quote(spark):
     )
     pairs = {
         (r["id_a"], r["id_b"]): r["shared"]
-        for r in winnow_overlap_pairs(docs, min_shared=3).collect()
+        for r in winnow_overlap_pairs(docs).collect()
     }
     assert (1, 2) in pairs and pairs[(1, 2)] >= 3
     assert all(3 not in p for p in pairs)

@@ -112,7 +112,7 @@ def test_hits_matches_dense_replay(tiny_edges):
     rows, edges = tiny_edges
     got = {
         r["node"]: (r["hub"], r["authority"])
-        for r in hits(edges, iterations=4, weight_col="w").collect()
+        for r in hits(edges, iterations=4).collect()
     }
     want_h, want_a = _numpy_hits(["a", "b", "c"], rows, iterations=4)
     assert set(got) == {"a", "b", "c"}
@@ -129,7 +129,7 @@ def test_hits_l2_normalized(tiny_edges):
     from berkeley_entity_spark.operators.webgraph import hits
 
     _, edges = tiny_edges
-    rows = hits(edges, iterations=3, weight_col="w").collect()
+    rows = hits(edges, iterations=3).collect()
     assert sum(r["hub"] ** 2 for r in rows) == pytest.approx(1.0, abs=1e-9)
     assert sum(r["authority"] ** 2 for r in rows) == pytest.approx(
         1.0, abs=1e-9
@@ -149,7 +149,7 @@ def test_anchor_text_table_topk_and_ties(spark):
     )
     got = [
         (r["dst"], r["rank"], r["anchor"], r["n"])
-        for r in anchor_text_table(links, k=3)
+        for r in anchor_text_table(links)
         .orderBy("dst", "rank")
         .collect()
     ]
@@ -159,3 +159,28 @@ def test_anchor_text_table_topk_and_ties(spark):
         ("t1", 3, "the acme company", 2),
         ("t2", 1, "solo", 1),
     ]
+
+
+def test_anchor_text_hot_target_is_exact(spark):
+    """A hot target with thousands of distinct anchors ranks exactly as a
+    single sort would, whatever the partitioning (the salted top-k)."""
+    from collections import Counter
+
+    from berkeley_entity_spark.operators.webgraph import anchor_text_table
+
+    rows = [("hot", f"a{i:04d}") for i in range(3000) for _ in range(1 + i % 7)]
+    rows += [("cold", "x"), ("cold", "y"), ("cold", "y")]
+    counts = Counter(rows)
+    want = []
+    for dst in ("cold", "hot"):
+        ranked = sorted(
+            ((-n, anchor) for (d, anchor), n in counts.items() if d == dst)
+        )[:3]
+        want += [(dst, r, a, -n) for r, (n, a) in enumerate(ranked, 1)]
+    links = spark.createDataFrame(rows, "dst string, anchor string")
+    for df in (links, links.repartition(13)):
+        got = [
+            tuple(r)
+            for r in anchor_text_table(df).orderBy("dst", "rank").collect()
+        ]
+        assert got == want

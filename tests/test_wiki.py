@@ -22,7 +22,7 @@ def test_redirect_chain_bounded_hops(spark):
     )
     got = {
         (r["surface"], r["title"])
-        for r in resolve_redirects(links, redirects, hops=2).collect()
+        for r in resolve_redirects(links, redirects).collect()
     }
     assert ("jobs", "steve_jobs") in got  # two hops followed
     assert ("jobs", "employment") in got  # non-redirected untouched
@@ -65,7 +65,7 @@ def test_top_k_categories_rarest_first(spark):
     )
     got = {
         (r["title"], r["rank"]): (r["category"], r["freq"])
-        for r in top_k_categories(cats, k=2).collect()
+        for r in top_k_categories(cats).collect()
     }
     assert got[("a", 1)] == ("rare", 1)
     assert got[("a", 2)] == ("mid", 2)
@@ -108,3 +108,50 @@ def test_out_link_stats(spark):
     zw = got[("z", "w")]  # w has no out-links at all
     assert (zw["inter"], zw["n_a"], zw["n_b"]) == (0, 1, 0)
     assert not zw["one_links_other"]
+
+
+_DUMP = """<mediawiki>
+  <page>
+    <title>Acme Corp</title>
+    <revision><text xml:space="preserve">Founded by [[Jane Doe|Jane]] in
+[[Springfield]]; see [[Acme &amp; Co|Acme]].</text></revision>
+  </page>
+  <page>
+    <title>Acme Corporation</title>
+    <redirect title="Acme Corp" />
+    <revision><text xml:space="preserve">#REDIRECT [[Acme Corp]]</text></revision>
+  </page>
+  <page>
+    <revision><text xml:space="preserve">untitled [[Orphan]]</text></revision>
+  </page>
+</mediawiki>
+"""
+
+
+def test_read_dump_to_links_and_redirects(spark, tmp_path):
+    """read_dump -> parse_pages -> page_links / redirect_table over a
+    three-page dump: the untitled page is dropped, the redirect page yields
+    the redirect pair, and piped links vote (anchor -> target)."""
+    from berkeley_entity_spark.sources.wikidump import (
+        page_links,
+        parse_pages,
+        read_dump,
+        redirect_table,
+    )
+
+    path = tmp_path / "dump.xml"
+    path.write_text(_DUMP)
+    pages = parse_pages(read_dump(spark, str(path))).cache()
+    assert {(r["title"], r["redirect_target"]) for r in pages.collect()} == {
+        ("Acme Corp", None),
+        ("Acme Corporation", "Acme Corp"),
+    }
+    assert sorted(tuple(r) for r in page_links(pages).collect()) == [
+        ("Acme Corp", "Acme", "Acme & Co"),
+        ("Acme Corp", "Jane", "Jane Doe"),
+        ("Acme Corp", "Springfield", "Springfield"),
+        ("Acme Corporation", "Acme Corp", "Acme Corp"),
+    ]
+    assert [tuple(r) for r in redirect_table(pages).collect()] == [
+        ("Acme Corporation", "Acme Corp")
+    ]

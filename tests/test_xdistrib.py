@@ -53,7 +53,7 @@ def test_dot_products_symmetric_and_window_bounded(spark):
     vecs = mention_vectors(component_features(_mentions(spark)))
     dots = {
         (r["m_idx"], r["j"]): r["dot_scaled"]
-        for r in distrib_pair_scores(vecs, window=8).collect()
+        for r in distrib_pair_scores(vecs).collect()
     }
     # identical vectors (0 and 1): dot(1,0) = ||v0||^2 > 0
     assert dots[(1, 0)] > 0

@@ -21,14 +21,16 @@ Usage: python tools/pin_invariants.py
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from berkeley_entity_spark.session import get_spark  # noqa: E402
 
-OUT = "/root/repo/INVARIANTS.json"
+OUT = os.path.join(ROOT, "INVARIANTS.json")
 # query -> the sf dir its pin is collected at.  q_joint_entity reads
 # sf_dir, so its pin uses sf0.01 — the scale the driver's correctness gate
 # runs at.
@@ -64,7 +66,7 @@ def check_joint_kernel(spark) -> bool:
     fails and the pin is refused."""
     import duckdb
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from check_oracles import table_signature
 
     sdf = entrymod.queries()["q_joint_pair"](spark, "/root/testdata/sf0.001")

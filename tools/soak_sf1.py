@@ -161,7 +161,7 @@ def run_soak(spark) -> dict:
     emb = spark.read.parquet(f"{DST}/embeddings.parquet")
     t0 = time.monotonic()
     # n_planes="auto" resolves to 10 here (20k vectors / target 32)
-    lsh_bucket_topk(emb, k=3, n_planes="auto", n_tables=16).write.format(
+    lsh_bucket_topk(emb, k=3, n_planes="auto").write.format(
         "noop"
     ).mode("overwrite").save()
     dt = round(time.monotonic() - t0, 3)

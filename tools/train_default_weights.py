@@ -10,11 +10,13 @@ Usage: python tools/train_default_weights.py [n_pages] [n_entities]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from berkeley_entity_spark.config import PipelineConfig, SynthConfig  # noqa: E402
 from berkeley_entity_spark.evaluate import pairwise_f1_combinatorial  # noqa: E402
@@ -27,7 +29,7 @@ from berkeley_entity_spark.plans.pipeline import run_pipeline  # noqa: E402
 from berkeley_entity_spark.session import get_spark  # noqa: E402
 from berkeley_entity_spark.synth import generate_webpages, gold_pair_table, gold_with_ids  # noqa: E402
 
-OUT = "/root/repo/berkeley_entity_spark/ml/default_weights.npy"
+OUT = os.path.join(ROOT, "berkeley_entity_spark", "ml", "default_weights.npy")
 
 
 def main() -> None:

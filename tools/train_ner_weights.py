@@ -13,11 +13,13 @@ Usage: python tools/train_ner_weights.py [n_pages]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from berkeley_entity_spark.config import SynthConfig  # noqa: E402
 from berkeley_entity_spark.ml.crf import (  # noqa: E402
@@ -42,7 +44,7 @@ from berkeley_entity_spark.synth import (  # noqa: E402
     make_page,
 )
 
-OUT = "/root/repo/berkeley_entity_spark/ml/ner_weights.npz"
+OUT = os.path.join(ROOT, "berkeley_entity_spark", "ml", "ner_weights.npz")
 PERSONS = frozenset(w.lower() for w in FIRST + LAST)
 ORGS = frozenset(w.lower() for w in ORG_W1 + ORG_W2 + ORG_SUF)
 

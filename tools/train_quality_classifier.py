@@ -21,7 +21,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -85,7 +86,7 @@ def main():
         sys.exit(1)
 
     path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ROOT,
         "berkeley_entity_spark",
         "ml",
         "quality_clf.json",
