@@ -736,7 +736,7 @@ def q_er_pipeline(spark, sf_dir):
     n_surfaces, n_mentions) — the surface-level rollup shared with
     q_er_clusters (_surface_cluster_rollup; assign_clusters' mention-level
     contract is exercised by run_pipeline and the e2e tests)."""
-    from berkeley_entity_spark.config import PipelineConfig, SynthConfig
+    from berkeley_entity_spark.config import SynthConfig
     from berkeley_entity_spark.operators.blocking import candidate_pairs, distinct_surfaces
     from berkeley_entity_spark.operators.clustering import connected_components
     from berkeley_entity_spark.operators.extract import extract_mentions
@@ -748,12 +748,11 @@ def q_er_pipeline(spark, sf_dir):
     )
     from berkeley_entity_spark.synth import generate_webpages
 
-    cfg = PipelineConfig()
     pages, _ = generate_webpages(spark, SynthConfig(n_pages=300, n_entities=40))
     mentions = extract_mentions(pages.where("lang = 'en'")).localCheckpoint(eager=True)
     surfaces = distinct_surfaces(mentions).persist()
     n_surfaces = surfaces.count()
-    pairs = candidate_pairs(mentions, cfg, surfaces=surfaces)
+    pairs = candidate_pairs(surfaces, n_surfaces)
     idf = collect_idf(idf_table(surfaces, n=n_surfaces))
     scored = score_pairs(pairs, idf)
     comp = connected_components(match_edges(scored))
@@ -1036,13 +1035,11 @@ def q_er_clusters(spark, sf_dir):
     OrderedClustering.scala:79-95) — replacing round-2's golden-pinned
     oracle.  Output: one row per cluster (rep_name = min member surface,
     n_surfaces, n_mentions)."""
-    from berkeley_entity_spark.config import PipelineConfig
     from berkeley_entity_spark.operators.blocking import candidate_pairs, distinct_surfaces
     from berkeley_entity_spark.operators.clustering import connected_components
     from berkeley_entity_spark.operators.extract import extract_mentions
     from berkeley_entity_spark.operators.scoring import match_edges, score_pairs, weights_vector
 
-    cfg = PipelineConfig()
     mentions = extract_mentions(_cap_docs(spark, sf_dir)).localCheckpoint(eager=True)
     surfaces = distinct_surfaces(mentions).persist()
     n_surfaces = surfaces.count()
@@ -1054,10 +1051,7 @@ def q_er_clusters(spark, sf_dir):
     # clause.  features_out=False: only the score reaches match_edges
     # (zero-weight Python features skipped — scores bit-identical).
     w = weights_vector(ORACLE_ER_WEIGHTS)
-    pairs = candidate_pairs(
-        mentions, cfg, surfaces=surfaces, n_surfaces=n_surfaces,
-        prune=(w, ORACLE_ER_THRESHOLD),
-    )
+    pairs = candidate_pairs(surfaces, n_surfaces, prune=(w, ORACLE_ER_THRESHOLD))
     scored = score_pairs(pairs, {}, weights=w, features_out=False)
     comp = connected_components(match_edges(scored, threshold=ORACLE_ER_THRESHOLD))
     return _surface_cluster_rollup(surfaces, comp)
@@ -4134,10 +4128,15 @@ def _er_blocking_ctes() -> str:
     md5-string-min minhash LSH bands, hot-block cap (row_number window),
     band self-join with the per-pass pairing width.  Used by BOTH
     q_er_clusters' and q_er_pipeline's oracles."""
-    from berkeley_entity_spark.config import PipelineConfig
+    from berkeley_entity_spark.operators.blocking import (
+        MAX_BLOCK,
+        MH_BANDS,
+        MH_ROWS,
+        NEIGHBORHOOD,
+        SHINGLE_K,
+    )
 
-    cfg = PipelineConfig()
-    k, rows, bands = cfg.shingle_k, cfg.minhash_rows, cfg.minhash_bands
+    k, rows, bands = SHINGLE_K, MH_ROWS, MH_BANDS
     # blocking.char_shingles_col over the space-padded surface `p`
     char_sh = f"""CASE WHEN length(p) <= {k} THEN [p]
         ELSE list_distinct(list_transform(
@@ -4165,14 +4164,14 @@ ranked AS (SELECT norm_name, block_key,
                   row_number() OVER (PARTITION BY block_key
                                      ORDER BY norm_name) AS rn
            FROM keys),
-capped AS (SELECT * FROM ranked WHERE rn <= {cfg.max_block_size}),
+capped AS (SELECT * FROM ranked WHERE rn <= {MAX_BLOCK}),
 cand AS (SELECT DISTINCT least(a.norm_name, b.norm_name) AS na,
                 greatest(a.norm_name, b.norm_name) AS nb
          FROM capped a JOIN capped b ON a.block_key = b.block_key
           AND b.rn > a.rn
           AND b.rn <= a.rn + CASE WHEN starts_with(a.block_key, 'MH:')
-                                  THEN {cfg.max_block_size}
-                                  ELSE {cfg.neighborhood} END)"""
+                                  THEN {MAX_BLOCK}
+                                  ELSE {NEIGHBORHOOD} END)"""
 
 
 def _er_clusters_oracle() -> str:

@@ -1,4 +1,12 @@
-"""Pipeline configuration."""
+"""Pipeline configuration.
+
+SynthConfig holds the synthetic-corpus knobs.  PipelineConfig holds the one
+thing a deployment of the ER pipeline sets: where its stage tables live.
+The blocking constants (MinHash shape, shingle width, neighborhood width,
+hot-block cap) are module constants of operators.blocking, and the decode
+threshold and CC round limit are the defaults of match_edges and
+connected_components.
+"""
 
 from __future__ import annotations
 
@@ -20,31 +28,9 @@ class SynthConfig:
 
 @dataclass(frozen=True)
 class PipelineConfig:
-    """Knobs for the ER pipeline stages."""
+    """Where the ER pipeline's stage tables live (parquet under this root)."""
 
-    # blocking
-    minhash_rows: int = 4  # minhashes per band
-    minhash_bands: int = 8  # bands (total sigs = rows*bands)
-    shingle_k: int = 3  # char-shingle width
-    neighborhood: int = 6  # sorted-neighborhood window (row offset band)
-    max_block_size: int = 200  # hot-block threshold (cap, or salt trigger)
-    salt_buckets: int = 16  # salt fan-out for hot blocks
-    # False: rows beyond max_block_size in a block are dropped from pairing
-    # (bounded work, bounded recall).  True: hot blocks are instead SALTED
-    # into salt_buckets sorted sub-blocks — no rows dropped, work bounded per
-    # sub-block, and the single-task hot-key window becomes salt_buckets
-    # parallel tasks (the 10^12-page head-domain-skew setting).  Note the
-    # recall trade: pairs between rows hashed into DIFFERENT sub-blocks of
-    # the same hot key are not generated (the salt destroys sorted-
-    # neighborhood locality across sub-blocks).
-    salt_hot_blocks: bool = False
-    # scoring
-    score_threshold: float = 0.0  # logistic margin for a match edge
-    # clustering
-    max_cc_iterations: int = 50
-    # stage checkpoint root (parquet locally; iceberg table prefix on cluster)
-    checkpoint_dir: str = "/tmp/bes_checkpoints"
-    checkpoint_format: str = "parquet"
+    checkpoint_dir: str
 
 
 SCALES = {
@@ -56,6 +42,3 @@ SCALES = {
 
 def scale_config(name: str) -> SynthConfig:
     return SCALES[name]
-
-
-DEFAULT_PIPELINE = PipelineConfig()

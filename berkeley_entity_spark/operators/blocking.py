@@ -22,11 +22,14 @@ run over the **distinct normalized surfaces** rather than mention instances:
      implementation: dedup.py, fuzzy decontamination and the incremental
      dedup stream (streaming/ingest.py) call it over word shingles.
 
-Hot blocks (head-domain skew / common surnames) are defused either by a
-row_number cap (default) or, with cfg.salt_hot_blocks, by deterministic
-salting of over-threshold keys into sorted sub-blocks (no rows dropped,
-but cross-sub-block pairs within a hot key are not generated — a bounded
-recall trade, see tests/test_blocking_salt.py);
+Hot blocks (head-domain skew / common surnames) are defused by one
+row_number cap: each block key keeps its first MAX_BLOCK surfaces in
+(norm_name, node_id) order.  Spark plans the `rn <= MAX_BLOCK` filter as a
+partial WindowGroupLimit below the key exchange and a final one above it,
+so each map task ships at most MAX_BLOCK rows of a hot key into the
+shuffle, and the self-join sees at most MAX_BLOCK rows per key — bounded
+work, and a deterministic, disclosed recall bound
+(test_capped_blocking_drops_tail);
 AQE skew-join handles residual join-side imbalance.
 Everything below is expressed as DataFrame ops (joins, windows, explode); the
 minhash pass included — the whole stage runs JVM-side in codegen.
@@ -45,7 +48,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.config import PipelineConfig
+from berkeley_entity_spark.util import maybe_broadcast
+
+# MinHash-LSH banding of char SHINGLE_K-shingles of a surface
+MH_BANDS, MH_ROWS = 8, 4
+SHINGLE_K = 3
+# sorted-neighborhood window: rows paired after each row inside a block key
+NEIGHBORHOOD = 6
+# hot-block cap: surfaces kept per block key (and the pairing width inside
+# an LSH bucket, whose members are already near-dups)
+MAX_BLOCK = 200
 
 # ----------------------------------------------------------- distinct surfaces
 
@@ -97,10 +109,6 @@ def explode_block_keys(df: DataFrame, id_col: str) -> DataFrame:
     return keyed.select(
         F.col(id_col), F.col("norm_name"), F.explode("keys").alias("block_key")
     ).where(F.col("block_key").isNotNull() & (F.length("block_key") > 2))
-
-
-def surface_block_keys(surfaces: DataFrame) -> DataFrame:
-    return explode_block_keys(surfaces, "node_id")
 
 
 # ------------------------------------------------------------------- minhash
@@ -215,21 +223,24 @@ def capped_key_pairs(
 
 
 def candidate_pairs(
-    mentions: DataFrame,
-    cfg: PipelineConfig,
-    surfaces: DataFrame | None = None,
-    n_surfaces: int | None = None,
+    surfaces: DataFrame,
+    n_surfaces: int,
     prune: tuple | None = None,
 ) -> DataFrame:
     """Full blocking stage: distinct surfaces -> union of passes -> dedup.
+
+    `surfaces` is distinct_surfaces' table and `n_surfaces` its (already
+    counted) row count, which gates the broadcast of the attribute lookups.
 
     Both passes go through ONE ranked window + ONE band self-join: LSH bucket
     keys ("MH:band:bucket") are unioned into the block-key table with the
     sorted-neighborhood keys ("L:/F:/A:"), and the per-key pairing width is a
     column (full-width inside an LSH bucket — its members are already
-    near-dups; `neighborhood` rows inside a sorted key).  One shuffle sort +
+    near-dups; NEIGHBORHOOD rows inside a sorted key).  One shuffle sort +
     one join instead of two of each — at web scale this halves the shuffle
     count of the dominant stage; at bench scale it halves its fixed job cost.
+    The window keeps the first MAX_BLOCK rows of every key; planned as a
+    partial + final WindowGroupLimit, that cap is the stage's skew handling.
 
     prune=(weights, threshold): valid ONLY when the consumer keeps
     above-threshold edges (the q_er_clusters decode path).  Applies the
@@ -245,15 +256,13 @@ def candidate_pairs(
     surface level, plus representative mention/url columns for the FIXTURES
     candidate_pairs contract.
     """
-    if surfaces is None:
-        surfaces = distinct_surfaces(mentions).persist()
-    sn_keys = surface_block_keys(surfaces)
+    sn_keys = explode_block_keys(surfaces, "node_id")
     mh_keys = minhash_band_keys(
         surfaces,
         ["node_id", "norm_name"],
-        char_shingles_col(cfg.shingle_k),
-        cfg.minhash_bands,
-        cfg.minhash_rows,
+        char_shingles_col(SHINGLE_K),
+        MH_BANDS,
+        MH_ROWS,
         sep=":",
         tag="MH",
         key_col="block_key",
@@ -264,48 +273,13 @@ def candidate_pairs(
         # admissible for negative weights; a broadcast lookup keeps the
         # join map-side (falls back to shuffle past the byte gate — the
         # same join the unpruned tail pays twice anyway)
-        from berkeley_entity_spark.util import maybe_broadcast
-
-        acr_lut = surfaces.select("node_id", "is_acr")
-        if n_surfaces is not None:
-            acr_lut = maybe_broadcast(acr_lut, n_surfaces)
+        acr_lut = maybe_broadcast(surfaces.select("node_id", "is_acr"), n_surfaces)
         keys = keys.join(acr_lut, "node_id")
 
-    if cfg.salt_hot_blocks:
-        # head-domain skew: a hot key (mega-surname, boilerplate LSH bucket)
-        # would otherwise sort in ONE window task.  Salt only keys above the
-        # threshold (broadcast the hot-key list — it is tiny by definition)
-        # into deterministic sorted sub-blocks.  No rows are dropped, but
-        # pairs between rows landing in different sub-blocks of the same hot
-        # key are not generated (the salt is a hash, so neighborhood locality
-        # does not survive the split) — a bounded recall trade vs the cap.
-        # `keys` (which embeds the minhash signature agg) feeds BOTH the
-        # hot aggregate and the join below; persist so it computes once.
-        keys = keys.persist()
-        hot = (
-            keys.groupBy("block_key")
-            .agg(F.count(F.lit(1)).alias("_kn"))
-            .where(F.col("_kn") > cfg.max_block_size)
-            .select("block_key", F.lit(True).alias("_hot"))
-        )
-        keys = (
-            keys.join(F.broadcast(hot), "block_key", "left")
-            .withColumn(
-                "salt",
-                F.when(
-                    F.col("_hot"),
-                    F.pmod(F.xxhash64("node_id"), F.lit(cfg.salt_buckets)).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("_hot")
-        )
-    else:
-        keys = keys.withColumn("salt", F.lit(0))
-
-    w = Window.partitionBy("block_key", "salt").orderBy("norm_name", "node_id")
-    ranked = keys.withColumn("rn", F.row_number().over(w))
-    if not cfg.salt_hot_blocks:
-        ranked = ranked.where(F.col("rn") <= cfg.max_block_size)
+    w = Window.partitionBy("block_key").orderBy("norm_name", "node_id")
+    ranked = keys.withColumn("rn", F.row_number().over(w)).where(
+        F.col("rn") <= MAX_BLOCK
+    )
     # Materialize the cache BEFORE the self-join: with a lazy persist the
     # two join branches race — each scan task evaluates the window+minhash
     # DAG until the cache fills, so most of the keys stage computes twice.
@@ -315,9 +289,6 @@ def candidate_pairs(
     # agg is strictly more expensive than one in-memory materialization.
     ranked = ranked.persist()
     ranked.count()
-    if cfg.salt_hot_blocks:
-        # free the keys cache — the minhash signatures never recompute.
-        keys.unpersist()
     if prune is not None:
         # Per-surface derived values for the prune bound, computed ON TOP of
         # the cached narrow table (so they never hit cache bytes — measured
@@ -340,8 +311,8 @@ def candidate_pairs(
             }
         ).withColumn("_ndt", F.size("_dt"))
     width = F.when(
-        F.col("a.block_key").startswith("MH:"), F.lit(cfg.max_block_size)
-    ).otherwise(F.lit(cfg.neighborhood))
+        F.col("a.block_key").startswith("MH:"), F.lit(MAX_BLOCK)
+    ).otherwise(F.lit(NEIGHBORHOOD))
     a, b = ranked.alias("a"), ranked.alias("b")
     a_first = F.col("a.node_id") < F.col("b.node_id")
     pair_cols = [
@@ -363,7 +334,6 @@ def candidate_pairs(
     joined = a.join(
         b,
         (F.col("a.block_key") == F.col("b.block_key"))
-        & (F.col("a.salt") == F.col("b.salt"))
         & (F.col("b.rn") > F.col("a.rn"))
         & (F.col("b.rn") <= F.col("a.rn") + width),
     ).where(F.col("a.node_id") != F.col("b.node_id"))
@@ -396,13 +366,11 @@ def candidate_pairs(
     # rows AND estimated bytes (string columns can blow past the executor
     # budget long before the row ceiling); at 10^12 pages the table exceeds
     # both and we shuffle
-    from berkeley_entity_spark.util import maybe_broadcast
-
     if prune is not None:
         # norm/acr already ride on the pair rows; only url/mention remain
-        su = surfaces.select("node_id", "rep_url", "rep_mention")
-        if n_surfaces is not None:
-            su = maybe_broadcast(su, n_surfaces)
+        su = maybe_broadcast(
+            surfaces.select("node_id", "rep_url", "rep_mention"), n_surfaces
+        )
         return (
             pairs.join(su.toDF("node_a", "url_a", "mention_a"), "node_a")
             .join(su.toDF("node_b", "url_b", "mention_b"), "node_b")
@@ -411,9 +379,10 @@ def candidate_pairs(
                 "acr_b", "url_a", "mention_a", "url_b", "mention_b", "pass",
             )
         )
-    s = surfaces.select("node_id", "norm_name", "rep_url", "rep_mention", "is_acr")
-    if n_surfaces is not None:
-        s = maybe_broadcast(s, n_surfaces)
+    s = maybe_broadcast(
+        surfaces.select("node_id", "norm_name", "rep_url", "rep_mention", "is_acr"),
+        n_surfaces,
+    )
     return (
         pairs.join(
             s.toDF("node_a", "norm_a", "url_a", "mention_a", "acr_a"), "node_a"
@@ -424,7 +393,6 @@ def candidate_pairs(
             "acr_b", "url_a", "mention_a", "url_b", "mention_b", "pass",
         )
     )
-
 
 
 # ---------------------------------------------------------------- phonetic

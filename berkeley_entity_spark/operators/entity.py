@@ -23,7 +23,8 @@ previous iteration's clusters, repeatable):
      provisional cluster is bucketed and the bucket's weight added to the
      pairwise margin (UNKNOWN attribute values contribute nothing — web
      mentions are frequently untyped and must not be penalized for it);
-  4. edges are re-cut / re-admitted at the same threshold -> final closure.
+  4. edges are re-cut / re-admitted at the same threshold (match_edges'
+     default margin, the pipeline's decode) -> final closure.
 
 Merging and splitting both happen: a disagreeing-cluster link drops below
 threshold (split); a borderline link whose partner cluster agrees is lifted
@@ -118,7 +119,6 @@ def entity_refine(
     scored: DataFrame,
     components: DataFrame,
     node_attrs: DataFrame,
-    threshold: float = 0.0,
 ) -> DataFrame:
     """One entity-level refinement round over surface nodes.
 
@@ -195,16 +195,15 @@ def entity_refine(
         F.lit(0.0),
     )
     refined = adjusted.withColumn("score", F.col("score") + adj_sum)
-    return match_edges(refined, threshold)
+    return match_edges(refined)
 
 
 def refine_components(
     scored: DataFrame,
     components: DataFrame,
     node_attrs: DataFrame,
-    threshold: float = 0.0,
 ) -> DataFrame:
     """entity_refine + closure: the full second pass, returning the refined
     (node_id, component) mapping ready for assign_clusters."""
-    edges = entity_refine(scored, components, node_attrs, threshold)
+    edges = entity_refine(scored, components, node_attrs)
     return connected_components(edges)

@@ -24,8 +24,8 @@ better candidate/match ratio.
     no float mean, no rounding contract needed.
 
 block_graph_edges / wnp_prune are generic over any (id, block_key)
-table — the mention block keys from blocking.surface_block_keys plug in
-directly; doc_block_keys is the self-contained multi-pass keyer used by
+table — the surface block keys from
+blocking.explode_block_keys(surfaces, "node_id") plug in directly; doc_block_keys is the self-contained multi-pass keyer used by
 the gate query (first-token, last-token, and length-bucket passes, the
 last deliberately hot to exercise the cap).
 """

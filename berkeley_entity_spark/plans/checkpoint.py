@@ -6,9 +6,9 @@ a materialized table per stage boundary with skip-if-exists resume — kill the
 job after any stage and a rerun continues from the last completed stage with
 byte-identical results (everything upstream is deterministic).
 
-Locally stage tables are parquet under checkpoint_dir; on a cluster the same
-writer targets Iceberg (`format("iceberg").saveAsTable(...)`) — the format
-string is the only difference, so the resume contract is identical.
+Stage tables are parquet directories under the store's root, each with a
+`<name>._DONE` marker written after the table — the marker, not the
+directory, is what resume trusts.
 
 Each save appends a row to the `metrics` table:
 (stage, rows_out, wall_ms, finished_at) — FIXTURES §3 lineage contract.
@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 @dataclass
 class CheckpointStore:
     root: str
-    fmt: str = "parquet"
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -43,16 +42,16 @@ class CheckpointStore:
         return os.path.exists(self._done_marker(name))
 
     def load(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.format(self.fmt).load(self._path(name))
+        return spark.read.parquet(self._path(name))
 
     def save(self, df: DataFrame, name: str) -> DataFrame:
         """Materialize a stage output; returns the re-read DataFrame (cuts
         lineage, later stages scan the table like any other source)."""
         t0 = time.monotonic()
         obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
-            self.fmt
-        ).mode("overwrite").save(self._path(name))
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(self._path(name))
         wall_ms = int((time.monotonic() - t0) * 1000)
         rows = obs.get["rows"]
         self._append_metric(name, rows, wall_ms)

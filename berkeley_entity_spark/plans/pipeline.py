@@ -13,7 +13,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.config import DEFAULT_PIPELINE, PipelineConfig
+from berkeley_entity_spark.config import PipelineConfig
 from berkeley_entity_spark.operators.blocking import (
     candidate_pairs,
     distinct_surfaces,
@@ -44,7 +44,7 @@ class PipelineResult:
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
-    cfg: PipelineConfig = DEFAULT_PIPELINE,
+    cfg: PipelineConfig,
     weights: np.ndarray | None = None,
     store: CheckpointStore | None = None,
     resume: bool = True,
@@ -62,7 +62,7 @@ def run_pipeline(
     unconditionally loads gender.data the same way).
     """
     if store is None:
-        store = CheckpointStore(cfg.checkpoint_dir, cfg.checkpoint_format)
+        store = CheckpointStore(cfg.checkpoint_dir)
 
     def stage(df: DataFrame, name: str) -> DataFrame:
         return store.materialize(df, name, resume=resume)
@@ -100,17 +100,14 @@ def run_pipeline(
             extracted.unpersist()
     surfaces = distinct_surfaces(mentions).persist()
     n_surfaces = surfaces.count()  # materializes the cache; reused below
-    pairs = stage(
-        candidate_pairs(mentions, cfg, surfaces=surfaces, n_surfaces=n_surfaces),
-        "candidate_pairs",
-    )
+    pairs = stage(candidate_pairs(surfaces, n_surfaces), "candidate_pairs")
 
     idf = collect_idf(idf_table(surfaces, n=n_surfaces))
     w = weights if weights is not None else load_default_weights()
     scored = stage(score_pairs(pairs, idf, w, repartition=True), "scored_pairs")
 
-    edges = match_edges(scored, cfg.score_threshold)
-    components = connected_components(edges, cfg.max_cc_iterations)
+    edges = match_edges(scored)
+    components = connected_components(edges)
     clusters = stage(
         assign_clusters(mentions, surfaces, components, n_surfaces=n_surfaces),
         "clusters",

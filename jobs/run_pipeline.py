@@ -42,7 +42,6 @@ def main() -> None:
     import numpy as np
 
     from berkeley_entity_spark.config import PipelineConfig, scale_config
-    from berkeley_entity_spark.plans.checkpoint import CheckpointStore
     from berkeley_entity_spark.plans.pipeline import run_pipeline
     from berkeley_entity_spark.session import get_spark
     from berkeley_entity_spark.synth import generate_webpages
@@ -60,11 +59,9 @@ def main() -> None:
         pages = spark.read.table(args.input)
 
     weights = np.load(args.weights) if args.weights else None
-    cfg = PipelineConfig(checkpoint_dir=args.checkpoint_dir)
-    store = CheckpointStore(args.checkpoint_dir, cfg.checkpoint_format)
     res = run_pipeline(
-        spark, pages, cfg,
-        weights=weights, store=store,
+        spark, pages, PipelineConfig(checkpoint_dir=args.checkpoint_dir),
+        weights=weights,
         resume=not args.no_resume, lang=args.lang,
     )
     out = {

@@ -1,29 +1,29 @@
-"""Salted hot-block handling (north-rule head-domain skew).
+"""Hot-block handling (north-rule head-domain skew).
 
-A synthetic hot block (hundreds of surfaces sharing one surname key) is run
-through candidate_pairs with salting ON and OFF:
-
-  * salted: every surface keeps pairing (no drops); within-salt sorted bands
-    bound work per sub-block; near-identical surfaces still meet because the
-    *exact* linkage path is surface-identity (identical norm -> same node)
-    and near-dups also share LSH buckets.
-  * capped (default): rows beyond max_block_size lose pairing within that
-    key — bounded work, bounded recall.
-
-Both must be deterministic and agree on the non-hot keys.
+A synthetic hot block (400 surfaces sharing the L:smith and A:ns block keys)
+runs through candidate_pairs.  The one skew path is the row_number cap: each
+block key keeps its first MAX_BLOCK surfaces in (norm_name, node_id) order,
+so no sorted-neighborhood pair reaches a surface ranked past the cap, and the
+pairs do not depend on partitioning.  MinHash buckets still pair much of the
+tail; those pairs carry pass = 'lsh'.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.config import PipelineConfig
-from berkeley_entity_spark.operators.blocking import candidate_pairs
+from berkeley_entity_spark.operators.blocking import (
+    MAX_BLOCK,
+    candidate_pairs,
+    distinct_surfaces,
+)
+
+N_HOT = 400
 
 
 @pytest.fixture(scope="module")
 def hot_mentions(spark):
     """400 distinct surfaces sharing the L:smith block key + 20 cold ones."""
-    first = [f"name{i:03d}" for i in range(400)]
+    first = [f"name{i:03d}" for i in range(N_HOT)]
     rows = [(f"u{i}", f"{f} smith", f, False, i) for i, f in enumerate(first)]
     rows += [
         (f"c{i}", f"cold{i} jones{i}", f"cold{i}", False, 1000 + i)
@@ -34,55 +34,28 @@ def hot_mentions(spark):
     )
 
 
-def _cfg(salt: bool) -> PipelineConfig:
-    return PipelineConfig(max_block_size=50, salt_buckets=8, salt_hot_blocks=salt)
-
-
-def test_salting_drops_nothing(spark, hot_mentions):
-    salted = candidate_pairs(hot_mentions, _cfg(True))
-    nodes_in_pairs = (
-        salted.select(F.col("node_a").alias("n"))
-        .unionByName(salted.select(F.col("node_b").alias("n")))
-        .distinct()
-        .count()
-    )
-    # every one of the 400 hot surfaces still participates in blocking
-    hot_nodes = (
-        salted.where(F.col("norm_a").endswith("smith") | F.col("norm_b").endswith("smith"))
-        .select(F.explode(F.array("node_a", "node_b")).alias("n"))
-        .distinct()
-        .count()
-    )
-    assert hot_nodes == 400, f"salted blocking lost hot-block rows: {hot_nodes}"
-    assert nodes_in_pairs >= 400
-
-
 def test_capped_blocking_drops_tail(spark, hot_mentions):
-    capped = candidate_pairs(hot_mentions, _cfg(False))
-    hot_nodes = (
-        capped.where(F.col("norm_a").endswith("smith") | F.col("norm_b").endswith("smith"))
-        .select(F.explode(F.array("node_a", "node_b")).alias("n"))
-        .distinct()
-        .count()
+    surfaces = distinct_surfaces(hot_mentions).persist()
+    pairs = candidate_pairs(surfaces, surfaces.count())
+    # every hot surface shares the same keys, so its rank under each of them
+    # is its rank in (norm_name, node_id) order among the hot surfaces
+    hot = sorted(
+        (r["norm_name"], r["node_id"])
+        for r in surfaces.where(F.col("norm_name").endswith(" smith")).collect()
     )
-    # the cap keeps only ~max_block_size rows of the hot key per key-pass
-    assert hot_nodes < 400
-
-
-def test_salting_is_deterministic(spark, hot_mentions):
-    a = candidate_pairs(hot_mentions, _cfg(True)).select("node_a", "node_b")
-    b = candidate_pairs(hot_mentions.repartition(13), _cfg(True)).select(
-        "node_a", "node_b"
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_salting_bounds_pair_count(spark, hot_mentions):
-    """Work bound: pairs per row <= width x passes, independent of block
-    size (the quadratic-blowup guard the cap used to provide)."""
-    cfg = _cfg(True)
-    salted = candidate_pairs(hot_mentions, cfg)
-    n_pairs = salted.count()
-    n_rows = 420
-    # 3 key passes x max(width) pairs/row is a generous linear bound
-    assert n_pairs <= n_rows * 3 * cfg.max_block_size
+    assert len(hot) == N_HOT > MAX_BLOCK
+    head = {node for _, node in hot[:MAX_BLOCK]}
+    tail = {node for _, node in hot[MAX_BLOCK:]}
+    sn = [
+        (r["node_a"], r["node_b"])
+        for r in pairs.where(F.col("pass") == "sortedneighborhood").collect()
+    ]
+    past_cap = [p for p in sn if p[0] in tail or p[1] in tail]
+    assert not past_cap, f"{len(past_cap)} sorted-neighborhood pairs past the cap"
+    # the capped head still pairs through its neighborhood band
+    assert any(a in head and b in head for a, b in sn)
+    # the cap ranks in a total order, so which rows it keeps (and every
+    # pair) does not depend on partitioning
+    shuffled = distinct_surfaces(hot_mentions.repartition(13)).persist()
+    again = candidate_pairs(shuffled, shuffled.count())
+    assert pairs.exceptAll(again).count() == 0 and again.exceptAll(pairs).count() == 0

@@ -1,7 +1,8 @@
 """No dead configuration: every PipelineConfig field is read somewhere in the
-package outside config.py, every defaulted parameter of a module-level
-package function is passed by at least one call in the repo, and no such
-parameter gets the same literal from every call."""
+package outside config.py and set by some PipelineConfig(...) call outside
+the tests, every defaulted parameter of a module-level package function is
+passed by at least one call in the repo, and no such parameter gets the same
+literal from every call."""
 
 import ast
 import dataclasses
@@ -30,6 +31,28 @@ def test_every_pipeline_config_field_is_read():
     fields = {f.name for f in dataclasses.fields(PipelineConfig)}
     unread = sorted(fields - _attributes_read())
     assert not unread, f"PipelineConfig fields no package code reads: {unread}"
+
+
+def test_every_pipeline_config_field_is_set_outside_tests():
+    """A field only tests set is a knob no deployment turns: its default is
+    the one value the pipeline runs with."""
+    fields = [f.name for f in dataclasses.fields(PipelineConfig)]
+    set_ = set()
+    for path in ROOT.rglob("*.py"):
+        parts = path.relative_to(ROOT).parts
+        if "tests" in parts or any(p.startswith(".") for p in parts):
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "PipelineConfig"
+                or getattr(node.func, "attr", None) == "PipelineConfig"
+            ):
+                set_.update(fields[: len(node.args)])
+                set_.update(k.arg for k in node.keywords)
+    unset = [f for f in fields if f not in set_]
+    assert not unset, (
+        f"PipelineConfig fields no call outside tests/ sets: {unset}"
+    )
 
 
 def _defaulted_params(tree: ast.Module):

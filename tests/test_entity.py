@@ -111,11 +111,13 @@ def test_entity_pass_does_not_degrade_f1(spark, tiny_corpus):
 
     _, pages, gold = tiny_corpus
     root = tempfile.mkdtemp(prefix="entity_e2e_")
-    cfg = PipelineConfig(checkpoint_dir=root)
-    res = run_pipeline(spark, pages, cfg, store=CheckpointStore(root), resume=False)
+    res = run_pipeline(
+        spark, pages, PipelineConfig(checkpoint_dir=root),
+        store=CheckpointStore(root), resume=False,
+    )
     surfaces = distinct_surfaces(res.mentions).persist()
     n_surfaces = surfaces.count()
-    comp0 = connected_components(match_edges(res.scored, cfg.score_threshold))
+    comp0 = connected_components(match_edges(res.scored))
     # surface-level attributes: majority number/gender over the surface's
     # mentions (ties -> smaller value)
     node_attrs = (
@@ -126,7 +128,7 @@ def test_entity_pass_does_not_degrade_f1(spark, tiny_corpus):
             F.min_by("gender", F.struct(F.lit(0), F.col("gender"))).alias("gender"),
         )
     )
-    comp1 = refine_components(res.scored, comp0, node_attrs, cfg.score_threshold)
+    comp1 = refine_components(res.scored, comp0, node_attrs)
     clusters = assign_clusters(res.mentions, surfaces, comp1, n_surfaces=n_surfaces)
     gid = gold.where("lang = 'en'").select("mention_id", "entity_id")
     f1 = pairwise_f1_combinatorial(clusters, gid)

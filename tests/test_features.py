@@ -185,7 +185,6 @@ def test_prune_threshold_edge_set_identical(spark):
     bit-identical with and without pruning, over hand-built surfaces that
     share block keys and between them exercise every bound term (exact-ish,
     acronym, subset, typo, junk)."""
-    from berkeley_entity_spark.config import PipelineConfig
     from berkeley_entity_spark.operators.blocking import candidate_pairs, distinct_surfaces
     from berkeley_entity_spark.operators.scoring import score_pairs, weights_vector
 
@@ -207,14 +206,13 @@ def test_prune_threshold_edge_set_identical(spark):
         [(f"u{i}", i, norm, acr) for i, (norm, acr) in enumerate(surfaces)],
         "url string, mention_id long, norm_name string, is_acr boolean",
     )
-    cfg = PipelineConfig()
     surf = distinct_surfaces(mentions).persist()
     n = surf.count()
     w = weights_vector(entry.ORACLE_ER_WEIGHTS)
     thr = entry.ORACLE_ER_THRESHOLD
 
     def pairs_and_edges(prune):
-        pairs = candidate_pairs(mentions, cfg, surfaces=surf, n_surfaces=n, prune=prune)
+        pairs = candidate_pairs(surf, n, prune=prune)
         scored = score_pairs(pairs, {}, weights=w, features_out=False)
         edges = {
             (r["node_a"], r["node_b"], r["score"])
@@ -284,7 +282,6 @@ def test_candidate_pairs_prune_same_edges(spark, tiny_corpus):
     """candidate_pairs(prune=...) must yield the exact same above-threshold
     edge set (node_a, node_b, score) as the unpruned path — the pre-dedup
     prune only removes pairs that can never decode as matches."""
-    from berkeley_entity_spark.config import PipelineConfig
     from berkeley_entity_spark.operators.blocking import candidate_pairs, distinct_surfaces
     from berkeley_entity_spark.operators.extract import extract_mentions
     from berkeley_entity_spark.operators.scoring import score_pairs, weights_vector
@@ -292,7 +289,6 @@ def test_candidate_pairs_prune_same_edges(spark, tiny_corpus):
     import __spark_entry__ as entry
 
     _, pages, _ = tiny_corpus
-    cfg = PipelineConfig()
     mentions = extract_mentions(pages).localCheckpoint(eager=True)
     surfaces = distinct_surfaces(mentions).persist()
     n = surfaces.count()
@@ -300,9 +296,7 @@ def test_candidate_pairs_prune_same_edges(spark, tiny_corpus):
     thr = entry.ORACLE_ER_THRESHOLD
 
     def edges(prune):
-        pairs = candidate_pairs(
-            mentions, cfg, surfaces=surfaces, n_surfaces=n, prune=prune
-        )
+        pairs = candidate_pairs(surfaces, n, prune=prune)
         scored = score_pairs(pairs, {}, weights=w, features_out=False)
         return {
             (r["node_a"], r["node_b"], r["score"])
@@ -314,10 +308,8 @@ def test_candidate_pairs_prune_same_edges(spark, tiny_corpus):
     assert pruned == full
     assert len(full) > 0
     # schema contract identical on both paths
-    cols = candidate_pairs(mentions, cfg, surfaces=surfaces, n_surfaces=n).columns
-    pruned_df = candidate_pairs(
-        mentions, cfg, surfaces=surfaces, n_surfaces=n, prune=(w, thr)
-    )
+    cols = candidate_pairs(surfaces, n).columns
+    pruned_df = candidate_pairs(surfaces, n, prune=(w, thr))
     assert cols == pruned_df.columns
     # pushdown barrier: the prune bound must stay a post-join Filter — in a
     # Join condition every same-block candidate would pay the levenshtein

@@ -1,6 +1,6 @@
 """The Spark MinHash-LSH kernel (blocking.minhash_band_keys) and the DuckDB
 oracles' SQL (_minhash_band_ctes) emit byte-identical bucket strings — for
-ER blocking keys over char shingles (PipelineConfig defaults) and for
+ER blocking keys over char shingles (the blocking constants) and for
 dedup buckets over word shingles (bands=4, rows=2).  Fixed strings, no
 testdata.  Token-less docs (empty, whitespace-only) get no shingle, hence
 no bucket and no pair, on both engines."""
@@ -9,8 +9,10 @@ import duckdb
 import pandas as pd
 
 import __spark_entry__ as entry
-from berkeley_entity_spark.config import PipelineConfig
 from berkeley_entity_spark.operators.blocking import (
+    MH_BANDS,
+    MH_ROWS,
+    SHINGLE_K,
     char_shingles_col,
     minhash_band_keys,
 )
@@ -34,13 +36,11 @@ TOKENLESS = {7, 8, 100007, 100008}
 
 
 def test_er_block_keys_match_oracle(spark):
-    cfg = PipelineConfig()
     surf = spark.createDataFrame([(s,) for s in SURFACES], "norm_name string")
     got = {
         (r["norm_name"], r["block_key"])
         for r in minhash_band_keys(
-            surf, ["norm_name"], char_shingles_col(cfg.shingle_k),
-            cfg.minhash_bands, cfg.minhash_rows,
+            surf, ["norm_name"], char_shingles_col(SHINGLE_K), MH_BANDS, MH_ROWS,
             sep=":", tag="MH", key_col="block_key",
         ).collect()
     }
@@ -50,7 +50,7 @@ WITH surf AS (SELECT * FROM (VALUES {values}) t(norm_name, n_mentions, is_acr)),
 {entry._er_blocking_ctes()}
 SELECT norm_name, block_key FROM mhk"""
     want = set(duckdb.connect().execute(sql).fetchall())
-    assert len(want) == len(SURFACES) * cfg.minhash_bands
+    assert len(want) == len(SURFACES) * MH_BANDS
     assert got == want
 
 

@@ -1,8 +1,8 @@
 """Plan audit: the executed physical plans have the shapes they were designed
 for — no CartesianProduct and no per-row Python (BatchEvalPython; Arrow
 kernels show as ArrowEvalPython / MapInPandas) in any contract query,
-parquet scans prune columns and push filters, and a dimension join is
-broadcast."""
+parquet scans prune columns and push filters, a dimension join is
+broadcast, and blocking caps every hot key before its shuffle."""
 
 import os
 import sys
@@ -10,6 +10,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 from berkeley_entity_spark.config import SynthConfig
+from berkeley_entity_spark.operators.blocking import (
+    MAX_BLOCK,
+    candidate_pairs,
+    distinct_surfaces,
+)
 from berkeley_entity_spark.operators.extract import extract_mentions
 from berkeley_entity_spark.synth import generate_webpages
 from conftest import SF_TINY as SF
@@ -41,3 +46,34 @@ def test_extract_prunes_html_and_pushes_lang(spark, tmp_path):
 
 def test_dimension_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in _plan(entrymod.queries()["q_broadcast_dim"](spark, SF))
+
+
+def _parent(lines: list[str], i: int) -> str:
+    """The tree-string line of the operator directly above lines[i]."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :|+-"))
+
+    return next(ln for ln in reversed(lines[:i]) if depth(ln) < depth(lines[i]))
+
+
+def test_blocking_caps_hot_keys_before_the_shuffle(spark):
+    """The north rule's explicit skew handling: the rn <= MAX_BLOCK cap of
+    candidate_pairs runs as a partial WindowGroupLimit on the map side of
+    the block-key exchange (and a final one after it), so a hot key never
+    ships more than MAX_BLOCK rows per map task."""
+    names = [f"name{i:03d} smith" for i in range(30)] + ["acme corp", "gdc"]
+    mentions = spark.createDataFrame(
+        [(f"u{i}", i, n, False) for i, n in enumerate(names)],
+        "url string, mention_id long, norm_name string, is_acr boolean",
+    )
+    surfaces = distinct_surfaces(mentions).persist()
+    lines = _plan(candidate_pairs(surfaces, surfaces.count())).splitlines()
+    limit = f"row_number(), {MAX_BLOCK}, "
+    partial = [
+        i for i, ln in enumerate(lines)
+        if "WindowGroupLimit [block_key" in ln and ln.rstrip().endswith(limit + "Partial")
+    ]
+    assert partial, "\n".join(lines)
+    assert any(ln.rstrip().endswith(limit + "Final") for ln in lines)
+    for i in partial:
+        assert "Exchange hashpartitioning(block_key" in _parent(lines, i), lines[i]

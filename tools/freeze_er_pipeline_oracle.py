@@ -30,7 +30,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from berkeley_entity_spark.config import PipelineConfig, SynthConfig  # noqa: E402
+from berkeley_entity_spark.config import SynthConfig  # noqa: E402
 from berkeley_entity_spark.evaluate import pairwise_f1_combinatorial  # noqa: E402
 from berkeley_entity_spark.operators.blocking import (  # noqa: E402
     candidate_pairs,
@@ -62,8 +62,7 @@ def main() -> None:
     m = extract_mentions(en).localCheckpoint(eager=True)
     surfaces = distinct_surfaces(m).persist()
     n_surfaces = surfaces.count()
-    cfg = PipelineConfig()
-    pairs = candidate_pairs(m, cfg, surfaces=surfaces, n_surfaces=n_surfaces)
+    pairs = candidate_pairs(surfaces, n_surfaces)
     idf = collect_idf(idf_table(surfaces, n=n_surfaces))
     scored = score_pairs(pairs, idf)  # default trained weights
     from pyspark.sql import functions as F
