@@ -100,7 +100,7 @@ def _spin_calibration() -> float:
     return round(float(out.stdout.strip()), 3)
 
 
-def _group_job_stats(sc, group: str, before: set | None = None) -> tuple[int, int]:
+def _group_job_stats(sc, group: str, before: set) -> tuple[int, int]:
     """(jobs, stages) run under a job group since `before` (a prior job-id
     snapshot).  The status store is fed by the ASYNC listener bus, so give
     it a short drain window before reading — without it a job whose start
@@ -108,7 +108,7 @@ def _group_job_stats(sc, group: str, before: set | None = None) -> tuple[int, in
     itself becomes noisy."""
     time.sleep(0.3)
     tracker = sc.statusTracker()
-    ids = set(tracker.getJobIdsForGroup(group) or []) - (before or set())
+    ids = set(tracker.getJobIdsForGroup(group) or []) - before
     stages = 0
     for j in ids:
         info = tracker.getJobInfo(j)
@@ -124,43 +124,18 @@ def run_headline() -> dict:
     spin_before = _spin_calibration()
     spark = _spark()
     qs = entrymod.queries()
-    # untimed warm-up: codegen/JIT + python worker pool + parquet footer reads,
-    # so per-query numbers are steady-state (the first query otherwise absorbs
-    # several seconds of one-time session cost).  Uses only NON-headline work
-    # (q_top_tokens + a throwaway pandas kernel) so no timed query gets an
-    # unfair second-run advantage.
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    qs["q_top_tokens"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.range(1000).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-    per_query: dict[str, float] = {}
-    jobs_stages: dict[str, list[int]] = {}
-    sc = spark.sparkContext
-    total = 0.0
-    for name in HEADLINE:
-        sc.setJobGroup(name, name)
-        before = set(sc.statusTracker().getJobIdsForGroup(name) or [])
-        t0 = time.monotonic()
-        # foreach-noop forces full evaluation without driver collect
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = round(time.monotonic() - t0, 3)
-        per_query[name] = dt
-        total += dt
-        # job/stage counts: the NOISE-FREE per-query metric — walls on this
-        # host drift up to 3x between windows, scheduling structure doesn't
-        jobs_stages[name] = list(_group_job_stats(sc, name, before))
-    sc.setJobGroup("min2", "min2")
+    headline = {name: qs[name] for name in HEADLINE}
+    first = time_queries(spark, sf_dir, headline)
     # second timed pass: auxiliary min-of-2 per query.  The headline
     # `value` stays the FIRST pass (the metric r1/r2 recorded); the min
     # pass exists because this host's wall drifts up to 3x between
     # windows — min-of-2 plus the spin calibrations lets a reader tell
     # host drift from code change without re-running.
-    per_query_min: dict[str, float] = {}
-    for name in HEADLINE:
-        t0 = time.monotonic()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        per_query_min[name] = min(per_query[name], round(time.monotonic() - t0, 3))
+    second = time_queries(spark, sf_dir, headline)
+    per_query = {name: r["sec"] for name, r in first.items()}
+    per_query_min = {
+        name: min(r["sec"], second[name]["sec"]) for name, r in first.items()
+    }
     spin_after = _spin_calibration()
     # calibration-normalized walls: divide by (measured spin / nominal 1.1)
     # so cross-round comparisons separate host drift from code change
@@ -170,7 +145,7 @@ def run_headline() -> dict:
     norm = 1.1 / spin_mean if spin_mean > 0 else 1.0
     out = {
         "metric": "headline_query_wall_seconds",
-        "value": round(total, 3),
+        "value": round(sum(per_query.values()), 3),
         "unit": "sec",
         "queries": per_query,
         "queries_min2": per_query_min,
@@ -179,13 +154,13 @@ def run_headline() -> dict:
             k: round(v * norm, 3) for k, v in per_query_min.items()
         },
         "total_min2_normalized": round(sum(per_query_min.values()) * norm, 3),
-        "jobs_stages": jobs_stages,
+        "jobs_stages": {name: [r["jobs"], r["stages"]] for name, r in first.items()},
         "spin_calibration_sec": [spin_before, spin_after],
         "sf": sf,
     }
-    # attach the committed sf1.0 soak evidence (tools/soak_sf1.py: the same
-    # headline queries on a key-consistent 10x replica, with job/stage
-    # counts) so BENCH_r{N}.json carries the at-scale numbers
+    # attach the committed soak evidence (tools/soak.py: the headline and
+    # dedup/ANN queries on key-consistent 10x and 30x replicas, with
+    # job/stage counts) so BENCH_r{N}.json carries the at-scale numbers
     for tag in ("sf1", "sf3"):
         soak_path = os.path.join(REPO, "BENCH", f"soak_{tag}.json")
         if os.path.exists(soak_path):
@@ -194,34 +169,80 @@ def run_headline() -> dict:
     return out
 
 
-def run_er(n_pages: int, cpus: int | None = None, warmup: bool = True) -> dict:
+def time_queries(spark, sf_dir: str, queries: dict) -> dict[str, dict]:
+    """{name: {"sec", "jobs", "stages"}} for each `name -> fn(spark, sf_dir)`
+    in order — the one timed-query loop of the headline and the soaks.
+
+    An untimed warm-up (codegen/JIT, python workers, parquet footers) runs
+    only NON-timed work, so no timed query gets a second-run advantage.
+    Each query runs under its own job group, forced by a noop write; its
+    job/stage counts are the NOISE-FREE metric (walls on a shared host
+    drift up to 3x between windows).  A Python + JVM GC after each query,
+    outside the timer, lets ContextCleaner drop its shuffle files: in a long
+    soak they otherwise pile up until the disk fills (the first sf3 soak
+    died SPILL_OUT_OF_MEMORY on a query whose own working set fit)."""
+    import gc
+
+    import __spark_entry__ as entrymod
+
+    sc = spark.sparkContext
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    entrymod.queries()["q_top_tokens"](spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    spark.range(1000).mapInPandas(
+        lambda it: it, schema="id long"
+    ).write.format("noop").mode("overwrite").save()
+    out: dict[str, dict] = {}
+    for name, fn in queries.items():
+        sc.setJobGroup(name, name)
+        before = set(sc.statusTracker().getJobIdsForGroup(name) or [])
+        t0 = time.monotonic()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        sec = round(time.monotonic() - t0, 3)
+        jobs, stages = _group_job_stats(sc, name, before)
+        out[name] = {"sec": sec, "jobs": jobs, "stages": stages}
+        print(f"{name}: {sec}s {jobs} jobs {stages} stages", flush=True)
+        gc.collect()
+        sc._jvm.System.gc()
+    return out
+
+
+def run_er(n_pages: int, cpus: int | None = None) -> dict:
     import shutil
 
     from berkeley_entity_spark.config import PipelineConfig, SynthConfig
-    from berkeley_entity_spark.plans.checkpoint import CheckpointStore
     from berkeley_entity_spark.plans.pipeline import run_pipeline
     from berkeley_entity_spark.synth import generate_webpages
 
     spark = _spark(cpus=cpus, shuffle=32)
     root = f"/tmp/bes_bench_ckpt_{cpus or 'auto'}"
-    cfg = SynthConfig(n_pages=n_pages, n_entities=min(1500, max(60, n_pages // 130)))
-    # fixed 256-task decomposition at the source (no shuffle) so both
-    # parallelism levels run identical work units
-    pages, _ = generate_webpages(spark, cfg, num_partitions=256)
-    pcfg = PipelineConfig(checkpoint_dir=root)
-    if warmup:
-        # full pipeline at 1/10 scale first: JIT/codegen caches + python
-        # worker pool spin-up, so the timed region is steady-state throughput
-        wcfg = SynthConfig(n_pages=max(2000, n_pages // 10), n_entities=200)
-        wpages, _ = generate_webpages(spark, wcfg, num_partitions=64)
-        shutil.rmtree(root + "_warm", ignore_errors=True)
-        run_pipeline(
-            spark, wpages, PipelineConfig(checkpoint_dir=root + "_warm"),
-            store=CheckpointStore(root + "_warm"), resume=False,
-        )
+
+    def corpus(cfg: SynthConfig, num_partitions: int, path: str):
+        # generated and written BEFORE the clock starts, then read back, so
+        # the timed region runs the pipeline, not the synth mapInPandas
+        pages, _ = generate_webpages(spark, cfg, num_partitions=num_partitions)
+        pages.write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    # 256 generator tasks, so both parallelism levels read the same files
+    pages = corpus(
+        SynthConfig(n_pages=n_pages, n_entities=min(1500, max(60, n_pages // 130))),
+        256, root + "_pages",
+    )
+    # full pipeline at 1/10 scale first: JIT/codegen caches + python
+    # worker pool spin-up, so the timed region is steady-state throughput
+    wpages = corpus(
+        SynthConfig(n_pages=max(2000, n_pages // 10), n_entities=200),
+        64, root + "_warm_pages",
+    )
+    shutil.rmtree(root + "_warm", ignore_errors=True)
+    run_pipeline(
+        spark, wpages, PipelineConfig(checkpoint_dir=root + "_warm"), resume=False
+    )
     shutil.rmtree(root, ignore_errors=True)
     t0 = time.monotonic()
-    res = run_pipeline(spark, pages, pcfg, store=CheckpointStore(root), resume=False)
+    res = run_pipeline(spark, pages, PipelineConfig(checkpoint_dir=root), resume=False)
     wall = time.monotonic() - t0  # run_pipeline materializes every stage table
     n_clusters = res.clusters.select("cluster_id").distinct().count()
     return {

@@ -314,7 +314,6 @@ def candidate_pairs(
         F.col("a.block_key").startswith("MH:"), F.lit(MAX_BLOCK)
     ).otherwise(F.lit(NEIGHBORHOOD))
     a, b = ranked.alias("a"), ranked.alias("b")
-    a_first = F.col("a.node_id") < F.col("b.node_id")
     pair_cols = [
         F.col("a.block_key").alias("block_key"),
         F.least("a.node_id", "b.node_id").alias("node_a"),
@@ -323,14 +322,6 @@ def candidate_pairs(
         .otherwise(F.lit("sortedneighborhood"))
         .alias("pass"),
     ]
-    if prune is not None:
-        # surface attributes oriented by node order, available pre-dedup
-        pair_cols += [
-            F.when(a_first, F.col("a.norm_name")).otherwise(F.col("b.norm_name")).alias("norm_a"),
-            F.when(a_first, F.col("b.norm_name")).otherwise(F.col("a.norm_name")).alias("norm_b"),
-            F.when(a_first, F.col("a.is_acr")).otherwise(F.col("b.is_acr")).alias("acr_a"),
-            F.when(a_first, F.col("b.is_acr")).otherwise(F.col("a.is_acr")).alias("acr_b"),
-        ]
     joined = a.join(
         b,
         (F.col("a.block_key") == F.col("b.block_key"))
@@ -350,35 +341,18 @@ def candidate_pairs(
         w_arr, threshold = prune
         pred = prune_bound_prepped(w_arr, threshold)
         joined = joined.where(pred | (F.monotonically_increasing_id() < F.lit(-1)))
-    pairs = joined.select(*pair_cols)
     # one candidate per unordered node pair; keep the first pass name
     # deterministically (min) so reruns are identical
-    attr_aggs = [F.min("block_key").alias("block_key"), F.min("pass").alias("pass")]
-    if prune is not None:
-        # functionally dependent on (node_a, node_b); min = the single value
-        attr_aggs += [
-            F.min("norm_a").alias("norm_a"), F.min("norm_b").alias("norm_b"),
-            F.min("acr_a").alias("acr_a"), F.min("acr_b").alias("acr_b"),
-        ]
-    pairs = pairs.groupBy("node_a", "node_b").agg(*attr_aggs)
+    pairs = (
+        joined.select(*pair_cols)
+        .groupBy("node_a", "node_b")
+        .agg(F.min("block_key").alias("block_key"), F.min("pass").alias("pass"))
+    )
     # the attribute lookups broadcast when the (already counted) surface
     # table is small — map-side joins instead of pair shuffles; gated on
     # rows AND estimated bytes (string columns can blow past the executor
     # budget long before the row ceiling); at 10^12 pages the table exceeds
     # both and we shuffle
-    if prune is not None:
-        # norm/acr already ride on the pair rows; only url/mention remain
-        su = maybe_broadcast(
-            surfaces.select("node_id", "rep_url", "rep_mention"), n_surfaces
-        )
-        return (
-            pairs.join(su.toDF("node_a", "url_a", "mention_a"), "node_a")
-            .join(su.toDF("node_b", "url_b", "mention_b"), "node_b")
-            .select(
-                "block_key", "node_a", "node_b", "norm_a", "norm_b", "acr_a",
-                "acr_b", "url_a", "mention_a", "url_b", "mention_b", "pass",
-            )
-        )
     s = maybe_broadcast(
         surfaces.select("node_id", "norm_name", "rep_url", "rep_mention", "is_acr"),
         n_surfaces,

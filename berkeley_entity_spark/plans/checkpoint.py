@@ -8,7 +8,8 @@ byte-identical results (everything upstream is deterministic).
 
 Stage tables are parquet directories under the store's root, each with a
 `<name>._DONE` marker written after the table — the marker, not the
-directory, is what resume trusts.
+directory, is what resume trusts.  The root is a filesystem path (local or
+mounted): a URI root (`s3://…`) raises, because the markers are plain files.
 
 Each save appends a row to the `metrics` table:
 (stage, rows_out, wall_ms, finished_at) — FIXTURES §3 lineage contract.
@@ -31,6 +32,17 @@ from pyspark.sql import functions as F
 @dataclass
 class CheckpointStore:
     root: str
+
+    def __post_init__(self) -> None:
+        # the _DONE markers and metrics.jsonl go through os.path/open: under
+        # a URI root they would land in a local "s3:/..." directory while
+        # Spark writes the tables to the object store, and resume would
+        # never see a marker
+        if "://" in self.root:
+            raise ValueError(
+                f"CheckpointStore root must be a local or mounted path, got "
+                f"the URI {self.root!r}"
+            )
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)

@@ -3,13 +3,15 @@
 
 Cluster:
   spark-submit --py-files dist/jobs.zip jobs/run_pipeline.py \
-      --input warehouse.webpages --checkpoint-dir s3://bucket/ckpt --lang en
+      --input warehouse.webpages --checkpoint-dir /mnt/ckpt --lang en
 
 Local / synthetic (sandbox):
   python jobs/run_pipeline.py --scale small --checkpoint-dir /tmp/er_ckpt
 
 --input accepts either a parquet path (contains '/') or a catalog table name.
-Stage tables land under --checkpoint-dir; a rerun with the same dir resumes
+Stage tables land under --checkpoint-dir, a filesystem path (local or a
+mounted object store; a URI such as s3://… is refused, because the resume
+markers are plain files); a rerun with the same dir resumes
 from the last completed stage (kill-safe at every boundary).  Exit prints one
 JSON line with per-stage row counts and the cluster count.
 """

@@ -108,6 +108,30 @@ def test_cc_distributed_loop_matches_driver_finish(spark):
         assert via_loop == _union_find_components(edges)
 
 
+def test_cc_loop_sets_no_session_conf(spark, monkeypatch):
+    """The distributed loop runs under the session's conf as it finds it: a
+    query running concurrently on the same session must not see AQE or the
+    shuffle width change under it, so no RuntimeConfig.set may happen."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    edges = [(i, i + 1) for i in range(30)] + [(100, 101)]
+    df = spark.createDataFrame(edges, "u long, v long")
+    got = {
+        r["node_id"]: r["component"]
+        for r in connected_components(df, small_graph_threshold=0).collect()
+    }
+    assert got == _union_find_components(edges)
+    assert calls == []
+
+
 # ---------------------------------------------------------------- cohesion
 
 

@@ -125,6 +125,18 @@ def test_save_runs_no_count_job(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup("checkpoint-save")) == 2
 
 
+def test_checkpoint_store_refuses_uri_root(tmp_path, monkeypatch):
+    """The _DONE markers and metrics.jsonl are plain files: a URI root would
+    put them in a local "s3:/..." directory that resume never reads, so
+    the store refuses it at construction and writes nothing."""
+    monkeypatch.chdir(tmp_path)
+    for root in ("s3://bucket/ckpt", "hdfs://nn/ckpt", "file:///tmp/ckpt"):
+        with pytest.raises(ValueError, match="URI"):
+            CheckpointStore(root)
+    assert list(tmp_path.iterdir()) == []
+    CheckpointStore(str(tmp_path / "local"))
+
+
 def test_trained_weights_default_and_ge_handset(
     pipeline_result, tiny_corpus, spark, tmp_path_factory
 ):
