@@ -304,3 +304,79 @@ def test_cluster_diff_pure_and_merge_tiebreak(spark):
     # C2 holds entities 1 and 2, 1 member each -> tie, min entity id wins
     assert got[1]["status"] == "merged" and got[1]["majority_entity"] == 1
     assert got[1]["purity"] == 0.5
+
+
+# ------------------------------------------------- one-sided mentions
+
+
+def test_one_sided_mentions(spark):
+    """Mentions that only one side has, across two docs.  pairwise F1
+    counts pred pairs over every pred mention and gold pairs over every
+    gold mention (tp over mentions on both sides); the aligned metrics
+    ignore one-sided mentions.  Aligned cells (cluster, entity): {a,b} in
+    (0,10), c (1,10), x (2,12), y (2,13), z (3,13)."""
+    from berkeley_entity_spark.evaluate import (
+        ceafm_metrics,
+        clustering_agreement,
+        cluster_diff,
+        conll_metrics,
+        coref_cluster_metrics,
+        pairwise_f1_combinatorial,
+    )
+
+    pred = spark.createDataFrame(
+        [("a", "d1", 0), ("b", "d1", 0), ("c", "d1", 1), ("p1", "d1", 1),
+         ("p2", "d1", 0), ("x", "d2", 2), ("y", "d2", 2), ("z", "d2", 3),
+         ("p3", "d2", 3), ("p4", "d2", 4), ("p5", "d2", 4)],
+        "mention_id string, g string, cluster_id long",
+    )
+    gold = spark.createDataFrame(
+        [("a", "d1", 10), ("b", "d1", 10), ("c", "d1", 10), ("g1", "d1", 11),
+         ("g2", "d1", 10), ("x", "d2", 12), ("y", "d2", 13), ("z", "d2", 13),
+         ("g3", "d2", 13), ("g4", "d2", 14), ("g5", "d2", 14)],
+        "mention_id string, g string, entity_id long",
+    )
+    p, g = pred.drop("g"), gold.drop("g")
+
+    # pred pairs 3+1+1+1+1 = 7, gold pairs 6+0+0+3+1 = 10, tp = {a,b} = 1
+    pw = pairwise_f1_combinatorial(p, g)
+    assert (pw["tp"], pw["pred"], pw["gold"]) == (1.0, 7.0, 10.0)
+    assert pw["f1"] == pytest.approx(2 / 17)
+
+    # B3 over the 6 aligned mentions; MUC = (N - cells) / (N - clusters)
+    # and / (N - entities) = 1/2 and 1/3
+    m = coref_cluster_metrics(p, g).collect()[0]
+    assert m["b3_precision"] == pytest.approx(5 / 6)
+    assert m["b3_recall"] == pytest.approx(11 / 18)
+    assert m["b3_f1"] == pytest.approx(0.7051282051282051)
+    assert m["muc_precision"] == pytest.approx(0.5)
+    assert m["muc_recall"] == pytest.approx(1 / 3)
+    assert m["muc_f1"] == pytest.approx(0.4)
+
+    a = clustering_agreement(p, g).collect()[0]
+    assert a["ari"] == pytest.approx(0.18918918918918917)
+    assert a["homogeneity"] == pytest.approx(0.7715561736794712)
+    assert a["completeness"] == pytest.approx(0.58688267143572)
+    assert a["v_measure"] == pytest.approx(2 / 3)
+
+    c = conll_metrics(pred, gold).collect()[0]
+    assert c["muc_f1"] == pytest.approx(0.4)
+    assert c["b3_f1"] == pytest.approx(0.7051282051282051)
+    assert c["ceafe_precision"] == pytest.approx(0.5333333333333333)
+    assert c["ceafe_recall"] == pytest.approx(0.7111111111111111)
+    assert c["ceafe_f1"] == pytest.approx(0.6095238095238096)
+    assert c["conll_f1"] == pytest.approx(0.5715506715506716)
+
+    # d1 aligns 2 of 3 mentions, d2 2 of 3
+    cm = ceafm_metrics(pred, gold, doc_col="g").collect()[0]
+    assert cm["ceafm_precision"] == pytest.approx(2 / 3)
+    assert cm["ceafm_f1"] == pytest.approx(2 / 3)
+
+    # the pred-only cluster 4 has no aligned member, so no row
+    got = sorted(tuple(r) for r in cluster_diff(p, g).collect())
+    assert got == [
+        (0, 2, 1, 10, 1.0, 2, "split"),
+        (1, 1, 1, 10, 1.0, 2, "split"),
+        (2, 2, 2, 12, 0.5, 1, "merged"),
+        (3, 1, 1, 13, 1.0, 2, "split"),
+    ]
