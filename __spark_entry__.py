@@ -217,33 +217,22 @@ def q_set_dedup(spark, sf_dir):
 
 def q_pairwise_f1(spark, sf_dir):
     """A7: pairwise P/R/F1 via per-cluster combinatorics, no pair table
-    (CorefEvaluator.scala:364-396 formula).  pred=lang, gold=source."""
+    (CorefEvaluator.scala:364-396 formula).  pred=lang, gold=source; the
+    groupBy(lang, source) counts are the intersection cells."""
+    from berkeley_entity_spark.evaluate import pair_counts
+
     d = _t(spark, sf_dir, "documents")
-    npairs = lambda c: F.sum(c * (c - 1) / 2)  # noqa: E731
-    pred = d.groupBy("lang").agg(F.count(F.lit(1)).alias("c")).agg(
-        npairs(F.col("c")).alias("pred_pairs")
-    )
-    gold = d.groupBy("source").agg(F.count(F.lit(1)).alias("c")).agg(
-        npairs(F.col("c")).alias("gold_pairs")
-    )
-    tp = (
-        d.groupBy("lang", "source")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(npairs(F.col("c")).alias("tp_pairs"))
-    )
-    return (
-        tp.crossJoin(pred)
-        .crossJoin(gold)
-        .select(
-            F.col("tp_pairs").cast("long").alias("tp_pairs"),
-            F.col("pred_pairs").cast("long").alias("pred_pairs"),
-            F.col("gold_pairs").cast("long").alias("gold_pairs"),
-            F.round(F.col("tp_pairs") / F.col("pred_pairs"), 6).alias("precision"),
-            F.round(F.col("tp_pairs") / F.col("gold_pairs"), 6).alias("recall"),
-            F.round(
-                2 * F.col("tp_pairs") / (F.col("pred_pairs") + F.col("gold_pairs")), 6
-            ).alias("f1"),
-        )
+    cells = d.groupBy(
+        F.col("lang").alias("cluster_id"), F.col("source").alias("entity_id")
+    ).agg(F.count(F.lit(1)).alias("n_ce"))
+    tp, pred, gold = F.col("tp_pairs"), F.col("pred_pairs"), F.col("gold_pairs")
+    return pair_counts(cells).select(
+        "tp_pairs",
+        "pred_pairs",
+        "gold_pairs",
+        F.round(tp / pred, 6).alias("precision"),
+        F.round(tp / gold, 6).alias("recall"),
+        F.round(2 * tp / (pred + gold), 6).alias("f1"),
     )
 
 
@@ -799,6 +788,20 @@ def q_bcubed(spark, sf_dir):
     return m.select(*[F.round(c, 6).alias(c) for c in m.columns])
 
 
+def _pseudo_doc_clusterings(spark, sf_dir):
+    """(pred, gold) for q_ceafe and q_ceafm: documents bucketed into 40
+    pseudo-docs `g`, with binary clusterings (text-length parity vs a
+    doc_id-derived bit), so every per-doc alignment is at most 2x2."""
+    d = _t(spark, sf_dir, "documents")
+    it = d.select(
+        F.col("doc_id").alias("mention_id"),
+        (F.col("doc_id") % 40).cast("string").alias("g"),
+        (F.length("text") % 2).cast("string").alias("cluster_id"),
+        ((F.col("doc_id") / 40).cast("long") % 2).cast("string").alias("entity_id"),
+    )
+    return it.select("mention_id", "g", "cluster_id"), it.select("mention_id", "g", "entity_id")
+
+
 def q_ceafe(spark, sf_dir):
     """CEAFe + the CoNLL average — the reference's HEADLINE metric
     (CorefConllScorer.scala:72-88 averages MUC + B3 + CEAFe; CEAFe = Luo
@@ -813,15 +816,7 @@ def q_ceafe(spark, sf_dir):
     the scorer's per-doc accumulation."""
     from berkeley_entity_spark.evaluate import conll_metrics
 
-    d = _t(spark, sf_dir, "documents")
-    it = d.select(
-        F.col("doc_id").alias("mention_id"),
-        (F.col("doc_id") % 40).cast("string").alias("g"),
-        (F.length("text") % 2).cast("string").alias("cluster_id"),
-        ((F.col("doc_id") / 40).cast("long") % 2).cast("string").alias("entity_id"),
-    )
-    pred = it.select("mention_id", "g", "cluster_id")
-    gold = it.select("mention_id", "g", "entity_id")
+    pred, gold = _pseudo_doc_clusterings(spark, sf_dir)
     m = conll_metrics(pred, gold)
     return m.select(*[F.round(c, 6).alias(c) for c in m.columns])
 
@@ -834,15 +829,7 @@ def q_ceafm(spark, sf_dir):
     greatest(n00 + n11, n01 + n10) over the intersection cell counts."""
     from berkeley_entity_spark.evaluate import ceafm_metrics
 
-    d = _t(spark, sf_dir, "documents")
-    it = d.select(
-        F.col("doc_id").alias("mention_id"),
-        (F.col("doc_id") % 40).cast("string").alias("g"),
-        (F.length("text") % 2).cast("string").alias("cluster_id"),
-        ((F.col("doc_id") / 40).cast("long") % 2).cast("string").alias("entity_id"),
-    )
-    pred = it.select("mention_id", "g", "cluster_id")
-    gold = it.select("mention_id", "g", "entity_id")
+    pred, gold = _pseudo_doc_clusterings(spark, sf_dir)
     m = ceafm_metrics(pred, gold, doc_col="g")
     return m.select(*[F.round(c, 6).alias(c) for c in m.columns])
 

@@ -1,4 +1,5 @@
-"""Evaluation: pairwise P/R/F1 and stage recall audits (SURVEY.md A6-A8, §5).
+"""Evaluation: pairwise P/R/F1, the coreference scorers and stage recall
+audits (SURVEY.md A6-A8, §5).
 
 Pairwise F1 follows the reference exactly (CorefEvaluator.scala:364-396):
 precision = |pairs predicted same-cluster ∧ gold same| / |predicted same|,
@@ -11,6 +12,14 @@ recall over gold pairs; computed two ways:
     pairs: sum n·(n−1)/2 per cluster for pred, gold, and the pred⋈gold
     intersection (A7 note in SURVEY.md) — the scalable form.
 
+Every clustering metric here (pairwise F1, B3/MUC, CEAFe/CEAFm, ARI and
+V-measure, the cluster diff and grouped accuracy) is a reduction of one
+table, the pred x gold intersection cells (cluster_id, entity_id, n_ce)
+that `_cells` builds: |C|*|E| rows at most, never per-mention rows.  A
+mention only one side has forms a cell with a null cluster or entity;
+pairwise F1 counts it toward its own side's pairs, and the aligned
+metrics drop such cells (`_aligned`).
+
 Blocking recall (§5.3, the reference's pruning-oracle analysis,
 CorefEvaluator.scala:82-143): fraction of gold-positive pairs whose surfaces
 survive into the candidate set.
@@ -18,7 +27,7 @@ survive into the candidate set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -27,6 +36,16 @@ def _f1(tp: float, pred: float, gold: float) -> dict[str, float]:
     r = tp / gold if gold else 0.0
     f1 = 2 * p * r / (p + r) if (p + r) else 0.0
     return {"precision": p, "recall": r, "f1": f1, "tp": tp, "pred": pred, "gold": gold}
+
+
+def _ratio(a: Column, b: Column) -> Column:
+    """a / b, and 0.0 when b is not positive."""
+    return F.when(b > 0, a / b).otherwise(F.lit(0.0))
+
+
+def _f1_col(p: Column, r: Column) -> Column:
+    """The harmonic mean of p and r, and 0.0 when both are 0."""
+    return F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(F.lit(0.0))
 
 
 def pairwise_f1_on_labeled(
@@ -47,10 +66,59 @@ def pairwise_f1_on_labeled(
     return _f1(float(agg["tp"] or 0), float(agg["pred"] or 0), float(agg["gold"] or 0))
 
 
-def _aligned(pred: DataFrame, gold: DataFrame) -> DataFrame:
-    """(mention_id, cluster_id, entity_id) for the mentions on both sides."""
-    return pred.select("mention_id", "cluster_id").join(
-        gold.select("mention_id", "entity_id"), "mention_id"
+def _cells(pred: DataFrame, gold: DataFrame, doc: str | None = None) -> DataFrame:
+    """(_doc, cluster_id, entity_id, n_ce): the pred x gold intersection
+    cells.  One full outer join on mention_id, so a mention only one side
+    has forms a cell with a null cluster_id or entity_id.  `_doc` is the
+    pred side's `doc` column (the CEAF alignment runs per doc), or one
+    doc "_all" without it."""
+    j = pred.select("mention_id", "cluster_id", *([doc] if doc else [])).join(
+        gold.select("mention_id", "entity_id"), "mention_id", "full"
+    )
+    return j.groupBy(
+        (F.col(doc) if doc else F.lit("_all")).alias("_doc"), "cluster_id", "entity_id"
+    ).agg(F.count(F.lit(1)).alias("n_ce"))
+
+
+def _aligned(cells: DataFrame) -> DataFrame:
+    """The cells of mentions both sides have — the aligned metrics' input."""
+    return cells.where(F.col("cluster_id").isNotNull() & F.col("entity_id").isNotNull())
+
+
+def _margins(cells: DataFrame, *keys: str) -> DataFrame:
+    """cells plus n_c and n_e, the sizes of each cell's cluster and entity
+    (summed over the cells that share `keys` and the id)."""
+    return cells.withColumn(
+        "n_c", F.sum("n_ce").over(Window.partitionBy(*keys, "cluster_id"))
+    ).withColumn("n_e", F.sum("n_ce").over(Window.partitionBy(*keys, "entity_id")))
+
+
+def _majority() -> Column:
+    """Per-cluster aggregate over cells: the entity owning most members,
+    ties to the smaller entity id.  min_by over (-n_ce, entity_id) keeps
+    the tie rule for ANY orderable id type (a unary minus on a string id
+    would cast to null and make the tie-break arbitrary)."""
+    return F.min_by("entity_id", F.struct((-F.col("n_ce")).alias("_n"), F.col("entity_id")))
+
+
+def pair_counts(cells: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, tp_pairs, pred_pairs, gold_pairs) from intersection cells
+    (cluster_id, entity_id, n_ce): the sums of n·(n−1)/2 over the cells,
+    the cluster margins and the entity margins.  Each margin counts over
+    its non-null ids, so a one-sided mention's cell adds to its own side's
+    pairs only, and tp only counts cells with both ids.  A cluster's cells
+    sum n_ce·(n_c − 1) to n_c·(n_c − 1), so all three are one aggregation,
+    exact in BIGINT."""
+    n = F.col("n_ce")
+
+    def pairs(side: Column, size: Column) -> Column:
+        return (F.sum(F.when(side, n * (size - 1))) / 2).cast("long")
+
+    c, e = F.col("cluster_id").isNotNull(), F.col("entity_id").isNotNull()
+    return _margins(cells, *keys).groupBy(*keys).agg(
+        pairs(c & e, n).alias("tp_pairs"),
+        pairs(c, F.col("n_c")).alias("pred_pairs"),
+        pairs(e, F.col("n_e")).alias("gold_pairs"),
     )
 
 
@@ -59,22 +127,12 @@ def pairwise_f1_combinatorial(
 ) -> dict[str, float]:
     """pred(mention_id, cluster_id) x gold(mention_id, entity_id) — exact
     pairwise F1 via per-cluster combinatorics; no pair table is ever
-    materialized."""
-    npairs = lambda c: F.sum(c * (c - 1) / 2)  # noqa: E731
-    pred_n = (
-        pred.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("c")).agg(npairs(F.col("c"))).collect()[0][0]
+    materialized.  Pred pairs count every pred mention, gold pairs every
+    gold mention, tp only the mentions both sides have."""
+    r = pair_counts(_cells(pred, gold)).collect()[0]
+    return _f1(
+        float(r["tp_pairs"] or 0), float(r["pred_pairs"] or 0), float(r["gold_pairs"] or 0)
     )
-    gold_n = (
-        gold.groupBy("entity_id").agg(F.count(F.lit(1)).alias("c")).agg(npairs(F.col("c"))).collect()[0][0]
-    )
-    both = pred.join(gold, "mention_id")
-    tp = (
-        both.groupBy("cluster_id", "entity_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(npairs(F.col("c")))
-        .collect()[0][0]
-    )
-    return _f1(float(tp or 0), float(pred_n or 0), float(gold_n or 0))
 
 
 def mention_detection_prf(pred_mentions: DataFrame, gold_mentions: DataFrame) -> dict[str, float]:
@@ -135,61 +193,36 @@ def coref_cluster_metrics(
         sum_c(|c| - p(c)) / sum_c(|c| - 1) where p(c) = number of gold
         partitions intersecting cluster c; recall symmetric.
 
-    Mentions present in only one side are ignored (the caller aligns first —
-    J4); everything stays in three small aggregations over the cells table.
-    conll_metrics adds CEAFe and the CoNLL scorer average."""
-    j = _aligned(pred, gold)
-    cells = j.groupBy("cluster_id", "entity_id").agg(
-        F.count(F.lit(1)).alias("n_ce")
-    )
-    return _b3_muc_from_cells(cells)
+    Mentions present in only one side are ignored (the aligned cells —
+    J4).  conll_metrics adds CEAFe and the CoNLL scorer average."""
+    return _b3_muc(_aligned(_cells(pred, gold)))
 
 
-def _b3_muc_from_cells(cells: DataFrame) -> DataFrame:
-    """B3 + MUC from a (cluster_id, entity_id, n_ce) intersection-cells
-    table — the shared tail of coref_cluster_metrics and conll_metrics
-    (which computes cells ONCE and feeds both this and the CEAFe
-    alignment)."""
-    nc = cells.groupBy("cluster_id").agg(
-        F.sum("n_ce").alias("n_c"), F.count(F.lit(1)).alias("p_c")
+def _b3_muc(cells: DataFrame) -> DataFrame:
+    """B3 + MUC from aligned cells whose cluster and entity ids are unique
+    across docs — the shared tail of coref_cluster_metrics and
+    conll_metrics.  sum_c(|c| - p(c)) is N minus the number of cells and
+    sum_c(|c| - 1) is N minus the number of clusters, so MUC is three
+    counts."""
+    n_ce = F.col("n_ce")
+    agg = _margins(cells).agg(
+        F.sum("n_ce").alias("n"),
+        F.sum(n_ce * n_ce / F.col("n_c")).alias("sp"),
+        F.sum(n_ce * n_ce / F.col("n_e")).alias("sr"),
+        (F.sum("n_ce") - F.count(F.lit(1))).alias("muc_tp"),
+        (F.sum("n_ce") - F.countDistinct("cluster_id")).alias("muc_den_p"),
+        (F.sum("n_ce") - F.countDistinct("entity_id")).alias("muc_den_r"),
     )
-    ne = cells.groupBy("entity_id").agg(
-        F.sum("n_ce").alias("n_e"), F.count(F.lit(1)).alias("p_e")
-    )
-    b3 = (
-        cells.join(nc, "cluster_id")
-        .join(ne, "entity_id")
-        .agg(
-            F.sum("n_ce").alias("n"),
-            F.sum(F.col("n_ce") * F.col("n_ce") / F.col("n_c")).alias("sp"),
-            F.sum(F.col("n_ce") * F.col("n_ce") / F.col("n_e")).alias("sr"),
-        )
-    )
-    mp = nc.agg(
-        F.sum(F.col("n_c") - F.col("p_c")).alias("muc_tp_p"),
-        F.sum(F.col("n_c") - 1).alias("muc_den_p"),
-    )
-    mr = ne.agg(
-        F.sum(F.col("n_e") - F.col("p_e")).alias("muc_tp_r"),
-        F.sum(F.col("n_e") - 1).alias("muc_den_r"),
-    )
-    f1 = lambda p, r: F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(F.lit(0.0))  # noqa: E731
-    safe = lambda a, b: F.when(b > 0, a / b).otherwise(F.lit(0.0))  # noqa: E731
-    out = (
-        b3.crossJoin(mp)
-        .crossJoin(mr)
-        .withColumn("b3_precision", safe(F.col("sp"), F.col("n")))
-        .withColumn("b3_recall", safe(F.col("sr"), F.col("n")))
-        .withColumn("muc_precision", safe(F.col("muc_tp_p"), F.col("muc_den_p")))
-        .withColumn("muc_recall", safe(F.col("muc_tp_r"), F.col("muc_den_r")))
-    )
-    return out.select(
-        "b3_precision",
-        "b3_recall",
-        f1(F.col("b3_precision"), F.col("b3_recall")).alias("b3_f1"),
-        "muc_precision",
-        "muc_recall",
-        f1(F.col("muc_precision"), F.col("muc_recall")).alias("muc_f1"),
+    b3_p, b3_r = _ratio(F.col("sp"), F.col("n")), _ratio(F.col("sr"), F.col("n"))
+    muc_p = _ratio(F.col("muc_tp"), F.col("muc_den_p"))
+    muc_r = _ratio(F.col("muc_tp"), F.col("muc_den_r"))
+    return agg.select(
+        b3_p.alias("b3_precision"),
+        b3_r.alias("b3_recall"),
+        _f1_col(b3_p, b3_r).alias("b3_f1"),
+        muc_p.alias("muc_precision"),
+        muc_r.alias("muc_recall"),
+        _f1_col(muc_p, muc_r).alias("muc_f1"),
     )
 
 
@@ -197,6 +230,47 @@ def bcubed_muc(pred: DataFrame, gold: DataFrame) -> dict[str, float]:
     """Dict form of coref_cluster_metrics for tests/reports."""
     row = coref_cluster_metrics(pred, gold).collect()[0]
     return {k: float(row[k]) for k in row.asDict()}
+
+
+def _ceaf(cells: DataFrame, sim: Column) -> DataFrame:
+    """The CEAF alignment kernel: per doc, the optimal 1:1 cluster x
+    entity alignment maximizing the summed per-cell similarity `sim`
+    (Hungarian, in an Arrow kernel over the doc's CELLS — tens of rows per
+    doc, never the mentions).  One row: (phi, n_c, n_e, n_m), the aligned
+    similarity and the cluster, entity and mention counts, each summed
+    over docs exactly like the scorer."""
+    import pandas as pd
+
+    from berkeley_entity_spark.ml.assignment import hungarian_max
+
+    def align(pdf: pd.DataFrame) -> pd.DataFrame:
+        import numpy as np
+
+        cl = {c: i for i, c in enumerate(sorted(pdf["cluster_id"].unique()))}
+        en = {e: i for i, e in enumerate(sorted(pdf["entity_id"].unique()))}
+        mat = np.zeros((len(cl), len(en)))
+        for r in pdf.itertuples():
+            mat[cl[r.cluster_id], en[r.entity_id]] = r.sim
+        phi, _ = hungarian_max(mat)
+        return pd.DataFrame(
+            {"phi": [phi], "n_c": [len(cl)], "n_e": [len(en)], "n_m": [int(pdf["n_ce"].sum())]}
+        )
+
+    per_doc = cells.select(
+        "_doc", "cluster_id", "entity_id", "n_ce", sim.alias("sim")
+    ).groupBy("_doc").applyInPandas(align, schema="phi double, n_c long, n_e long, n_m long")
+    return per_doc.agg(*[F.sum(c).alias(c) for c in ("phi", "n_c", "n_e", "n_m")])
+
+
+def _ceafe(cells: DataFrame) -> DataFrame:
+    """CEAFe from aligned cells: phi4 = 2|C ∩ E| / (|C| + |E|) per cell,
+    precision over pred clusters, recall over gold entities."""
+    m = _margins(cells, "_doc")
+    k = _ceaf(m, 2.0 * F.col("n_ce") / (F.col("n_c") + F.col("n_e")))
+    p, r = _ratio(F.col("phi"), F.col("n_c")), _ratio(F.col("phi"), F.col("n_e"))
+    return k.select(
+        p.alias("ceafe_precision"), r.alias("ceafe_recall"), _f1_col(p, r).alias("ceafe_f1")
+    )
 
 
 def ceafe_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
@@ -210,16 +284,13 @@ def ceafe_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
     entities (phi4(C, C) = 1), aggregated over documents by summing
     numerators and denominators exactly like the scorer.
 
-    Spark shape: the (doc, cluster, entity) intersection cells are three
-    DataFrame aggs; the Hungarian runs per doc in an Arrow kernel over
-    those CELLS (tens of rows per doc — never the mentions), so the only
-    data that reaches Python is one row per non-empty cluster x entity
-    cell.  The whole input is one document (corpus-level clusterings;
-    conll_metrics takes a doc column for per-doc coref).  Mentions present
-    in only one side are ignored (caller aligns first —
-    same convention as coref_cluster_metrics)."""
-    cells = _doc_cells(pred, gold, None)
-    return _ceafe_from_cells(cells)
+    Spark shape: the Hungarian runs per doc in the `_ceaf` Arrow kernel
+    over the intersection cells, so the only data that reaches Python is
+    one row per non-empty cluster x entity cell.  The whole input is one
+    document (corpus-level clusterings; conll_metrics takes a doc column
+    for per-doc coref).  Mentions present in only one side are ignored
+    (same convention as coref_cluster_metrics)."""
+    return _ceafe(_aligned(_cells(pred, gold)))
 
 
 def ceafm_metrics(
@@ -232,42 +303,14 @@ def ceafm_metrics(
     mentions; precision divides by the pred-side mention count, recall by
     the gold side (the scorer-v7 'ceafm' matcher that ships beside the
     'ceafe' one CorefConllScorer.scala parses).  Under this repo's
-    aligned-mention convention (inner join on mention_id — ceafe_metrics'
-    convention) both denominators equal the aligned mention count, so
-    P = R = F1 whenever both sides cluster the same mention set.  Same
-    intersection-cells + per-doc Arrow Hungarian shape as CEAFe: only one
-    row per non-empty cluster x entity cell ever reaches Python."""
-    import pandas as pd
-
-    from berkeley_entity_spark.ml.assignment import hungarian_max
-
-    cells = _doc_cells(pred, gold, doc_col)
-
-    def align(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        cl = {c: i for i, c in enumerate(sorted(pdf["cluster_id"].unique()))}
-        en = {e: i for i, e in enumerate(sorted(pdf["entity_id"].unique()))}
-        mat = np.zeros((len(cl), len(en)))
-        for r in pdf.itertuples():
-            mat[cl[r.cluster_id], en[r.entity_id]] = float(r.n_ce)
-        phi, _ = hungarian_max(mat)
-        return pd.DataFrame({"phi": [phi], "n_m": [int(pdf["n_ce"].sum())]})
-
-    per_doc = cells.groupBy("_doc").applyInPandas(
-        align, schema="phi double, n_m long"
-    )
-    safe = lambda a, b: F.when(b > 0, a / b).otherwise(F.lit(0.0))  # noqa: E731
-    f1 = lambda p, r: F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(F.lit(0.0))  # noqa: E731
-    agg = per_doc.agg(F.sum("phi").alias("sphi"), F.sum("n_m").alias("snm"))
-    out = agg.select(
-        safe(F.col("sphi"), F.col("snm")).alias("ceafm_precision"),
-        safe(F.col("sphi"), F.col("snm")).alias("ceafm_recall"),
-    )
-    return out.select(
-        "ceafm_precision",
-        "ceafm_recall",
-        f1(F.col("ceafm_precision"), F.col("ceafm_recall")).alias("ceafm_f1"),
+    aligned-mention convention (ceafe_metrics') both denominators equal
+    the aligned mention count, so P = R = F1 whenever both sides cluster
+    the same mention set.  Same `_ceaf` kernel as CEAFe, with phi3 =
+    |C ∩ E| per cell."""
+    k = _ceaf(_aligned(_cells(pred, gold, doc_col)), F.col("n_ce").cast("double"))
+    p = _ratio(F.col("phi"), F.col("n_m"))
+    return k.select(
+        p.alias("ceafm_precision"), p.alias("ceafm_recall"), _f1_col(p, p).alias("ceafm_f1")
     )
 
 
@@ -280,148 +323,39 @@ def clustering_agreement(
     — the external-validation numbers a clustering pipeline publishes when
     the gold side is a labeling rather than a coref key file.
 
-    Everything reduces over the (cluster x entity) intersection-cells
-    table (|C|*|E| rows, never mentions): the pair counts sum n*(n-1)
-    per cell/row/column in exact BIGINT and halve only in the final
-    double-precision formula; the conditional entropies are one weighted
-    ln-ratio sum over the same cells.  Edge conventions follow sklearn:
-    ARI = 1 when the adjustment denominator is 0 (both partitions trivial
-    in the same way), homogeneity/completeness = 1 when the respective
-    reference entropy is 0, V = 0 when h + c = 0.
+    Everything reduces over the aligned (cluster x entity) intersection
+    cells (|C|*|E| rows, never mentions): the pair counts are
+    `pair_counts`' exact BIGINTs, used as doubles only in the final
+    formula; the conditional entropies are one weighted ln-ratio sum over
+    the same cells.  Edge conventions follow sklearn: ARI = 1 when the
+    adjustment denominator is 0 (both partitions trivial in the same way),
+    homogeneity/completeness = 1 when the respective reference entropy is
+    0, V = 0 when h + c = 0.
 
     One row: (ari, homogeneity, completeness, v_measure)."""
-    j = _aligned(pred, gold)
-    cells = j.groupBy("cluster_id", "entity_id").agg(
-        F.count(F.lit(1)).alias("n_ce")
-    )
-    nc = cells.groupBy("cluster_id").agg(F.sum("n_ce").alias("n_c"))
-    ne = cells.groupBy("entity_id").agg(F.sum("n_ce").alias("n_e"))
-    cj = cells.join(nc, "cluster_id").join(ne, "entity_id")
-    base = cj.agg(
+    cells = _aligned(_cells(pred, gold))
+    n_ce, n_c, n_e = F.col("n_ce"), F.col("n_c"), F.col("n_e")
+    sums = _margins(cells).agg(
         F.sum("n_ce").alias("n"),
-        F.sum(F.col("n_ce") * (F.col("n_ce") - 1)).alias("t_cells"),
-        F.sum(
-            F.col("n_ce") * F.log(F.col("n_c") / F.col("n_ce"))
-        ).alias("s_e_given_c"),
-        F.sum(
-            F.col("n_ce") * F.log(F.col("n_e") / F.col("n_ce"))
-        ).alias("s_c_given_e"),
+        F.sum(n_ce * F.log(n_c / n_ce)).alias("s_e_given_c"),
+        F.sum(n_ce * F.log(n_e / n_ce)).alias("s_c_given_e"),
+        # sum_c n_c ln n_c, one n_ce share per cell
+        F.sum(n_ce * F.log(n_c)).alias("s_rows"),
+        F.sum(n_ce * F.log(n_e)).alias("s_cols"),
     )
-    rows = nc.agg(
-        F.sum(F.col("n_c") * (F.col("n_c") - 1)).alias("t_rows"),
-        F.sum(F.col("n_c") * F.log("n_c")).alias("s_rows"),
-    )
-    cols = ne.agg(
-        F.sum(F.col("n_e") * (F.col("n_e") - 1)).alias("t_cols"),
-        F.sum(F.col("n_e") * F.log("n_e")).alias("s_cols"),
-    )
-    m = (
-        base.crossJoin(rows)
-        .crossJoin(cols)
-        .select(
-            (F.col("t_cells") / 2.0).alias("a"),
-            (F.col("t_rows") / 2.0).alias("r2"),
-            (F.col("t_cols") / 2.0).alias("c2"),
-            (F.col("n") * (F.col("n") - 1) / 2.0).alias("npairs"),
-            # H(E|C) = sum (n_ce/n) ln(n_c/n_ce); H(E) = ln n - sum (n_e/n) ln n_e
-            (F.col("s_e_given_c") / F.col("n")).alias("h_e_c"),
-            (F.col("s_c_given_e") / F.col("n")).alias("h_c_e"),
-            (F.log("n") - F.col("s_cols") / F.col("n")).alias("h_e"),
-            (F.log("n") - F.col("s_rows") / F.col("n")).alias("h_c"),
-        )
-        .select(
-            F.when(
-                (F.col("r2") + F.col("c2")) / 2.0
-                - F.col("r2") * F.col("c2") / F.col("npairs")
-                == 0,
-                F.lit(1.0),
-            )
-            .otherwise(
-                (F.col("a") - F.col("r2") * F.col("c2") / F.col("npairs"))
-                / (
-                    (F.col("r2") + F.col("c2")) / 2.0
-                    - F.col("r2") * F.col("c2") / F.col("npairs")
-                )
-            )
-            .alias("ari"),
-            F.when(F.col("h_e") == 0, F.lit(1.0))
-            .otherwise(1.0 - F.col("h_e_c") / F.col("h_e"))
-            .alias("homogeneity"),
-            F.when(F.col("h_c") == 0, F.lit(1.0))
-            .otherwise(1.0 - F.col("h_c_e") / F.col("h_c"))
-            .alias("completeness"),
-        )
-    )
-    return m.select(
-        "ari",
-        "homogeneity",
-        "completeness",
-        F.when(
-            F.col("homogeneity") + F.col("completeness") > 0,
-            2.0
-            * F.col("homogeneity")
-            * F.col("completeness")
-            / (F.col("homogeneity") + F.col("completeness")),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("v_measure"),
-    )
-
-
-def _doc_cells(pred: DataFrame, gold: DataFrame, doc_col: str | None) -> DataFrame:
-    """(_doc, cluster_id, entity_id, n_ce) intersection cells — computed
-    ONCE per evaluation and shared by B3/MUC and CEAFe."""
-    dc = doc_col
-    pcols = ["mention_id", "cluster_id"] + ([dc] if dc else [])
-    j = pred.select(*pcols).join(gold.select("mention_id", "entity_id"), "mention_id")
-    doc = F.col(dc) if dc else F.lit("_all")
-    return j.groupBy(doc.alias("_doc"), "cluster_id", "entity_id").agg(
-        F.count(F.lit(1)).alias("n_ce")
-    )
-
-
-def _ceafe_from_cells(cells: DataFrame) -> DataFrame:
-    import pandas as pd
-
-    from berkeley_entity_spark.ml.assignment import hungarian_max
-
-    nc = cells.groupBy("_doc", "cluster_id").agg(F.sum("n_ce").alias("n_c"))
-    ne = cells.groupBy("_doc", "entity_id").agg(F.sum("n_ce").alias("n_e"))
-    full = cells.join(nc, ["_doc", "cluster_id"]).join(ne, ["_doc", "entity_id"])
-
-    def align(pdf: pd.DataFrame) -> pd.DataFrame:
-        cl = {c: i for i, c in enumerate(sorted(pdf["cluster_id"].unique()))}
-        en = {e: i for i, e in enumerate(sorted(pdf["entity_id"].unique()))}
-        import numpy as np
-
-        mat = np.zeros((len(cl), len(en)))
-        for r in pdf.itertuples():
-            mat[cl[r.cluster_id], en[r.entity_id]] = (
-                2.0 * r.n_ce / (r.n_c + r.n_e)
-            )
-        phi, _ = hungarian_max(mat)
-        return pd.DataFrame(
-            {"phi": [phi], "n_pred": [len(cl)], "n_gold": [len(en)]}
-        )
-
-    per_doc = full.groupBy("_doc").applyInPandas(
-        align, schema="phi double, n_pred long, n_gold long"
-    )
-    safe = lambda a, b: F.when(b > 0, a / b).otherwise(F.lit(0.0))  # noqa: E731
-    f1 = lambda p, r: F.when(p + r > 0, 2 * p * r / (p + r)).otherwise(F.lit(0.0))  # noqa: E731
-    agg = per_doc.agg(
-        F.sum("phi").alias("sphi"),
-        F.sum("n_pred").alias("snp"),
-        F.sum("n_gold").alias("sng"),
-    )
-    out = agg.select(
-        safe(F.col("sphi"), F.col("snp")).alias("ceafe_precision"),
-        safe(F.col("sphi"), F.col("sng")).alias("ceafe_recall"),
-    )
-    return out.select(
-        "ceafe_precision",
-        "ceafe_recall",
-        f1(F.col("ceafe_precision"), F.col("ceafe_recall")).alias("ceafe_f1"),
+    n = F.col("n")
+    a, r2, c2 = (F.col(f"{k}_pairs").cast("double") for k in ("tp", "pred", "gold"))
+    expected = r2 * c2 / (n * (n - 1) / 2.0)
+    span = (r2 + c2) / 2.0 - expected
+    # H(E|C) = sum (n_ce/n) ln(n_c/n_ce); H(E) = ln n - sum (n_e/n) ln n_e
+    h_e, h_c = F.log(n) - F.col("s_cols") / n, F.log(n) - F.col("s_rows") / n
+    hom = F.when(h_e == 0, F.lit(1.0)).otherwise(1.0 - F.col("s_e_given_c") / n / h_e)
+    com = F.when(h_c == 0, F.lit(1.0)).otherwise(1.0 - F.col("s_c_given_e") / n / h_c)
+    return sums.crossJoin(pair_counts(cells)).select(
+        F.when(span == 0, F.lit(1.0)).otherwise((a - expected) / span).alias("ari"),
+        hom.alias("homogeneity"),
+        com.alias("completeness"),
+        _f1_col(hom, com).alias("v_measure"),
     )
 
 
@@ -439,15 +373,10 @@ def conll_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
     per-doc CEAFe alignment — the mention-scale shuffle is not repeated."""
     pred = pred.withColumn("cluster_id", F.concat_ws("␟", "g", "cluster_id"))
     gold = gold.withColumn("entity_id", F.concat_ws("␟", "g", "entity_id"))
-    cells = _doc_cells(pred, gold, "g").localCheckpoint(eager=True)
-    # doc-scoped ids make (cluster_id, entity_id) globally unique, so the
-    # global cells are the per-doc cells re-keyed (n_ce passes through)
-    base = _b3_muc_from_cells(
-        cells.groupBy("cluster_id", "entity_id").agg(F.sum("n_ce").alias("n_ce"))
-    )
-    ceafe = _ceafe_from_cells(cells)
+    cells = _aligned(_cells(pred, gold, "g")).localCheckpoint(eager=True)
     return (
-        base.crossJoin(ceafe)
+        _b3_muc(cells)
+        .crossJoin(_ceafe(cells))
         .withColumn(
             "conll_f1",
             (F.col("muc_f1") + F.col("b3_f1") + F.col("ceafe_f1")) / 3.0,
@@ -465,24 +394,13 @@ def per_doc_pairwise_stats(assign: DataFrame) -> DataFrame:
     bootstrap consumes (sig/BootstrapDriver.scala:12-17 reads them from
     logs; sig/MetricComputer.isSigDifference re-aggregates them).
 
-    assign: (url, mention_id, cluster_id, entity_id); the doc is the url."""
-    np2 = lambda c: F.sum(c * (c - 1) / 2).cast("double")  # noqa: E731
-    cnt = F.count(F.lit(1)).alias("c")
-    pred = (
-        assign.groupBy("url", "cluster_id").agg(cnt)
-        .groupBy("url").agg(np2(F.col("c")).alias("pred"))
+    assign: (url, mention_id, cluster_id, entity_id), one row per
+    mention; the doc is the url."""
+    c = pair_counts(_cells(assign, assign, "url"), "_doc")
+    return c.select(
+        F.col("_doc").alias("url"),
+        *[F.col(f"{k}_pairs").cast("double").alias(k) for k in ("pred", "gold", "tp")],
     )
-    gold = (
-        assign.groupBy("url", "entity_id").agg(cnt)
-        .groupBy("url").agg(np2(F.col("c")).alias("gold"))
-    )
-    tp = (
-        assign.groupBy("url", "cluster_id", "entity_id").agg(cnt)
-        .groupBy("url").agg(np2(F.col("c")).alias("tp"))
-    )
-    # the three aggregations share `assign`'s doc key set exactly, so plain
-    # inner joins state the invariant (and keep broadcast planning open)
-    return pred.join(gold, "url").join(tp, "url")
 
 
 # Poisson(1) CDF thresholds for the poissonized bootstrap draw (k = 0..8
@@ -572,18 +490,13 @@ def grouped_accuracy(
     attrs(mention_id, mtype).  Majority entity per cluster = argmax of
     (cluster, entity) cell counts, ties to the smaller entity id.  Returns
     (group, n, correct, accuracy)."""
-    j = _aligned(pred, gold)
-    cells = j.groupBy("cluster_id", "entity_id").agg(F.count(F.lit(1)).alias("n_ce"))
-    # min_by over (-count, entity_id) keeps the "ties to the smaller
-    # entity id" rule for ANY orderable id type (a unary minus on a string
-    # id would cast to null and make the tie-break arbitrary)
-    majority = cells.groupBy("cluster_id").agg(
-        F.min_by(
-            "entity_id", F.struct((-F.col("n_ce")).alias("_negn"), F.col("entity_id"))
-        ).alias("_maj")
+    majority = _aligned(_cells(pred, gold)).groupBy("cluster_id").agg(
+        _majority().alias("_maj")
     )
     scored = (
-        j.join(majority, "cluster_id")
+        pred.select("mention_id", "cluster_id")
+        .join(gold.select("mention_id", "entity_id"), "mention_id")
+        .join(majority, "cluster_id")
         .withColumn("_ok", (F.col("entity_id") == F.col("_maj")).cast("long"))
         .join(attrs.select("mention_id", "mtype"), "mention_id")
     )
@@ -647,21 +560,10 @@ def wikification_prf1(pred: DataFrame, gold: DataFrame) -> DataFrame:
         zsum(~F.col("_gnil")).alias("total_gold"),
         zsum(F.col("_gnil")).alias("total_gold_nil"),
     )
-    prf = lambda tp, pr, gl: [  # noqa: E731
-        F.round(F.when(pr > 0, tp / pr).otherwise(0.0), 6),
-        F.round(F.when(gl > 0, tp / gl).otherwise(0.0), 6),
-        F.round(
-            F.when(
-                (F.when(pr > 0, tp / pr).otherwise(0.0)
-                 + F.when(gl > 0, tp / gl).otherwise(0.0)) > 0,
-                2 * F.when(pr > 0, tp / pr).otherwise(0.0)
-                * F.when(gl > 0, tp / gl).otherwise(0.0)
-                / (F.when(pr > 0, tp / pr).otherwise(0.0)
-                   + F.when(gl > 0, tp / gl).otherwise(0.0)),
-            ).otherwise(0.0),
-            6,
-        ),
-    ]
+    def prf(tp: Column, pr: Column, gl: Column) -> list[Column]:
+        p, r = _ratio(tp, pr), _ratio(tp, gl)
+        return [F.round(p, 6), F.round(r, 6), F.round(_f1_col(p, r), 6)]
+
     kb = prf(F.col("correct"), F.col("total_pred"), F.col("total_gold"))
     nil = prf(
         F.col("correct_nil"), F.col("total_pred_nil"), F.col("total_gold_nil")
@@ -694,16 +596,11 @@ def cluster_diff(
 
     Same intersection-cells reduction as B3/CEAF (never per-mention
     rows); three small aggregations + two joins."""
-    j = _aligned(pred, gold)
-    cells = j.groupBy("cluster_id", "entity_id").agg(
-        F.count(F.lit(1)).alias("n_ce")
-    )
+    cells = _aligned(_cells(pred, gold))
     nc = cells.groupBy("cluster_id").agg(
         F.sum("n_ce").alias("n_members"),
         F.count(F.lit(1)).alias("n_entities"),
-        F.min_by(
-            "entity_id", F.struct((-F.col("n_ce")).alias("_n"), F.col("entity_id"))
-        ).alias("majority_entity"),
+        _majority().alias("majority_entity"),
         F.max("n_ce").alias("_maj_n"),
     )
     se = cells.groupBy("entity_id").agg(

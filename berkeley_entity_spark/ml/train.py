@@ -233,12 +233,12 @@ def score_with_fold_models(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            acr_a = pdf["acr_a"] if "acr_a" in pdf else pd.Series(True, index=pdf.index)
-            acr_b = pdf["acr_b"] if "acr_b" in pdf else pd.Series(True, index=pdf.index)
             feats = np.array(
                 [
                     featurize_pair(a, bb, idf_map, bool(fa), bool(fb))
-                    for a, bb, fa, fb in zip(pdf["norm_a"], pdf["norm_b"], acr_a, acr_b)
+                    for a, bb, fa, fb in zip(
+                        pdf["norm_a"], pdf["norm_b"], pdf["acr_a"], pdf["acr_b"]
+                    )
                 ],
                 dtype=np.float64,
             )

@@ -248,8 +248,8 @@ def featurize_pair(
     norm_a: str,
     norm_b: str,
     idf: dict[str, float],
-    is_acr_a: bool = True,
-    is_acr_b: bool = True,
+    is_acr_a: bool,
+    is_acr_b: bool,
     lev: float | None = None,
     need_cosine: bool = True,
     need_align: bool = True,

@@ -61,6 +61,7 @@ __all__ = [
     "fs_gate_records",
     "fs_comparison_vectors",
     "fs_em_params",
+    "fs_fit",
     "fs_posterior_col",
     "fs_classify",
     "fs_tf_adjusted",
@@ -295,20 +296,20 @@ def fs_tf_adjusted(records: DataFrame, pairs: DataFrame, params: dict) -> DataFr
     )
 
 
+def fs_fit(pairs: DataFrame) -> dict:
+    """EM parameters (fs_em_params) fitted on the comparison vectors
+    `pairs`: the (g_name, g_tok) pattern counts are one bounded collect,
+    <= 3*2 rows regardless of corpus size."""
+    counts = pairs.groupBy("g_name", "g_tok").agg(F.count(F.lit(1)).alias("n"))
+    return fs_em_params([(r["g_name"], r["g_tok"], r["n"]) for r in counts.collect()])
+
+
 def fs_link(documents: DataFrame) -> DataFrame:
     """End-to-end gate pipeline: records -> blocked comparison vectors ->
-    pattern counts (bounded collect, <= 6 rows) -> EM -> codegen
-    classification."""
+    pattern counts -> EM (fs_fit) -> codegen classification."""
     pairs = fs_comparison_vectors(fs_gate_records(documents))
     pairs = pairs.localCheckpoint(eager=True)  # pattern agg + final projection share it
-    pats = [
-        (r["g_name"], r["g_tok"], r["n"])
-        for r in pairs.groupBy("g_name", "g_tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: <= 3*2 pattern rows regardless of corpus size
-    ]
-    params = fs_em_params(pats)
-    return fs_classify(pairs, params)
+    return fs_classify(pairs, fs_fit(pairs))
 
 
 def fs_link_tf(documents: DataFrame) -> DataFrame:
@@ -316,14 +317,7 @@ def fs_link_tf(documents: DataFrame) -> DataFrame:
     agreements (fs_tf_adjusted) — same EM fit, value-specific u."""
     recs = fs_gate_records(documents)
     pairs = fs_comparison_vectors(recs).localCheckpoint(eager=True)
-    pats = [
-        (r["g_name"], r["g_tok"], r["n"])
-        for r in pairs.groupBy("g_name", "g_tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: <= 3*2 pattern rows
-    ]
-    params = fs_em_params(pats)
-    return fs_tf_adjusted(recs, pairs, params)
+    return fs_tf_adjusted(recs, pairs, fs_fit(pairs))
 
 
 # ------------------------------------------------------- name standardizer
@@ -643,17 +637,10 @@ def match_weights_report(documents: DataFrame) -> DataFrame:
     degenerate comparison (m ~ u, weight ~ 0) shows up.
 
     Scale shape: EM runs on the bounded pattern-count sufficient
-    statistics (<= 6 rows collected) exactly as fs_link does; the report
-    itself is a 6-row literal frame — no corpus-sized work beyond the
+    statistics (fs_fit, <= 6 rows collected) exactly as fs_link does; the
+    report itself is a 6-row literal frame — no corpus-sized work beyond the
     one blocked-pairs aggregation."""
-    pairs = fs_comparison_vectors(fs_gate_records(documents))
-    pats = [
-        (r["g_name"], r["g_tok"], r["n"])
-        for r in pairs.groupBy("g_name", "g_tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: <= 3*2 pattern rows regardless of corpus size
-    ]
-    params = fs_em_params(pats)
+    params = fs_fit(fs_comparison_vectors(fs_gate_records(documents)))
     rows = [("prior", -1, params["lam"], 1.0 - params["lam"])]
     rows += [("name", l, params["m_n"][l], params["u_n"][l]) for l in range(3)]
     rows += [("tok", l, params["m_t"][l], params["u_t"][l]) for l in range(2)]

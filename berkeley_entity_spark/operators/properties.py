@@ -146,7 +146,7 @@ def _props_for(spans: DataFrame, numgender: DataFrame) -> DataFrame:
 def with_number_gender(
     mentions: DataFrame,
     numgender: DataFrame,
-    person_expr: Column | None = None,
+    person_expr: Column,
 ) -> DataFrame:
     """Replace the number/gender columns of `mentions` with values computed
     from the Bergsma-Lin-style count table `numgender(phrase, masc, fem,
@@ -154,8 +154,7 @@ def with_number_gender(
 
     person_expr: boolean Column over the mention row selecting PERSON
     mentions (the reference gates on nerString == "PERSON",
-    Mention.scala:336); default uses the `ner` column when present, else no
-    mention takes the person path.
+    Mention.scala:336).
 
     The cascade runs once per DISTINCT (span, person) key and the small
     property table is joined back (broadcast under the byte gate, shuffle
@@ -165,10 +164,6 @@ def with_number_gender(
     mention INSTANCE was measured at ~95us/row and capped pipeline scaling
     (18.8M mentions / 7.5k surfaces at 2.4M pages).  Web corpora repeat
     surfaces heavily, so dedupe-first is the same decision as blocking."""
-    if person_expr is None:
-        person_expr = (
-            F.col("ner") == "PERSON" if "ner" in mentions.columns else F.lit(False)
-        )
     # the planner sizes a count table read from files or a local relation
     # and broadcasts it under its own threshold, with no job; only a table
     # it cannot show to be small (a parallelized driver list reports

@@ -260,8 +260,6 @@ def score_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            acr_a = pdf["acr_a"] if "acr_a" in pdf else pd.Series(True, index=pdf.index)
-            acr_b = pdf["acr_b"] if "acr_b" in pdf else pd.Series(True, index=pdf.index)
             feats = np.array(
                 [
                     featurize_pair(
@@ -269,7 +267,7 @@ def score_pairs(
                         need_cosine=need_cosine, need_align=need_align,
                     )
                     for a, b, fa, fb, lv in zip(
-                        pdf["norm_a"], pdf["norm_b"], acr_a, acr_b, pdf["_lev_cg"]
+                        pdf["norm_a"], pdf["norm_b"], pdf["acr_a"], pdf["acr_b"], pdf["_lev_cg"]
                     )
                 ],
                 dtype=np.float64,

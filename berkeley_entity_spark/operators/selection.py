@@ -32,33 +32,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.operators.dedup import tokens_col
+from berkeley_entity_spark.operators.dedup import tokens_col, word_ngrams_col
 
 
 def hashed_gram_buckets(
     documents: DataFrame,
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """(doc_id, bucket) — one row per unigram AND word-bigram occurrence,
-    hashed into `n_buckets` via the first 15 hex chars of md5 (60 bits —
-    exact in a signed BIGINT in both Spark and DuckDB)."""
-    toks = tokens_col()
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.slice(toks, 1, F.size(toks) - 1),
-            lambda t, i: F.concat_ws(" ", t, F.element_at(toks, i + F.lit(2))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = F.concat(toks, bigrams)
-    return documents.select(
-        "doc_id", F.explode(grams).alias("g")
-    ).select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("long")
-            % n_buckets
-        ).alias("bucket"),
+    """(doc_id, bucket) — one row per unigram AND word-bigram occurrence
+    (`_gram_arr`), hashed into `n_buckets` by `_bucket_of`."""
+    return documents.select("doc_id", F.explode(_gram_arr()).alias("g")).select(
+        "doc_id", _bucket_of(F.col("g"), n_buckets).alias("bucket")
     )
 
 
@@ -178,23 +162,17 @@ def domain_mixture(
 
 # --------------------------------------------------------- quality classifier
 def _gram_arr():
-    """In-row unigram+bigram array (same gram set as hashed_gram_buckets,
-    but as a single array column so scoring can fold over it without an
+    """In-row unigram+bigram array: the tokens, then their word bigrams
+    (one array column, so scoring can fold over it without an
     explode/shuffle)."""
     toks = tokens_col()
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.slice(toks, 1, F.size(toks) - 1),
-            lambda t, i: F.concat_ws(" ", t, F.element_at(toks, i + F.lit(2))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(toks, bigrams)
+    return F.concat(toks, word_ngrams_col(toks, 2))
 
 
 def _bucket_of(g, n_buckets: int):
-    """Engine-portable gram -> bucket (md5 60-bit prefix, see
-    hashed_gram_buckets)."""
+    """Engine-portable gram -> bucket: the first 15 hex chars of md5 (60
+    bits — exact in a signed BIGINT in both Spark and DuckDB, which
+    computes the identical id via ('0x' || hex)::BIGINT)."""
     return (
         F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long") % n_buckets
     )

@@ -22,6 +22,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """The driver heap every session gets: $SPARK_DRIVER_MEMORY, else 8g."""
+    return os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+
+
 def get_spark(
     app_name: str = "berkeley-entity-spark",
     master: str | None = None,
@@ -66,7 +71,7 @@ def get_spark(
         #   .config("spark.sql.catalog.warehouse", "org.apache.iceberg.spark.SparkCatalog")
         # The sandbox image ships no iceberg runtime jar, so stage tables go to
         # parquet via plans.checkpoint.CheckpointStore (format-pluggable).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

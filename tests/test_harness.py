@@ -59,3 +59,22 @@ def test_materialize_offsets_keys_per_copy(spark, tmp_path):
         )
 
     assert orders_customer(dst) == 2 * orders_customer(SF)
+
+
+MEMINFO = """MemTotal:       16093032 kB
+MemFree:         1021880 kB
+MemAvailable:    {avail} kB
+Buffers:          102400 kB
+"""
+
+
+def test_soak_refuses_to_start_below_driver_heap():
+    """MemAvailable below the driver heap stops the soak with a message
+    naming the heap, the available memory and the variable to lower; at
+    or above the heap it starts."""
+    short = soak.memory_shortfall(MEMINFO.format(avail=6 * 2**20), "8g")
+    assert short is not None
+    assert "8g" in short and "6.0 GiB" in short and "SPARK_DRIVER_MEMORY" in short
+    assert soak.memory_shortfall(MEMINFO.format(avail=8 * 2**20), "8g") is None
+    assert soak.memory_shortfall(MEMINFO.format(avail=12 * 2**20), "8192m") is None
+    assert soak.memory_shortfall(MEMINFO.format(avail=5 * 2**20), "6144") is not None

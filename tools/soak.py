@@ -38,6 +38,10 @@ Replication rules (copies i = 0..C-1):
     realistic hot classes.
   * embeddings are copied verbatim (ANN ties break by vec_id).
 
+The soak needs the host to itself: it refuses to start (exit status 1)
+when MemAvailable is below the driver heap (SPARK_DRIVER_MEMORY, 8g by
+default; the sf1 JVM reaches ~6 GB RSS).
+
 Usage: python tools/soak.py {sf1|sf3} [--force]
 """
 
@@ -45,6 +49,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -164,16 +169,42 @@ def ann_lsh_sized(spark, sf_dir: str):
     return lsh_bucket_topk(emb, k=3, n_planes="auto")
 
 
+_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def memory_shortfall(meminfo: str, heap: str) -> str | None:
+    """Why the soak cannot start, or None.  `meminfo` is the text of
+    /proc/meminfo and `heap` the driver heap in Spark's size syntax ("8g",
+    "6144m"; a bare number is MiB).  The soak's JVM grows into its heap, so
+    it needs MemAvailable >= the heap: with less, the kernel OOM killer
+    ends the run (or a neighbour) part-way instead of the tool failing
+    here."""
+    avail = int(re.search(r"^MemAvailable:\s+(\d+) kB", meminfo, re.M).group(1)) << 10
+    num, unit = re.fullmatch(r"(\d+)([kmgt]?)b?", heap.strip().lower()).groups()
+    need = int(num) * _UNITS[unit or "m"]
+    if avail >= need:
+        return None
+    return (
+        f"soak needs its driver heap in free memory: heap {heap} ({need / 2**30:.1f} GiB), "
+        f"MemAvailable {avail / 2**30:.1f} GiB.  Stop other Spark processes, "
+        "or lower SPARK_DRIVER_MEMORY."
+    )
+
+
 def main() -> None:
     if len(sys.argv) < 2 or sys.argv[1] not in REPLICAS:
         sys.exit("usage: python tools/soak.py {sf1|sf3} [--force]")
     replica = sys.argv[1]
     copies, names, out_name = REPLICAS[replica]
     from berkeley_entity_spark.operators.dedup import minhash_lsh_pairs
-    from berkeley_entity_spark.session import get_spark
+    from berkeley_entity_spark.session import driver_memory, get_spark
 
     import __spark_entry__ as entrymod
 
+    with open("/proc/meminfo") as f:
+        short = memory_shortfall(f.read(), driver_memory())
+    if short:
+        sys.exit(short)
     dst = os.path.join(REPO, ".soak", f"sf{copies / 10:.1f}")
     spark = get_spark(app_name=f"bes-soak-{replica}")
     spark.sparkContext.setLogLevel("ERROR")
