@@ -328,8 +328,9 @@ def q_ann_ivf(spark, sf_dir):
 
 def q_embed_near_dup(spark, sf_dir):
     """Embedding near-dup (exact form): all pairs with cosine >= 0.35,
-    id_a < id_b.  The broadcast-matmul kernel; the LSH-bucketed variant
-    (`embedding_near_dup`) approximates this at scale."""
+    id_a < id_b.  The blocked-matmul kernel (similarity.
+    cosine_threshold_pairs); LSH buckets (lsh_bucket_topk) approximate this
+    at scale."""
     from berkeley_entity_spark.operators.similarity import cosine_threshold_pairs
 
     t = cosine_threshold_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.35)
@@ -2312,7 +2313,7 @@ def q_one_to_one(spark, sf_dir):
     )
 
     scored = fs_link(_t(spark, sf_dir, "documents"))
-    return one_to_one_matches(scored, rounds=3)
+    return one_to_one_matches(scored)
 
 
 def q_block_profile(spark, sf_dir):
@@ -2935,7 +2936,7 @@ def q_media_features(spark, sf_dir):
     media = docs.mapInPandas(
         gen, schema="media_id bigint, kind string, payload binary"
     )
-    feats = decode_media(media, dim=48, fake=False)
+    feats = decode_media(media, dim=48)
     return feats.select(
         "media_id", F.posexplode("features").alias("idx", "val")
     ).select(
@@ -3668,12 +3669,14 @@ SELECT CAST(3 AS INTEGER), 'phonetic',
     )
 
 
-def _one_to_one_oracle(rounds: int = 3, min_score: float = 0.5) -> str:
-    """q_one_to_one replay: the FS-EM scored pairs, then `rounds`
-    unrolled mutual-best iterations — endpoint incidence, rank-1 per
-    node under the (p_match DESC, id_a, id_b) total order, edges
-    nominated by BOTH endpoints accepted, matched nodes removed from
-    the residual — exactly the Spark loop's per-round dataflow."""
+def _one_to_one_oracle(rounds: int = 16, min_score: float = 0.5) -> str:
+    """q_one_to_one replay: the FS-EM scored pairs, then `rounds` (the
+    Spark loop's cap, linkage._MATCH_ROUNDS) unrolled mutual-best
+    iterations — endpoint incidence, rank-1 per node under the (p_match
+    DESC, id_a, id_b) total order, edges nominated by BOTH endpoints
+    accepted, matched nodes removed from the residual — exactly the Spark
+    loop's per-round dataflow.  Rounds after convergence run on an empty
+    residual and add no rows."""
     # MATERIALIZED hints are load-bearing: every round references the
     # prior round's CTEs multiple times, and default CTE inlining makes
     # the expansion exponential in `rounds` (observed as a DuckDB OOM).

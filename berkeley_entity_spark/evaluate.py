@@ -226,12 +226,6 @@ def _b3_muc(cells: DataFrame) -> DataFrame:
     )
 
 
-def bcubed_muc(pred: DataFrame, gold: DataFrame) -> dict[str, float]:
-    """Dict form of coref_cluster_metrics for tests/reports."""
-    row = coref_cluster_metrics(pred, gold).collect()[0]
-    return {k: float(row[k]) for k in row.asDict()}
-
-
 def _ceaf(cells: DataFrame, sim: Column) -> DataFrame:
     """The CEAF alignment kernel: per doc, the optimal 1:1 cluster x
     entity alignment maximizing the summed per-cell similarity `sim`

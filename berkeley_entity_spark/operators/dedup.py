@@ -1,16 +1,15 @@
 """Document deduplication operators (training-data pipeline ops).
 
-Exact + near-dup over a `documents(doc_id, text, ...)` table:
+Near-dup detection over a `documents(doc_id, text, ...)` table:
 
-  * exact_dedup           — hash-groupBy, keep min doc_id
   * minhash_lsh_pairs     — MinHash over word shingles (shingles_col) with
     the *string-min* trick: minhash_i = min(md5(seed_i || shingle)).  Using
     md5 keeps the signature reproducible in ANY engine (the DuckDB oracle
     runs the exact same expression), unlike engine-specific hash functions.
     The signature/bucket kernel (blocking.minhash_band_keys) and the capped
     bucket self-join (blocking.capped_key_pairs) are shared with ER
-    blocking; fuzzy_contaminated_docs and the incremental dedup stream
-    (streaming/ingest.py) bucket through the same kernel.
+    blocking; fuzzy_contaminated_docs and the incremental ER stream's
+    dedup batch (streaming/ingest.py) bucket through the same kernel.
   * simhash               — 64-bit simhash in an Arrow kernel + banded
     hamming candidate pairs
   * ngram_jaccard_pairs   — token n-gram Jaccard via explode/groupBy counting
@@ -51,17 +50,6 @@ def tokens_col():
     """Whitespace tokens; empty tokens removed (matches the DuckDB oracle
     `string_split` + filter)."""
     return F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-
-
-def exact_dedup(documents: DataFrame) -> DataFrame:
-    """(text, keep_id, dup_cnt) — the survivor is the min doc_id."""
-    return (
-        documents.groupBy("text")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("dup_cnt"),
-        )
-    )
 
 
 def word_ngrams_col(toks, n: int):
@@ -385,7 +373,7 @@ def near_dup_keep_one(documents: DataFrame) -> DataFrame:
 
     Output: (doc_id, canonical_id, kept) for EVERY input doc — docs outside
     any dup cluster are their own canonical.  Deterministic under any
-    partitioning (min-id policy, same as exact_dedup), so the whole
+    partitioning (min-id policy), so the whole
     resolution is replayable by a recursive-CTE SQL oracle.  Scale shape:
     the pair join is the capped LSH join; the closure is the
     large-star/small-star loop (clustering.py) — both linear-ish in corpus

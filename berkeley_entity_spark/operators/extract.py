@@ -112,36 +112,23 @@ def _mentions_from_text(
 
 def extract_mentions(
     pages: DataFrame,
-    passthrough: tuple[str, ...] = (),
     appositive_subspans: bool = False,
 ) -> DataFrame:
     """webpages(url, warc_ts, html, text, lang) -> mentions DataFrame.
 
     The stored text column is trusted and html is never read — column
     pruning keeps the 100 TB binary column out of the scan.
-
-    passthrough: extra page columns copied onto every emitted mention (e.g.
-    warc_ts for the streaming rate aggregation — avoids a stream-stream join
-    back to the source).
     """
-    cols = ["url", "text"]
-    pt = [c for c in passthrough if c not in cols]
-    pt_schema = "".join(
-        f", {name} {dtype}"
-        for name, dtype in pages.select(*pt).dtypes
-    ) if pt else ""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         out_cols = [
             "url", "sent_idx", "start", "end", "span", "head",
             "norm_name", "mtype", "ner", "number", "gender", "is_acr",
-            "appositive_like", *pt,
+            "appositive_like",
         ]
         for pdf in batches:
             rows = []
-            pt_vals = [pdf[c] for c in pt]
-            for i, (url, text) in enumerate(zip(pdf["url"], pdf["text"])):
-                extra = tuple(v.iloc[i] for v in pt_vals)
+            for url, text in zip(pdf["url"], pdf["text"]):
                 for s_idx, start, end, span, appos in _mentions_from_text(
                     text, appositive_subspans
                 ):
@@ -153,12 +140,12 @@ def extract_mentions(
                     )
                     rows.append(
                         (url, s_idx, start, end, span, head, norm,
-                         "PROPER", "", "UNKNOWN", "UNKNOWN", is_acr, appos, *extra)
+                         "PROPER", "", "UNKNOWN", "UNKNOWN", is_acr, appos)
                     )
             yield pd.DataFrame(rows, columns=out_cols)
 
-    mentions = pages.select(*cols, *pt).mapInPandas(
-        gen, schema=MENTIONS_SCHEMA + pt_schema
+    mentions = pages.select("url", "text").mapInPandas(
+        gen, schema=MENTIONS_SCHEMA
     )
     return mentions.withColumn(
         "mention_id", F.xxhash64("url", "sent_idx", "start", "end")

@@ -739,7 +739,12 @@ def blocking_cascade_report(documents: DataFrame, gold: DataFrame) -> DataFrame:
 
 # ------------------------------------------------ one-to-one assignment
 
-def one_to_one_matches(scored: DataFrame, rounds: int | None = None) -> DataFrame:
+# round cap of the mutual-best matching loop (q_one_to_one's oracle unrolls
+# the same number of rounds)
+_MATCH_ROUNDS = 16
+
+
+def one_to_one_matches(scored: DataFrame) -> DataFrame:
     """One-to-one match assignment over scored candidate pairs — the
     constraint a cross-source linkage needs (each record links to AT
     MOST one partner; transitive closure is wrong there because two
@@ -750,19 +755,15 @@ def one_to_one_matches(scored: DataFrame, rounds: int | None = None) -> DataFram
     accepted iff BOTH endpoints nominated it; matched nodes drop out and
     the next round runs on the residual graph.  With distinct weights this
     reproduces the sequential greedy matching exactly (Preis's
-    locally-dominant edge argument); `rounds` is fixed and small
-    because each round matches every locally-dominant edge in parallel
-    — the classic distributed-matching result is O(log n) expected
-    rounds, and degree-bounded blocked candidates converge in 2-3.
+    locally-dominant edge argument).  Each round matches every
+    locally-dominant edge in parallel — the classic distributed-matching
+    result is O(log n) expected rounds, and degree-bounded blocked
+    candidates converge in a few.
 
-    rounds=None (default) loops until the residual edge set is EMPTY
-    (capped at 16 rounds) — a long score-decreasing chain needs one
-    round per link, so a fixed small round count can silently leave
-    matchable edges unmatched.  Passing an explicit `rounds` keeps the
-    fixed-round semantics (the SQL-replayable mode q_one_to_one's
-    unrolled DuckDB oracle pins), still early-stopping once the residual
-    is empty and WARNING with the residual edge count if the cap
-    truncates an incomplete matching.
+    The loop runs until the residual edge set is EMPTY, capped at
+    _MATCH_ROUNDS rounds.  A long score-monotone chain needs one round
+    per two links, so an edge set still non-empty at the cap raises
+    RuntimeError: a partial matching is a plausible wrong answer.
 
     Scale shape: per round, one endpoint-explode (2|E| rows), one
     row_number window partitioned BY NODE (degree-bounded by the
@@ -773,14 +774,11 @@ def one_to_one_matches(scored: DataFrame, rounds: int | None = None) -> DataFram
 
     Output: (id_a, id_b, p_match, match_round) — accepted matches only.
     """
-    import warnings
-
-    cap = 16 if rounds is None else rounds
     edges = scored.where(F.col("p_match") >= F.lit(0.5)).select(
         "id_a", "id_b", "p_match"
     )
     accepted = None
-    for rnd in range(1, cap + 1):
+    for rnd in range(1, _MATCH_ROUNDS + 1):
         edges = edges.localCheckpoint(eager=True)
         if edges.isEmpty():
             break
@@ -818,10 +816,9 @@ def one_to_one_matches(scored: DataFrame, rounds: int | None = None) -> DataFram
         ).select("id_a", "id_b", "p_match")
     residual = edges.count()
     if residual:
-        warnings.warn(
+        raise RuntimeError(
             f"one_to_one_matches: {residual} residual edges left unmatched "
-            f"after {cap} rounds (incomplete matching — raise rounds)",
-            stacklevel=2,
+            f"after {_MATCH_ROUNDS} rounds (incomplete matching)"
         )
     if accepted is None:  # no candidate edge survived the 0.5 floor
         accepted = edges.select(

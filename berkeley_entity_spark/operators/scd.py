@@ -54,28 +54,13 @@ def scd2_merge(
     key: str,
     tracked: tuple[str, ...],
     ts,
-    deletes: DataFrame | None = None,
 ) -> DataFrame:
     """Apply one batch of `updates(key, *tracked)` effective at `ts` to a
     history table (key, *tracked, valid_from, valid_to).  Returns the new
-    full history.
-
-    `deletes` (optional, one `key` column) hard-closes keys at `ts` — the
-    entity-table case where a key can genuinely die (a cluster absorbed
-    by a merge).  A key present in BOTH updates and deletes is treated as
-    updated (updates win), so callers can pass overlapping sets safely."""
+    full history."""
     eff = _ts_col(ts)
     cur = history.where(F.col("valid_to").isNull())
     past = history.where(F.col("valid_to").isNotNull())
-    if deletes is not None:
-        dk = deletes.select(key).distinct().join(
-            updates.select(key), key, "left_anti"
-        )
-        dead = cur.join(dk, key, "left_semi").select(
-            key, *tracked, "valid_from", eff.alias("valid_to")
-        )
-        past = past.select(key, *tracked, "valid_from", "valid_to").unionByName(dead)
-        cur = cur.join(dk, key, "left_anti")
     u = updates.select(
         F.col(key).alias("_uk"), *[F.col(c).alias(f"_u_{c}") for c in tracked]
     )

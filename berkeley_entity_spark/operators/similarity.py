@@ -10,7 +10,6 @@ operator reads the `vec_id` and `embedding` columns:
     plane matrix (Arrow kernel), candidates from bucket equality, exact
     cosine re-rank inside the bucket.  The 100 TB path: the cross join is
     replaced by an equi-join on the signature.
-  * embedding_near_dup — cosine >= threshold pairs from the LSH candidates.
 """
 
 from __future__ import annotations
@@ -33,9 +32,8 @@ _N_QCHUNKS = 4
 _DIM = 64
 _PLANE_SEED = 7
 _IVF_SEED = 11
-# IVF inverted lists, and the trainer's sample size and k-means iterations
+# IVF inverted lists
 _N_CENTROIDS = 8
-_IVF_SAMPLE_N, _IVF_ITERS = 256, 5
 
 
 def with_unit_norm(embeddings: DataFrame) -> DataFrame:
@@ -148,8 +146,8 @@ def cosine_topk(embeddings: DataFrame, k: int = 5) -> DataFrame:
 
 def cosine_threshold_pairs(embeddings: DataFrame, threshold: float = 0.35) -> DataFrame:
     """(id_a, id_b, cosine) with cosine >= threshold and id_a < id_b — the
-    EXACT embedding near-dup operator (oracle-checkable; the LSH variant
-    `embedding_near_dup` approximates it at scale).  Same distributed blocked
+    EXACT embedding near-dup operator (oracle-checkable; lsh_bucket_topk's
+    candidates approximate it at scale).  Same distributed blocked
     kernel as cosine_topk; each unordered pair lands in exactly one
     (block, qchunk) cell (corpus blocks partition the id space), so no
     distinct() is needed and no driver materialization happens.
@@ -175,36 +173,16 @@ def cosine_threshold_pairs(embeddings: DataFrame, threshold: float = 0.35) -> Da
     return _blocked_cross(embeddings, cell, "id_a bigint, id_b bigint, cosine double")
 
 
-def hyperplane_signatures(
-    embeddings: DataFrame, n_planes: int = 16, seed: int = _PLANE_SEED
-) -> DataFrame:
-    """(vec_id, sig) — sign pattern against a fixed seeded hyperplane
-    matrix; Arrow-batched numpy matmul."""
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((_DIM, n_planes))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            M = np.stack(pdf["embedding"].map(np.asarray).to_list()).astype(np.float64)
-            bits = (M @ planes) > 0
-            weights = 1 << np.arange(n_planes, dtype=np.int64)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "sig": bits @ weights})
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        gen, schema="vec_id bigint, sig bigint"
-    )
-
-
 def hyperplane_signatures_multi(
     embeddings: DataFrame, n_planes: int = 4, n_tables: int = 16
 ) -> DataFrame:
     """(vec_id, bucket) for ALL tables in ONE kernel pass: the per-table
-    plane matrices (seed = 7 + 13*t, identical to calling
-    hyperplane_signatures per table) are concatenated into one
+    seeded plane matrices (seed = 7 + 13*t) are concatenated into one
     (dim, n_tables*n_planes) matrix, so the corpus is scanned once and one
     matmul serves every table — vs n_tables separate mapInPandas scans +
     a union (at 100 TB of embeddings that is n_tables-1 redundant corpus
-    reads).  Bucket = 't#sig' exactly as the per-table path produced."""
+    reads).  Bucket = 't#sig', sig = the table's sign bits as an integer
+    (plane j is bit j)."""
     planes_all = np.concatenate(
         [
             np.random.RandomState(_PLANE_SEED + 13 * t).standard_normal(
@@ -324,20 +302,6 @@ def lsh_bucket_topk(
     )
 
 
-def embedding_near_dup(embeddings: DataFrame) -> DataFrame:
-    """(id_a, id_b, cosine) pairs with cosine >= 0.999 via LSH buckets."""
-    top = lsh_bucket_topk(embeddings, k=20)
-    return (
-        top.where((F.col("cosine") >= 0.999) & (F.col("query_id") < F.col("neighbor_id")))
-        .select(
-            F.col("query_id").alias("id_a"),
-            F.col("neighbor_id").alias("id_b"),
-            "cosine",
-        )
-        .distinct()
-    )
-
-
 # ------------------------------------------------------------------ IVF ANN
 
 
@@ -348,9 +312,7 @@ def ivf_anchor_matrix(n_centroids: int, dim: int, seed: int = _IVF_SEED) -> np.n
     over centroids is what both the kernel and the DuckDB oracle compute
     (per-query scale-invariant, so no normalization is needed), and a
     data-free seeded quantizer lets the oracle embed the exact matrix as
-    double literals — same trick as the LSH plane matrices.  For a trained
-    quantizer use ivf_train_centroids and pass the result to ivf_topk via
-    `centroids=`."""
+    double literals — same trick as the LSH plane matrices."""
     return np.random.RandomState(seed).standard_normal((n_centroids, dim))
 
 
@@ -390,46 +352,7 @@ def ivf_probe_assignments(
     )
 
 
-def ivf_train_centroids(embeddings: DataFrame) -> np.ndarray:
-    """Deterministic driver-side SPHERICAL k-means over a BOUNDED sample —
-    the IVF coarse-quantizer trainer (FAISS-style train-on-sample; the
-    sample cap mirrors the reference's driver-side trainer precedent).
-
-    Spherical, not plain Lloyd: search-time assignment is max inner
-    product (ivf_probe_assignments), and with unequal-norm centroids
-    max-dot and min-L2 disagree — plain Lloyd means shrink toward the
-    origin for diffuse clusters, so large-norm centroids would steal
-    search-time traffic from the lists the training optimized.  Training
-    on unit vectors and re-normalizing centroids each iteration makes
-    max-dot and min-angle identical at train and search time.  Sample =
-    first _IVF_SAMPLE_N rows by id (deterministic under any partitioning);
-    init = seeded permutation of the sample; an emptied cluster keeps its
-    previous centroid.  Returns (_N_CENTROIDS, dim) float64, unit rows."""
-    pdf = (
-        embeddings.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(_IVF_SAMPLE_N)
-        .toPandas()
-    )
-    X = _unit_matrix(pdf, "embedding")
-    rng = np.random.RandomState(_IVF_SEED)
-    C = X[rng.permutation(len(X))[:_N_CENTROIDS]].copy()
-    for _ in range(_IVF_ITERS):
-        a = (X @ C.T).argmax(axis=1)
-        for c in range(_N_CENTROIDS):
-            members = X[a == c]
-            if len(members):
-                m = members.mean(axis=0)
-                C[c] = m / max(np.linalg.norm(m), 1e-30)
-    return C
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    k: int = 3,
-    n_probe: int = 2,
-    centroids: np.ndarray | None = None,
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame, k: int = 3, n_probe: int = 2) -> DataFrame:
     """Approximate top-k via an INVERTED FILE index (IVF): coarse-quantize
     the corpus into _N_CENTROIDS inverted lists (one scan), probe each
     query's n_probe nearest lists, exact cosine re-rank the candidates.
@@ -450,10 +373,8 @@ def ivf_topk(
     (-cosine, neighbor_id) ordering, so the final window provably sees the
     true top-k; query chunking bounds hot-list cell width.  Expected list
     length is n / _N_CENTROIDS: at 10^9 rows raise it to ≈ n / 10^4
-    and n_probe 8-32 for the recall/cost trade.  With a trained quantizer
-    (ivf_train_centroids) lists follow the data distribution and recall
-    rises at the same cost."""
-    C = centroids if centroids is not None else ivf_anchor_matrix(_N_CENTROIDS, _DIM)
+    and n_probe 8-32 for the recall/cost trade."""
+    C = ivf_anchor_matrix(_N_CENTROIDS, _DIM)
     # probes feeds two plan branches (query side + list side); without a
     # materialization point each branch re-runs the matmul+argsort corpus
     # pass (no exchange below it => no ReusedExchange), so "one corpus

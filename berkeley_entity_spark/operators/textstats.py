@@ -3,7 +3,7 @@
 All pure column expressions (whole-stage codegen; zero Python) except the
 winnowing fingerprint, which is an Arrow kernel.
 
-  * token_count / char stats
+  * text_stats          — token, char, stopword and punctuation counts
   * quality_score       — length, punctuation ratio, stopword ratio, mean
     token length (the usual web-corpus quality heuristics)
   * lang_id_en          — n-gram/stopword-ratio heuristic English detector
@@ -30,12 +30,6 @@ EN_STOPWORDS = [
     "not", "are", "but", "from", "or", "have", "an", "they", "which", "one",
     "you", "were", "her", "all", "she", "there", "would", "their", "we",
 ]
-
-
-def token_count(documents: DataFrame) -> DataFrame:
-    return documents.select(
-        "doc_id", F.size(tokens_col()).alias("n_tokens")
-    )
 
 
 def text_stats(documents: DataFrame) -> DataFrame:

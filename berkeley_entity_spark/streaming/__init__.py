@@ -1,5 +1,6 @@
 """Structured Streaming surface.
 
 The reference is batch-only (SURVEY.md §2.10); this module exists because a
-web-scale ingest is naturally incremental: pages land continuously, and the
-extract stage is stateless per page, so it streams as-is."""
+web-scale crawl arrives incrementally: the ER stream dedups each new drop
+against accumulated bucket state and merges its pairs into the running
+cluster assignment without re-clustering the corpus."""

@@ -1,15 +1,11 @@
-"""Streaming extract: incremental mention extraction over arriving pages.
+"""Incremental entity resolution over arriving page drops.
 
-readStream(parquet dir) -> extract_mentions (stateless mapInPandas works
-under Structured Streaming) -> writeStream to the mentions stage table.
-Downstream blocking/scoring/clustering stay batch jobs over the growing
-mentions table (the reference semantics are corpus-level; incremental
-clustering would change results, so the honest incremental unit is extract).
-
-Also provides a watermarked per-window mention-rate aggregation — the
-standard late-data-tolerant monitoring stream, and the incremental
-near-dup / ER / golden-record streams (MinHash-LSH buckets from
-blocking.minhash_band_keys).
+readStream(parquet dir) -> per micro-batch MinHash-LSH dedup against the
+accumulated bucket state (buckets from blocking.minhash_band_keys, the batch
+near-dup operators' kernel) -> connected-components merge into the running
+cluster assignment.  `start_incremental_er_stream` is the one stream
+starter; the batch bodies are module functions so they can be driven (and
+attributed) one batch at a time.
 """
 
 from __future__ import annotations
@@ -19,31 +15,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from berkeley_entity_spark.operators.extract import extract_mentions
 from berkeley_entity_spark.synth import PAGES_SCHEMA
 
-# hot-bucket cap of the streams' bucket state (the ER and golden streams
-# always use it; the dedup stream takes it as its max_bucket default)
+# hot-bucket cap of the stream's bucket state
 _MAX_BUCKET = 200
+# parquet files one micro-batch reads
+_FILES_PER_TRIGGER = 8
 
 
-def read_page_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8
-) -> DataFrame:
-    """File-source stream of webpages parquet drops.  Tests that assert
-    per-batch versioning write ONE file per drop and pass
-    max_files_per_trigger=1 so batch boundaries equal drop boundaries."""
+def read_page_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    """File-source stream of webpages parquet drops, _FILES_PER_TRIGGER
+    files per micro-batch."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
         .parquet(input_dir)
     )
-
-
-def streaming_mentions(pages_stream: DataFrame) -> DataFrame:
-    """Stateless extract over the English pages of the stream (same kernel
-    as batch)."""
-    return extract_mentions(pages_stream.where(F.col("lang") == "en"))
 
 
 def _drain(writer, checkpoint_dir: str) -> StreamingQuery:
@@ -72,68 +59,6 @@ def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
     )
 
 
-def start_extract_stream(
-    spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str
-):
-    """Run the extract stage incrementally, appending mentions to the
-    parquet table at output_dir."""
-    mentions = streaming_mentions(read_page_stream(spark, input_dir))
-    return _drain(
-        mentions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .outputMode("append"),
-        checkpoint_dir,
-    )
-
-
-def start_incremental_dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    max_bucket: int = _MAX_BUCKET,
-):
-    """Incremental near-dup detection over a growing corpus (the Lee et al.
-    2022 growing-corpus dedup shape, VERDICT r3 item 8): each microbatch
-    computes MinHash-LSH band buckets for the NEW pages only, equi-joins
-    them against the ACCUMULATED signature table for cross-batch candidate
-    pairs, self-joins within the batch, then appends its own buckets to the
-    state table.  No full-corpus signature recompute ever happens — per
-    batch the work is O(new docs) signatures + one equi-join against state.
-
-    Every bucket-sharing pair is emitted exactly once per successful batch:
-    (old, new) pairs when the newer doc's batch runs (the older is already
-    in state), within-batch pairs from the batch self-join; a doc enters
-    state only AFTER its batch's joins.  foreachBatch is at-least-once, so
-    BOTH sinks partition by batch_id with dynamic partition overwrite
-    (_write_batch) — a replayed batch overwrites its own partition instead
-    of duplicating rows (the standard idempotent-foreachBatch pattern).
-
-    Buckets come from the batch operators' kernel (blocking.minhash_band_keys
-    over dedup.shingles_col), so stream state holds the same '<band>#<h…>'
-    strings.  Hot buckets are capped like the batch operator: the state
-    table never holds more than max_bucket rows per bucket (first-arrival
-    order — the streaming analog of minhash_lsh_pairs' doc_id-rank cap;
-    identical below the cap, arrival-ordered above it, disclosed), and the
-    within-batch self-join ranks per bucket too, so a templated-
-    boilerplate class costs O(max_bucket) per new doc, never O(|class|).
-    Draining with availableNow yields exactly the batch bucket-join pair
-    set whenever no bucket exceeds the cap (tested).  Output pairs are
-    (id_a, id_b) with id_a < id_b lexically (url ids)."""
-
-    def _process(batch_df, batch_id: int) -> None:
-        _dedup_batch(
-            batch_df, batch_id,
-            state_dir=state_dir, pairs_dir=pairs_dir, max_bucket=max_bucket,
-        )
-
-    return _drain(
-        read_page_stream(spark, input_dir).writeStream.foreachBatch(_process),
-        checkpoint_dir,
-    )
-
-
 def _read_parquet_or_none(sess: SparkSession, path: str) -> DataFrame | None:
     """The parquet table at `path`, or None when it holds no rows yet: a
     MISSING dir (first batch) or an EXISTING dir with no parquet footers
@@ -157,10 +82,23 @@ def _dedup_batch(
     pairs_dir: str,
     max_bucket: int,
 ) -> None:
-    """One microbatch of the incremental MinHash-LSH dedup (the foreachBatch
-    body of start_incremental_dedup_stream, shared with the incremental ER
-    stream): batch buckets -> within-batch + cross-state pairs -> capped
-    state append, both sinks idempotently partitioned by batch_id.  The cap
+    """One microbatch of the incremental MinHash-LSH dedup (the first
+    foreachBatch step of start_incremental_er_stream): band buckets for the
+    NEW pages only -> within-batch + cross-state pairs -> capped state
+    append, both sinks idempotently partitioned by batch_id (_write_batch),
+    so a replayed batch overwrites its own partitions.  No full-corpus
+    signature recompute happens: per batch the work is O(new docs)
+    signatures + one equi-join against the accumulated state.
+
+    Every bucket-sharing pair is emitted once: (old, new) pairs when the
+    newer doc's batch runs, within-batch pairs from the batch self-join; a
+    doc enters state only after its batch's joins.  Buckets come from the
+    batch operators' kernel (blocking.minhash_band_keys over
+    dedup.shingles_col), so over drops whose buckets stay under max_bucket
+    the pair set equals the batch bucket join (tested).  Hot buckets are
+    capped in first-arrival order: state never holds more than max_bucket
+    rows per bucket, and the within-batch self-join ranks per bucket too.
+    Output pairs are (id_a, id_b) with id_a < id_b (url ids).  The cap
     stays inline rather than blocking.capped_key_pairs: the capped batch
     table is also the state append, and the kernel would rank every
     micro-batch a second time on the stream's hot path."""
@@ -210,7 +148,7 @@ def _dedup_batch(
         pairs = pairs.unionByName(cross)
         # state-side cap: only bucket rows that still fit under
         # max_bucket are appended (first-arrival order).  Re-crawled docs
-        # (golden/SCD2 streams re-ingest changed urls) are anti-joined
+        # (a url that arrives again in a later drop) are anti-joined
         # away first: without this a re-ingested doc appends a SECOND
         # (doc_id, bucket) membership row, inflating bucket occupancy
         # toward max_bucket and re-emitting its cross pairs every batch.
@@ -226,14 +164,10 @@ def _dedup_batch(
 
 
 def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
-    """The CC-merge step of the incremental ER stream (shared by
-    start_incremental_er_stream and start_golden_scd2_stream): fold this
-    batch's candidate pairs into the previous assignment snapshot by
-    re-closing AFFECTED clusters only (see start_incremental_er_stream's
-    docstring for the exactness argument), write the new snapshot
-    (_write_batch), and return
-    (merged, touched_docs | None) — touched_docs is None on the first
-    batch (everything is new)."""
+    """The CC-merge step of the incremental ER stream: fold this batch's
+    candidate pairs into the previous assignment snapshot by re-closing
+    AFFECTED clusters only (see start_incremental_er_stream's docstring for
+    the exactness argument) and write the new snapshot (_write_batch)."""
     from berkeley_entity_spark.operators.clustering import (
         connected_components,
     )
@@ -246,8 +180,6 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
             F.xxhash64("id_a").alias("u"), F.xxhash64("id_b").alias("v")
         )
     prev = _latest_snapshot(sess, assign_dir, batch_id)
-    touched = None
-    touched_clusters = None
     if prev is None:
         merged = connected_components(new_pairs).toDF(
             "doc_id", "cluster_id"
@@ -281,16 +213,10 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
         merged = untouched.unionByName(recomputed)
     merged = merged.localCheckpoint(eager=True)
     _write_batch(merged, batch_id, assign_dir)
-    return merged, touched, touched_clusters
 
 
-def _latest_snapshot(
-    sess: SparkSession,
-    assign_dir: str,
-    before_batch: int,
-    cols: tuple[str, ...] = ("doc_id", "cluster_id"),
-):
-    """The newest snapshot (selected to `cols`) with batch_id <
+def _latest_snapshot(sess: SparkSession, assign_dir: str, before_batch: int):
+    """The newest (doc_id, cluster_id) snapshot with batch_id <
     before_batch, or None on the first batch.  Replay-safe: a re-run of
     batch K deterministically re-reads snapshot K-1 even if later
     partitions exist."""
@@ -301,7 +227,7 @@ def _latest_snapshot(
     row = snaps.agg(F.max("batch_id").alias("b")).collect()[0]
     if row["b"] is None:
         return None
-    return snaps.where(F.col("batch_id") == row["b"]).select(*cols)
+    return snaps.where(F.col("batch_id") == row["b"]).select("doc_id", "cluster_id")
 
 
 def start_incremental_er_stream(
@@ -356,153 +282,5 @@ def start_incremental_er_stream(
 
     return _drain(
         read_page_stream(spark, input_dir).writeStream.foreachBatch(_process),
-        checkpoint_dir,
-    )
-
-
-def mention_rate_stream(pages_stream: DataFrame) -> DataFrame:
-    """Watermarked per-minute mention counts — pages later than the 10 s
-    watermark delay are dropped from the aggregation state.
-
-    warc_ts rides through the extraction kernel as a passthrough column (a
-    stream-stream join back to the source would need watermarks + time-range
-    bounds on both sides and a second shuffle; the passthrough costs one
-    column in the Arrow batch)."""
-    m = extract_mentions(pages_stream, passthrough=("warc_ts",))
-    return (
-        m.withWatermark("warc_ts", "10 seconds")
-        .groupBy(F.window("warc_ts", "1 minute"))
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .select("window", "n_mentions")
-    )
-
-
-_GOLDEN_HISTORY_SCHEMA = (
-    "cluster_id long, n_members long, n_langs long, canonical_url string, "
-    "latest_url string, latest_ts timestamp, best_text string, "
-    "lang_majority string, valid_from timestamp, valid_to timestamp"
-)
-_GOLDEN_TRACKED = (
-    "n_members",
-    "n_langs",
-    "canonical_url",
-    "latest_url",
-    "latest_ts",
-    "best_text",
-    "lang_majority",
-)
-_GOLDEN_EPOCH0 = 1704067200  # deterministic batch->ts mapping (t0 + 1d/batch)
-
-
-def start_golden_scd2_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    pairs_dir: str,
-    assign_dir: str,
-    pages_dir: str,
-    golden_dir: str,
-    checkpoint_dir: str,
-):
-    """End-to-end streaming MDM: incremental dedup -> incremental ER merge
-    -> golden-record survivorship -> SCD2 version history, per microbatch.
-
-    This composes the three batch operators into the live pipeline a
-    rolling crawl needs: each batch's pages enter the accumulated page
-    store; the ER merge updates cluster assignments for AFFECTED clusters
-    only (_er_merge_batch); survivorship (operators/survivorship.py)
-    recomputes golden records for exactly the affected clusters — batch
-    docs, pair endpoints, and every member of a cluster any of them
-    touches — and scd2_merge (operators/scd.py) folds them into the
-    running version history: unchanged goldens stay open, changed ones
-    close + reopen at the batch timestamp, clusters ABSORBED by a merge
-    are hard-closed via the deletes path (their id disappears from the
-    assignment).  Per-batch cost is O(batch + affected members); the
-    history never rescans untouched clusters.
-
-    Sinks follow the repo's idempotent pattern (_write_batch's
-    batch_id-partitioned dynamic overwrite; full history snapshot per
-    batch — the parquet stand-in for Iceberg MERGE INTO on the golden
-    table).  Batch
-    timestamps are deterministic (_GOLDEN_EPOCH0 + batch_id days) so
-    replays produce identical histories."""
-
-    def _process(batch_df, batch_id: int) -> None:
-        from berkeley_entity_spark.operators.scd import scd2_merge
-        from berkeley_entity_spark.operators.survivorship import golden_records
-
-        sess = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)
-        _dedup_batch(
-            batch_df, batch_id,
-            state_dir=state_dir, pairs_dir=pairs_dir, max_bucket=_MAX_BUCKET,
-        )
-        merged, touched, prev_touched_clusters = _er_merge_batch(
-            sess, batch_id, pairs_dir, assign_dir
-        )
-        _write_batch(
-            batch_df.select(
-                F.xxhash64("url").alias("doc_id"), "url", "warc_ts", "text", "lang"
-            ),
-            batch_id,
-            pages_dir,
-        )
-        # affected docs: this batch's pages + pair endpoints + every member
-        # of any cluster they belong to under the NEW assignment
-        seed = batch_df.select(F.xxhash64("url").alias("doc_id")).distinct()
-        if touched is not None:
-            seed = seed.unionByName(touched).distinct()
-        aff_clusters = (
-            merged.join(F.broadcast(seed), "doc_id")
-            .select("cluster_id")
-            .distinct()
-        )
-        members = merged.join(
-            F.broadcast(aff_clusters), "cluster_id", "left_semi"
-        )
-        singletons = seed.join(merged, "doc_id", "left_anti").select(
-            "doc_id", F.col("doc_id").alias("cluster_id")
-        )
-        assign_doc = members.unionByName(singletons).localCheckpoint(eager=True)
-        # one record per affected doc: the LATEST crawl of its url wins
-        # (warc_ts desc, batch_id desc) before survivorship sees it
-        pages = (
-            sess.read.parquet(pages_dir)
-            .join(F.broadcast(assign_doc.select("doc_id")), "doc_id")
-            .groupBy("doc_id")
-            .agg(
-                F.max_by(
-                    F.struct("url", "warc_ts", "text", "lang"),
-                    F.struct("warc_ts", "batch_id"),
-                ).alias("r")
-            )
-            .select("doc_id", "r.url", "r.warc_ts", "r.text", "r.lang")
-        )
-        assign_url = assign_doc.join(pages.select("doc_id", "url"), "doc_id").select(
-            "url", "cluster_id"
-        )
-        golden = golden_records(pages.drop("doc_id"), assign_url)
-        prev_hist = _latest_snapshot(
-            sess, golden_dir, batch_id,
-            cols=("cluster_id",) + _GOLDEN_TRACKED + ("valid_from", "valid_to"),
-        )
-        if prev_hist is None:
-            prev_hist = sess.createDataFrame([], _GOLDEN_HISTORY_SCHEMA)
-        deletes = None
-        if prev_touched_clusters is not None:
-            deletes = prev_touched_clusters.toDF("cluster_id").join(
-                aff_clusters, "cluster_id", "left_anti"
-            )
-        eff = F.timestamp_seconds(
-            F.lit(_GOLDEN_EPOCH0 + batch_id * 86400)
-        )
-        hist = scd2_merge(
-            prev_hist, golden, "cluster_id", _GOLDEN_TRACKED, eff, deletes
-        )
-        _write_batch(hist, batch_id, golden_dir)
-
-    return _drain(
-        read_page_stream(spark, input_dir, max_files_per_trigger=1)
-        .writeStream.foreachBatch(_process),
         checkpoint_dir,
     )

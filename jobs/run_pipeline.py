@@ -8,7 +8,9 @@ Cluster:
 Local / synthetic (sandbox):
   python jobs/run_pipeline.py --scale small --checkpoint-dir /tmp/er_ckpt
 
---input accepts either a parquet path (contains '/') or a catalog table name.
+--input accepts either a parquet path (contains '/', read through
+sources.loader.load_webpages, which prunes the html column at the scan) or a
+catalog table name.
 Stage tables land under --checkpoint-dir, a filesystem path (local or a
 mounted object store; a URI such as s3://… is refused, because the resume
 markers are plain files); a rerun with the same dir resumes
@@ -46,6 +48,7 @@ def main() -> None:
     from berkeley_entity_spark.config import PipelineConfig, scale_config
     from berkeley_entity_spark.plans.pipeline import run_pipeline
     from berkeley_entity_spark.session import get_spark
+    from berkeley_entity_spark.sources.loader import load_webpages
     from berkeley_entity_spark.synth import generate_webpages
 
     spark = get_spark(
@@ -56,7 +59,7 @@ def main() -> None:
     if args.scale:
         pages, _ = generate_webpages(spark, scale_config(args.scale))
     elif "/" in args.input:
-        pages = spark.read.parquet(args.input)
+        pages = load_webpages(spark, args.input)
     else:
         pages = spark.read.table(args.input)
 

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from berkeley_entity_spark.operators.dedup import (
     contaminated_docs,
-    exact_dedup,
     minhash_lsh_pairs,
     near_dup_keep_one,
     ngram_jaccard_pairs,
@@ -22,13 +21,6 @@ def docs_dup(spark):
     return d.unionByName(
         d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
     ).cache()
-
-
-def test_exact_dedup(docs_dup):
-    out = exact_dedup(docs_dup)
-    assert out.count() == 500  # every text appears exactly twice
-    assert out.where("dup_cnt <> 2").count() == 0
-    assert out.where("keep_id >= 100000").count() == 0  # survivor = min id
 
 
 def test_minhash_finds_exact_dups(docs_dup):

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from berkeley_entity_spark.operators.linkage import (
     _round12,
     fs_comparison_vectors,
@@ -397,6 +399,18 @@ def test_one_to_one_greedy_matching_semantics(spark):
     # min_score filter drops sub-threshold edges entirely
     rows = [(1, 2, 0, 0, 0.4, False)]
     assert one_to_one_matches(_scored(spark, rows)).count() == 0
+
+
+def test_one_to_one_raises_on_a_partial_matching(spark):
+    """A strictly increasing 40-edge chain matches one edge per round from
+    its heavy end (the matched pair removes its neighbour edge too), so it
+    needs 20 rounds: past the 16-round cap the partial matching raises
+    instead of being returned."""
+    from berkeley_entity_spark.operators.linkage import one_to_one_matches
+
+    rows = [(k, k + 1, 0, 0, 0.5 + k / 100, True) for k in range(1, 41)]
+    with pytest.raises(RuntimeError, match="residual edges"):
+        one_to_one_matches(_scored(spark, rows))
 
 
 def test_one_to_one_each_node_at_most_once(spark):

@@ -60,10 +60,9 @@ def test_lsh_topk_recall(emb, numpy_topk):
 
 def test_multi_table_signatures_match_per_table(emb):
     """The single-pass multi-table kernel must emit exactly the bucket set
-    the 16 separate per-table kernels produced (same seeds, same packing) —
-    it is a scan-count optimization, not a semantic change."""
+    16 separate per-table signatures give (table t: seed 7 + 13t, plane j
+    is bit j) — it is a scan-count optimization, not a semantic change."""
     from berkeley_entity_spark.operators.similarity import (
-        hyperplane_signatures,
         hyperplane_signatures_multi,
     )
 
@@ -74,10 +73,14 @@ def test_multi_table_signatures_match_per_table(emb):
             emb, n_planes=n_planes, n_tables=n_tables
         ).collect()
     }
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    M = np.stack(pdf["embedding"].map(np.asarray).to_list()).astype(np.float64)
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
     single = set()
     for t in range(n_tables):
-        for r in hyperplane_signatures(emb, n_planes=n_planes, seed=7 + 13 * t).collect():
-            single.add((r["vec_id"], f"{t}#{r['sig']}"))
+        planes = np.random.RandomState(7 + 13 * t).standard_normal((64, n_planes))
+        sigs = ((M @ planes) > 0) @ weights
+        single |= {(int(v), f"{t}#{s}") for v, s in zip(pdf["vec_id"], sigs)}
     assert multi == single
 
 
@@ -111,16 +114,16 @@ def test_cosine_threshold_pairs_matches_numpy(emb):
 
 
 def test_embedding_near_dup_finds_exact_duplicates(spark, emb):
-    """Inject exact duplicate vectors (cosine=1): the LSH near-dup operator
-    must recover every injected duplicate pair (same vector -> same bucket in
-    every table, so recall on exact dups is structural, not probabilistic)."""
-    from berkeley_entity_spark.operators.similarity import embedding_near_dup
-
+    """Inject exact duplicate vectors (cosine=1): LSH top-k must recover
+    every injected duplicate pair (same vector -> same bucket in every
+    table, so recall on exact dups is structural, not probabilistic)."""
     dup = emb.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding", "label")
     both = emb.unionByName(dup)
     pairs = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup(both).collect()
+        (r["query_id"], r["neighbor_id"])
+        for r in lsh_bucket_topk(both, k=20)
+        .where(F.col("cosine") >= 0.999)
+        .collect()
     }
     ids = [r["vec_id"] for r in emb.select("vec_id").collect()]
     missing = [(i, i + 100000) for i in ids if (i, i + 100000) not in pairs]
@@ -166,28 +169,6 @@ def test_ivf_assignment_matches_numpy_argmax(emb):
     want = (M @ C.T).argmax(axis=1)
     for vid, w in zip(pdf["vec_id"], want):
         assert got[int(vid)] == int(w)
-
-
-def test_ivf_trained_centroids_deterministic_and_usable(emb, numpy_topk):
-    """The driver-side Lloyd trainer is deterministic (same sample, same
-    seed -> identical matrix) and its centroids plug into ivf_topk."""
-    from berkeley_entity_spark.operators.similarity import (
-        ivf_topk,
-        ivf_train_centroids,
-    )
-
-    C1 = ivf_train_centroids(emb)
-    C2 = ivf_train_centroids(emb)
-    assert np.array_equal(C1, C2)
-    rows = ivf_topk(emb, k=K, n_probe=3, centroids=C1).collect()
-    assert len(rows) > 0
-    got = {}
-    for r in rows:
-        got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    hits = sum(
-        1 for q, neigh in numpy_topk.items() if q in got and neigh[0] in got[q]
-    )
-    assert hits / len(numpy_topk) >= 0.5, hits / len(numpy_topk)
 
 
 def test_auto_n_planes_sizing():

@@ -1,8 +1,9 @@
-"""Structured Streaming extract: incremental == batch, watermarked windows.
+"""Incremental ER stream: each batch body equals its batch counterpart.
 
 The reference is batch-only (SURVEY.md §2.10); the streaming analog must be
-*semantics-preserving*: draining the page stream through the incremental
-extract yields exactly the batch extraction of the same corpus.
+*semantics-preserving*: the incremental dedup over page drops yields the
+batch band-bucket join, and draining the ER stream yields the batch
+pipeline's connected components.
 """
 
 import pytest
@@ -11,12 +12,7 @@ from pyspark.sql import functions as F
 from berkeley_entity_spark.config import SynthConfig
 from berkeley_entity_spark.operators.blocking import minhash_band_keys
 from berkeley_entity_spark.operators.dedup import shingles_col
-from berkeley_entity_spark.operators.extract import extract_mentions
-from berkeley_entity_spark.streaming.ingest import (
-    mention_rate_stream,
-    read_page_stream,
-    start_extract_stream,
-)
+from berkeley_entity_spark.streaming.ingest import _dedup_batch
 from berkeley_entity_spark.synth import generate_webpages
 
 
@@ -25,129 +21,48 @@ def _batch_buckets(docs):
     return minhash_band_keys(docs, ["doc_id"], shingles_col(3), 4, 2)
 
 
-@pytest.fixture(scope="module")
-def pages_dir(spark, tmp_path_factory):
-    """Two parquet 'drops' into one stream source dir (arrival batches)."""
-    root = str(tmp_path_factory.mktemp("stream_pages"))
-    pages, _ = generate_webpages(spark, SynthConfig(n_pages=120, n_entities=20))
-    pages = pages.cache()
-    pages.where("pmod(xxhash64(url), 2) = 0").write.mode("append").parquet(root)
-    pages.where("pmod(xxhash64(url), 2) = 1").write.mode("append").parquet(root)
-    return root, pages
-
-
-def test_streaming_extract_equals_batch(spark, pages_dir, tmp_path):
-    root, pages = pages_dir
-    out = str(tmp_path / "mentions")
-    ckpt = str(tmp_path / "ckpt")
-    q = start_extract_stream(spark, root, out, ckpt)
-    q.awaitTermination(300)
-    got = spark.read.parquet(out)
-    want = extract_mentions(pages.where("lang = 'en'"))
-    got_ids = {r["mention_id"] for r in got.select("mention_id").collect()}
-    want_ids = {r["mention_id"] for r in want.select("mention_id").collect()}
-    assert got_ids == want_ids and len(got_ids) > 0
-
-
-def test_streaming_extract_resume_is_incremental(spark, pages_dir, tmp_path):
-    """A third drop after a completed availableNow run: only the new files
-    are processed on restart (checkpoint offsets) and the union matches the
-    full batch result — the stage-boundary resume contract, streaming form."""
-    root, pages = pages_dir
-    out = str(tmp_path / "mentions")
-    ckpt = str(tmp_path / "ckpt")
-    q = start_extract_stream(spark, root, out, ckpt)
-    q.awaitTermination(300)
-    n_first = spark.read.parquet(out).count()
-
-    more, _ = generate_webpages(
-        spark, SynthConfig(n_pages=40, n_entities=20, seed=77)
-    )
-    more = more.withColumn("url", F.concat(F.lit("drop3-"), "url")).cache()
-    more.write.mode("append").parquet(root)
-    q2 = start_extract_stream(spark, root, out, ckpt)
-    q2.awaitTermination(300)
-    got = spark.read.parquet(out)
-    want_more = extract_mentions(more.where("lang = 'en'"))
-    assert got.count() == n_first + want_more.count()
-
-
-def test_mention_rate_stream_windows(spark, pages_dir, tmp_path):
-    root, pages = pages_dir
-    ckpt = str(tmp_path / "ckpt_rate")
-    # synth timestamps advance 1s/page (120 pages = 2 min span): a 10s
-    # watermark lets the early windows finalize inside the drain
-    stream = mention_rate_stream(
-        read_page_stream(spark, root).where("lang = 'en'")
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("rate_sink")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r["window"]["start"]: r["n_mentions"]
-        for r in spark.sql("SELECT * FROM rate_sink").collect()
-    }
-    want = {
-        r["window"]["start"]: r["n_mentions"]
-        for r in (
-            extract_mentions(pages.where("lang = 'en'"), passthrough=("warc_ts",))
-            .groupBy(F.window("warc_ts", "1 minute"))
-            .agg(F.count(F.lit(1)).alias("n_mentions"))
-            .collect()
+def _drain_dedup(drops, state, pairs, max_bucket=200):
+    """Run the stream's dedup batch body over each drop in order, with the
+    drop's index as its batch id."""
+    for batch_id, drop in enumerate(drops):
+        _dedup_batch(
+            drop, batch_id, state_dir=state, pairs_dir=pairs, max_bucket=max_bucket
         )
-    }
-    # append mode emits a window only once its watermark passes, and rows
-    # arriving in a later micro-batch with timestamps behind the watermark
-    # are dropped (file drops are not time-ordered) — so every emitted
-    # window exists in the batch result with count <= the batch count.
-    # That under-count IS the documented late-data semantics, not a bug.
-    assert got, "no windows were finalized by the watermark"
-    for start, n in got.items():
-        assert start in want and n <= want[start], (start, n, want.get(start))
 
 
-def test_incremental_dedup_equals_batch_bucket_join(spark, pages_dir, tmp_path):
-    """VERDICT r3 item 8: draining the incremental MinHash-LSH dedup over
-    the page drops yields EXACTLY the batch band-bucket join pair set on
-    the same corpus — with no full-corpus signature recompute (per batch:
-    new-doc signatures + one equi-join against the accumulated state)."""
-    from berkeley_entity_spark.streaming.ingest import (
-        start_incremental_dedup_stream,
-    )
+@pytest.fixture(scope="module")
+def pages(spark):
+    pages, _ = generate_webpages(spark, SynthConfig(n_pages=120, n_entities=20))
+    return pages.cache()
 
-    _, base = pages_dir
-    root = str(tmp_path / "dedup_pages")
+
+def test_incremental_dedup_equals_batch_bucket_join(spark, pages, tmp_path):
+    """VERDICT r3 item 8: the incremental MinHash-LSH dedup over two page
+    drops yields EXACTLY the batch band-bucket join pair set on the same
+    corpus — with no full-corpus signature recompute (per batch: new-doc
+    signatures + one equi-join against the accumulated state)."""
     # drop 1: half the corpus.  drop 2: the other half PLUS exact copies of
-    # 20 drop-1 pages under new urls — cross-batch pairs — and a second
-    # copy of 5 of them — within-batch pairs.
-    d1 = base.where("pmod(xxhash64(url), 2) = 0")
-    d2 = base.where("pmod(xxhash64(url), 2) = 1")
+    # drop-1 pages under new urls — cross-batch pairs — and a second copy
+    # of some of them — within-batch pairs.
+    d1 = pages.where("pmod(xxhash64(url), 2) = 0")
+    d2 = pages.where("pmod(xxhash64(url), 2) = 1")
     dup1 = d1.where("pmod(xxhash64(url), 3) = 0").withColumn(
         "url", F.concat(F.col("url"), F.lit("#dup"))
     )
     dup2 = d1.where("pmod(xxhash64(url), 7) = 0").withColumn(
         "url", F.concat(F.col("url"), F.lit("#dup2"))
     )
-    d1.write.mode("append").parquet(root)
-    d2.unionByName(dup1).unionByName(dup2).write.mode("append").parquet(root)
-    pages = d1.unionByName(d2).unionByName(dup1).unionByName(dup2)
+    drops = [d1, d2.unionByName(dup1).unionByName(dup2)]
     state = str(tmp_path / "state")
     pairs = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    q = start_incremental_dedup_stream(spark, root, state, pairs, ckpt)
-    q.awaitTermination(300)
+    _drain_dedup(drops, state, pairs)
 
     got = {
         (r["id_a"], r["id_b"])
         for r in spark.read.parquet(pairs).distinct().collect()
     }
-    b = _batch_buckets(pages.select(F.col("url").alias("doc_id"), "text"))
+    all_pages = drops[0].unionByName(drops[1])
+    b = _batch_buckets(all_pages.select(F.col("url").alias("doc_id"), "text"))
     a = b.toDF("id_a", "bucket")
     want = {
         (r["id_a"], r["id_b"])
@@ -161,10 +76,9 @@ def test_incremental_dedup_equals_batch_bucket_join(spark, pages_dir, tmp_path):
     # state accumulated incrementally: exactly one bucket row per (doc, band)
     st = spark.read.parquet(state)
     assert st.count() == b.count()
-    # a second availableNow run over the same source is a no-op (offsets
-    # checkpointed): no new pairs, no state growth
-    q2 = start_incremental_dedup_stream(spark, root, state, pairs, ckpt)
-    q2.awaitTermination(300)
+    # replaying the last batch (at-least-once foreachBatch) overwrites its
+    # own partitions: no duplicate pairs, no state growth
+    _dedup_batch(drops[1], 1, state_dir=state, pairs_dir=pairs, max_bucket=200)
     assert spark.read.parquet(pairs).count() == len(
         spark.read.parquet(pairs).distinct().collect()
     )
@@ -176,34 +90,17 @@ def test_incremental_dedup_hot_bucket_cap_and_idempotent_sink(spark, tmp_path):
     (VERDICT r3 item 2's sibling): a 300-doc identical-text class arriving
     in two drops leaves <= max_bucket state rows per bucket and pair
     volume O(max_bucket * class), not O(class^2); and the batch_id-
-    partitioned dynamic-overwrite sink means re-draining after a deleted
-    checkpoint (a forced full replay) leaves pair/state contents
-    IDENTICAL, not duplicated."""
-    import shutil
-
-    from berkeley_entity_spark.streaming.ingest import (
-        start_incremental_dedup_stream,
-    )
-
-    root = str(tmp_path / "hot_pages")
+    partitioned dynamic-overwrite sink means replaying both batch ids
+    leaves pair/state contents IDENTICAL, not duplicated."""
     base = "terms of service boilerplate applies to every page here"
-    rows1 = [(f"u{i:04d}", base) for i in range(150)]
-    rows2 = [(f"v{i:04d}", base) for i in range(150)]
-    schema = "url string, text string"
-    full = "url string, warc_ts timestamp, html binary, text string, lang string"
-    for i, rows in enumerate((rows1, rows2)):
-        spark.createDataFrame(rows, schema).selectExpr(
-            "url", "CAST(NULL AS timestamp) AS warc_ts",
-            "CAST(NULL AS binary) AS html", "text", "'en' AS lang",
-        ).write.mode("append").parquet(root)
+    drops = [
+        _as_pages(spark, [(f"{p}{i:04d}", base) for i in range(150)])
+        for p in ("u", "v")
+    ]
     state = str(tmp_path / "hs")
     pairs = str(tmp_path / "hp")
-    ckpt = str(tmp_path / "hc")
     cap = 20
-    q = start_incremental_dedup_stream(
-        spark, root, state, pairs, ckpt, max_bucket=cap
-    )
-    q.awaitTermination(300)
+    _drain_dedup(drops, state, pairs, max_bucket=cap)
     st = spark.read.parquet(state)
     per_bucket = st.groupBy("bucket").count().agg(F.max("count")).collect()[0][0]
     assert per_bucket <= cap
@@ -216,13 +113,9 @@ def test_incremental_dedup_hot_bucket_cap_and_idempotent_sink(spark, tmp_path):
     state_set = {
         (r["doc_id"], r["bucket"]) for r in spark.read.parquet(state).collect()
     }
-    # forced full replay: wipe ONLY the checkpoint; batch ids restart at 0
-    # and the dynamic partition overwrite must reproduce identical contents
-    shutil.rmtree(ckpt)
-    q2 = start_incremental_dedup_stream(
-        spark, root, state, pairs, ckpt, max_bucket=cap
-    )
-    q2.awaitTermination(300)
+    # forced full replay: batch ids restart at 0 and the dynamic partition
+    # overwrite must reproduce identical contents
+    _drain_dedup(drops, state, pairs, max_bucket=cap)
     assert {
         (r["id_a"], r["id_b"]) for r in spark.read.parquet(pairs).collect()
     } == pair_set
@@ -235,10 +128,7 @@ def test_unreadable_state_dir_raises(spark, tmp_path):
     """Only a missing or footer-less parquet dir reads as "no state yet";
     any other read failure (here: a state dir holding a non-parquet file)
     must fail the batch, not silently drop its cross-state pairs."""
-    from berkeley_entity_spark.streaming.ingest import (
-        _dedup_batch,
-        _read_parquet_or_none,
-    )
+    from berkeley_entity_spark.streaming.ingest import _read_parquet_or_none
 
     assert _read_parquet_or_none(spark, str(tmp_path / "missing")) is None
     (tmp_path / "empty").mkdir()
@@ -376,233 +266,3 @@ def test_incremental_er_stream_leaves_session_conf(spark, tmp_path):
     for d in (state, pairs, assign):
         batches = spark.read.parquet(d).select("batch_id").distinct().collect()
         assert sorted(r[0] for r in batches) == [0, 1, 2], d
-
-
-def _ts_pages(spark, rows):
-    """rows = (url, text, epoch_s) -> pages with real warc_ts."""
-    return spark.createDataFrame(
-        rows, "url string, text string, ts long"
-    ).selectExpr(
-        "url", "timestamp_seconds(ts) AS warc_ts",
-        "CAST(NULL AS binary) AS html", "text", "'en' AS lang",
-    )
-
-
-def test_golden_scd2_stream(spark, tmp_path):
-    """Streaming MDM end-to-end: incremental dedup -> affected-cluster ER
-    merge -> survivorship -> SCD2 history.  Asserts (a) the final OPEN
-    golden rows equal the batch pipeline's golden records over the full
-    corpus (pairs -> CC -> survivorship on latest-crawl records), (b) a
-    cluster that grew across batches carries a CLOSED earlier version,
-    (c) a cluster id absorbed by a cross-batch merge (or superseded by a
-    smaller-hash member) is closed, never left dangling open, and (d) a
-    re-crawl with no new pairs still versions its cluster's golden
-    record."""
-    from berkeley_entity_spark.operators.clustering import connected_components
-    from berkeley_entity_spark.operators.survivorship import golden_records
-    from berkeley_entity_spark.streaming.ingest import (
-        start_golden_scd2_stream,
-    )
-
-    t1 = "quantum harbor lighthouse meridian obelisk paradox quarry riverbed sandstone timber"
-    t2 = "quantum harbor lighthouse meridian obelisk paradox quarry riverbed sandstone granite"
-    t3 = "completely different words entirely unrelated content spanning another topic altogether"
-    drops = [
-        [("a1", t1, 100), ("a2", t1, 101), ("c1", t3, 102)],
-        [("b1", t2, 200), ("b2", t2, 201), ("c2", t3, 202)],
-        # re-crawl of c1: longer text + newer ts, same near-dup cluster
-        [("c1", t3 + " refreshed crawl body", 300), ("d1", "lone unpaired page with unique text", 301)],
-    ]
-    root = str(tmp_path / "g_pages")
-    # ONE file per drop + maxFilesPerTrigger=1 makes microbatch boundaries
-    # equal drop boundaries, so the version assertions below are exact
-    for rows in drops:
-        _ts_pages(spark, rows).coalesce(1).write.mode("append").parquet(root)
-
-    dirs = {k: str(tmp_path / k) for k in
-            ("state", "pairs", "assign", "pstore", "golden", "ckpt")}
-    q = start_golden_scd2_stream(
-        spark, root, dirs["state"], dirs["pairs"], dirs["assign"],
-        dirs["pstore"], dirs["golden"], dirs["ckpt"],
-    )
-    q.awaitTermination(300)
-
-    hist = spark.read.parquet(dirs["golden"])
-    last = hist.agg(F.max("batch_id")).collect()[0][0]
-    hist = hist.where(F.col("batch_id") == last).drop("batch_id")
-    open_rows = hist.where(F.col("valid_to").isNull())
-    closed_rows = hist.where(F.col("valid_to").isNotNull()).collect()
-
-    # (a) open rows == batch golden records over the full final corpus
-    latest = (
-        spark.read.parquet(root)
-        .groupBy("url")
-        .agg(F.max_by(F.struct("warc_ts", "text", "lang"), "warc_ts").alias("r"))
-        .select("url", "r.warc_ts", "r.text", "r.lang")
-        .localCheckpoint(eager=True)
-    )
-    docs = latest.select(F.col("url").alias("doc_id"), "text")
-    b = _batch_buckets(docs)
-    pairs = (
-        b.toDF("id_a", "bucket")
-        .join(b.toDF("id_b", "bucket"), "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(F.xxhash64("id_a").alias("u"), F.xxhash64("id_b").alias("v"))
-        .distinct()
-    )
-    comp = connected_components(pairs).toDF("h", "cluster_id")
-    assign = (
-        latest.select("url", F.xxhash64("url").alias("h"))
-        .join(comp, "h", "left")
-        .select("url", F.coalesce("cluster_id", "h").alias("cluster_id"))
-    )
-    want = {
-        tuple(r) for r in golden_records(latest, assign).collect()
-    }
-    got = {
-        tuple(r)
-        for r in open_rows.select(
-            "cluster_id", "n_members", "n_langs", "canonical_url",
-            "latest_url", "latest_ts", "best_text", "lang_majority",
-        ).collect()
-    }
-    assert got == want and len(got) == 3  # abt-cluster, c-cluster, d1
-
-    # (b)+(d): the c cluster has >= 2 closed versions (batch-2 growth,
-    # batch-3 re-crawl which added no new cluster member)
-    c_cluster = [
-        r for r in closed_rows if r["canonical_url"] in ("c1", "c2")
-    ]
-    assert len(c_cluster) >= 2
-    ns = sorted(r["n_members"] for r in c_cluster)
-    assert ns[0] == 1 and ns[-1] == 2  # singleton version then pair version
-    # the re-crawl version bump: two closed rows with n_members == 2 or the
-    # open row's best_text reflects the refreshed crawl
-    open_c = [r for r in open_rows.collect() if r["canonical_url"] in ("c1", "c2")]
-    assert open_c[0]["best_text"].endswith("refreshed crawl body")
-
-    # (c) no dangling open version of the pre-merge a-cluster: among open
-    # rows exactly one covers {a1,a2,b1,b2} (n_members 4) and none of the
-    # closed a-versions (n_members 2) are still open
-    ab_open = [r for r in open_rows.collect() if r["n_members"] == 4]
-    assert len(ab_open) == 1
-    ab_closed = [
-        r for r in closed_rows
-        if r["canonical_url"] in ("a1", "a2") and r["n_members"] == 2
-    ]
-    assert ab_closed, "batch-1 a-cluster version must be closed"
-    open_ids = {r["cluster_id"] for r in open_rows.collect()}
-    for r in ab_closed:
-        assert (
-            r["cluster_id"] not in open_ids
-            or r["cluster_id"] == ab_open[0]["cluster_id"]
-        )
-
-
-def test_golden_scd2_stream_out_of_order_batches(spark, tmp_path):
-    """VERDICT r4 item 8: drops arriving OUT of timestamp order.  A rolling
-    crawl has no ordering guarantee — a mirror can deliver a STALE
-    re-crawl (older warc_ts than the version already ingested) and a
-    backfill can deliver a very old page that merges into a cluster formed
-    from newer data.  The SCD2 history must converge to the batch result
-    over latest-per-url records regardless of arrival order:
-
-      (a) final OPEN golden rows == batch pipeline golden records,
-      (b) a stale re-crawl (batch 1's c1@ts102 after batch 0's c1@ts300)
-          is survivorship-invisible — the c cluster's golden record never
-          changes, so scd2_merge must leave its ONE open version untouched
-          (no close/reopen churn from late no-op data),
-      (c) a late OLDEST-ts page (b1@ts50, batch 2) still merges into the
-          a-cluster and bumps its version — membership convergence does
-          not depend on timestamp monotonicity."""
-    from berkeley_entity_spark.operators.clustering import connected_components
-    from berkeley_entity_spark.operators.survivorship import golden_records
-    from berkeley_entity_spark.streaming.ingest import (
-        start_golden_scd2_stream,
-    )
-
-    t1 = "quantum harbor lighthouse meridian obelisk paradox quarry riverbed sandstone timber"
-    t2 = "quantum harbor lighthouse meridian obelisk paradox quarry riverbed sandstone granite"
-    t3 = "completely different words entirely unrelated content spanning another topic altogether"
-    drops = [
-        # newest crawl of c1 arrives FIRST
-        [("a1", t1, 100), ("c1", t3 + " refreshed crawl body", 300)],
-        # stale re-crawl of c1 (older ts) arrives late + a2 joins a-cluster
-        [("a2", t1, 101), ("c1", t3, 102)],
-        # backfill: oldest-ts page, near-dup of t1, arrives last
-        [("b1", t2, 50)],
-    ]
-    root = str(tmp_path / "o_pages")
-    for rows in drops:
-        _ts_pages(spark, rows).coalesce(1).write.mode("append").parquet(root)
-
-    dirs = {k: str(tmp_path / ("o_" + k)) for k in
-            ("state", "pairs", "assign", "pstore", "golden", "ckpt")}
-    q = start_golden_scd2_stream(
-        spark, root, dirs["state"], dirs["pairs"], dirs["assign"],
-        dirs["pstore"], dirs["golden"], dirs["ckpt"],
-    )
-    q.awaitTermination(300)
-
-    hist = spark.read.parquet(dirs["golden"])
-    last = hist.agg(F.max("batch_id")).collect()[0][0]
-    assert last == 2  # one microbatch per drop
-    hist = hist.where(F.col("batch_id") == last).drop("batch_id")
-    open_rows = hist.where(F.col("valid_to").isNull()).collect()
-    closed_rows = hist.where(F.col("valid_to").isNotNull()).collect()
-
-    # (a) convergence: open rows == batch golden over latest-per-url
-    latest = (
-        spark.read.parquet(root)
-        .groupBy("url")
-        .agg(F.max_by(F.struct("warc_ts", "text", "lang"), "warc_ts").alias("r"))
-        .select("url", "r.warc_ts", "r.text", "r.lang")
-        .localCheckpoint(eager=True)
-    )
-    docs = latest.select(F.col("url").alias("doc_id"), "text")
-    b = _batch_buckets(docs)
-    pairs = (
-        b.toDF("id_a", "bucket")
-        .join(b.toDF("id_b", "bucket"), "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(F.xxhash64("id_a").alias("u"), F.xxhash64("id_b").alias("v"))
-        .distinct()
-    )
-    comp = connected_components(pairs).toDF("h", "cluster_id")
-    assign = (
-        latest.select("url", F.xxhash64("url").alias("h"))
-        .join(comp, "h", "left")
-        .select("url", F.coalesce("cluster_id", "h").alias("cluster_id"))
-    )
-    want = {tuple(r) for r in golden_records(latest, assign).collect()}
-    got = {
-        tuple(
-            (r[c] for c in (
-                "cluster_id", "n_members", "n_langs", "canonical_url",
-                "latest_url", "latest_ts", "best_text", "lang_majority",
-            ))
-        )
-        for r in open_rows
-    }
-    assert got == want and len(got) == 2  # {a1,a2,b1} cluster + c1 singleton
-
-    # (b) the stale re-crawl never perturbed the c cluster's history:
-    # one open version keeping the NEWER (first-arrived) crawl, zero
-    # closed versions — no close/reopen churn from a no-op late batch
-    c_open = [r for r in open_rows if r["canonical_url"] == "c1"]
-    assert len(c_open) == 1
-    assert c_open[0]["best_text"].endswith("refreshed crawl body")
-    assert c_open[0]["latest_ts"].timestamp() == 300
-    assert not [r for r in closed_rows if r["canonical_url"] == "c1"]
-
-    # (c) the ts-50 backfill merged: a-cluster versions 1 -> 2 -> 3
-    # members across the three batches, open version carrying all three
-    # with latest_ts still a2's 101 (b1's old ts never wins survivorship)
-    a_open = [r for r in open_rows if r["canonical_url"] == "a1"]
-    assert len(a_open) == 1 and a_open[0]["n_members"] == 3
-    assert a_open[0]["latest_url"] == "a2"
-    assert a_open[0]["latest_ts"].timestamp() == 101
-    a_closed = sorted(
-        r["n_members"] for r in closed_rows if r["canonical_url"] == "a1"
-    )
-    assert a_closed == [1, 2]

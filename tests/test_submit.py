@@ -12,6 +12,7 @@ import json
 import os
 import shutil
 import subprocess
+import sys
 import zipfile
 
 import pytest
@@ -69,3 +70,56 @@ def test_spark_submit_pyfiles_runs_pipeline(tmp_path):
     assert stats["mentions"] > 0
     assert stats["clusters"] > 0
     assert stats["cluster_assignments"] >= stats["clusters"]
+
+
+@pytest.mark.slow
+def test_job_input_path_matches_run_pipeline(spark, tmp_path):
+    """The job's --input branch (a parquet path, read through
+    sources.loader.load_webpages) prints the same counts as run_pipeline
+    over the same file in-process.  The 300-page fixture holds only url and
+    text (already English), so both read a copy tagged lang = 'en' for the
+    job's default --lang filter."""
+    from pyspark.sql import functions as F
+
+    from berkeley_entity_spark.config import PipelineConfig
+    from berkeley_entity_spark.plans.pipeline import run_pipeline
+
+    fixture = str(tmp_path / "pages")
+    spark.read.parquet(
+        os.path.join(REPO, "fixtures", "synth_pages_300_40_en.parquet")
+    ).withColumn("lang", F.lit("en")).write.parquet(fixture)
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "jobs", "run_pipeline.py"),
+            "--input",
+            fixture,
+            "--checkpoint-dir",
+            str(tmp_path / "job_ckpt"),
+            "--no-resume",
+        ],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, (proc.stdout[-2000:], proc.stderr[-4000:])
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    assert lines, proc.stdout[-2000:]
+    got = json.loads(lines[-1])
+
+    res = run_pipeline(
+        spark,
+        spark.read.parquet(fixture),
+        PipelineConfig(checkpoint_dir=str(tmp_path / "ckpt")),
+        resume=False,
+    )
+    want = {
+        "mentions": res.mentions.count(),
+        "candidate_pairs": res.pairs.count(),
+        "scored_pairs": res.scored.count(),
+        "cluster_assignments": res.clusters.count(),
+        "clusters": res.clusters.select("cluster_id").distinct().count(),
+    }
+    assert want["clusters"] > 0
+    assert {k: got[k] for k in want} == want

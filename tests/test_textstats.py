@@ -8,7 +8,6 @@ from berkeley_entity_spark.operators.textstats import (
     lang_id_en,
     quality_score,
     text_stats,
-    token_count,
     winnowing_fingerprints,
 )
 
@@ -25,7 +24,7 @@ def small_docs(spark):
 
 
 def test_token_count(small_docs):
-    got = {r["doc_id"]: r["n_tokens"] for r in token_count(small_docs).collect()}
+    got = {r["doc_id"]: r["n_tokens"] for r in text_stats(small_docs).collect()}
     assert got == {1: 13, 2: 5, 3: 13, 4: 0}
 
 
