@@ -32,6 +32,55 @@ def _gradient_img():
     ).astype(np.uint8)
 
 
+def test_media_schema(spark):
+    """The media-table contract of decode_media: it reads media_id, kind and
+    a binary payload (meta is optional, as q_media_features passes none)
+    and emits the narrow FEATURES_SCHEMA table."""
+    from berkeley_entity_spark.operators.multimodal import encode_png
+
+    media = spark.createDataFrame(
+        [(1, "image", bytearray(encode_png(_gradient_img())), (16, 12, 0, 0))],
+        MEDIA_SCHEMA,
+    )
+    assert dict(media.dtypes)["payload"] == "binary"
+    assert media.schema["meta"].dataType.fieldNames() == [
+        "width", "height", "sample_rate", "duration_ms",
+    ]
+    out = decode_media(media, dim=16)
+    assert out.dtypes == [
+        ("media_id", "bigint"), ("kind", "string"), ("dim", "int"),
+        ("features", "array<float>"),
+    ]
+    assert decode_media(media.drop("meta"), dim=16).collect() == out.collect()
+
+
+def test_decode_fake_deterministic(spark):
+    """decode_media is deterministic: the same PNG payloads decode to
+    identical features of length dim on a re-run and under another
+    partitioning.  The name is kept from the removed fake= mode, whose
+    determinism contract the PNG path keeps."""
+    import numpy as np
+
+    from berkeley_entity_spark.operators.multimodal import encode_png
+
+    img = _gradient_img()
+    media = spark.createDataFrame(
+        [
+            (i, "image", bytearray(encode_png(np.roll(img, i, axis=1))), None)
+            for i in range(6)
+        ],
+        MEDIA_SCHEMA,
+    )
+
+    def feats(df):
+        return {r["media_id"]: r["features"] for r in decode_media(df, dim=16).collect()}
+
+    a = feats(media)
+    assert a == feats(media)
+    assert a == feats(media.repartition(3))
+    assert len(a) == 6 and all(len(v) == 16 for v in a.values())
+
+
 def test_png_roundtrip():
     import numpy as np
 

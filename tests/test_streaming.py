@@ -266,3 +266,60 @@ def test_incremental_er_stream_leaves_session_conf(spark, tmp_path):
     for d in (state, pairs, assign):
         batches = spark.read.parquet(d).select("batch_id").distinct().collect()
         assert sorted(r[0] for r in batches) == [0, 1, 2], d
+
+
+def test_streaming_extract_resume_is_incremental(spark, tmp_path):
+    """Checkpoint resume of the page stream: after a completed availableNow
+    run, a new drop and a restart on the same checkpoint process only the
+    new files.  The first run's pair partitions stay as they were, every
+    pair the restart adds has a new page at one end, and the resumed
+    assignment equals one drain over all drops.  The name is kept from the
+    removed extract stream; the resume contract lives on in
+    start_incremental_er_stream, the one stream starter."""
+    from berkeley_entity_spark.streaming.ingest import (
+        start_incremental_er_stream,
+    )
+
+    t1 = "quantum harbor lighthouse meridian obelisk paradox quarry riverbed sandstone timber"
+    t3 = "completely different words entirely unrelated content spanning another topic altogether"
+    root = str(tmp_path / "pages")
+    for rows in ([("a1", t1), ("a2", t1)], [("c1", t3), ("c2", t3)]):
+        _as_pages(spark, rows).write.mode("append").parquet(root)
+
+    def drain(tag):
+        dirs = [str(tmp_path / f"{tag}_{d}") for d in ("state", "pairs", "assign", "ckpt")]
+        start_incremental_er_stream(spark, root, *dirs).awaitTermination(300)
+        return dirs[1], dirs[2]
+
+    def pair_rows(pairs):
+        return {
+            (r["batch_id"], r["id_a"], r["id_b"])
+            for r in spark.read.parquet(pairs).collect()
+        }
+
+    def last_snapshot(assign):
+        snaps = spark.read.parquet(assign)
+        last = snaps.agg(F.max("batch_id")).collect()[0][0]
+        return {
+            (r["doc_id"], r["cluster_id"])
+            for r in snaps.where(F.col("batch_id") == last).collect()
+        }
+
+    pairs, assign = drain("run")
+    first = pair_rows(pairs)
+    first_last = spark.read.parquet(assign).agg(F.max("batch_id")).collect()[0][0]
+    assert first
+
+    new_urls = {"a3", "c3", "d1"}
+    _as_pages(
+        spark, [("a3", t1), ("c3", t3), ("d1", "lone unpaired page with unique text")]
+    ).write.mode("append").parquet(root)
+    pairs, assign = drain("run")
+    resumed = pair_rows(pairs)
+    old = {p for p in resumed if p[0] <= first_last}
+    added = resumed - old
+    assert old == first
+    assert added and all(p[1] in new_urls or p[2] in new_urls for p in added)
+
+    _, fresh_assign = drain("fresh")
+    assert last_snapshot(assign) == last_snapshot(fresh_assign)
