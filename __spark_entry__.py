@@ -874,7 +874,7 @@ def q_mention_props(spark, sf_dir):
     )
     vocab = (
         d.select(F.explode(toks).alias("w"))
-        .select(sanitize(F.col("w")).alias("t"))
+        .selectExpr(f"{sanitize('w')} AS t")
         .distinct()
     )
     first_ch = F.ascii(F.substring("t", 1, 1))
@@ -887,7 +887,7 @@ def q_mention_props(spark, sf_dir):
     )
     phr = (
         m.where(F.length("w1") % 2 == 0)
-        .select(sanitize(F.col("span")).alias("phrase"))
+        .selectExpr(f"{sanitize('span')} AS phrase")
         .distinct()
     )
     ng_phr = phr.select(

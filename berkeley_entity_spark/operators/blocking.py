@@ -32,7 +32,11 @@ work, and a deterministic, disclosed recall bound
 (test_capped_blocking_drops_tail);
 AQE skew-join handles residual join-side imbalance.
 Everything below is expressed as DataFrame ops (joins, windows, explode); the
-minhash pass included — the whole stage runs JVM-side in codegen.
+minhash pass included — the whole stage runs JVM-side in codegen.  The fixed
+expression lists (block keys, signature aggregates, band keys, pair columns)
+are built as SQL text: each F.* node is a py4j round trip while the plan is
+built, and the MinHash column list alone was ~1,900 of them per pipeline
+run; a string parses in one, and the analyzed expressions are the same.
 
 capped_key_pairs is the repo's one row_number-capped key self-join,
 emitting (key, id_a < id_b) pairs with any extra columns carried as
@@ -45,10 +49,10 @@ similarity.lsh_bucket_topk and streaming.ingest._dedup_batch.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.util import maybe_broadcast
+from berkeley_entity_spark.util import maybe_broadcast, sql_str
 
 # MinHash-LSH banding of char SHINGLE_K-shingles of a surface
 MH_BANDS, MH_ROWS = 8, 4
@@ -70,16 +74,29 @@ def distinct_surfaces(mentions: DataFrame) -> DataFrame:
     return (
         mentions.groupBy("norm_name")
         .agg(
-            F.min("mention_id").alias("rep_mention"),
-            F.min_by("url", "mention_id").alias("rep_url"),
-            F.count(F.lit(1)).alias("n_mentions"),
-            F.max(F.coalesce("is_acr", F.lit(False))).alias("is_acr"),
+            F.expr("min(mention_id) AS rep_mention"),
+            F.expr("min_by(url, mention_id) AS rep_url"),
+            F.expr("count(1) AS n_mentions"),
+            F.expr("max(coalesce(is_acr, false)) AS is_acr"),
         )
-        .withColumn("node_id", F.xxhash64("norm_name"))
+        .withColumn("node_id", F.expr("xxhash64(norm_name)"))
     )
 
 
 # ----------------------------------------------------------------- block keys
+
+
+_TOKS = "split(norm_name, ' ')"
+_BLOCK_KEYS = (
+    "array_distinct(array("
+    f"concat('L:', element_at({_TOKS}, -1)), "
+    f"concat('F:', element_at({_TOKS}, 1)), "
+    f"concat('A:', array_join(transform({_TOKS}, t -> substring(t, 1, 1)), '')), "
+    # single-token surfaces may *be* an acronym: index them under the
+    # acronym key space too so "gdc" meets "global data corp"
+    f"CASE WHEN size({_TOKS}) = 1 THEN concat('A:', element_at({_TOKS}, 1)) END"
+    ")) AS keys"
+)
 
 
 def explode_block_keys(df: DataFrame, id_col: str) -> DataFrame:
@@ -90,50 +107,31 @@ def explode_block_keys(df: DataFrame, id_col: str) -> DataFrame:
     "global data corporation", cf. sem/AbbreviationHandler.scala).
     Pure column expressions — stays inside whole-stage codegen.
     """
-    toks = F.split(F.col("norm_name"), " ")
-    acr = F.array_join(F.transform(toks, lambda t: F.substring(t, 1, 1)), "")
-    keyed = df.select(
-        F.col(id_col),
-        F.col("norm_name"),
-        F.array_distinct(
-            F.array(
-                F.concat(F.lit("L:"), F.element_at(toks, -1)),
-                F.concat(F.lit("F:"), F.element_at(toks, 1)),
-                F.concat(F.lit("A:"), acr),
-                # single-token surfaces may *be* an acronym: index them under
-                # the acronym key space too so "gdc" meets "global data corp"
-                F.when(F.size(toks) == 1, F.concat(F.lit("A:"), F.element_at(toks, 1))),
-            )
-        ).alias("keys"),
-    )
-    return keyed.select(
-        F.col(id_col), F.col("norm_name"), F.explode("keys").alias("block_key")
-    ).where(F.col("block_key").isNotNull() & (F.length("block_key") > 2))
+    return df.selectExpr(id_col, "norm_name", _BLOCK_KEYS).selectExpr(
+        id_col, "norm_name", "explode(keys) AS block_key"
+    ).where("block_key IS NOT NULL AND length(block_key) > 2")
 
 
 # ------------------------------------------------------------------- minhash
 
 
-def char_shingles_col(k: int):
+def char_shingles_col(k: int) -> Column:
     """Distinct char k-shingles of the space-padded surface (norm_name) as
     an array column.  Pure SQL expressions (substr over a sequence) —
     whole-stage codegen, and byte-identical to DuckDB's substr over the
     same string."""
-    padded = F.concat(F.lit(" "), F.col("norm_name"), F.lit(" "))
-    return F.when(F.length(padded) <= k, F.array(padded)).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length(padded) - (k - 1)),
-                lambda i: padded.substr(i, F.lit(k)),
-            )
-        )
+    padded = "concat(' ', norm_name, ' ')"
+    return F.expr(
+        f"CASE WHEN length({padded}) <= {k} THEN array({padded}) "
+        f"ELSE array_distinct(transform(sequence(1, length({padded}) - {k - 1}), "
+        f"i -> substr({padded}, i, {k}))) END"
     )
 
 
 def minhash_band_keys(
     df: DataFrame,
     cols: list[str],
-    shingles,
+    shingles: Column,
     bands: int,
     rows: int,
     sep: str = "#",
@@ -161,23 +159,29 @@ def minhash_band_keys(
     digests back (sf0.1, 21k surfaces, interleaved min-of-3), inline took
     0.26s vs 1.07s — the extra distinct + join stages cost more than the
     redundant hashing saves, and the digest table is a tens-of-MB
-    broadcast at web charsets."""
+    broadcast at web charsets.
+
+    The aggregates and band keys are SQL text (module docstring): one
+    aggregate in the nested F.* form took 5.4-6.8 ms to build with
+    PySpark's call-site capture on (4-vCPU VM), as text 0.24-0.42 ms."""
     ex = df.select(*cols, F.explode(shingles).alias("sh"))
     sig = ex.groupBy(*cols).agg(
         *[
-            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("sh")))).alias(f"mh{i}")
+            F.expr(f"min(md5(concat('{i}|', sh))) AS mh{i}")
             for i in range(bands * rows)
         ]
     )
-    lead = [F.lit(tag)] if tag is not None else []
-    band_cols = [
-        F.concat_ws(
-            sep, *lead, F.lit(str(b)),
-            *[F.col(f"mh{b * rows + r}") for r in range(rows)],
+    lead = [sql_str(tag)] if tag is not None else []
+    band_keys = ", ".join(
+        "concat_ws("
+        + ", ".join(
+            [sql_str(sep), *lead, f"'{b}'"]
+            + [f"mh{b * rows + r}" for r in range(rows)]
         )
+        + ")"
         for b in range(bands)
-    ]
-    return sig.select(*cols, F.explode(F.array(*band_cols)).alias(key_col))
+    )
+    return sig.selectExpr(*cols, f"explode(array({band_keys})) AS {key_col}")
 
 
 # ------------------------------------------------------------- pair emission
@@ -276,10 +280,10 @@ def candidate_pairs(
         acr_lut = maybe_broadcast(surfaces.select("node_id", "is_acr"), n_surfaces)
         keys = keys.join(acr_lut, "node_id")
 
-    w = Window.partitionBy("block_key").orderBy("norm_name", "node_id")
-    ranked = keys.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= MAX_BLOCK
-    )
+    ranked = keys.withColumn(
+        "rn",
+        F.expr("row_number() OVER (PARTITION BY block_key ORDER BY norm_name, node_id)"),
+    ).where(f"rn <= {MAX_BLOCK}")
     # Materialize the cache BEFORE the self-join: with a lazy persist the
     # two join branches race — each scan task evaluates the window+minhash
     # DAG until the cache fills, so most of the keys stage computes twice.
@@ -297,37 +301,27 @@ def candidate_pairs(
         # scan, once per KEY ROW, not per candidate pair (evaluated per
         # pair, the bound re-ran the regex split + array builds ~8x per
         # side — measured 3x slower than not pruning at all).
-        toks = F.split(F.col("norm_name"), " ")
-        ranked = ranked.withColumns(
-            {
-                "_dt": F.array_distinct(toks),
-                "_first": F.element_at(toks, 1),
-                "_last": F.element_at(toks, -1),
-                "_ntok": F.size(toks),
-                "_acr_s": F.array_join(
-                    F.transform(toks, lambda t: F.substring(t, 1, 1)), ""
-                ),
-                "_ln": F.length("norm_name"),
-            }
-        ).withColumn("_ndt", F.size("_dt"))
-    width = F.when(
-        F.col("a.block_key").startswith("MH:"), F.lit(MAX_BLOCK)
-    ).otherwise(F.lit(NEIGHBORHOOD))
-    a, b = ranked.alias("a"), ranked.alias("b")
-    pair_cols = [
-        F.col("a.block_key").alias("block_key"),
-        F.least("a.node_id", "b.node_id").alias("node_a"),
-        F.greatest("a.node_id", "b.node_id").alias("node_b"),
-        F.when(F.col("a.block_key").startswith("MH:"), F.lit("lsh"))
-        .otherwise(F.lit("sortedneighborhood"))
-        .alias("pass"),
-    ]
-    joined = a.join(
-        b,
-        (F.col("a.block_key") == F.col("b.block_key"))
-        & (F.col("b.rn") > F.col("a.rn"))
-        & (F.col("b.rn") <= F.col("a.rn") + width),
-    ).where(F.col("a.node_id") != F.col("b.node_id"))
+        ranked = ranked.selectExpr(
+            "*",
+            f"array_distinct({_TOKS}) AS _dt",
+            f"element_at({_TOKS}, 1) AS _first",
+            f"element_at({_TOKS}, -1) AS _last",
+            f"size({_TOKS}) AS _ntok",
+            f"array_join(transform({_TOKS}, t -> substring(t, 1, 1)), '') AS _acr_s",
+            "length(norm_name) AS _ln",
+        ).selectExpr("*", "size(_dt) AS _ndt")
+    lsh = "startswith(a.block_key, 'MH:')"
+    joined = (
+        ranked.alias("a")
+        .join(
+            ranked.alias("b"),
+            F.expr(
+                "a.block_key = b.block_key AND b.rn > a.rn AND b.rn <= a.rn + "
+                f"CASE WHEN {lsh} THEN {MAX_BLOCK} ELSE {NEIGHBORHOOD} END"
+            ),
+        )
+        .where("a.node_id != b.node_id")
+    )
     if prune is not None:
         from berkeley_entity_spark.operators.scoring import prune_bound_prepped
 
@@ -344,9 +338,14 @@ def candidate_pairs(
     # one candidate per unordered node pair; keep the first pass name
     # deterministically (min) so reruns are identical
     pairs = (
-        joined.select(*pair_cols)
+        joined.selectExpr(
+            "a.block_key AS block_key",
+            "least(a.node_id, b.node_id) AS node_a",
+            "greatest(a.node_id, b.node_id) AS node_b",
+            f"CASE WHEN {lsh} THEN 'lsh' ELSE 'sortedneighborhood' END AS pass",
+        )
         .groupBy("node_a", "node_b")
-        .agg(F.min("block_key").alias("block_key"), F.min("pass").alias("pass"))
+        .agg(F.expr("min(block_key) AS block_key"), F.expr("min(pass) AS pass"))
     )
     # the attribute lookups broadcast when the (already counted) surface
     # table is small — map-side joins instead of pair shuffles; gated on

@@ -21,7 +21,7 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -81,8 +81,8 @@ def _contract_local(edges: DataFrame) -> DataFrame:
         yield pd.DataFrame({"u": pd.Series(out_u, dtype="int64"),
                             "v": pd.Series(out_v, dtype="int64")})
 
-    return edges.select(
-        F.col("u").cast("long").alias("u"), F.col("v").cast("long").alias("v")
+    return edges.selectExpr(
+        "CAST(u AS BIGINT) AS u", "CAST(v AS BIGINT) AS v"
     ).mapInPandas(gen, schema="u long, v long")
 
 
@@ -157,10 +157,16 @@ def connected_components(
     # _contract_local's star-forest output is deduplicated, oriented u > v
     # and self-loop-free, and every within-partition component has
     # diameter <= 2 — measured: the loop then converges in 2-3 rounds
-    # instead of 5-7 on the blocking-shaped edge sets.
-    curr = _contract_local(edges).localCheckpoint(eager=True)
-    n_edges = curr.count()
-    if n_edges <= small_graph_threshold:
+    # instead of 5-7 on the blocking-shaped edge sets.  The edge count is
+    # observed by the checkpoint job itself (a count would be two more
+    # jobs under AQE).
+    obs = Observation()
+    curr = (
+        _contract_local(edges)
+        .observe(obs, F.expr("count(1) AS n"))
+        .localCheckpoint(eager=True)
+    )
+    if obs.get["n"] <= small_graph_threshold:
         # driver-side finish (see docstring): the contracted star forest is
         # two long columns, <= threshold rows — Arrow-collect and union-find
         pdf = curr.toPandas()
@@ -168,9 +174,9 @@ def connected_components(
             list(union_find(zip(pdf["u"], pdf["v"])).items()),
             columns=["node_id", "component"],
         ).astype("int64")
-        return spark.createDataFrame(
-            mapping, schema="node_id long, component long"
-        ).localCheckpoint(eager=True)
+        # a driver-built frame: re-scanning it runs no job, so it is not
+        # checkpointed
+        return spark.createDataFrame(mapping, schema="node_id long, component long")
     # the loop runs under the session's own conf (AQE coalescing sizes each
     # round's shuffles); it sets nothing on the session, so a query running
     # concurrently on it sees no change
@@ -236,11 +242,9 @@ def assign_clusters(
     surf = (
         surfaces.select("norm_name", "node_id", "rep_mention")
         .join(components, "node_id", "left")
-        .withColumn("component", F.coalesce("component", "node_id"))
+        .withColumn("component", F.expr("coalesce(component, node_id)"))
     )
-    w_min = surf.groupBy("component").agg(
-        F.min("rep_mention").alias("cluster_id")
-    )
+    w_min = surf.groupBy("component").agg(F.expr("min(rep_mention) AS cluster_id"))
     surf_assign = surf.join(w_min, "component").select("norm_name", "cluster_id")
     # gated on rows AND estimated bytes (norm_name strings dominate the
     # width) — explicit broadcast hints bypass autoBroadcastJoinThreshold

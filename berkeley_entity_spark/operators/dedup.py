@@ -21,7 +21,7 @@ joins (band bucket / shared ngram), every capped hot key (MinHash and
 simhash band buckets, duplicated-span grams) goes through the one cap
 kernel, blocking.capped_key_pairs, and verification happens on the
 candidate set only.  Word n-grams come from one expression,
-word_ngrams_col, shared with textstats.
+word_ngrams_sql, shared with textstats and selection.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from berkeley_entity_spark.operators.blocking import capped_key_pairs, minhash_band_keys
@@ -46,34 +46,40 @@ BLOOM_HASHES = 3
 SPAN_K, SPAN_MIN_LEN = 8, 15
 
 
-def tokens_col():
-    """Whitespace tokens; empty tokens removed (matches the DuckDB oracle
-    `string_split` + filter)."""
-    return F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+# whitespace tokens of `text`, empty tokens removed (matches the DuckDB
+# oracle `string_split` + filter); SQL text, so the expressions built on it
+# parse in one py4j round trip
+TOKENS = "filter(split(text, ' '), t -> t != '')"
 
 
-def word_ngrams_col(toks, n: int):
-    """The space-joined n-grams of the token array `toks`, empty when it
-    has fewer than n tokens — the repo's one word n-gram expression (pure
-    SQL: transform over a sequence of slices, so it stays in codegen)."""
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def tokens_col() -> Column:
+    """TOKENS as an array column."""
+    return F.expr(TOKENS)
 
 
-def shingles_col(n: int = 3):
-    """Word n-gram shingles as an array column (word_ngrams_col); the whole
+def word_ngrams_sql(toks: str, n: int) -> str:
+    """SQL text: the space-joined n-grams of the token array `toks` (SQL
+    text), empty when it has fewer than n tokens — the repo's one word
+    n-gram expression (transform over a sequence of slices, so it stays in
+    codegen)."""
+    return (
+        f"CASE WHEN size({toks}) >= {n} THEN "
+        f"transform(sequence(1, size({toks}) - {n - 1}), "
+        f"i -> array_join(slice({toks}, i, {n}), ' ')) "
+        "ELSE CAST(array() AS array<string>) END"
+    )
+
+
+def shingles_col(n: int = 3) -> Column:
+    """Word n-gram shingles as an array column (word_ngrams_sql); the whole
     token string when there are 1..n-1 tokens, and no shingle at all for a
     token-less (empty or whitespace-only) doc, so such docs land in no
     bucket and never pair with each other."""
-    toks = tokens_col()
-    return F.when(
-        F.size(toks).between(1, n - 1), F.array(F.array_join(toks, " "))
-    ).otherwise(word_ngrams_col(toks, n))
+    return F.expr(
+        f"CASE WHEN (size({TOKENS}) >= 1 AND size({TOKENS}) <= {n - 1}) "
+        f"THEN array(array_join({TOKENS}, ' ')) "
+        f"ELSE {word_ngrams_sql(TOKENS, n)} END"
+    )
 
 
 def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:

@@ -147,8 +147,8 @@ def extract_mentions(
     mentions = pages.select("url", "text").mapInPandas(
         gen, schema=MENTIONS_SCHEMA
     )
-    return mentions.withColumn(
-        "mention_id", F.xxhash64("url", "sent_idx", "start", "end")
+    return mentions.selectExpr(
+        "*", "xxhash64(url, sent_idx, start, `end`) AS mention_id"
     )
 
 

@@ -3,15 +3,15 @@
 Faithful port of coref/PronounDictionary.scala:4-80: the person/number/
 gender pronoun sets (borrowed from Stanford's Dictionaries, as the
 reference notes) and the canonicalization map.  Exposed both as Python
-frozensets (for Arrow kernels) and as Spark Column helpers (for the
-property computation CASE expressions — the sets are tiny literals, no
-broadcast needed).
+frozensets (for Arrow kernels) and as SQL text for the property
+computation CASE expressions (the sets are tiny literals, no broadcast
+needed; text, because a Column isin costs a py4j round trip per word
+while the plan is built).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from berkeley_entity_spark.util import sql_str
 
 FIRST_PERSON = frozenset(
     "i me myself mine my we us ourself ourselves ours our".split()
@@ -68,54 +68,45 @@ def canonicalize(word: str) -> str:
     return CANONICALIZATIONS.get(low, low)
 
 
-def _isin(col: Column, words: frozenset[str]) -> Column:
-    return col.isin(*sorted(words))
+def isin_sql(x: str, words: frozenset[str]) -> str:
+    """SQL text `x IN (...)` over the sorted set: the same In (InSet past
+    the optimizer's threshold) a Column isin builds."""
+    return f"{x} IN ({', '.join(sql_str(w) for w in sorted(words))})"
 
 
-def pron_gender_col(low: Column) -> Column:
-    """Mention.scala:320-329 pronominal gender cascade."""
-    return (
-        F.when(_isin(low, MALE), F.lit("MALE"))
-        .when(_isin(low, FEMALE), F.lit("FEMALE"))
-        .when(_isin(low, NEUTRAL), F.lit("NEUTRAL"))
-        .otherwise(F.lit("UNKNOWN"))
-    )
+# The pronoun gate over the `span` column, as SQL text: (SPAN_LOW, the
+# lowercased period-stripped base, and SPAN_ELIGIBLE), shared by the property
+# computation and the mention-type cascade — these two MUST stay in lockstep
+# or a mention could get mtype=PROPER with pronoun-table number/gender.
+# Trailing periods stripped ('Them.'); acronym shapes ('US', 'IT', 'U.S.')
+# excluded — the reference gates pronominal type on POS (Mention.scala:311),
+# which span-only web mentions lack.
+_TRAILING_PERIODS = sql_str(r"\.+$")
+_BASE = f"regexp_replace(span, {_TRAILING_PERIODS}, '')"
+SPAN_LOW = f"lower({_BASE})"
+SPAN_ELIGIBLE = (
+    f"(NOT contains(span, ' ') AND NOT contains({_BASE}, '.') "
+    f"AND NOT ({_BASE} = upper({_BASE}) AND length({_BASE}) >= 2))"
+)
 
-
-def pron_number_col(low: Column) -> Column:
-    """Mention.scala:330-335 pronominal number cascade."""
-    return (
-        F.when(_isin(low, SINGULAR), F.lit("SINGULAR"))
-        .when(_isin(low, PLURAL), F.lit("PLURAL"))
-        .otherwise(F.lit("UNKNOWN"))
-    )
-
-
-def span_pronoun_gate(span: Column) -> tuple[Column, Column]:
-    """(lowercased period-stripped base, eligibility) shared by the
-    property computation and the mention-type cascade — these two MUST stay
-    in lockstep or a mention could get mtype=PROPER with pronoun-table
-    number/gender.  Trailing periods stripped ('Them.'); acronym shapes
-    ('US', 'IT', 'U.S.') excluded — the reference gates pronominal type on
-    POS (Mention.scala:311), which span-only web mentions lack."""
-    base = F.regexp_replace(span, r"\.+$", "")
-    low = F.lower(base)
-    eligible = (
-        ~span.contains(" ")
-        & ~base.contains(".")
-        & ~((base == F.upper(base)) & (F.length(base) >= 2))
-    )
-    return low, eligible
-
-
-def mention_type_col(span: Column) -> Column:
-    """Mention.scala:304-314 type cascade for span-only web mentions:
-    single-token demonstrative -> DEMONSTRATIVE, single-token pronoun ->
-    PRONOMINAL, else PROPER (our extractor only emits capitalized runs, so
-    the NOMINAL branch — common-noun heads — cannot occur here)."""
-    low, eligible = span_pronoun_gate(span)
-    return (
-        F.when(eligible & _isin(low, DEMONSTRATIVES), F.lit("DEMONSTRATIVE"))
-        .when(eligible & _isin(low, ALL_PRONOUNS), F.lit("PRONOMINAL"))
-        .otherwise(F.lit("PROPER"))
-    )
+# Mention.scala:320-329 pronominal gender cascade
+PRON_GENDER = (
+    f"CASE WHEN {isin_sql(SPAN_LOW, MALE)} THEN 'MALE' "
+    f"WHEN {isin_sql(SPAN_LOW, FEMALE)} THEN 'FEMALE' "
+    f"WHEN {isin_sql(SPAN_LOW, NEUTRAL)} THEN 'NEUTRAL' ELSE 'UNKNOWN' END"
+)
+# Mention.scala:330-335 pronominal number cascade
+PRON_NUMBER = (
+    f"CASE WHEN {isin_sql(SPAN_LOW, SINGULAR)} THEN 'SINGULAR' "
+    f"WHEN {isin_sql(SPAN_LOW, PLURAL)} THEN 'PLURAL' ELSE 'UNKNOWN' END"
+)
+# Mention.scala:304-314 type cascade for span-only web mentions:
+# single-token demonstrative -> DEMONSTRATIVE, single-token pronoun ->
+# PRONOMINAL, else PROPER (our extractor only emits capitalized runs, so
+# the NOMINAL branch — common-noun heads — cannot occur here)
+MENTION_TYPE = (
+    f"CASE WHEN {SPAN_ELIGIBLE} AND {isin_sql(SPAN_LOW, DEMONSTRATIVES)} "
+    "THEN 'DEMONSTRATIVE' "
+    f"WHEN {SPAN_ELIGIBLE} AND {isin_sql(SPAN_LOW, ALL_PRONOUNS)} THEN 'PRONOMINAL' "
+    "ELSE 'PROPER' END"
+)

@@ -38,108 +38,115 @@ from berkeley_entity_spark.util import BROADCAST_CAP_BYTES, maybe_broadcast
 NUMGENDER_SCHEMA = "phrase string, masc int, fem int, neut int, plur int"
 
 
-def sanitize(col: Column) -> Column:
-    """NumberGenderComputer.sanitizeWord: lowercase, digit runs -> '#'."""
-    return F.regexp_replace(F.lower(col), "[0-9]+", "#")
+def sanitize(x: str) -> str:
+    """NumberGenderComputer.sanitizeWord: lowercase, digit runs -> '#'.
+    SQL text over the SQL expression `x`."""
+    return f"regexp_replace(lower({x}), '[0-9]+', '#')"
 
 
-def _is_cap(col: Column) -> Column:
+def _is_cap(x: str) -> str:
     """Character.isUpperCase on the first char (ASCII A-Z — both engines)."""
-    return F.ascii(F.substring(col, 1, 1)).between(65, 90)
+    first = f"ascii(substring({x}, 1, 1))"
+    return f"({first} >= 65 AND {first} <= 90)"
 
 
-def _gender_case(m: Column, f: Column, n: Column) -> Column:
+def _gender_case(m: str, f: str, n: str) -> str:
     """NumberGenderComputer.scala:47-55 confidence cascade."""
     return (
-        F.when((m >= 2 * (f + n)) & (m >= 3), F.lit("MALE"))
-        .when((f >= 2 * (m + n)) & (f >= 3), F.lit("FEMALE"))
-        .when((n >= 2 * (m + f)) & (n >= 3), F.lit("NEUTRAL"))
-        .otherwise(F.lit("UNKNOWN"))
+        f"CASE WHEN {m} >= 2 * ({f} + {n}) AND {m} >= 3 THEN 'MALE' "
+        f"WHEN {f} >= 2 * ({m} + {n}) AND {f} >= 3 THEN 'FEMALE' "
+        f"WHEN {n} >= 2 * ({m} + {f}) AND {n} >= 3 THEN 'NEUTRAL' "
+        "ELSE 'UNKNOWN' END"
     )
 
 
 def _ng_joined(spans: DataFrame, ng: DataFrame, key: str, prefix: str) -> DataFrame:
-    looked = ng.select(
-        F.col("phrase").alias(key),
-        F.col("masc").alias(f"{prefix}m"),
-        F.col("fem").alias(f"{prefix}f"),
-        F.col("neut").alias(f"{prefix}n"),
-        F.col("plur").alias(f"{prefix}p"),
+    looked = ng.selectExpr(
+        f"phrase AS {key}",
+        f"masc AS {prefix}m",
+        f"fem AS {prefix}f",
+        f"neut AS {prefix}n",
+        f"plur AS {prefix}p",
     )
-    out = spans.join(looked, key, "left")
-    for c in ("m", "f", "n", "p"):
-        out = out.withColumn(f"{prefix}{c}", F.coalesce(f"{prefix}{c}", F.lit(0)))
-    return out
+    return spans.join(looked, key, "left").withColumns(
+        {f"{prefix}{c}": F.expr(f"coalesce({prefix}{c}, 0)") for c in "mfnp"}
+    )
 
 
 def _props_for(spans: DataFrame, numgender: DataFrame) -> DataFrame:
     """Add `number`, `gender`, `_mtype` to the distinct (`span`,
     `_person`) key table.  Drops its own temp columns.  The property cascade
     is a pure function of (span, _person), which is what makes evaluating it
-    per key and joining back exact."""
-    toks = F.split(F.col("span"), " ")
-    spans = (
-        spans.withColumn("_head_tok", F.element_at(toks, -1))
-        .withColumn("_prev_tok", F.when(F.size(toks) >= 2, F.element_at(toks, -2)))
-        .withColumn("_phrase_key", sanitize(F.col("span")))
-        .withColumn("_head_key", sanitize(F.col("_head_tok")))
-        .withColumn("_first_key", sanitize(F.col("_prev_tok")))
+    per key and joining back exact.  The cascade is SQL text: as nested F.*
+    calls it cost ~2,700 py4j round trips per pipeline run to build."""
+    from berkeley_entity_spark.operators.pronouns import (
+        ALL_PRONOUNS,
+        MENTION_TYPE,
+        PRON_GENDER,
+        PRON_NUMBER,
+        SPAN_ELIGIBLE,
+        SPAN_LOW,
+        isin_sql,
+    )
+
+    toks = "split(span, ' ')"
+    spans = spans.selectExpr(
+        "*",
+        f"element_at({toks}, -1) AS _head_tok",
+        f"CASE WHEN size({toks}) >= 2 THEN element_at({toks}, -2) END AS _prev_tok",
+        f"{sanitize('span')} AS _phrase_key",
+    ).selectExpr(
+        "*",
+        f"{sanitize('_head_tok')} AS _head_key",
+        f"{sanitize('_prev_tok')} AS _first_key",
     )
     spans = _ng_joined(spans, numgender, "_phrase_key", "p")
     spans = _ng_joined(spans, numgender, "_head_key", "h")
     spans = _ng_joined(spans, numgender, "_first_key", "f")
 
     # accessCounts backoff: phrase counts count as "found" iff not all-zero
-    found = (F.col("pm") + F.col("pf") + F.col("pn") + F.col("pp")) > 0
-    cm = F.when(found, F.col("pm")).otherwise(F.col("hm"))
-    cf = F.when(found, F.col("pf")).otherwise(F.col("hf"))
-    cn = F.when(found, F.col("pn")).otherwise(F.col("hn"))
-    cp = F.when(found, F.col("pp")).otherwise(F.col("hp"))
-
-    number_counts = F.when(cm + cf + cn >= cp, F.lit("SINGULAR")).otherwise(
-        F.lit("PLURAL")
+    found = "(pm + pf + pn + pp) > 0"
+    cm, cf, cn, cp = (
+        f"(CASE WHEN {found} THEN p{c} ELSE h{c} END)" for c in "mfnp"
     )
-    gender_nonperson = _gender_case(cm, cf, cn)
+    number_counts = (
+        f"CASE WHEN {cm} + {cf} + {cn} >= {cp} THEN 'SINGULAR' ELSE 'PLURAL' END"
+    )
     # person first-name special case: head capitalized (assume last name) AND
     # previous token capitalized (assume first name) -> counts of that first
     # name alone (NumberGenderComputer.scala:64-69); all other person shapes
     # fall through to the non-person rule (:70-75)
+    # (the parser balances an AND chain of four; the parentheses keep the
+    # left-deep tree a Column chain builds)
     first_name_path = (
-        F.col("_person")
-        & _is_cap(F.col("_head_tok"))
-        & F.col("_prev_tok").isNotNull()
-        & _is_cap(F.col("_prev_tok"))
+        f"((_person AND {_is_cap('_head_tok')}) AND _prev_tok IS NOT NULL) "
+        f"AND {_is_cap('_prev_tok')}"
     )
-    gender_counts = F.when(
-        first_name_path, _gender_case(F.col("fm"), F.col("ff"), F.col("fn"))
-    ).otherwise(gender_nonperson)
+    gender_counts = (
+        f"CASE WHEN {first_name_path} THEN {_gender_case('fm', 'ff', 'fn')} "
+        f"ELSE {_gender_case(cm, cf, cn)} END"
+    )
 
     # Pronominal branch (Mention.scala:317-335): a single-token pronoun
     # mention takes number/gender from the pronoun sets, never from counts.
-    from berkeley_entity_spark.operators.pronouns import (
-        ALL_PRONOUNS,
-        mention_type_col,
-        pron_gender_col,
-        pron_number_col,
+    # The gate is shared with MENTION_TYPE (the two sites must stay in
+    # lockstep; see the pronouns module).
+    pronominal = f"{SPAN_ELIGIBLE} AND {isin_sql(SPAN_LOW, ALL_PRONOUNS)}"
+    # number is its own step: the planner then folds it into the step that
+    # fills in the counts, while gender, which reads those counts several
+    # times, stays a step above
+    number = F.expr(
+        f"CASE WHEN {pronominal} THEN {PRON_NUMBER} "
+        f"ELSE {number_counts} END"
     )
-
-    # shared gate with mention_type_col (see span_pronoun_gate docstring:
-    # the two sites must stay in lockstep)
-    from berkeley_entity_spark.operators.pronouns import span_pronoun_gate
-
-    low_span, eligible = span_pronoun_gate(F.col("span"))
-    pronominal = eligible & low_span.isin(*sorted(ALL_PRONOUNS))
-    number = F.when(pronominal, pron_number_col(low_span)).otherwise(number_counts)
-    gender = F.when(pronominal, pron_gender_col(low_span)).otherwise(gender_counts)
-
-    temp = ["_head_tok", "_prev_tok", "_phrase_key", "_head_key",
-            "_first_key"] + [f"{p}{c}" for p in "phf" for c in "mfnp"]
-    return (
-        spans.withColumn("number", number)
-        .withColumn("gender", gender)
+    return spans.withColumn("number", number).selectExpr(
+        "span",
+        "_person",
+        "number",
+        f"CASE WHEN {pronominal} THEN {PRON_GENDER} "
+        f"ELSE {gender_counts} END AS gender",
         # Mention.scala:304-314 type cascade (DEMONSTRATIVE/PRONOMINAL/PROPER)
-        .withColumn("_mtype", mention_type_col(F.col("span")))
-        .drop(*temp)
+        f"{MENTION_TYPE} AS _mtype",
     )
 
 
@@ -173,7 +180,8 @@ def with_number_gender(
     ):
         numgender = maybe_broadcast(numgender, numgender.count())
     base = mentions.withColumn("_person", person_expr)
-    ordered = [c for c in mentions.columns if c not in ("number", "gender")] + [
+    cols = mentions.columns
+    ordered = [c for c in cols if c not in ("number", "gender")] + [
         "number",
         "gender",
     ]
@@ -183,18 +191,13 @@ def with_number_gender(
     # corpus; byte-gate its broadcast like any other dimension
     props = maybe_broadcast(props, props.count())
     names = ("span", "_person", "number", "gender", "_mtype")
-    props = props.select([F.col(c).alias(f"_pr_{c}") for c in names])
-    cond = base["span"].eqNullSafe(props["_pr_span"]) & base[
-        "_person"
-    ].eqNullSafe(props["_pr__person"])
+    props = props.selectExpr(*[f"{c} AS _pr_{c}" for c in names])
+    cond = F.expr("span <=> _pr_span AND _person <=> _pr__person")
     out = (
         base.drop("number", "gender")
         .join(props, cond, "left")
-        .withColumnRenamed("_pr_number", "number")
-        .withColumnRenamed("_pr_gender", "gender")
+        .withColumnsRenamed({"_pr_number": "number", "_pr_gender": "gender"})
     )
-    if "mtype" in mentions.columns:
+    if "mtype" in cols:
         out = out.drop("mtype").withColumnRenamed("_pr__mtype", "mtype")
-    return out.drop(
-        "_pr_span", "_pr__person", "_pr__mtype", "_person"
-    ).select(*ordered)
+    return out.select(*ordered)

@@ -73,18 +73,15 @@ def idf_table(
     """Document-frequency-based IDF over name tokens (A2 analog):
     idf = ln((N+1)/(df+1)) + 1. Pure DataFrame agg.  Pass `n` (the row count)
     when the caller already knows it — saves a count job."""
-    toks = mentions_or_surfaces.select(
-        F.explode(F.split(F.col("norm_name"), " ")).alias("token")
-    ).where(F.col("token") != "")
+    toks = mentions_or_surfaces.selectExpr(
+        "explode(split(norm_name, ' ')) AS token"
+    ).where("token != ''")
     if n is None:
         n = mentions_or_surfaces.count()
     return (
         toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .select(
-            "token",
-            (F.log((F.lit(float(n + 1))) / (F.col("df") + 1)) + 1.0).alias("idf"),
-        )
+        .agg(F.expr("count(1) AS df"))
+        .selectExpr("token", f"ln({float(n + 1)!r}D / (df + 1)) + 1.0D AS idf")
     )
 
 
@@ -92,7 +89,7 @@ def collect_idf(idf_df: DataFrame) -> dict[str, float]:
     """Collect the IDF table for broadcast into the scoring kernel.  Capped:
     at web scale only the most frequent terms matter (rare tokens default to
     idf=1 inside the kernel)."""
-    rows = idf_df.orderBy(F.asc("idf")).limit(500_000).collect()
+    rows = idf_df.orderBy("idf").limit(500_000).collect()
     return {r["token"]: float(r["idf"]) for r in rows}
 
 
@@ -243,15 +240,12 @@ def score_pairs(
     # length).  Bit-identical to features.levenshtein_ratio — same integer
     # distance, same int/int double division (verified by the driver-vs-
     # distributed identity test in tests/test_train.py).
-    pairs = pairs.withColumn(
-        "_lev_cg",
-        F.when(F.col("norm_a") == F.col("norm_b"), F.lit(1.0))
-        .when((F.length("norm_a") == 0) | (F.length("norm_b") == 0), F.lit(0.0))
-        .otherwise(
-            1.0
-            - F.levenshtein("norm_a", "norm_b")
-            / F.greatest(F.length("norm_a"), F.length("norm_b"))
-        ),
+    pairs = pairs.selectExpr(
+        "*",
+        "CASE WHEN norm_a = norm_b THEN 1.0D "
+        "WHEN length(norm_a) = 0 OR length(norm_b) = 0 THEN 0.0D "
+        "ELSE 1.0D - levenshtein(norm_a, norm_b) "
+        "/ greatest(length(norm_a), length(norm_b)) END AS _lev_cg",
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -291,8 +285,8 @@ def match_edges(scored: DataFrame, threshold: float = 0.0) -> DataFrame:
     partner scores best (the reference's within-document argmax backpointer,
     DocumentInferencerBasic.scala:116-132, would leave a node that is
     nobody's argmax a singleton even with positive-scoring pairs)."""
-    above = scored.where(F.col("score") > threshold)
-    return above.select(F.col("node_b").alias("u"), F.col("node_a").alias("v"))
+    above = scored.where(f"score > {float(threshold)!r}D")
+    return above.selectExpr("node_b AS u", "node_a AS v")
 
 
 def feature_report(scored: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.operators.dedup import tokens_col, word_ngrams_col
+from berkeley_entity_spark.operators.dedup import TOKENS, tokens_col, word_ngrams_sql
 
 
 def hashed_gram_buckets(
@@ -165,8 +165,7 @@ def _gram_arr():
     """In-row unigram+bigram array: the tokens, then their word bigrams
     (one array column, so scoring can fold over it without an
     explode/shuffle)."""
-    toks = tokens_col()
-    return F.concat(toks, word_ngrams_col(toks, 2))
+    return F.expr(f"concat({TOKENS}, {word_ngrams_sql(TOKENS, 2)})")
 
 
 def _bucket_of(g, n_buckets: int):

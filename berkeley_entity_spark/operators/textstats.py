@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from berkeley_entity_spark.operators.dedup import tokens_col, word_ngrams_col
+from berkeley_entity_spark.operators.dedup import TOKENS, tokens_col, word_ngrams_sql
 from berkeley_entity_spark.util import salted_top_k
 
 EN_STOPWORDS = [
@@ -139,8 +139,8 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     shuffles nothing."""
     toks = tokens_col()
     n = F.size(toks)
-    bg = F.array_sort(word_ngrams_col(toks, 2))
-    tg = F.array_sort(word_ngrams_col(toks, 3))
+    bg = F.expr(f"array_sort({word_ngrams_sql(TOKENS, 2)})")
+    tg = F.expr(f"array_sort({word_ngrams_sql(TOKENS, 3)})")
     nd = F.greatest(n, F.lit(1)).cast("double")
     frac_dup = F.round(1.0 - F.size(F.array_distinct(toks)) / nd, 6)
     top_bg = F.round(_max_run(bg) * 2.0 / nd, 6)

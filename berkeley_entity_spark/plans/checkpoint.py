@@ -61,7 +61,7 @@ class CheckpointStore:
         lineage, later stages scan the table like any other source)."""
         t0 = time.monotonic()
         obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        df.observe(obs, F.expr("count(1) AS rows")).write.mode(
             "overwrite"
         ).parquet(self._path(name))
         wall_ms = int((time.monotonic() - t0) * 1000)

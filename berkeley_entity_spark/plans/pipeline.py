@@ -85,8 +85,7 @@ def run_pipeline(
         # span whose head + preceding token are capitalized (the gate inside
         # computeGenderPerson); org spans route their neuter-dominant org
         # word through the same path and still come out NEUTRAL
-        toks = F.split(F.col("span"), " ")
-        person = (F.size(toks) >= 2) & ~F.col("is_acr")
+        person = F.expr("size(split(span, ' ')) >= 2 AND NOT is_acr")
         # with_number_gender reads its input three times (key count,
         # broadcast build side, join-back probe); the lazy cache, filled by
         # the first of them, runs the Python extract kernel once for all

@@ -13,6 +13,17 @@ run recompiled nearly every class (Janino, then HotSpot JIT of the fresh
 classes).  It is a static conf: it takes effect only when this call
 creates the session, and is ignored when `getOrCreate` returns a session
 that already exists.
+
+PySpark's DataFrame call-site capture is off
+(`spark.python.sql.dataFrameDebugging.enabled=false`).  With it on, every
+classic `Column` method and `F.col` call reads the active session and a
+conf, sets and clears `PySparkCurrentOrigin` in the JVM and walks the
+Python stack: about 43% of the py4j round trips a `run_pipeline` made
+while building its plans.  Errors still raise; they lose only the Python
+call-site lines of the "DataFrame query context".  PySpark caches the flag
+process-wide on the first Column call, so, like the codegen cache, it
+takes effect only when this call creates the session before any Column
+exists.
 """
 
 from __future__ import annotations
@@ -65,6 +76,8 @@ def get_spark(
         # default 100) and 263-309 compiles per 5-batch incremental drain;
         # 1000 holds both with room for query families sharing the session
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # no per-Column call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # At 100 TB the session would add the Iceberg catalog:

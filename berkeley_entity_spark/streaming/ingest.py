@@ -51,7 +51,7 @@ def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
     per-write option, so the session's partitionOverwriteMode is left as
     it was."""
     (
-        df.withColumn("batch_id", F.lit(batch_id))
+        df.selectExpr("*", f"{batch_id} AS batch_id")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
@@ -102,8 +102,6 @@ def _dedup_batch(
     stays inline rather than blocking.capped_key_pairs: the capped batch
     table is also the state append, and the kernel would rank every
     micro-batch a second time on the stream's hot path."""
-    from pyspark.sql import Window
-
     from berkeley_entity_spark.operators.blocking import minhash_band_keys
     from berkeley_entity_spark.operators.dedup import (
         LSH_BANDS,
@@ -112,14 +110,14 @@ def _dedup_batch(
     )
 
     sess = batch_df.sparkSession
-    docs = batch_df.select(F.col("url").alias("doc_id"), "text")
+    docs = batch_df.selectExpr("url AS doc_id", "text")
     # the batch near-dup operators' banding, so stream and batch agree
     raw = minhash_band_keys(docs, ["doc_id"], shingles_col(3), LSH_BANDS, LSH_ROWS)
     # within-batch hot-bucket cap (arrival side)
-    wb = Window.partitionBy("bucket").orderBy("doc_id")
+    rn = F.expr("row_number() OVER (PARTITION BY bucket ORDER BY doc_id)")
     b = (
-        raw.withColumn("_rn", F.row_number().over(wb))
-        .where(F.col("_rn") <= max_bucket)
+        raw.withColumn("_rn", rn)
+        .where(f"_rn <= {max_bucket}")
         .drop("_rn")
         .localCheckpoint(eager=True)
     )
@@ -127,23 +125,20 @@ def _dedup_batch(
     a = b.toDF("id_new", "bucket")
     within = (
         a.join(b.toDF("id_old", "bucket"), "bucket")
-        .where(F.col("id_old") < F.col("id_new"))
-        .select(
-            F.col("id_old").alias("id_a"), F.col("id_new").alias("id_b")
-        )
+        .where("id_old < id_new")
+        .selectExpr("id_old AS id_a", "id_new AS id_b")
     )
     pairs = within
     new_state = b
     if state is not None:
         state = state.select("doc_id", "bucket")
-        cnt = state.groupBy("bucket").agg(F.count(F.lit(1)).alias("_n"))
+        cnt = state.groupBy("bucket").agg(F.expr("count(1) AS _n"))
         cross = (
             a.join(state.toDF("id_old", "bucket"), "bucket")
-            .select(
-                F.least("id_old", "id_new").alias("id_a"),
-                F.greatest("id_old", "id_new").alias("id_b"),
+            .selectExpr(
+                "least(id_old, id_new) AS id_a", "greatest(id_old, id_new) AS id_b"
             )
-            .where(F.col("id_a") != F.col("id_b"))
+            .where("id_a != id_b")
         )
         pairs = pairs.unionByName(cross)
         # state-side cap: only bucket rows that still fit under
@@ -155,8 +150,8 @@ def _dedup_batch(
         fresh = b.join(state, ["doc_id", "bucket"], "left_anti")
         new_state = (
             fresh.join(cnt, "bucket", "left")
-            .withColumn("_rn", F.row_number().over(wb))
-            .where(F.coalesce(F.col("_n"), F.lit(0)) + F.col("_rn") <= max_bucket)
+            .withColumn("_rn", rn)
+            .where(f"coalesce(_n, 0) + _rn <= {max_bucket}")
             .select("doc_id", "bucket")
         )
     _write_batch(pairs.distinct(), batch_id, pairs_dir)
@@ -176,8 +171,8 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
     if all_pairs is None:
         new_pairs = sess.createDataFrame([], "u long, v long")
     else:
-        new_pairs = all_pairs.where(F.col("batch_id") == batch_id).select(
-            F.xxhash64("id_a").alias("u"), F.xxhash64("id_b").alias("v")
+        new_pairs = all_pairs.where(f"batch_id = {batch_id}").selectExpr(
+            "xxhash64(id_a) AS u", "xxhash64(id_b) AS v"
         )
     prev = _latest_snapshot(sess, assign_dir, batch_id)
     if prev is None:
@@ -187,8 +182,8 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
     else:
         prev = prev.localCheckpoint(eager=True)
         touched = (
-            new_pairs.select(F.col("u").alias("doc_id"))
-            .unionByName(new_pairs.select(F.col("v").alias("doc_id")))
+            new_pairs.selectExpr("u AS doc_id")
+            .unionByName(new_pairs.selectExpr("v AS doc_id"))
             .distinct()
         )
         touched_clusters = (
@@ -200,8 +195,8 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
             F.broadcast(touched_clusters), "cluster_id", "left_semi"
         )
         edges = new_pairs.unionByName(
-            affected.where(F.col("doc_id") != F.col("cluster_id")).select(
-                F.col("doc_id").alias("u"), F.col("cluster_id").alias("v")
+            affected.where("doc_id != cluster_id").selectExpr(
+                "doc_id AS u", "cluster_id AS v"
             )
         )
         recomputed = connected_components(edges).toDF(
@@ -211,7 +206,9 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
             F.broadcast(touched_clusters), "cluster_id", "left_anti"
         )
         merged = untouched.unionByName(recomputed)
-    merged = merged.localCheckpoint(eager=True)
+    # no checkpoint before the write: `prev` is checkpointed and CC returns
+    # a materialized frame, so no plan here reads the assign_dir partition
+    # the write replaces, and the write is the step's one action
     _write_batch(merged, batch_id, assign_dir)
 
 
@@ -223,11 +220,11 @@ def _latest_snapshot(sess: SparkSession, assign_dir: str, before_batch: int):
     snaps = _read_parquet_or_none(sess, assign_dir)
     if snaps is None:
         return None
-    snaps = snaps.where(F.col("batch_id") < before_batch)
-    row = snaps.agg(F.max("batch_id").alias("b")).collect()[0]
+    snaps = snaps.where(f"batch_id < {before_batch}")
+    row = snaps.agg(F.expr("max(batch_id) AS b")).collect()[0]
     if row["b"] is None:
         return None
-    return snaps.where(F.col("batch_id") == row["b"]).select("doc_id", "cluster_id")
+    return snaps.where(f"batch_id = {row['b']}").select("doc_id", "cluster_id")
 
 
 def start_incremental_er_stream(

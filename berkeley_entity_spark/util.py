@@ -25,6 +25,14 @@ BROADCAST_ROW_CEILING = 5_000_000
 _SAMPLE_ROWS = 10_000
 
 
+def sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal (backslash and quote escaped), for
+    expressions built as SQL text: a string holds no JVM reference, and
+    one F.expr/selectExpr parse replaces the py4j round trip that every
+    node of a nested F.* tree costs while the plan is built."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def estimated_bytes(df: DataFrame, n_rows: int) -> int:
     """n_rows x average row width from a bounded sample.  Width: strings by
     length, fixed-width types by size, +16B/row object overhead.  One tiny

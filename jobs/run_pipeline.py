@@ -10,7 +10,8 @@ Local / synthetic (sandbox):
 
 --input accepts either a parquet path (contains '/', read through
 sources.loader.load_webpages, which prunes the html column at the scan) or a
-catalog table name.
+catalog table name.  --lang all reads every page (run_pipeline's lang=None),
+for an input with no lang column.
 Stage tables land under --checkpoint-dir, a filesystem path (local or a
 mounted object store; a URI such as s3://… is refused, because the resume
 markers are plain files); a rerun with the same dir resumes
@@ -34,7 +35,9 @@ def main() -> None:
     ap.add_argument("--scale", default=None, choices=["tiny", "small", "bench"],
                     help="generate the deterministic synthetic corpus instead")
     ap.add_argument("--checkpoint-dir", required=True)
-    ap.add_argument("--lang", default="en")
+    ap.add_argument("--lang", default="en",
+                    help="keep pages of this lang; 'all' keeps every page "
+                         "(input without a lang column)")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--weights", default=None,
                     help="npy file with trained scorer weights")
@@ -67,7 +70,8 @@ def main() -> None:
     res = run_pipeline(
         spark, pages, PipelineConfig(checkpoint_dir=args.checkpoint_dir),
         weights=weights,
-        resume=not args.no_resume, lang=args.lang,
+        resume=not args.no_resume,
+        lang=None if args.lang == "all" else args.lang,
     )
     out = {
         "mentions": res.mentions.count(),

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from berkeley_entity_spark.config import SynthConfig
@@ -25,3 +27,33 @@ def tiny_corpus(spark):
     gold = gold_with_ids(gold).cache()
     pages.count(), gold.count()
     return cfg, pages, gold
+
+
+class _Py4jCounter:
+    """py4j commands the Python side sent to the JVM.  Calls come from the
+    test's thread, the stream's callback thread and py4j's object-release
+    thread, hence the lock."""
+
+    def __init__(self):
+        self.n = 0
+        self._lock = threading.Lock()
+
+    def add(self):
+        with self._lock:
+            self.n += 1
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """Counts every command sent over the session's gateway connection
+    while the test runs (its send_command is wrapped, and restored after)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    counter = _Py4jCounter()
+
+    def counted(*args, **kwargs):
+        counter.add()
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    return counter

@@ -59,6 +59,27 @@ def test_cc_matches_union_find(spark):
     assert got == expected
 
 
+def test_cc_small_graph_path_runs_two_jobs(spark):
+    """The driver-side finish runs two jobs: the contraction's checkpoint,
+    whose Observation also gives the edge count, and the collect of the
+    star forest.  Its result is a driver-built frame, so reading it runs
+    none (the parent counted the edges in two more jobs and checkpointed
+    the result in a fifth)."""
+    edges = [(i, i + 1) for i in range(30)] + [(100, 101)]
+    df = spark.createDataFrame(edges, "u long, v long")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-small", "cc-small")
+    try:
+        comp = connected_components(df)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("cc-small"))
+        got = {r["node_id"]: r["component"] for r in comp.collect()}
+        read_jobs = len(sc.statusTracker().getJobIdsForGroup("cc-small")) - jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == _union_find_components(edges)
+    assert (jobs, read_jobs) == (2, 0)
+
+
 def test_cc_converges_on_long_chain(spark):
     # pathological chain ordered against the grain: needs O(log n) rounds
     n = 200

@@ -123,3 +123,50 @@ def test_job_input_path_matches_run_pipeline(spark, tmp_path):
     }
     assert want["clusters"] > 0
     assert {k: got[k] for k in want} == want
+
+
+@pytest.mark.slow
+def test_job_lang_all_reads_untagged_input(spark, tmp_path):
+    """--lang all runs the job on an input with no lang column (the
+    300-page fixture holds only url and text) and prints the counts of
+    run_pipeline(lang=None) over the same file."""
+    from berkeley_entity_spark.config import PipelineConfig
+    from berkeley_entity_spark.plans.pipeline import run_pipeline
+
+    fixture = os.path.join(REPO, "fixtures", "synth_pages_300_40_en.parquet")
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "jobs", "run_pipeline.py"),
+            "--input",
+            fixture,
+            "--lang",
+            "all",
+            "--checkpoint-dir",
+            str(tmp_path / "job_ckpt"),
+            "--no-resume",
+        ],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, (proc.stdout[-2000:], proc.stderr[-4000:])
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    assert lines, proc.stdout[-2000:]
+    got = json.loads(lines[-1])
+
+    res = run_pipeline(
+        spark,
+        spark.read.parquet(fixture),
+        PipelineConfig(checkpoint_dir=str(tmp_path / "ckpt")),
+        resume=False,
+        lang=None,
+    )
+    want = {
+        "mentions": res.mentions.count(),
+        "cluster_assignments": res.clusters.count(),
+        "clusters": res.clusters.select("cluster_id").distinct().count(),
+    }
+    assert want["clusters"] > 0
+    assert {k: got[k] for k in want} == want

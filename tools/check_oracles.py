@@ -33,6 +33,11 @@ def norm_cell(v):
     if isinstance(v, float):
         return f"{v:.6f}"
     if isinstance(v, int):
+        # past 2^53 a float drops low bits (a BIGINT hash would compare on
+        # its top 53 bits only): exact digits.  Below, the float form, so an
+        # int from one engine matches a whole-number float from the other.
+        if abs(v) >= 2**53:
+            return str(v)
         return f"{float(v):.6f}"
     if isinstance(v, datetime):
         return v.replace(tzinfo=None).isoformat()
