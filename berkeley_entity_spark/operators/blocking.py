@@ -35,8 +35,8 @@ Everything below is expressed as DataFrame ops (joins, windows, explode); the
 minhash pass included — the whole stage runs JVM-side in codegen.  The fixed
 expression lists (block keys, signature aggregates, band keys, pair columns)
 are built as SQL text: each F.* node is a py4j round trip while the plan is
-built, and the MinHash column list alone was ~1,900 of them per pipeline
-run; a string parses in one, and the analyzed expressions are the same.
+built (the MinHash column list alone is ~1,900 of them per pipeline run),
+a string parses in one, and the analyzed expressions are the same.
 
 capped_key_pairs is the repo's one row_number-capped key self-join,
 emitting (key, id_a < id_b) pairs with any extra columns carried as

@@ -77,8 +77,9 @@ def _props_for(spans: DataFrame, numgender: DataFrame) -> DataFrame:
     """Add `number`, `gender`, `_mtype` to the distinct (`span`,
     `_person`) key table.  Drops its own temp columns.  The property cascade
     is a pure function of (span, _person), which is what makes evaluating it
-    per key and joining back exact.  The cascade is SQL text: as nested F.*
-    calls it cost ~2,700 py4j round trips per pipeline run to build."""
+    per key and joining back exact.  The cascade is SQL text: each step
+    parses in one py4j round trip, where every node of a nested F.* tree
+    is one."""
     from berkeley_entity_spark.operators.pronouns import (
         ALL_PRONOUNS,
         MENTION_TYPE,
