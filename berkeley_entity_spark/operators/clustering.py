@@ -81,9 +81,7 @@ def _contract_local(edges: DataFrame) -> DataFrame:
         yield pd.DataFrame({"u": pd.Series(out_u, dtype="int64"),
                             "v": pd.Series(out_v, dtype="int64")})
 
-    return edges.selectExpr(
-        "CAST(u AS BIGINT) AS u", "CAST(v AS BIGINT) AS v"
-    ).mapInPandas(gen, schema="u long, v long")
+    return edges.mapInPandas(gen, schema="u long, v long")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -140,43 +138,58 @@ def connected_components(
     plan doubles per round and the job dies re-deriving lineage (measured:
     tiny input went from minutes to <1s/round with per-round checkpoints).
 
-    Hybrid finish: _contract_local first shrinks the edge multiset to a
-    per-partition star forest (<= one edge per distinct node per partition,
-    computed distributed).  If THAT contracted set is under
-    small_graph_threshold rows, the remaining cross-partition merge is a
-    driver-side union-find over an Arrow-collected 2-column long table —
-    bounded (the gate is on the post-contraction count, NOT the raw pair
-    volume), and it replaces 10+ tiny near-empty-shuffle jobs with one
-    collect, which at bench scale is the entire CC cost (measured 7.6s ->
-    ~1s; each loop round is 4-6 exchanges + a signature job of pure fixed
-    overhead on a few-thousand-row edge set).  Past the gate — the 100 TB
-    path — the alternating large/small-star loop runs exactly as before;
-    set small_graph_threshold=0 to force it (tests do).
+    Hybrid finish, gated twice on edge counts.  The raw (u, v) longs are
+    checkpointed first, with their count observed by that same job.  If
+    the raw count is at most small_graph_threshold, the edges are
+    Arrow-collected and union_find finishes on the driver: two JVM jobs
+    and no Python worker, whose per-task start-up costs more than the
+    whole union-find at this size.  Otherwise _contract_local shrinks the
+    edge multiset to a per-partition star forest (<= one edge per distinct
+    node per partition, computed distributed), and if THAT contracted set
+    is at most small_graph_threshold rows the driver finishes the same way.
+    Both gates bound the collect to threshold rows of two longs, and each
+    replaces 10+ tiny near-empty-shuffle loop jobs with one collect
+    (measured 7.6s -> ~1s at bench scale; each loop round is 4-6
+    exchanges + a signature job of pure fixed overhead on a
+    few-thousand-row edge set).  Past both gates (the 100 TB path) the
+    alternating large/small-star loop runs over the contracted edges; set
+    small_graph_threshold=0 to force it (tests do).
     """
     spark = edges.sparkSession
-    # _contract_local's star-forest output is deduplicated, oriented u > v
-    # and self-loop-free, and every within-partition component has
-    # diameter <= 2 — measured: the loop then converges in 2-3 rounds
-    # instead of 5-7 on the blocking-shaped edge sets.  The edge count is
-    # observed by the checkpoint job itself (a count would be two more
-    # jobs under AQE).
-    obs = Observation()
-    curr = (
-        _contract_local(edges)
-        .observe(obs, F.expr("count(1) AS n"))
-        .localCheckpoint(eager=True)
-    )
-    if obs.get["n"] <= small_graph_threshold:
-        # driver-side finish (see docstring): the contracted star forest is
-        # two long columns, <= threshold rows — Arrow-collect and union-find
-        pdf = curr.toPandas()
+
+    def driver_finish(small: DataFrame) -> DataFrame:
+        # <= threshold rows of two long columns: Arrow-collect and
+        # union-find.  A driver-built frame: re-scanning it runs no job,
+        # so it is not checkpointed
+        pdf = small.toPandas()
         mapping = pd.DataFrame(
             list(union_find(zip(pdf["u"], pdf["v"])).items()),
             columns=["node_id", "component"],
         ).astype("int64")
-        # a driver-built frame: re-scanning it runs no job, so it is not
-        # checkpointed
         return spark.createDataFrame(mapping, schema="node_id long, component long")
+
+    # each edge count is observed by the checkpoint job itself (a count
+    # would be two more jobs under AQE)
+    raw_obs = Observation()
+    raw = (
+        edges.selectExpr("CAST(u AS BIGINT) AS u", "CAST(v AS BIGINT) AS v")
+        .observe(raw_obs, F.expr("count(1) AS n"))
+        .localCheckpoint(eager=True)
+    )
+    if raw_obs.get["n"] <= small_graph_threshold:
+        return driver_finish(raw)
+    # _contract_local's star-forest output is deduplicated, oriented u > v
+    # and self-loop-free, and every within-partition component has
+    # diameter <= 2 — measured: the loop then converges in 2-3 rounds
+    # instead of 5-7 on the blocking-shaped edge sets
+    obs = Observation()
+    curr = (
+        _contract_local(raw)
+        .observe(obs, F.expr("count(1) AS n"))
+        .localCheckpoint(eager=True)
+    )
+    if obs.get["n"] <= small_graph_threshold:
+        return driver_finish(curr)
     # the loop runs under the session's own conf (AQE coalescing sizes each
     # round's shuffles); it sets nothing on the session, so a query running
     # concurrently on it sees no change

@@ -98,17 +98,27 @@ def run_pipeline(
         finally:
             extracted.unpersist()
     surfaces = distinct_surfaces(mentions).persist()
-    n_surfaces = surfaces.count()  # materializes the cache; reused below
-    pairs = stage(candidate_pairs(surfaces, n_surfaces), "candidate_pairs")
+    try:
+        n_surfaces = surfaces.count()  # materializes the cache; reused below
+        pairs = stage(candidate_pairs(surfaces, n_surfaces), "candidate_pairs")
 
-    idf = collect_idf(idf_table(surfaces, n=n_surfaces))
-    w = weights if weights is not None else load_default_weights()
-    scored = stage(score_pairs(pairs, idf, w, repartition=True), "scored_pairs")
+        idf = collect_idf(idf_table(surfaces, n=n_surfaces))
+        w = weights if weights is not None else load_default_weights()
+        scored = stage(score_pairs(pairs, idf, w, repartition=True), "scored_pairs")
 
-    edges = match_edges(scored)
-    components = connected_components(edges)
-    clusters = stage(
-        assign_clusters(mentions, surfaces, components, n_surfaces=n_surfaces),
-        "clusters",
-    )
+        edges = match_edges(scored)
+        components = connected_components(edges)
+        clusters = stage(
+            assign_clusters(mentions, surfaces, components, n_surfaces=n_surfaces),
+            "clusters",
+        )
+    finally:
+        # The clusters stage is the last reader of the surface cache and of
+        # the caches built on it (candidate_pairs' ranked key table); every
+        # frame returned below is a re-read of a written stage table.
+        # Spark's cascading uncache drops them all, where PySpark's
+        # unpersist() would drop only the surface cache.
+        spark._jsparkSession.sharedState().cacheManager().uncacheQuery(
+            surfaces._jdf, True
+        )
     return PipelineResult(mentions, pairs, scored, clusters)

@@ -10,6 +10,8 @@ attributed) one batch at a time.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +23,8 @@ from berkeley_entity_spark.synth import PAGES_SCHEMA
 _MAX_BUCKET = 200
 # parquet files one micro-batch reads
 _FILES_PER_TRIGGER = 8
+# the partition directory _write_batch writes each batch to
+_BATCH_DIR = re.compile(r"/batch_id=(\d+)/")
 
 
 def read_page_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -180,7 +184,6 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
             "doc_id", "cluster_id"
         )
     else:
-        prev = prev.localCheckpoint(eager=True)
         touched = (
             new_pairs.selectExpr("u AS doc_id")
             .unionByName(new_pairs.selectExpr("v AS doc_id"))
@@ -202,13 +205,20 @@ def _er_merge_batch(sess, batch_id: int, pairs_dir: str, assign_dir: str):
         recomputed = connected_components(edges).toDF(
             "doc_id", "cluster_id"
         )
-        untouched = prev.join(
-            F.broadcast(touched_clusters), "cluster_id", "left_anti"
-        )
+        # A prev row's doc_id is in `recomputed` exactly when its cluster
+        # is touched, so this anti-join keeps the untouched rows without
+        # re-deriving touched_clusters.  Every prev cluster has >= 2
+        # members (a snapshot holds only CC output), so a touched
+        # cluster's members all enter `edges` as u and its root as v.
+        # Conversely, a doc in `recomputed` is either in a new pair (its
+        # cluster is touched by definition) or a member of an affected,
+        # i.e. touched, cluster.
+        untouched = prev.join(recomputed, "doc_id", "left_anti")
         merged = untouched.unionByName(recomputed)
-    # no checkpoint before the write: `prev` is checkpointed and CC returns
-    # a materialized frame, so no plan here reads the assign_dir partition
-    # the write replaces, and the write is the step's one action
+    # `prev` reads partition batch_id-1 (or older) of assign_dir while the
+    # write replaces only partition batch_id (dynamic overwrite), so the
+    # write is the step's one action and nothing is checkpointed first;
+    # CC returns a materialized frame
     _write_batch(merged, batch_id, assign_dir)
 
 
@@ -216,15 +226,18 @@ def _latest_snapshot(sess: SparkSession, assign_dir: str, before_batch: int):
     """The newest (doc_id, cluster_id) snapshot with batch_id <
     before_batch, or None on the first batch.  Replay-safe: a re-run of
     batch K deterministically re-reads snapshot K-1 even if later
-    partitions exist."""
+    partitions exist.  The batch ids come from the table's file listing,
+    which the read already holds, so finding the newest runs no job; the
+    listing is the whole table (a `where` does not prune it), so the
+    `< before_batch` filter is applied here."""
     snaps = _read_parquet_or_none(sess, assign_dir)
     if snaps is None:
         return None
-    snaps = snaps.where(f"batch_id < {before_batch}")
-    row = snaps.agg(F.expr("max(batch_id) AS b")).collect()[0]
-    if row["b"] is None:
+    ids = (int(m.group(1)) for f in snaps.inputFiles() if (m := _BATCH_DIR.search(f)))
+    newest = max((b for b in ids if b < before_batch), default=None)
+    if newest is None:
         return None
-    return snaps.where(f"batch_id = {row['b']}").select("doc_id", "cluster_id")
+    return snaps.where(f"batch_id = {newest}").select("doc_id", "cluster_id")
 
 
 def start_incremental_er_stream(

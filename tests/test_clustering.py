@@ -60,11 +60,11 @@ def test_cc_matches_union_find(spark):
 
 
 def test_cc_small_graph_path_runs_two_jobs(spark):
-    """The driver-side finish runs two jobs: the contraction's checkpoint,
-    whose Observation also gives the edge count, and the collect of the
-    star forest.  Its result is a driver-built frame, so reading it runs
-    none (the parent counted the edges in two more jobs and checkpointed
-    the result in a fifth)."""
+    """The driver-side finish runs two jobs: the checkpoint of the raw
+    (u, v) longs, whose Observation also gives the edge count, and the
+    collect of those edges.  Its result is a driver-built frame, so
+    reading it runs none (an earlier version counted the edges in two more
+    jobs and checkpointed the result in a fifth)."""
     edges = [(i, i + 1) for i in range(30)] + [(100, 101)]
     df = spark.createDataFrame(edges, "u long, v long")
     sc = spark.sparkContext
@@ -78,6 +78,22 @@ def test_cc_small_graph_path_runs_two_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == _union_find_components(edges)
     assert (jobs, read_jobs) == (2, 0)
+
+
+def test_cc_small_path_runs_no_python(spark, monkeypatch):
+    """Under small_graph_threshold raw edges, union_find finishes on the
+    driver over the collected edges: the per-partition contraction, CC's
+    one Python operator, never runs, so no Python worker is started."""
+    from berkeley_entity_spark.operators import clustering
+
+    def no_python(edges):
+        raise AssertionError("_contract_local ran on the small path")
+
+    monkeypatch.setattr(clustering, "_contract_local", no_python)
+    edges = [(i, i + 1) for i in range(30)] + [(100, 101), (7, 7), (101, 100)]
+    df = spark.createDataFrame(edges, "u long, v long").repartition(3)
+    got = {r["node_id"]: r["component"] for r in connected_components(df).collect()}
+    assert got == _union_find_components([e for e in edges if e[0] != e[1]])
 
 
 def test_cc_converges_on_long_chain(spark):

@@ -236,3 +236,26 @@ def test_extract_runs_once_and_not_on_resume(spark, small_pages, tmp_path):
     again = {tuple(r) for r in _run(spark, pages, root, resume=True).clusters.collect()}
     assert seen.value == n_en
     assert again == first
+
+
+def test_run_leaves_no_cached_table(spark, pipeline_result, tiny_corpus, tmp_path):
+    """run_pipeline releases what it caches: the surface table and
+    candidate_pairs' ranked key table, which is built on it, are uncached
+    once the clusters stage, their last reader, is written.  (The module's
+    fixtures keep their own cached inputs, so the test counts entries.)
+    The stage tables are those of the module's earlier run on the same
+    pages."""
+    _, store, _ = pipeline_result
+    _, pages, _ = tiny_corpus
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.numCachedEntries()
+    root = str(tmp_path)
+    run_pipeline(spark, pages, PipelineConfig(checkpoint_dir=root),
+                 store=CheckpointStore(root), resume=False)
+    assert cache_manager.numCachedEntries() == before
+    again = CheckpointStore(root)
+    for name in ("mentions", "candidate_pairs", "scored_pairs", "clusters"):
+        first = store.load(spark, name)
+        second = again.load(spark, name).select(*first.columns)
+        assert first.exceptAll(second).isEmpty(), name
+        assert second.exceptAll(first).isEmpty(), name

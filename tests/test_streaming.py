@@ -325,6 +325,31 @@ def test_streaming_extract_resume_is_incremental(spark, tmp_path):
     assert last_snapshot(assign) == last_snapshot(fresh_assign)
 
 
+def _two_drop_stream(spark, drops, tmp_path):
+    """Write each of the two page frames in `drops` as one drop of
+    _FILES_PER_TRIGGER files (one micro-batch apiece) and drain
+    start_incremental_er_stream over them."""
+    import os
+
+    from berkeley_entity_spark.streaming import ingest
+
+    root = tmp_path / "pages"
+    for i, pages in enumerate(drops):
+        # one drop = _FILES_PER_TRIGGER files = one micro-batch; the file
+        # source takes files oldest first
+        drop = tmp_path / f"drop{i}"
+        pages.repartition(ingest._FILES_PER_TRIGGER).write.parquet(str(drop))
+        root.mkdir(exist_ok=True)
+        for f in drop.glob("*.parquet"):
+            os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+            f.rename(root / f"d{i}-{f.name}")
+    dirs = [str(tmp_path / k) for k in ("state", "pairs", "assign", "ckpt")]
+    q = ingest.start_incremental_er_stream(spark, str(root), *dirs)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    return dirs
+
+
 def test_incremental_stream_py4j_budget_per_batch(
     spark, pages, tmp_path, py4j_calls, monkeypatch
 ):
@@ -333,9 +358,7 @@ def test_incremental_stream_py4j_budget_per_batch(
     their expressions as SQL text and the session has no per-Column
     call-site capture (session.py).  Before both, the costlier batch here
     made 1,993 calls, and 684 after; a 300-page erbench batch went from
-    about 2,300-2,600 to about 1,000."""
-    import os
-
+    about 2,300-2,600 to 624-714 (BENCH/driver_roundtrips.md)."""
     from berkeley_entity_spark.streaming import ingest
 
     calls = {}
@@ -352,21 +375,89 @@ def test_incremental_stream_py4j_budget_per_batch(
     # the stream looks both bodies up by module-global name on every batch
     monkeypatch.setattr(ingest, "_dedup_batch", counted_dedup)
     monkeypatch.setattr(ingest, "_er_merge_batch", counted_merge)
-    root = tmp_path / "pages"
-    for i, half in enumerate(("0", "1")):
-        # one drop = _FILES_PER_TRIGGER files = one micro-batch; the file
-        # source takes files oldest first
-        drop = tmp_path / f"drop{i}"
-        pages.where(f"pmod(xxhash64(url), 2) = {half}").repartition(
-            ingest._FILES_PER_TRIGGER
-        ).write.parquet(str(drop))
-        root.mkdir(exist_ok=True)
-        for f in drop.glob("*.parquet"):
-            os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
-            f.rename(root / f"d{i}-{f.name}")
-    dirs = [str(tmp_path / k) for k in ("state", "pairs", "assign", "ckpt")]
-    q = ingest.start_incremental_er_stream(spark, str(root), *dirs)
-    q.awaitTermination(300)
-    assert q.exception() is None
+    halves = [pages.where(f"pmod(xxhash64(url), 2) = {h}") for h in (0, 1)]
+    _two_drop_stream(spark, halves, tmp_path)
     assert sorted(calls) == [0, 1], calls
     assert max(calls.values()) <= 950, calls
+
+
+def test_incremental_stream_jobs_per_batch(spark, pages, tmp_path, monkeypatch):
+    """A steady micro-batch (one with bucket state and a previous
+    snapshot) runs at most 23 Spark jobs over both batch bodies.  The CC
+    merge reads the newest snapshot's batch id from the file listing (no
+    max() job), checkpoints nothing before its write, keeps untouched rows
+    by one anti-join against CC's output, and CC's small path collects
+    the raw edges with no Python operator.  Before these, a steady
+    300-page erbench batch ran 29 jobs (13 dedup + 16 merge), and 23
+    after (BENCH/stream_batch_jobs.md)."""
+    from berkeley_entity_spark.streaming import ingest
+
+    sc = spark.sparkContext
+    dedup, merge = ingest._dedup_batch, ingest._er_merge_batch
+
+    def grouped_dedup(batch_df, batch_id, **kwargs):
+        sc.setLocalProperty("spark.jobGroup.id", f"er-batch-{batch_id}")
+        dedup(batch_df, batch_id, **kwargs)
+
+    def grouped_merge(sess, batch_id, *args):
+        try:
+            merge(sess, batch_id, *args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    # the stream looks both bodies up by module-global name on every batch
+    monkeypatch.setattr(ingest, "_dedup_batch", grouped_dedup)
+    monkeypatch.setattr(ingest, "_er_merge_batch", grouped_merge)
+    # re-crawls make batch 1 steady: batch 0 clusters each page with a
+    # copy, and batch 1's copies of the same pages join those clusters
+    half = [pages.where(f"pmod(xxhash64(url), 2) = {h}") for h in (0, 1)]
+
+    def copies(tag):
+        return half[0].withColumn("url", F.concat("url", F.lit(tag)))
+
+    drops = [
+        half[0].unionByName(copies("?dup")),
+        half[1].unionByName(copies("?rev")),
+    ]
+    assign = _two_drop_stream(spark, drops, tmp_path)[2]
+    snaps = spark.read.parquet(assign).groupBy("batch_id").count().collect()
+    assert sorted(r["batch_id"] for r in snaps) == [0, 1]
+    jobs = [
+        len(sc.statusTracker().getJobIdsForGroup(f"er-batch-{b}")) for b in (0, 1)
+    ]
+    assert jobs[0] > 0 and jobs[1] <= 23, jobs
+
+
+def test_merge_replay_rereads_its_own_previous_snapshot(spark, tmp_path):
+    """foreachBatch is at-least-once: re-running the merge of batch 1 while
+    snapshot 2 already exists must fold batch 1's pairs into snapshot 0
+    again, so snapshot 1 comes out unchanged.  Taking the newest snapshot
+    from the whole listing instead would fold snapshot 2's later docs
+    into snapshot 1."""
+    from berkeley_entity_spark.streaming.ingest import _er_merge_batch
+
+    t1 = "quantum harbor lighthouse meridian obelisk paradox quarry riverbed sandstone timber"
+    t2 = "quantum harbor lighthouse meridian obelisk paradox quarry riverbed sandstone granite"
+    t3 = "completely different words entirely unrelated content spanning another topic altogether"
+    drops = [
+        [("a1", t1), ("a2", t1), ("c1", t3)],
+        [("b1", t2), ("b2", t2), ("c2", t3)],
+        [("a3", t1), ("c3", t3)],
+    ]
+    state, pairs, assign = (str(tmp_path / k) for k in ("state", "pairs", "assign"))
+    for batch_id, rows in enumerate(drops):
+        _dedup_batch(
+            _as_pages(spark, rows), batch_id,
+            state_dir=state, pairs_dir=pairs, max_bucket=200,
+        )
+        _er_merge_batch(spark, batch_id, pairs, assign)
+
+    def snapshot(b):
+        rows = spark.read.parquet(assign).where(f"batch_id = {b}").collect()
+        return {(r["doc_id"], r["cluster_id"]) for r in rows}
+
+    before = {b: snapshot(b) for b in (1, 2)}
+    assert before[2] - before[1], "batch 2 added no assignment rows"
+    _er_merge_batch(spark, 1, pairs, assign)
+    assert snapshot(1) == before[1]
+    assert snapshot(2) == before[2]
